@@ -130,7 +130,8 @@ def main() -> None:
     elif args.kernel == "triangles":
         out, meta = triangle_count_per_vertex(g, cfg), None
     # the self-managed loop kernels take --run-id/--resume too, via
-    # LoopCheckpointer (round-level durable state, graph/loopckpt.py)
+    # RoundStore (graph/superstep.py): the same round=NNNNN/<table>
+    # checkpoint layout the engine kernels use
     elif args.kernel == "msf":
         from planar_spark.kernels.mst import boruvka_msf
 

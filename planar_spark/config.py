@@ -26,19 +26,6 @@ class EngineConfig:
     # as .bin.new each round, nvme/scheduler/scheduler.h:435-442).
     checkpoint_dir: str | None = None
     checkpoint_every: int = 1  # checkpoint every k supersteps (>=1)
-    # How the engine materializes each superstep's state when no parquet
-    # checkpoint is due:
-    # - "localCheckpoint": cut lineage every step (default). Loses the
-    #   state's hash partitioning (LogicalRDD reports
-    #   UnknownPartitioning), so kernels that join the full state by key
-    #   every round pay an O(V) exchange per superstep.
-    # - "cache": persist() the state — InMemoryRelation PRESERVES output
-    #   partitioning, so a vid-partitioned state joins without any
-    #   exchange. Lineage grows one plan level per step; it is truncated
-    #   with a localCheckpoint every ``cache_truncate_every`` steps
-    #   (one amortized re-exchange).
-    state_persist: str = "localCheckpoint"
-    cache_truncate_every: int = 8
 
     # --- partitioning / skew ---
     # Number of hash partitions for edges/state co-partitioning. Should
@@ -56,20 +43,6 @@ class EngineConfig:
     # below this (reference analogue: whole vertex-state array shared in
     # memory, core/update_stores/bsp_update_store.h:35-36).
     broadcast_max_rows: int = 2_000_000
-    # Join strategy hint for the per-superstep gather (edges ⋈ state).
-    # "merge" pins a sort-merge join against the pre-partitioned,
-    # pre-sorted cached edge table (zero exchange + zero sort on the
-    # edge side). Without it AQE tends to pick a broadcast join of the
-    # state, whose serial per-superstep broadcast build becomes the
-    # Amdahl bottleneck at high parallelism. None/"" = let AQE choose.
-    # "shuffle_hash" builds a hash map on the (small) state side and
-    # streams the edges through the probe — skips SMJ's per-superstep
-    # state sort. Measured r6 (big-graph pagerank, warm JVM, 3
-    # interleaved pairs): tie within host noise (7.55s vs 7.08s
-    # medians) — the V-per-partition state sort is not a bottleneck at
-    # this scale, so "merge" stays the default for its plan-test-
-    # asserted zero-edge-exchange shape.
-    gather_join: str | None = "merge"
 
     # --- LPA ---
     lpa_max_iterations: int = 10

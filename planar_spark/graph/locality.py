@@ -95,14 +95,13 @@ def region_major_mapping(
     balanced_range_bounds)."""
     from pyspark.sql import Window as W
 
-    from planar_spark.graph.superstep import releaf
+    from planar_spark.graph.superstep import materialize
 
-    d = releaf(
+    d = materialize(
         parts_df.select("vid", "part")
         .repartitionByRange(num_partitions, "part", "vid")
         .sortWithinPartitions("part", "vid")
         .withColumn("pid", F.spark_partition_id())
-        .localCheckpoint(eager=True)
     )
     counts = {
         r["pid"]: int(r["n"])

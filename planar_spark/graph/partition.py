@@ -105,14 +105,13 @@ def balanced_range_bounds(
     tests/test_partition.py."""
     from pyspark.sql import Window as W
 
-    from planar_spark.graph.superstep import releaf
+    from planar_spark.graph.superstep import materialize
 
-    d = releaf(
+    d = materialize(
         degrees.select("vid", "out_deg")
         .repartitionByRange(num_partitions, "vid")
         .sortWithinPartitions("vid")
         .withColumn("pid", F.spark_partition_id())
-        .localCheckpoint(eager=True)
     )
     per_pid = {
         r["pid"]: int(r["s"] or 0)
@@ -180,7 +179,7 @@ def bfs_grow_labels(
     partitioning — callers/benches should check it rather than trust
     the label silently.
     """
-    from planar_spark.graph.superstep import releaf
+    from planar_spark.graph.superstep import materialize
 
     spark = graph.spark
     nv = graph.num_vertices
@@ -199,7 +198,7 @@ def bfs_grow_labels(
         schema="vid long, branch int",
     )
     sym = graph.symmetric_edges().select("src", "dst")
-    labels = releaf(seeds.localCheckpoint(eager=True))
+    labels = materialize(seeds)
     frontier = labels
     sizes = {i: 1 for i in range(b)}
     rounds = 0
@@ -221,7 +220,7 @@ def bfs_grow_labels(
             .groupBy("vid")
             .agg(F.min("branch").alias("branch"))
         )
-        new = releaf(grown.localCheckpoint(eager=True))
+        new = materialize(grown)
         rounds += 1
         # per-branch growth counts: ≤ b scalars to the driver per round
         per_branch = {
@@ -235,7 +234,7 @@ def bfs_grow_labels(
             break
         for i, n in per_branch.items():
             sizes[i] = sizes.get(i, 0) + int(n)
-        labels = releaf(labels.unionAll(new).localCheckpoint(eager=True))
+        labels = materialize(labels.unionAll(new))
         frontier = new
     labeled = sum(sizes.values())
     if metrics_out is not None:

@@ -12,11 +12,16 @@ nvme_update_store.h:138-145). Here:
   engine materializes the new state;
 - ``Sync()``     = replacing the state DataFrame reference — state is
   immutable, so BSP read/write double-buffering is free;
-- block write-back (.bin.new, scheduler.h:435-442) = per-superstep
+- block write-back (.bin.new, scheduler.h:435-442) = per-round
   parquet checkpoint of the state + a meta JSON carrying run lineage
-  and convergence metrics — which doubles as lineage truncation
-  (without it, step k's plan is O(k) deep and the job dies by step ~30)
-  and as the resume point demanded by the north rule;
+  and convergence metrics (``RoundStore``) — which doubles as lineage
+  truncation (without it, step k's plan is O(k) deep and the job dies
+  by step ~30) and as the resume point demanded by the north rule.
+  Kernels that drive their own loops (Boruvka, SCC, coloring, k-core,
+  ...) checkpoint through the same ``RoundStore``, so every iterative
+  kernel shares one layout, ``<kernel>/<run_id>/round=NNNNN/<table>``;
+- rounds between checkpoints cut lineage with ``materialize`` — the
+  one state-materialization policy of the package;
 - ``IsActive()`` termination (bsp_update_store.h:174-176) =
   ``converged_fn(metrics)`` on driver-side aggregated counts, where the
   metrics come from ``post_fn(old_state, new_state, step)`` evaluated on
@@ -49,9 +54,9 @@ def resolve_observations(metrics: dict) -> dict:
     This is the zero-extra-job metrics path: a step_fn attaches
     ``df.observe(obs, ...)`` to the state plan it returns and puts the
     Observation in its metrics; the engine resolves it right after the
-    state-materialization job (localCheckpoint / cache count / store
-    write) — which is the job that populated it — so convergence counts
-    never cost a standalone action."""
+    state-materialization job (``materialize`` or the checkpoint write)
+    — which is the job that populated it — so convergence counts never
+    cost a standalone action."""
     out = dict(metrics)
     for key in list(out):
         if isinstance(out[key], Observation):
@@ -98,6 +103,169 @@ def releaf(df: DataFrame) -> DataFrame:
         return df
 
 
+def materialize(df: DataFrame) -> DataFrame:
+    """Execute ``df`` once and return it as a lineage-free leaf.
+
+    The single state-materialization step of every iterative kernel:
+    an eager ``localCheckpoint`` (executor-local blocks, no durable IO)
+    re-wrapped by ``releaf`` so self-joining loops never inherit the
+    squared statistics estimate. Durable rounds go through
+    ``RoundStore.write`` instead."""
+    return releaf(df.localCheckpoint(eager=True))
+
+
+class RoundStore:
+    """Durable round checkpoints for one ``(kernel, run_id)``.
+
+    Layout: ``<kernel>/<run_id>/round=NNNNN/<table>`` per saved table,
+    sealed by a completion marker on ``<kernel>/<run_id>/round=NNNNN``
+    whose meta holds ``run_id``, ``kernel``, ``round``, ``tables``,
+    ``metrics``, ``lineage``, ``partition_lineage`` (per table, from
+    file footers / Iceberg metadata — no Spark job), ``wall_ts`` and
+    ``completed``. Tables are written first and the marker last, so a
+    round killed mid-write is invisible to ``latest`` and resume
+    restarts it from the previous completed round. IO goes through the
+    catalog-aware TableStore (Iceberg ``writeTo`` when a catalog is
+    configured, parquet + atomic JSON markers otherwise).
+
+    Disabled (``due`` always False, ``latest`` always None) when
+    ``config.checkpoint_dir`` is unset. ``retain`` keeps only the newest N completed rounds after
+    each commit — needed by continuously-running maintenance pipelines
+    whose state is an O(V) table per round; unset keeps everything.
+    """
+
+    def __init__(
+        self,
+        spark: SparkSession,
+        config: EngineConfig | None,
+        kernel: str,
+        run_id: str | None = None,
+        retain: int | None = None,
+        lineage: dict | None = None,
+    ):
+        config = config or EngineConfig()
+        self.kernel = kernel
+        self.run_id = run_id or uuid.uuid4().hex[:12]
+        self.every = max(1, config.checkpoint_every)
+        self.retain = retain
+        self.lineage = dict(lineage or {})
+        self._store = (
+            TableStore(spark, config.checkpoint_dir)
+            if config.checkpoint_dir
+            else None
+        )
+        self._prefix = f"{kernel}/{self.run_id}"
+        self._written: dict[int, list[str]] = {}
+
+    def due(self, rnd: int) -> bool:
+        """True when round ``rnd`` should be persisted."""
+        return self._store is not None and rnd % self.every == 0
+
+    def round_name(self, rnd: int) -> str:
+        return f"{self._prefix}/round={rnd:05d}"
+
+    def write(self, rnd: int, tables: dict[str, DataFrame]) -> dict[str, DataFrame]:
+        """Write round ``rnd``'s tables and return them re-read from the
+        store: a fresh scan leaf per table, so the caller's loop
+        continues from the durable copy (the lineage cut). The round is
+        not visible to ``latest`` until ``commit``."""
+        base = self.round_name(rnd)
+        for name, df in tables.items():
+            self._store.write(df, f"{base}/{name}")
+        self._written[rnd] = sorted(tables)
+        return {name: self._store.read(f"{base}/{name}") for name in tables}
+
+    def commit(self, rnd: int, metrics: dict | None = None) -> None:
+        """Seal round ``rnd`` (no-op unless due) with its completion
+        marker, then apply ``retain``."""
+        if not self.due(rnd):
+            return
+        base = self.round_name(rnd)
+        tables = self._written.pop(rnd, [])
+        self._store.write_meta(
+            base,
+            {
+                "run_id": self.run_id,
+                "kernel": self.kernel,
+                "round": rnd,
+                "tables": tables,
+                "metrics": metrics or {},
+                "lineage": self.lineage,
+                "partition_lineage": {
+                    t: self._store.partition_lineage(f"{base}/{t}")
+                    for t in tables
+                },
+                "wall_ts": time.time(),
+                "completed": True,
+            },
+        )
+        if self.retain:
+            self.prune(self.retain)
+
+    def save(
+        self, rnd: int, tables: dict[str, DataFrame], metrics: dict | None = None
+    ) -> dict[str, DataFrame] | None:
+        """``write`` + ``commit`` for loops whose metrics are known
+        before the write. Returns the re-read tables, or None when the
+        round was not due."""
+        if not self.due(rnd):
+            return None
+        out = self.write(rnd, tables)
+        self.commit(rnd, metrics)
+        return out
+
+    def _completed_rounds(self) -> list[int]:
+        """Round numbers with a live completion marker, ascending."""
+        out = []
+        for name in self._store.list_meta_names(self._prefix):
+            tail = name.rsplit("/", 1)[-1]
+            if tail.startswith("round="):
+                out.append(int(tail.split("=")[1]))
+        return sorted(out)
+
+    def prune(self, keep: int) -> list[int]:
+        """Delete all completed rounds except the newest ``keep``.
+        Marker is retracted FIRST, tables after — a crash mid-prune
+        leaves orphan table files (harmless) but never a completed
+        marker over missing tables. Returns the pruned round numbers."""
+        if self._store is None or keep < 1:
+            return []
+        rounds = self._completed_rounds()
+        doomed = rounds[:-keep] if len(rounds) > keep else []
+        for rnd in doomed:
+            base = self.round_name(rnd)
+            meta = self._store.read_meta(base) or {}
+            self._store.retract_meta(base)
+            for t in meta.get("tables", []):
+                self._store.drop(f"{base}/{t}")
+            self._store.drop(base)  # fallback: removes the round dir
+        return doomed
+
+    def latest(
+        self, max_round: int | None = None
+    ) -> tuple[int, dict[str, DataFrame], dict] | None:
+        """(round, {name: DataFrame}, metrics) of the newest COMPLETED
+        round, or None when nothing durable exists for this run_id.
+
+        ``max_round`` ignores checkpoints PAST the caller's target: a
+        prior run under the same run_id that went further (more
+        supersteps, a larger HyperBall radius) must not make a
+        smaller-target resume return the longer run's state."""
+        if self._store is None:
+            return None
+        rounds = self._completed_rounds()
+        if max_round is not None:
+            rounds = [r for r in rounds if r <= max_round]
+        if not rounds:
+            return None
+        base = self.round_name(rounds[-1])
+        meta = self._store.read_meta(base) or {}
+        tables = {
+            t: self._store.read(f"{base}/{t}") for t in meta.get("tables", [])
+        }
+        return rounds[-1], tables, meta.get("metrics", {})
+
+
 @dataclass
 class SuperstepResult:
     state: DataFrame
@@ -118,32 +286,15 @@ class SuperstepEngine:
         self.spark = spark
         self.config = config
         self.kernel = kernel
-        self.run_id = run_id or uuid.uuid4().hex[:12]
-        # Run lineage recorded in every superstep meta: inputs, graph
+        # Run lineage recorded in every checkpoint meta: inputs, graph
         # stats, engine config — enough to reproduce the run from the
         # checkpoint alone (north-rule: per-partition state + lineage +
         # convergence metrics per superstep).
-        self.lineage = dict(lineage or {})
-        self.lineage.setdefault("damping", config.damping)
-        self.lineage.setdefault("num_partitions", config.num_partitions)
-        # Checkpoint IO goes through the catalog-aware TableStore:
-        # Iceberg writeTo when a catalog is configured, parquet + atomic
-        # JSON meta markers otherwise (planar_spark/storage.py).
-        self._store = (
-            TableStore(spark, config.checkpoint_dir)
-            if config.checkpoint_dir
-            else None
-        )
-        self._ckpt_prefix = f"{kernel}/{self.run_id}"
-        self._persisted: list[DataFrame] = []
-
-    # ------------------------------------------------------------- ckpt io
-    def _step_name(self, step: int) -> str:
-        return f"{self._ckpt_prefix}/step={step:05d}"
-
-    def _should_checkpoint(self, step: int) -> bool:
-        every = max(1, self.config.checkpoint_every)
-        return self._store is not None and step % every == 0
+        lineage = dict(lineage or {})
+        lineage.setdefault("damping", config.damping)
+        lineage.setdefault("num_partitions", config.num_partitions)
+        self.store = RoundStore(spark, config, kernel, run_id, lineage=lineage)
+        self.run_id = self.store.run_id
 
     def _dump_plan(self, state: DataFrame, step: int) -> None:
         """Debug hook: write the superstep's physical plan (formatted
@@ -167,70 +318,13 @@ class SuperstepEngine:
             pass
 
     def _persist_state(self, state: DataFrame, step: int) -> DataFrame:
-        """Materialize the superstep's state and cut lineage.
-
-        ``state_persist="cache"`` keeps the state in the block cache
-        instead: InMemoryRelation preserves the state's hash
-        partitioning (a localCheckpoint degrades it to
-        UnknownPartitioning), so key-joining kernels avoid an O(V)
-        exchange per superstep. Lineage is still truncated with a
-        localCheckpoint every ``cache_truncate_every`` steps.
-        """
+        """Materialize the superstep's state and cut lineage: the
+        durable write on a checkpoint round (committed by the caller
+        once the step's metrics are known), ``materialize`` otherwise."""
         self._dump_plan(state, step)
-        if self._should_checkpoint(step):
-            name = f"{self._step_name(step)}/state"
-            self._store.write(state, name)
-            return self._store.read(name)
-        every = max(1, self.config.cache_truncate_every)
-        if self.config.state_persist == "cache" and (step == 0 or step % every):
-            out = state.persist()
-            out.count()  # eager materialization
-        else:
-            out = releaf(state.localCheckpoint(eager=True))
-        self._persisted.append(out)
-        return out
-
-    def _write_meta(self, step: int, metrics: dict) -> None:
-        """Mark a checkpointed superstep complete (atomic marker)."""
-        if not self._should_checkpoint(step):
-            return
-        meta = {
-            "run_id": self.run_id,
-            "kernel": self.kernel,
-            "superstep": step,
-            "metrics": metrics,
-            "lineage": self.lineage,
-            # per-partition rows/bytes of the just-written state table
-            # (parquet footers / Iceberg .files — no extra Spark job)
-            "partition_lineage": self._store.partition_lineage(
-                f"{self._step_name(step)}/state"
-            ),
-            "wall_ts": time.time(),
-            "completed": True,
-        }
-        self._store.write_meta(self._step_name(step), meta)
-
-    def latest_checkpoint(self) -> tuple[int, DataFrame, dict] | None:
-        """(step, state, metrics) of the newest COMPLETED superstep, or None.
-
-        A superstep whose state table exists but whose completion marker
-        was never committed (killed mid-write) is ignored — resume
-        restarts it from the previous completed state.
-        """
-        if self._store is None:
-            return None
-        best = None
-        for name in self._store.list_meta_names(self._ckpt_prefix):
-            tail = name.rsplit("/", 1)[-1]
-            if tail.startswith("step="):
-                step = int(tail.split("=")[1])
-                if best is None or step > best:
-                    best = step
-        if best is None:
-            return None
-        meta = self._store.read_meta(self._step_name(best)) or {}
-        state = self._store.read(f"{self._step_name(best)}/state")
-        return best, state, meta.get("metrics", {})
+        if self.store.due(step):
+            return self.store.write(step, {"state": state})["state"]
+        return materialize(state)
 
     # ------------------------------------------------------------- runner
     def run(
@@ -246,9 +340,10 @@ class SuperstepEngine:
         all_metrics: list[dict] = []
         state: DataFrame | None = None
         if resume:
-            latest = self.latest_checkpoint()
+            latest = self.store.latest(max_round=max_steps)
             if latest is not None:
-                found_step, state, last_metrics = latest
+                found_step, tables, last_metrics = latest
+                state = tables["state"]
                 all_metrics.append(last_metrics)
                 if converged_fn and last_metrics and converged_fn(last_metrics):
                     return SuperstepResult(state, found_step, True, all_metrics)
@@ -256,7 +351,7 @@ class SuperstepEngine:
         if state is None:
             state = init_state() if callable(init_state) else init_state
             state = self._persist_state(state, 0)
-            self._write_meta(0, {"init": True})
+            self.store.commit(0, {"init": True})
 
         converged = False
         step = start_step - 1
@@ -272,21 +367,10 @@ class SuperstepEngine:
                 metrics.update(post_fn(state, new_state, step))
             metrics["superstep"] = step
             metrics["seconds"] = time.time() - t0
-            self._write_meta(step, metrics)
+            self.store.commit(step, metrics)
             all_metrics.append(metrics)
-            # The old state is dead once the new one is materialized and
-            # post-metrics are computed — release its cached blocks now,
-            # or long runs accumulate every superstep's state in memory.
-            if any(df is state for df in self._persisted):
-                state.unpersist()
-                self._persisted = [df for df in self._persisted if df is not state]
             state = new_state
             if converged_fn and converged_fn(metrics):
                 converged = True
                 break
-        # Release any remaining intermediates, but never the final state.
-        for df in self._persisted:
-            if df is not state:
-                df.unpersist()
-        self._persisted.clear()
         return SuperstepResult(state, step, converged, all_metrics)

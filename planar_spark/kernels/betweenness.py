@@ -29,7 +29,7 @@ count jobs). Determinism: source sampling is top-out-degree with vid
 tie-break, so results are exactly reproducible and oracle-checkable.
 
 Durable resume: with ``config.checkpoint_dir`` set, the loop state is
-written through LoopCheckpointer every ``config.checkpoint_every``
+written through RoundStore every ``config.checkpoint_every``
 combined rounds (forward depth r = round r; backward level d = round
 depth + (depth - d)), including which phase the run was in;
 ``resume=True`` with the same ``run_id`` re-enters the interrupted
@@ -41,9 +41,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Observation, functions as F
 
 from planar_spark.config import EngineConfig
-from planar_spark.graph.loopckpt import LoopCheckpointer
 from planar_spark.graph.skew import maybe_broadcast
-from planar_spark.graph.superstep import releaf
+from planar_spark.graph.superstep import RoundStore, materialize
 from planar_spark.graph.tables import GraphTables
 
 _ACC_SCHEMA = "s long, vid long, delta double"
@@ -119,7 +118,7 @@ def betweenness(
     config = config or EngineConfig()
     spark = graph.spark
     parts = config.partitions_for(spark)
-    ckpt = LoopCheckpointer(spark, config, "betweenness", run_id=run_id)
+    ckpt = RoundStore(spark, config, "betweenness", run_id=run_id)
 
     # ---- restore -----------------------------------------------------
     phase = "fwd"
@@ -187,10 +186,10 @@ def betweenness(
     # ---- forward: multi-source BFS with path counts ------------------
     if reached is None:
         src_df = spark.createDataFrame([(int(s),) for s in sources], "s long")
-        frontier = releaf(
+        frontier = materialize(
             src_df.select(
                 "s", F.col("s").alias("vid"), F.lit(1.0).alias("sigma")
-            ).localCheckpoint(eager=True)
+            )
         )
         n_frontier = len(sources)
         reached = frontier.withColumn("depth", F.lit(0)).persist()
@@ -216,10 +215,9 @@ def betweenness(
             .agg(F.sum("sigma").alias("sigma"))
         )
         obs = Observation()
-        new_frontier = releaf(
+        new_frontier = materialize(
             cand.join(reached.select("s", "vid"), ["s", "vid"], "left_anti")
             .observe(obs, F.count(F.lit(1)).alias("n"))
-            .localCheckpoint(eager=True)
         )
         n_frontier = int(obs.get["n"])
         if n_frontier == 0:
@@ -277,7 +275,7 @@ def betweenness(
                 ).alias("delta")
             )
         )
-        nxt_cur = releaf(
+        nxt_cur = materialize(
             lvl.join(contrib, ["s", "vid"], "left")
             .select(
                 "s",
@@ -285,7 +283,6 @@ def betweenness(
                 "sigma",
                 F.coalesce("delta", F.lit(0.0)).alias("delta"),
             )
-            .localCheckpoint(eager=True)
         )
         acc = acc.unionByName(cur.select("s", "vid", "delta"))
         cur = nxt_cur
@@ -309,12 +306,11 @@ def betweenness(
         if acc is not None
         else spark.createDataFrame([], "vid long, bc double")
     )
-    out = releaf(
+    out = materialize(
         graph.vertices.select("vid")
         .join(bc, "vid", "left")
         .select("vid", F.coalesce("bc", F.lit(0.0)).alias("bc"))
         .repartition(parts, "vid")
-        .localCheckpoint(eager=True)
     )
     if metrics_out is not None:
         metrics_out["depth"] = depth

@@ -45,8 +45,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Observation, functions as F
 
 from planar_spark.config import EngineConfig
-from planar_spark.graph.loopckpt import LoopCheckpointer
-from planar_spark.graph.superstep import releaf
+from planar_spark.graph.superstep import RoundStore, materialize
 from planar_spark.graph.tables import GraphTables
 
 PRIO_MULT = 2654435761  # Knuth's 2^32 golden-ratio multiplier
@@ -174,13 +173,13 @@ def greedy_coloring(
         .repartition(parts, "src")
         .persist()
     )
-    colored = releaf(
+    colored = materialize(
         graph.vertices.select(
             "vid", F.lit(None).cast("long").alias("color")
-        ).localCheckpoint(eager=True)
+        )
     )
     rounds = 0
-    ckpt = LoopCheckpointer(spark, config, "coloring", run_id=run_id)
+    ckpt = RoundStore(spark, config, "coloring", run_id=run_id)
     if resume:
         latest = ckpt.latest()
         if latest is not None:
@@ -192,14 +191,13 @@ def greedy_coloring(
         todo = colored.where(F.col("color").isNull()).select("vid")
         commit = _round_commits(todo, sym, colored, r)
         obs = Observation()
-        new_colored = releaf(
+        new_colored = materialize(
             colored.join(commit, "vid", "left")
             .select("vid", F.coalesce("color", "pc").alias("color"))
             .observe(
                 obs,
                 F.sum(F.col("color").isNull().cast("long")).alias("n_uncolored"),
             )
-            .localCheckpoint(eager=True)
         )
         colored.unpersist()
         colored = new_colored

@@ -36,7 +36,11 @@ from pyspark.sql import DataFrame, functions as F
 
 from planar_spark.config import EngineConfig
 from planar_spark.graph.skew import salted_gather_join
-from planar_spark.graph.superstep import SuperstepEngine, SuperstepResult
+from planar_spark.graph.superstep import (
+    SuperstepEngine,
+    SuperstepResult,
+    materialize,
+)
 from planar_spark.graph.tables import GraphTables
 
 
@@ -80,7 +84,7 @@ def connected_components(
       pytest-checked against union-find on an adversarial cycle
       fixture). Always returns ``converged=True`` (empty-pick is a
       fixpoint proof); ``resume``/checkpointing ride the msf kernel's
-      LoopCheckpointer (kernel name ``msf``) — pass the same ``run_id``
+      RoundStore (kernel name ``msf``) — pass the same ``run_id``
       on the original call AND the retry, otherwise a fresh uuid is
       minted per call and the "resume" silently restarts from scratch.
 
@@ -132,7 +136,7 @@ def connected_components(
         # and returning those labels as components would repeat the
         # silent-under-merge bug this mode exists to prevent
         # run_id MUST be plumbed through for resume to mean anything:
-        # LoopCheckpointer mints a fresh uuid per call, so without the
+        # RoundStore mints a fresh uuid per call, so without the
         # caller's run_id latest() is always None and a "resume" run
         # silently restarts from scratch (r6 ADVICE).
         boruvka_msf(
@@ -249,11 +253,10 @@ def connected_components(
         if contract and _step > 1:
             la = labels.select(F.col("vid").alias("src"), F.col("label").alias("ls"))
             lb = labels.select(F.col("vid").alias("dst"), F.col("label").alias("ld"))
-            shrunk = (
+            shrunk = materialize(
                 sym.join(la, "src").join(lb, "dst")
                 .where(F.col("ls") != F.col("ld"))
                 .select(*(["sblk"] if bs else []), "src", "dst")
-                .localCheckpoint(eager=True)
             )
             sym.unpersist()
             edge_state["sym"] = sym = shrunk

@@ -30,7 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Observation, functions as F
 
 from planar_spark.config import EngineConfig
-from planar_spark.graph.superstep import releaf
+from planar_spark.graph.superstep import materialize
 from planar_spark.graph.tables import GraphTables
 
 
@@ -50,11 +50,10 @@ def densest_subgraph(
     parts = config.partitions_for(spark)
 
     obs0 = Observation()
-    und = releaf(
+    und = materialize(
         graph.undirected_edges()
         .repartition(parts, "a")
         .observe(obs0, F.count(F.lit(1)).alias("m"))
-        .localCheckpoint(eager=True)
     )
     m = int(obs0.get["m"] or 0)
     if m == 0:
@@ -75,13 +74,12 @@ def densest_subgraph(
         # and the materialized table then feeds the keep-filter below,
         # so the degree work is never recomputed inside the shrink job.
         obs_n = Observation()
-        deg = releaf(
+        deg = materialize(
             cur.select(F.col("a").alias("v"))
             .unionAll(cur.select(F.col("b").alias("v")))
             .groupBy("v")
             .agg(F.count(F.lit(1)).alias("d"))
             .observe(obs_n, F.count(F.lit(1)).alias("n"))
-            .localCheckpoint(eager=True)
         )
         cur_n = int(obs_n.get["n"] or 0)
         density = cur_m / cur_n
@@ -93,11 +91,10 @@ def densest_subgraph(
         ka = keep.select(F.col("v").alias("a"))
         kb = keep.select(F.col("v").alias("b"))
         obs = Observation()
-        nxt = releaf(
+        nxt = materialize(
             cur.join(ka, "a", "left_semi")
             .join(kb, "b", "left_semi")
             .observe(obs, F.count(F.lit(1)).alias("m"))
-            .localCheckpoint(eager=True)
         )
         rounds += 1
         new_m = int(obs.get["m"] or 0)

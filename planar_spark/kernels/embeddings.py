@@ -121,16 +121,15 @@ def kmeans_embeddings(
             else:
                 new_cents.append((cid, old))  # empty cell: keep centroid
         cents = new_cents
-    from planar_spark.graph.superstep import releaf
+    from planar_spark.graph.superstep import materialize
 
     # materialize BEFORE unpersisting vecs: the assignment is returned
     # lazy and referenced multiple times downstream (IVF candidate join
     # + rerank) — without this the broadcast assign pass would recompute
     # per reference over an uncached input
-    assignments = releaf(
+    assignments = materialize(
         _assign(vecs, _centroid_df(spark, cents))
         .select("vec_id", "cid")
-        .localCheckpoint(eager=True)
     )
     if metrics_out is not None:
         sizes = assignments.groupBy("cid").count()
@@ -208,17 +207,16 @@ def embedding_ivf_topk(
         )
     )
     # window partitions are bounded by the probed inverted lists, not N
-    from planar_spark.graph.superstep import releaf
+    from planar_spark.graph.superstep import materialize
 
     w = W.partitionBy("q").orderBy(F.col("sim").desc(), F.col("neighbor").asc())
     # top-k results are small: materialize eagerly so unpersisting the
     # vector cache cannot force a 3x recompute of the assign pass when
     # the caller finally acts on the lazy plan
-    out = releaf(
+    out = materialize(
         sims.withColumn("rn", F.row_number().over(w))
         .where(F.col("rn") <= k)
         .select("q", "neighbor", "sim")
-        .localCheckpoint(eager=True)
     )
     e.unpersist()
     return out

@@ -32,7 +32,7 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.sql import types as T
 
 from planar_spark.config import EngineConfig
-from planar_spark.graph.superstep import releaf
+from planar_spark.graph.superstep import materialize
 from planar_spark.graph.tables import GraphTables
 
 
@@ -61,7 +61,7 @@ def gnn_forward(
     weights = seeded_weights(dim, num_layers, seed)
     edges = graph.edges
 
-    h = releaf(features.repartition(parts, "vid").localCheckpoint(eager=True))
+    h = materialize(features.repartition(parts, "vid"))
     for layer in range(num_layers):
         w = spark.sparkContext.broadcast(weights[layer])
 
@@ -108,10 +108,10 @@ def gnn_forward(
             out = np.maximum(mat @ w.value.T, 0.0)
             return pd.Series(list(out))
 
-        new_h = releaf(
+        new_h = materialize(
             assembled.select(
                 "vid", matmul_relu(F.col("vec")).alias("vec")
-            ).localCheckpoint(eager=True)
+            )
         )
         h.unpersist()
         h = new_h

@@ -130,7 +130,9 @@ def triad_census(graph: GraphTables, config=None) -> DataFrame:
     from planar_spark.kernels.triangles import _closed_wedges
 
     config = config or EngineConfig()
-    tri = _closed_wedges(graph, config)  # (a, b, c), a < b < c, once each
+    # (a, b, c), a < b < c, once each; the oriented cache stays live
+    # under the returned lazy frame
+    tri, _oriented = _closed_wedges(graph, config)
     e = graph.edges.select("src", "dst").distinct()
     # (lo, hi, f_fwd, f_bwd): f_fwd = lo->hi exists, f_bwd = hi->lo.
     # max() folds a reciprocal pair's two rows into one.

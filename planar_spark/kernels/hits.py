@@ -111,7 +111,7 @@ def hits(
     # barrier-diet discipline even though it ran only once per call.)
     from pyspark.sql import Observation
 
-    from planar_spark.graph.superstep import releaf
+    from planar_spark.graph.superstep import materialize
 
     in_deg = rev.groupBy(F.col("src").alias("vid")).agg(
         F.count(F.lit(1)).alias("out_deg")
@@ -124,12 +124,12 @@ def hits(
         )
     )
     obs = Observation()
-    hubs_leaf = releaf(
+    hubs_leaf = materialize(
         both.observe(
             obs,
             F.sum((F.col("side") == 0).cast("long")).alias("n_out"),
             F.sum((F.col("side") == 1).cast("long")).alias("n_in"),
-        ).localCheckpoint(eager=True)
+        )
     )
     probe = obs.get
     out_hubs = (

@@ -32,8 +32,7 @@ import time
 from pyspark.sql import DataFrame, Observation, functions as F
 
 from planar_spark.config import EngineConfig
-from planar_spark.graph.loopckpt import LoopCheckpointer
-from planar_spark.graph.superstep import releaf
+from planar_spark.graph.superstep import RoundStore, materialize
 from planar_spark.graph.tables import GraphTables
 
 
@@ -45,7 +44,7 @@ def neighborhood_function_exact(
     base = graph.vertices.select(
         F.col("vid"), F.col("vid").alias("t")
     )
-    reach = releaf(base.localCheckpoint(eager=True))
+    reach = materialize(base)
     frontier = reach
     edges = graph.edges.select("src", "dst").distinct()
     for _ in range(radius):
@@ -56,13 +55,10 @@ def neighborhood_function_exact(
             .join(reach, ["vid", "t"], "left_anti")
         )
         obs = Observation()
-        nxt = releaf(
-            nxt.observe(obs, F.count(F.lit(1)).alias("n"))
-            .localCheckpoint(eager=True)
-        )
+        nxt = materialize(nxt.observe(obs, F.count(F.lit(1)).alias("n")))
         if int(obs.get["n"] or 0) == 0:
             break
-        reach = releaf(reach.unionAll(nxt).localCheckpoint(eager=True))
+        reach = materialize(reach.unionAll(nxt))
         frontier = nxt
     return reach.groupBy("vid").agg(F.count(F.lit(1)).alias("nf"))
 
@@ -80,7 +76,7 @@ def distance_histogram(
     the effective-diameter estimate web-graph papers report."""
     config = config or EngineConfig()
     base = graph.vertices.select(F.col("vid"), F.col("vid").alias("t"))
-    reach = releaf(base.localCheckpoint(eager=True))
+    reach = materialize(base)
     frontier = reach
     edges = graph.edges.select("src", "dst").distinct()
     counts = [(0, graph.num_vertices)]
@@ -92,15 +88,12 @@ def distance_histogram(
             .join(reach, ["vid", "t"], "left_anti")
         )
         obs = Observation()
-        nxt = releaf(
-            nxt.observe(obs, F.count(F.lit(1)).alias("n"))
-            .localCheckpoint(eager=True)
-        )
+        nxt = materialize(nxt.observe(obs, F.count(F.lit(1)).alias("n")))
         n = int(obs.get["n"] or 0)
         if n == 0:
             break
         counts.append((k, n))
-        reach = releaf(reach.unionAll(nxt).localCheckpoint(eager=True))
+        reach = materialize(reach.unionAll(nxt))
         frontier = nxt
     return graph.spark.createDataFrame(
         counts, schema="dist long, n_pairs long"
@@ -131,7 +124,7 @@ def harmonic_centrality(
     pytest (mirrors neighborhood_function_exact vs hyperball)."""
     config = config or EngineConfig()
     base = graph.vertices.select(F.col("vid"), F.col("vid").alias("t"))
-    reach = releaf(base.localCheckpoint(eager=True))
+    reach = materialize(base)
     frontier = reach
     edges = graph.edges.select("src", "dst").distinct()
     level_counts: list[DataFrame] = []
@@ -143,16 +136,13 @@ def harmonic_centrality(
             .join(reach, ["vid", "t"], "left_anti")
         )
         obs = Observation()
-        nxt = releaf(
-            nxt.observe(obs, F.count(F.lit(1)).alias("n"))
-            .localCheckpoint(eager=True)
-        )
+        nxt = materialize(nxt.observe(obs, F.count(F.lit(1)).alias("n")))
         if int(obs.get["n"] or 0) == 0:
             break
         level_counts.append(
             nxt.groupBy("vid").agg(F.count(F.lit(1)).alias(f"c{k}"))
         )
-        reach = releaf(reach.unionAll(nxt).localCheckpoint(eager=True))
+        reach = materialize(reach.unionAll(nxt))
         frontier = nxt
     out = graph.vertices.select("vid")
     terms = []
@@ -182,7 +172,7 @@ def closeness_centrality(
     scale note; ``hyperball_centralities`` is the 100 TB path."""
     config = config or EngineConfig()
     base = graph.vertices.select(F.col("vid"), F.col("vid").alias("t"))
-    reach = releaf(base.localCheckpoint(eager=True))
+    reach = materialize(base)
     frontier = reach
     edges = graph.edges.select("src", "dst").distinct()
     level_counts: list[DataFrame] = []
@@ -194,16 +184,13 @@ def closeness_centrality(
             .join(reach, ["vid", "t"], "left_anti")
         )
         obs = Observation()
-        nxt = releaf(
-            nxt.observe(obs, F.count(F.lit(1)).alias("n"))
-            .localCheckpoint(eager=True)
-        )
+        nxt = materialize(nxt.observe(obs, F.count(F.lit(1)).alias("n")))
         if int(obs.get["n"] or 0) == 0:
             break
         level_counts.append(
             nxt.groupBy("vid").agg(F.count(F.lit(1)).alias(f"c{k}"))
         )
-        reach = releaf(reach.unionAll(nxt).localCheckpoint(eager=True))
+        reach = materialize(reach.unionAll(nxt))
         frontier = nxt
     out = graph.vertices.select("vid")
     reached = F.lit(1)
@@ -282,7 +269,7 @@ def hyperball(
 
     Durable resume (r7): with ``config.checkpoint_dir`` set, the (vid,
     sk) state table — the sketches are opaque binary, which TableStore
-    round-trips — is saved through LoopCheckpointer every
+    round-trips — is saved through RoundStore every
     ``config.checkpoint_every`` radii; ``resume=True`` with the same
     ``run_id`` re-enters at the next radius. This is the self-declared
     100 TB diameter path, so a driver loss at radius N of a long sweep
@@ -292,7 +279,7 @@ def hyperball(
     """
     config = config or EngineConfig()
     parts = config.partitions_for(graph.spark)
-    ckpt = LoopCheckpointer(graph.spark, config, "hyperball", run_id=run_id)
+    ckpt = RoundStore(graph.spark, config, "hyperball", run_id=run_id)
 
     rev = (
         graph.edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
@@ -307,17 +294,13 @@ def hyperball(
         latest = ckpt.latest(max_round=radius)
         if latest is not None:
             start_r, tables, _mm = latest
-            state = releaf(
-                tables["state"].repartition(parts, "vid")
-                .localCheckpoint(eager=True)
-            )
+            state = materialize(tables["state"].repartition(parts, "vid"))
     if state is None:
         start_r = 0
-        state = releaf(
+        state = materialize(
             graph.vertices.groupBy("vid")
             .agg(F.hll_sketch_agg("vid", F.lit(lg_config_k)).alias("sk"))
             .repartition(parts, "vid")
-            .localCheckpoint(eager=True)
         )
     budget = max_rounds if max_rounds is not None else (1 << 30)
     for r in range(start_r + 1, radius + 1):
@@ -332,7 +315,7 @@ def hyperball(
             .groupBy(F.col("dst").alias("vid"))
             .agg(F.hll_union_agg("sk").alias("nsk"))
         )
-        state = releaf(
+        state = materialize(
             state.join(msgs, "vid", "left")
             .select(
                 "vid",
@@ -340,7 +323,6 @@ def hyperball(
                     F.col("nsk").isNull(), F.col("sk")
                 ).otherwise(F.hll_union("sk", "nsk")).alias("sk"),
             )
-            .localCheckpoint(eager=True)
         )
         saved = ckpt.save(r, {"state": state}, {"radius": r})
         if saved is not None:
@@ -388,13 +370,13 @@ def hyperball_nf_profile(
     ``metrics_out['round_secs']`` reports per-round wall time so
     benches keep attributing cost to the radius.
 
-    Durable resume (r7): same LoopCheckpointer contract as
+    Durable resume (r7): same RoundStore contract as
     ``hyperball`` (kernel name ``hyperball_nf``); the accumulated
     global profile and per-round secs ride the round metadata, so a
     resumed sweep reports the full curve."""
     config = config or EngineConfig()
     parts = config.partitions_for(graph.spark)
-    ckpt = LoopCheckpointer(graph.spark, config, "hyperball_nf", run_id=run_id)
+    ckpt = RoundStore(graph.spark, config, "hyperball_nf", run_id=run_id)
 
     rev = (
         graph.edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
@@ -412,21 +394,17 @@ def hyperball_nf_profile(
         latest = ckpt.latest(max_round=radius)
         if latest is not None:
             start_r, tables, mm = latest
-            state = releaf(
-                tables["state"].repartition(parts, "vid")
-                .localCheckpoint(eager=True)
-            )
+            state = materialize(tables["state"].repartition(parts, "vid"))
             profile = [(int(r), float(v)) for r, v in mm["profile"]]
             round_secs = [float(s) for s in mm.get("round_secs", [])]
     if state is None:
         start_r = 0
         obs0 = Observation()
-        state = releaf(
+        state = materialize(
             graph.vertices.groupBy("vid")
             .agg(F.hll_sketch_agg("vid", F.lit(lg_config_k)).alias("sk"))
             .repartition(parts, "vid")
             .observe(obs0, F.sum(est).alias("nf"))
-            .localCheckpoint(eager=True)
         )
         profile = [(0, float(obs0.get["nf"] or 0.0))]
         round_secs = []
@@ -442,7 +420,7 @@ def hyperball_nf_profile(
             .agg(F.hll_union_agg("sk").alias("nsk"))
         )
         obs = Observation()
-        state = releaf(
+        state = materialize(
             state.join(msgs, "vid", "left")
             .select(
                 "vid",
@@ -451,7 +429,6 @@ def hyperball_nf_profile(
                 ).otherwise(F.hll_union("sk", "nsk")).alias("sk"),
             )
             .observe(obs, F.sum(est).alias("nf"))
-            .localCheckpoint(eager=True)
         )
         profile.append((r, float(obs.get["nf"] or 0.0)))
         round_secs.append(round(time.time() - t0, 3))
@@ -565,7 +542,7 @@ def hyperball_centralities(
     bench scale the error bound is asserted like hyperball's
     (bench.py big_graph: harmonic r=1 vs exact out-degree).
 
-    Durable resume (r7): same LoopCheckpointer contract as
+    Durable resume (r7): same RoundStore contract as
     ``hyperball`` (kernel name ``hyperball_centralities``) — the full
     accumulator state (vid, sk, prev_est, h, dist_total, ecc) is one
     table per saved radius; ``max_rounds`` caps radii processed this
@@ -573,7 +550,7 @@ def hyperball_centralities(
     """
     config = config or EngineConfig()
     parts = config.partitions_for(graph.spark)
-    ckpt = LoopCheckpointer(
+    ckpt = RoundStore(
         graph.spark, config, "hyperball_centralities", run_id=run_id
     )
 
@@ -591,13 +568,10 @@ def hyperball_centralities(
         latest = ckpt.latest(max_round=radius)
         if latest is not None:
             start_r, tables, _mm = latest
-            state = releaf(
-                tables["state"].repartition(parts, "vid")
-                .localCheckpoint(eager=True)
-            )
+            state = materialize(tables["state"].repartition(parts, "vid"))
     if state is None:
         start_r = 0
-        state = releaf(
+        state = materialize(
             graph.vertices.groupBy("vid")
             .agg(F.hll_sketch_agg("vid", F.lit(lg_config_k)).alias("sk"))
             .select(
@@ -608,7 +582,6 @@ def hyperball_centralities(
                 F.lit(0).alias("ecc"),
             )
             .repartition(parts, "vid")
-            .localCheckpoint(eager=True)
         )
     budget = max_rounds if max_rounds is not None else (1 << 30)
     for r in range(start_r + 1, radius + 1):
@@ -627,7 +600,7 @@ def hyperball_centralities(
             F.hll_union("sk", "nsk")
         )
         delta = F.greatest(F.col("_est") - F.col("prev_est"), F.lit(0.0))
-        state = releaf(
+        state = materialize(
             state.join(msgs, "vid", "left")
             .select(
                 "vid",
@@ -651,7 +624,6 @@ def hyperball_centralities(
                     "ecc"
                 ),
             )
-            .localCheckpoint(eager=True)
         )
         saved = ckpt.save(r, {"state": state}, {"radius": r})
         if saved is not None:

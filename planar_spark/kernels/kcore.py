@@ -24,9 +24,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Observation, functions as F
 
 from planar_spark.config import EngineConfig
-from planar_spark.graph.loopckpt import LoopCheckpointer
 from planar_spark.graph.skew import maybe_broadcast
-from planar_spark.graph.superstep import releaf
+from planar_spark.graph.superstep import RoundStore, materialize
 from planar_spark.graph.tables import GraphTables
 
 
@@ -60,7 +59,7 @@ def k_core(
     rounds = 0
     frontier_sizes: list[int] = []
     touched: list[int] = []
-    ckpt = LoopCheckpointer(graph.spark, config, "kcore", run_id=run_id)
+    ckpt = RoundStore(graph.spark, config, "kcore", run_id=run_id)
     state = None
     if resume:
         latest = ckpt.latest()
@@ -84,11 +83,10 @@ def k_core(
 
     for r in range(rounds, max_rounds):
         obs_f = Observation()
-        removed = releaf(
+        removed = materialize(
             state.where(F.col("deg") < k)
             .select("vid")
             .observe(obs_f, F.count(F.lit(1)).alias("n"))
-            .localCheckpoint(eager=True)
         )
         n_removed = int(obs_f.get["n"])
         if n_removed == 0:
@@ -118,9 +116,7 @@ def k_core(
             )
         )
         if rounds % max(1, truncate_every) == 0:
-            new_state = releaf(
-                new_state.localCheckpoint(eager=True)
-            ).repartition(parts, "vid")
+            new_state = materialize(new_state).repartition(parts, "vid")
         new_state = new_state.persist()
         new_state.count()
         touched.append(int(obs_l.get["touched"] or 0))
@@ -141,10 +137,9 @@ def k_core(
         metrics_out["rounds"] = rounds
         metrics_out["frontier_sizes"] = frontier_sizes
         metrics_out["touched"] = touched
-    core = releaf(
+    core = materialize(
         state.where(F.col("deg") >= k)
         .select("vid")
-        .localCheckpoint(eager=True)
     )
     state.unpersist()
     return (
@@ -159,7 +154,6 @@ def core_decomposition(
     config: EngineConfig | None = None,
     max_rounds: int = 2000,
     metrics_out: dict | None = None,
-    truncate_every: int = 8,
     run_id: str | None = None,
     resume: bool = False,
 ) -> DataFrame:
@@ -188,13 +182,12 @@ def core_decomposition(
     frontier size and advance k (jumping past provably-empty levels to
     min_deg+1) with zero jobs. There is no separate running-assignment
     table to truncate — cores live in the state leaf and the per-round
-    plan is constant-size. ``truncate_every`` is retained for API
-    compatibility but is a no-op (leaf-per-round needs no truncation).
+    plan is constant-size.
 
     Durable resume: with ``config.checkpoint_dir`` set, the state leaf
     and the driver counters (rounds, current level k, levels, n_alive,
     and the observed frontier size/min degree) are written through
-    LoopCheckpointer every ``config.checkpoint_every``-th removal
+    RoundStore every ``config.checkpoint_every``-th removal
     round; ``resume=True`` with the same ``run_id`` re-enters the
     ascending peel at the newest completed round. (Checkpoints written
     by the pre-r8 two-table format are not readable by this code.)
@@ -203,7 +196,7 @@ def core_decomposition(
     parts = config.partitions_for(graph.spark)
     spark = graph.spark
     sym = graph.symmetric_edges_by_src(parts).persist()
-    ckpt = LoopCheckpointer(spark, config, "core_decomp", run_id=run_id)
+    ckpt = RoundStore(spark, config, "core_decomp", run_id=run_id)
 
     state = None  # (vid, deg, core) — core NULL while alive
     k = 1
@@ -219,10 +212,7 @@ def core_decomposition(
         latest = ckpt.latest()
         if latest is not None:
             _rnd, tables, m = latest
-            state = releaf(
-                tables["state"].repartition(parts, "vid")
-                .localCheckpoint(eager=True)
-            )
+            state = materialize(tables["state"].repartition(parts, "vid"))
             k = int(m.get("k", 1))
             rounds = int(m.get("rounds", _rnd))
             levels = list(m.get("levels", []))
@@ -233,12 +223,11 @@ def core_decomposition(
                 min_deg = int(m["min_deg"])
     if state is None:
         obs0 = Observation()
-        state = releaf(
+        state = materialize(
             sym.groupBy(F.col("src").alias("vid"))
             .agg(F.count(F.lit(1)).alias("deg"))
             .select("vid", "deg", F.lit(None).cast("long").alias("core"))
             .observe(obs0, F.count(F.lit(1)).alias("n"))
-            .localCheckpoint(eager=True)
         )
         n_alive = int(obs0.get["n"] or 0)
 
@@ -280,7 +269,7 @@ def core_decomposition(
             F.col("deg") - F.coalesce("lost", F.lit(0)),
         ).otherwise(F.col("deg"))
         obs = Observation()
-        new_state = releaf(
+        new_state = materialize(
             state.join(loss, "vid", "left")
             .select(
                 "vid", new_deg.alias("deg"), new_core.alias("core")
@@ -293,7 +282,6 @@ def core_decomposition(
                 F.min(F.when(alive, F.col("deg"))).alias("mn"),
                 F.sum(alive.cast("long")).alias("n_alive"),
             )
-            .localCheckpoint(eager=True)
         )
         got = obs.get
         prev_alive = n_alive

@@ -46,8 +46,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Observation, functions as F
 
 from planar_spark.config import EngineConfig
-from planar_spark.graph.loopckpt import LoopCheckpointer
-from planar_spark.graph.superstep import releaf
+from planar_spark.graph.superstep import RoundStore, materialize
 from planar_spark.graph.tables import GraphTables
 
 _H_A = 2654435761  # Knuth multiplicative hash, same family as coloring
@@ -114,7 +113,7 @@ def louvain(
 
     Durable resume: with ``config.checkpoint_dir`` set, the full loop
     state (level edge table + composed assignment + in-progress
-    community table) is saved through LoopCheckpointer every
+    community table) is saved through RoundStore every
     ``config.checkpoint_every`` move rounds (counted ACROSS levels so
     the round number is monotone) and at each level boundary;
     ``resume=True`` with the same ``run_id`` re-enters mid-move-phase
@@ -126,7 +125,7 @@ def louvain(
     config = config or EngineConfig()
     spark = graph.spark
     parts = config.partitions_for(spark)
-    ckpt = LoopCheckpointer(spark, config, "louvain", run_id=run_id)
+    ckpt = RoundStore(spark, config, "louvain", run_id=run_id)
 
     cur = None
     comm = None
@@ -140,10 +139,7 @@ def louvain(
         latest = ckpt.latest()
         if latest is not None:
             _rnd, tables, mm = latest
-            cur = releaf(
-                tables["cur"].repartition(parts, "a")
-                .localCheckpoint(eager=True)
-            )
+            cur = materialize(tables["cur"].repartition(parts, "a"))
             assign = tables["assign"]
             comm = tables.get("comm")
             level0 = int(mm["level"])
@@ -177,13 +173,10 @@ def louvain(
             cur = und.withColumn("w", F.lit(1.0))
         # cur: one row per undirected edge (a <= b after contraction;
         # a == b rows are self-loops carrying intra-community weight)
-        cur = releaf(
-            cur.repartition(parts, "a").localCheckpoint(eager=True)
-        )
+        cur = materialize(cur.repartition(parts, "a"))
         # assign: original vid -> current-level vertex (community rep)
-        assign = releaf(
+        assign = materialize(
             graph.vertices.select("vid", F.col("vid").alias("comm"))
-            .localCheckpoint(eager=True)
         )
 
     budget = max_total_rounds if max_total_rounds is not None else (1 << 30)
@@ -223,9 +216,7 @@ def louvain(
                 ).alias("deg"),
             )
         )
-        deg = releaf(
-            deg.repartition(parts, "vid").localCheckpoint(eager=True)
-        )
+        deg = materialize(deg.repartition(parts, "vid"))
         m = cur.agg(F.sum("w")).collect()[0][0] or 0.0
         if m <= 0:
             break
@@ -333,7 +324,7 @@ def louvain(
             )
             moves = best.where(_move_gate(F.col("vid"), rounds))
             obs = Observation()
-            comm = releaf(
+            comm = materialize(
                 comm.join(
                     moves.select("vid", "c_new"), "vid", "left"
                 )
@@ -344,7 +335,6 @@ def louvain(
                 )
                 .observe(obs, F.sum("_mv").alias("moved"))
                 .drop("_mv")
-                .localCheckpoint(eager=True)
             )
             moved = int(obs.get["moved"] or 0)
             zero_streak = zero_streak + 1 if moved == 0 else 0
@@ -372,7 +362,7 @@ def louvain(
         # compose the original-vid assignment through this level (LEFT:
         # isolated vertices never enter a level graph and keep their
         # own-vid community)
-        assign = releaf(
+        assign = materialize(
             assign.join(
                 comm.select(
                     F.col("vid").alias("comm"), F.col("c").alias("_c")
@@ -383,7 +373,6 @@ def louvain(
             .select(
                 "vid", F.coalesce("_c", F.col("comm")).alias("comm")
             )
-            .localCheckpoint(eager=True)
         )
 
         # modularity of this level's partition (on the level graph):
@@ -421,7 +410,7 @@ def louvain(
 
         # contract: communities become vertices, weights aggregate,
         # intra-community weight becomes the self-loop
-        nxt = releaf(
+        nxt = materialize(
             cur.join(ca, "a")
             .join(cb, "b")
             .select(
@@ -432,7 +421,6 @@ def louvain(
             .groupBy("a", "b")
             .agg(F.sum("w").alias("w"))
             .repartition(parts, "a")
-            .localCheckpoint(eager=True)
         )
         cur = nxt
         comm = None  # next level re-derives its own community table

@@ -42,8 +42,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Observation, functions as F
 
 from planar_spark.config import EngineConfig
-from planar_spark.graph.loopckpt import LoopCheckpointer
-from planar_spark.graph.superstep import releaf
+from planar_spark.graph.superstep import RoundStore, materialize
 from planar_spark.graph.tables import GraphTables
 
 
@@ -87,7 +86,7 @@ def boruvka_msf(
     Durable resume: with ``config.checkpoint_dir`` set, every
     ``config.checkpoint_every``-th completed Boruvka round writes the
     full loop state (labels + forest-so-far) plus the driver counters
-    through LoopCheckpointer; ``resume=True`` with the same ``run_id``
+    through RoundStore; ``resume=True`` with the same ``run_id``
     re-enters the loop at the newest completed round instead of round 0
     (tested kill/resume-identical in tests/test_loop_resume.py).
     """
@@ -124,10 +123,10 @@ def boruvka_msf(
                 "boruvka_msf: weights do not cover every undirected "
                 "edge of the graph (found an edge with NULL weight)"
             )
-    labels = releaf(
+    labels = materialize(
         graph.vertices.select(
             "vid", F.col("vid").alias("label")
-        ).localCheckpoint(eager=True)
+        )
     )
     forest_parts: list[DataFrame] = []
     rounds = 0
@@ -135,7 +134,7 @@ def boruvka_msf(
     picked_per_round: list[int] = []
     n_picked = -1  # -1 = loop never ran (e.g. resume at the budget)
 
-    ckpt = LoopCheckpointer(spark, config, "msf", run_id=run_id)
+    ckpt = RoundStore(spark, config, "msf", run_id=run_id)
     if resume:
         latest = ckpt.latest()
         if latest is not None:
@@ -170,13 +169,12 @@ def boruvka_msf(
             live.select(F.col("cb").alias("comp"), e_struct)
         )
         obs_pick = Observation()
-        picked = releaf(
+        picked = materialize(
             incident.groupBy("comp")
             .agg(F.min("e").alias("e"))
             .select(*pick_cols)
             .distinct()
             .observe(obs_pick, F.count(F.lit(1)).alias("n"))
-            .localCheckpoint(eager=True)
         )
         n_picked = int(obs_pick.get["n"])
         if n_picked == 0:
@@ -205,18 +203,18 @@ def boruvka_msf(
         # on its own (tiny) checkpoint job.
         # hook-to-min includes the component's own label in the min
         # (the old code's least(label, new_label) at the label join)
-        mp = releaf(
+        mp = materialize(
             merged.select(
                 "comp",
                 F.least("comp", "new_label").alias("new_label"),
-            ).localCheckpoint(eager=True)
+            )
         )
         for _j in range(max_jumps):
             parent = mp.select(
                 F.col("comp").alias("p_comp"), F.col("new_label").alias("p_label")
             )
             obs_j = Observation()
-            jumped = releaf(
+            jumped = materialize(
                 mp.join(parent, mp["new_label"] == parent["p_comp"], "left")
                 .select(
                     mp["comp"].alias("comp"),
@@ -230,19 +228,17 @@ def boruvka_msf(
                 )
                 .observe(obs_j, F.sum("_moved").alias("changed"))
                 .drop("_moved")
-                .localCheckpoint(eager=True)
             )
             total_jumps += 1
             mp = jumped
             if int(obs_j.get["changed"] or 0) == 0:
                 break
-        labels = releaf(
+        labels = materialize(
             labels.join(mp, labels["label"] == mp["comp"], "left")
             .select(
                 "vid",
                 F.coalesce("new_label", F.col("label")).alias("label"),
             )
-            .localCheckpoint(eager=True)
         )
         if ckpt.due(rounds):
             forest_df = forest_parts[0]

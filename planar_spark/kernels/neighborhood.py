@@ -248,10 +248,8 @@ def node2vec_walk(
                 F.coalesce("m.dst", F.col("m.cur")).alias("cur"),
             )
         )
-    from planar_spark.graph.superstep import releaf
+    from planar_spark.graph.superstep import materialize
 
-    out = releaf(
-        walks.select("start", "walk_id", "cur").localCheckpoint(eager=True)
-    )
+    out = materialize(walks.select("start", "walk_id", "cur"))
     sym.unpersist()
     return out

@@ -37,15 +37,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Observation, functions as F
 
 from planar_spark.config import EngineConfig
-from planar_spark.graph.loopckpt import LoopCheckpointer
-from planar_spark.graph.superstep import releaf
+from planar_spark.graph.superstep import RoundStore, materialize
 from planar_spark.graph.tables import GraphTables
 
 
 def _ckpt(df: DataFrame, obs: Observation | None = None, metric=None):
     if obs is not None:
         df = df.observe(obs, metric)
-    return releaf(df.localCheckpoint(eager=True))
+    return materialize(df)
 
 
 def strongly_connected_components(
@@ -80,7 +79,7 @@ def strongly_connected_components(
     outer_rounds = 0
     inner_jobs = 0
 
-    ckpt = LoopCheckpointer(spark, config, "scc", run_id=run_id)
+    ckpt = RoundStore(spark, config, "scc", run_id=run_id)
     if resume:
         latest = ckpt.latest()
         if latest is not None:

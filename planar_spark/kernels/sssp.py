@@ -94,7 +94,7 @@ def bfs_sssp(
         # Seed the broadcast-size estimate from the checkpoint's metrics:
         # without this, a resumed mid-expansion BFS would force-broadcast
         # an arbitrarily large frontier.
-        latest = engine.latest_checkpoint()
+        latest = engine.store.latest(max_round=max_iterations)
         if latest is not None:
             carry["size"] = latest[2].get("frontier_size")
 
@@ -213,7 +213,7 @@ def weighted_sssp(
         lineage={"source": int(source), "num_edges": graph.num_edges},
     )
     if resume:
-        latest = engine.latest_checkpoint()
+        latest = engine.store.latest(max_round=max_rounds)
         if latest is not None:
             carry["size"] = latest[2].get("improved")
 

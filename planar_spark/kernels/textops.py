@@ -724,7 +724,7 @@ def near_dup_clusters(
     pagination trails); hash-min rounds are O(chain diameter)."""
     from pyspark.sql import Observation
 
-    from planar_spark.graph.superstep import releaf
+    from planar_spark.graph.superstep import materialize
 
     # ONE tokenize+distinct pass (r8): the shingle table feeds both the
     # MinHash signatures and the exact-Jaccard pass — previously each
@@ -737,12 +737,11 @@ def near_dup_clusters(
     # LSH subtree (signatures + band join + bucket-cap count join) is
     # too expensive to re-execute per reference
     obs_p = Observation()
-    pairs = releaf(
+    pairs = materialize(
         lsh_candidate_pairs(
             docs, n, num_hashes, bands, max_bucket, shingles=sh
         )
         .observe(obs_p, F.count(F.lit(1)).alias("n"))
-        .localCheckpoint(eager=True)
     )
     if metrics_out is not None:
         metrics_out["candidate_pairs"] = int(obs_p.get["n"] or 0)
@@ -762,11 +761,10 @@ def near_dup_clusters(
     # materialize the (tiny) pair-graph edge list once so the label loop
     # references a leaf, not the whole LSH/Jaccard tree
     obs_e = Observation()
-    edges = releaf(
+    edges = materialize(
         sims.where(F.col("jaccard") >= threshold)
         .select("a", "b")
         .observe(obs_e, F.count(F.lit(1)).alias("n"))
-        .localCheckpoint(eager=True)
     )
     sh.unpersist()
     n_dup_edges = int(obs_e.get["n"] or 0)

@@ -50,19 +50,26 @@ def _oriented_edges(graph: GraphTables) -> DataFrame:
     )
 
 
-def _closed_wedges(graph: GraphTables, config: EngineConfig) -> DataFrame:
+def _closed_wedges(
+    graph: GraphTables, config: EngineConfig
+) -> tuple[DataFrame, DataFrame]:
+    """(triangles (a, b, c), the cached oriented edge table they are
+    built from) — the caller unpersists the latter once it is done."""
     parts = config.partitions_for(graph.spark)
     oriented = _oriented_edges(graph).repartition(parts, "lo").persist()
     e1 = oriented.select(F.col("lo").alias("a"), F.col("hi").alias("b"))
     e2 = oriented.select(F.col("lo").alias("b"), F.col("hi").alias("c"))
     wedges = e1.join(e2, "b")
     closing = oriented.select(F.col("lo").alias("a"), F.col("hi").alias("c"))
-    return wedges.join(closing, ["a", "c"]).select("a", "b", "c")
+    return wedges.join(closing, ["a", "c"]).select("a", "b", "c"), oriented
 
 
 def triangle_count(graph: GraphTables, config: EngineConfig | None = None) -> int:
     config = config or EngineConfig()
-    return _closed_wedges(graph, config).count()
+    tri, oriented = _closed_wedges(graph, config)
+    n = tri.count()
+    oriented.unpersist()
+    return n
 
 
 def local_clustering(
@@ -107,7 +114,7 @@ def triangle_count_per_vertex(
 ) -> DataFrame:
     """(vid, triangles) for every vertex (0 for triangle-free vertices)."""
     config = config or EngineConfig()
-    tri = _closed_wedges(graph, config)
+    tri, _oriented = _closed_wedges(graph, config)
     corners = (
         tri.select(F.col("a").alias("vid"))
         .unionAll(tri.select(F.col("b").alias("vid")))

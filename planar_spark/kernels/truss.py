@@ -22,7 +22,7 @@ Algorithm — synchronous support peeling to a fixpoint:
 The per-round survivor count rides the state checkpoint as an
 Observation (no standalone count actions); the loop fails loudly if
 max_rounds is exhausted before the fixpoint, and checkpoints its edge
-set durably through LoopCheckpointer every config.checkpoint_every
+set durably through RoundStore every config.checkpoint_every
 rounds (resume re-enters at the newest completed round).
 
 Scale notes: each round's work is one oriented triangle join over the
@@ -62,8 +62,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Observation, functions as F
 
 from planar_spark.config import EngineConfig
-from planar_spark.graph.loopckpt import LoopCheckpointer
-from planar_spark.graph.superstep import releaf
+from planar_spark.graph.superstep import RoundStore, materialize
 from planar_spark.graph.tables import GraphTables
 
 
@@ -156,13 +155,12 @@ def _delta_ktruss(
     spark = graph.spark
     parts = config.partitions_for(spark)
     und = graph.undirected_edges().repartition(parts, "a")
-    tri = releaf(_triangles_of(und).localCheckpoint(eager=True))
+    tri = materialize(_triangles_of(und))
     obs0 = Observation()
-    es0 = releaf(  # initial per-edge supports, immutable across rounds
+    es0 = materialize(  # initial per-edge supports, immutable across rounds
         und.join(_tri_edge_contribs(tri), ["a", "b"], "left")
         .select("a", "b", F.coalesce("c_n", F.lit(0)).alias("s"))
         .observe(obs0, F.count(F.lit(1)).alias("n"))
-        .localCheckpoint(eager=True)
     )
     n_alive = int(obs0.get["n"] or 0)
     doomed_acc = None  # cumulative doomed edges; bounded by |E| - kept
@@ -185,11 +183,10 @@ def _delta_ktruss(
 
     for _ in range(max_rounds):
         obs_d = Observation()
-        doomed = releaf(
+        doomed = materialize(
             current().where(F.col("s") < k - 2)
             .select("a", "b")
             .observe(obs_d, F.count(F.lit(1)).alias("n"))
-            .localCheckpoint(eager=True)
         )
         n_doomed = int(obs_d.get["n"] or 0)
         if n_doomed == 0:
@@ -227,18 +224,14 @@ def _delta_ktruss(
             "a", "b", F.col("c_n").alias("d")
         )
         obs_c = Observation()
-        cumdec = releaf(
+        cumdec = materialize(
             (dec if cumdec is None else cumdec.unionAll(dec))
             .groupBy("a", "b")
             .agg(F.sum("d").alias("d"))
             .observe(obs_c, F.count(F.lit(1)).alias("n"))
-            .localCheckpoint(eager=True)
         )
-        doomed_acc = releaf(
-            (
-                doomed if doomed_acc is None
-                else doomed_acc.unionAll(doomed)
-            ).localCheckpoint(eager=True)
+        doomed_acc = materialize(
+            doomed if doomed_acc is None else doomed_acc.unionAll(doomed)
         )
         cum_doomed += n_doomed  # doomed_acc rows (exact, driver-side)
         acc_rows = cum_doomed + int(obs_c.get["n"] or 0)  # + cumdec rows
@@ -246,11 +239,11 @@ def _delta_ktruss(
             # fold the accumulators into fresh base tables so the
             # per-round broadcasts stay bounded (amortized: one
             # O(#triangles) rewrite per compact_rows peeled edges)
-            es0 = releaf(current().localCheckpoint(eager=True))
+            es0 = materialize(current())
             live_tri = tri
             for x, y in (("x", "y"), ("y", "z"), ("x", "z")):
                 live_tri = probe(live_tri, doomed_acc, x, y, "left_anti")
-            tri = releaf(live_tri.localCheckpoint(eager=True))
+            tri = materialize(live_tri)
             doomed_acc = None
             cumdec = None
             cum_doomed = 0
@@ -293,7 +286,7 @@ def truss_decomposition(
     Durable resume: with ``config.checkpoint_dir`` set, the full loop
     state — surviving edges with supports (es), the remaining triangle
     list (tri), the running assignments AND the driver counters — is
-    written through LoopCheckpointer every
+    written through RoundStore every
     ``config.checkpoint_every``-th removal round; ``resume=True`` with
     the same ``run_id`` re-enters the ascending peel at the newest
     completed round (level advances between saves replay idempotently).
@@ -301,7 +294,7 @@ def truss_decomposition(
     config = config or EngineConfig()
     spark = graph.spark
     parts = config.partitions_for(spark)
-    ckpt = LoopCheckpointer(spark, config, "truss_decomp", run_id=run_id)
+    ckpt = RoundStore(spark, config, "truss_decomp", run_id=run_id)
 
     es = tri = assigned = None
     k = 3
@@ -311,26 +304,20 @@ def truss_decomposition(
         latest = ckpt.latest()
         if latest is not None:
             _rnd, tables, m = latest
-            es = releaf(
-                tables["es"].repartition(parts, "a")
-                .localCheckpoint(eager=True)
-            )
-            tri = releaf(tables["tri"].localCheckpoint(eager=True))
-            assigned = releaf(
-                tables["assigned"].localCheckpoint(eager=True)
-            )
+            es = materialize(tables["es"].repartition(parts, "a"))
+            tri = materialize(tables["tri"])
+            assigned = materialize(tables["assigned"])
             k = int(m.get("k", 3))
             rounds = int(m.get("rounds", _rnd))
             n_alive = int(m.get("n_alive", 0))
     if es is None:
         und = graph.undirected_edges().repartition(parts, "a")
-        tri = releaf(_triangles_of(und).localCheckpoint(eager=True))
+        tri = materialize(_triangles_of(und))
         obs_n = Observation()
-        es = releaf(
+        es = materialize(
             und.join(_tri_edge_contribs(tri), ["a", "b"], "left")
             .select("a", "b", F.coalesce("c_n", F.lit(0)).alias("s"))
             .observe(obs_n, F.count(F.lit(1)).alias("n"))
-            .localCheckpoint(eager=True)
         )
         n_alive = int(obs_n.get["n"] or 0)
         assigned = spark.createDataFrame(
@@ -340,11 +327,10 @@ def truss_decomposition(
         if n_alive == 0:
             break
         obs_d = Observation()
-        doomed = releaf(
+        doomed = materialize(
             es.where(F.col("s") < k - 2)
             .select("a", "b")
             .observe(obs_d, F.count(F.lit(1)).alias("n"))
-            .localCheckpoint(eager=True)
         )
         n_doomed = int(obs_d.get["n"] or 0)
         if n_doomed == 0:
@@ -372,7 +358,7 @@ def truss_decomposition(
         )
         dec = _tri_edge_contribs(killed)
         obs_s = Observation()
-        es = releaf(
+        es = materialize(
             es.join(doomed, ["a", "b"], "left_anti")
             .join(dec, ["a", "b"], "left")
             .select(
@@ -380,17 +366,13 @@ def truss_decomposition(
                 (F.col("s") - F.coalesce("c_n", F.lit(0))).alias("s"),
             )
             .observe(obs_s, F.count(F.lit(1)).alias("n"))
-            .localCheckpoint(eager=True)
         )
         n_alive = int(obs_s.get["n"] or 0)
-        tri = releaf(
-            tri.join(killed, ["x", "y", "z"], "left_anti")
-            .localCheckpoint(eager=True)
-        )
+        tri = materialize(tri.join(killed, ["x", "y", "z"], "left_anti"))
         if rounds % max(1, truncate_every) == 0:
             # cut the assignment lineage: releases the union chain AND
             # the per-round doomed-edge leaves it references
-            assigned = releaf(assigned.localCheckpoint(eager=True))
+            assigned = materialize(assigned)
         if ckpt.due(rounds):
             saved = ckpt.save(
                 rounds,
@@ -398,8 +380,8 @@ def truss_decomposition(
                 {"rounds": rounds, "k": k, "n_alive": n_alive},
             )
             # root the loop at the durable copies (lineage truncation)
-            es = releaf(saved["es"].localCheckpoint(eager=True))
-            tri = releaf(saved["tri"].localCheckpoint(eager=True))
+            es = materialize(saved["es"])
+            tri = materialize(saved["tri"])
             assigned = saved["assigned"]
     else:
         raise RuntimeError(
@@ -426,7 +408,7 @@ def k_truss(
     deterministic. ``metrics_out`` receives ``rounds`` and
     ``survivors_per_round`` (used to size the oracle unroll).
     ``delta=True`` uses the materialized-triangle delta-peeling variant
-    (module doc; no LoopCheckpointer durability — the recompute form
+    (module doc; no RoundStore durability — the recompute form
     remains the durable default)."""
     if k < 3:
         raise ValueError("k-truss requires k >= 3 (k-2 >= 1 triangles)")
@@ -439,25 +421,22 @@ def k_truss(
 
     rounds = 0
     survivors: list[int] = []
-    ckpt = LoopCheckpointer(spark, config, "ktruss", run_id=run_id)
+    ckpt = RoundStore(spark, config, "ktruss", run_id=run_id)
     und = None
     if resume:
         latest = ckpt.latest()
         if latest is not None:
             _rnd, tables, m = latest
-            und = releaf(
-                tables["edges"].repartition(parts, "a").localCheckpoint(True)
-            )
+            und = materialize(tables["edges"].repartition(parts, "a"))
             rounds = int(m.get("rounds", _rnd))
             survivors = list(m.get("survivors_per_round", []))
             prev_n = survivors[-1] if survivors else None
     if und is None:
         obs0 = Observation()
-        und = releaf(
+        und = materialize(
             graph.undirected_edges()
             .repartition(parts, "a")
             .observe(obs0, F.count(F.lit(1)).alias("n"))
-            .localCheckpoint(eager=True)
         )
         prev_n = int(obs0.get["n"] or 0)
 
@@ -467,12 +446,11 @@ def k_truss(
             break
         supp = _edge_support(und)
         obs = Observation()
-        kept = releaf(
+        kept = materialize(
             und.join(supp, ["a", "b"], "left")
             .where(F.coalesce("s", F.lit(0)) >= k - 2)
             .select("a", "b")
             .observe(obs, F.count(F.lit(1)).alias("n"))
-            .localCheckpoint(eager=True)
         )
         n_kept = int(obs.get["n"] or 0)
         rounds += 1

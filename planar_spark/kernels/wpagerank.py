@@ -23,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Observation, functions as F
 
 from planar_spark.config import EngineConfig
-from planar_spark.graph.superstep import releaf
+from planar_spark.graph.superstep import materialize
 
 
 def weighted_pagerank(
@@ -58,11 +58,10 @@ def weighted_pagerank(
     w_out = e.groupBy(F.col("src").alias("vid")).agg(
         F.sum("w").alias("w_out")
     )
-    base = releaf(
+    base = materialize(
         verts.join(w_out, "vid", "left")
         .select("vid", F.coalesce("w_out", F.lit(0.0)).alias("w_out"))
         .repartition(parts, "vid")
-        .localCheckpoint(eager=True)
     )
     n = base.count()
     if n == 0:
@@ -82,7 +81,7 @@ def weighted_pagerank(
         dm_df = state.where(F.col("w_out") == 0).agg(
             F.coalesce(F.sum("pr"), F.lit(0.0)).alias("_dm")
         )
-        state = releaf(
+        state = materialize(
             base.join(contribs, "vid", "left")
             .crossJoin(F.broadcast(dm_df))
             .select(
@@ -97,7 +96,6 @@ def weighted_pagerank(
                     )
                 ).alias("pr"),
             )
-            .localCheckpoint(eager=True)
         )
     e.unpersist()
     return state.select("vid", "pr")

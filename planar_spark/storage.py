@@ -18,7 +18,7 @@ is deploy-time configuration only —
       --conf spark.sql.catalog.lake.warehouse=<path> ...
 
 — no engine code changes. All callers (GraphTables.write/read, the
-superstep checkpoint) go through this layer.
+``RoundStore`` round checkpoints) go through this layer.
 """
 
 from __future__ import annotations
@@ -326,10 +326,13 @@ class TableStore:
         """Names of all completed markers under ``prefix``.
 
         Catalog mode resolves the newest row per name and its completed
-        flag in ONE Spark job (max_by over wall_ts) — callers like
-        LoopCheckpointer._completed_rounds previously paid one read_meta
-        job per name ever written; now a retracted/incomplete name is
-        never listed, matching the filesystem fallback's semantics."""
+        flag in ONE Spark job (max_by over wall_ts); a retracted or
+        incomplete name is never listed, matching the filesystem
+        fallback's semantics. ``RoundStore`` (graph/superstep.py) relies
+        on this: one listing of its ``<kernel>/<run_id>/round=NNNNN``
+        markers is its whole resume scan (no per-round ``read_meta``),
+        and the newest round's meta is the only one it reads.
+        Checkpoints in the older ``step=NNNNN`` layout are not read."""
         if self.catalog:
             from pyspark.sql import functions as F
 

@@ -7,7 +7,7 @@ This module is the streaming back half for that query:
     edge parquet dir (new files = new crawl deltas)
       -> readStream
       -> foreachBatch:
-           load newest label state        (LoopCheckpointer.latest)
+           load newest label state        (RoundStore.latest)
            union unseen endpoints         (new pages = singletons)
            incremental_wcc(old, delta)    (label-graph contraction,
                                            Boruvka mode — exact + O(log)
@@ -32,7 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from planar_spark.config import EngineConfig
-from planar_spark.graph.loopckpt import LoopCheckpointer
+from planar_spark.graph.superstep import RoundStore
 from planar_spark.kernels.components import incremental_wcc
 
 _RUN_ID = "maintain"  # fixed: state must be findable across restarts
@@ -43,7 +43,7 @@ def _checkpointer(
     state_dir: str,
     config: EngineConfig | None,
     retain_rounds: int = 4,
-) -> LoopCheckpointer:
+) -> RoundStore:
     if not state_dir:
         raise ValueError("wcc maintenance requires a durable state_dir")
     cfg = config or EngineConfig()
@@ -54,7 +54,7 @@ def _checkpointer(
     # grows by |labels| per batch forever (r6 ADVICE). 4 rounds keeps
     # enough history to debug a bad delta while bounding state at
     # 4x|labels|.
-    return LoopCheckpointer(
+    return RoundStore(
         spark, cfg, "wcc_stream", run_id=_RUN_ID, retain=retain_rounds
     )
 

@@ -62,7 +62,7 @@ def main() -> None:
         bfs_sssp(g, int(g.vertices.agg(F.min("vid")).collect()[0][0]), cfg)
     if want("triangle_count"):
         with open(os.path.join(out_dir, "triangle_count.txt"), "w") as f:
-            f.write(fmt(_closed_wedges(g, cfg)))
+            f.write(fmt(_closed_wedges(g, cfg)[0]))
     if want("two_hop_stats"):
         with open(os.path.join(out_dir, "two_hop_stats.txt"), "w") as f:
             f.write(fmt(two_hop_stats(g)))

@@ -176,6 +176,20 @@ def test_triangle_count_exact(spark, config, name, edges, expected):
     assert got == want
 
 
+def test_triangle_count_releases_its_cache(spark, config):
+    """triangle_count returns a plain int, so nothing it cached may
+    outlive the call. Compared by RDD id, not count: the context
+    cleaner may drop earlier tests' checkpoint RDDs mid-call."""
+    g = graph_from_numpy(spark, edges_simple4(), 4)
+
+    def persistent_ids():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+    before = persistent_ids()
+    assert triangle_count(g, config) == 2
+    assert persistent_ids() - before == set()
+
+
 def test_triangle_per_vertex(spark, config):
     edges = edges_simple4()
     g = graph_from_numpy(spark, edges, 4)

@@ -178,7 +178,7 @@ def test_loop_ckpt_ignores_incomplete_round(spark, tmp_path):
     import os
     import shutil
 
-    from planar_spark.graph.loopckpt import LoopCheckpointer
+    from planar_spark.graph.superstep import RoundStore
     from planar_spark.kernels.mst import boruvka_msf
 
     edges = edges_powerlaw(120, m=2, seed=3)
@@ -190,7 +190,7 @@ def test_loop_ckpt_ignores_incomplete_round(spark, tmp_path):
     dst = os.path.join(base, "round=00002")
     shutil.copytree(src, dst)
     os.remove(os.path.join(dst, "_META.json"))
-    ck = LoopCheckpointer(spark, cfg, "msf", run_id="msfX")
+    ck = RoundStore(spark, cfg, "msf", run_id="msfX")
     found = ck.latest()
     assert found is not None and found[0] == 1
 

@@ -195,6 +195,27 @@ def test_releaf_prevents_checkpoint_stats_blowup(spark):
     assert state.count() == 100
 
 
+def test_materialize_policy_lives_in_superstep_only():
+    """Every iterative kernel cuts lineage through superstep.materialize
+    and checkpoints through superstep.RoundStore. A kernel-local
+    localCheckpoint (which skips releaf's stats reset) or a second
+    checkpoint helper would fork that single policy again."""
+    import pathlib
+
+    import planar_spark
+
+    root = pathlib.Path(planar_spark.__file__).parent
+    allowed = root / "graph" / "superstep.py"
+    hits = [
+        f"{path.relative_to(root)}:{i}: {line.strip()}"
+        for path in sorted(root.rglob("*.py"))
+        if path != allowed
+        for i, line in enumerate(path.read_text().splitlines(), 1)
+        if "localCheckpoint(" in line or "LoopCheckpointer" in line
+    ]
+    assert not hits, "\n".join(hits)
+
+
 def test_reversed_edge_gather_is_merge_join(spark, config):
     """The hits/hyperball hub-phase gather joins on the REVERSED edge
     cache (partitioned+sorted by the reversed src): like the forward

@@ -3,12 +3,18 @@
 from __future__ import annotations
 
 import numpy as np
+import pytest
 
 from planar_spark.config import EngineConfig
 from planar_spark.graph.skew import hub_vertices, salted_gather_join
 from planar_spark.graph.superstep import SuperstepEngine
 from planar_spark.ingest.pages import edges_powerlaw, edges_star_hub
-from planar_spark.kernels import connected_components, pagerank
+from planar_spark.kernels import (
+    bfs_sssp,
+    connected_components,
+    label_propagation,
+    pagerank,
+)
 from planar_spark.oracle import oracle_pagerank
 
 from tests.conftest import graph_from_numpy
@@ -18,24 +24,82 @@ def _pr_rows(result):
     return sorted((r["vid"], round(r["pr"], 12)) for r in result.state.collect())
 
 
-def test_pagerank_resume_equals_uninterrupted(spark, tmp_path):
-    """Kill after 4 of 10 supersteps, resume -> identical final state."""
+def _state_rows(result):
+    return sorted(
+        tuple(round(v, 12) if isinstance(v, float) else v for v in r)
+        for r in result.state.collect()
+    )
+
+
+def _run_pagerank(g, cfg, steps, engine, resume=False):
+    return pagerank(g, cfg, num_iterations=steps, engine=engine, resume=resume)
+
+
+def _run_lpa(g, cfg, steps, engine, resume=False):
+    return label_propagation(
+        g, cfg, num_iterations=steps, engine=engine, resume=resume
+    )
+
+
+def _run_bfs(g, cfg, steps, engine, resume=False):
+    return bfs_sssp(
+        g, 150, cfg, max_iterations=steps, engine=engine, resume=resume
+    )
+
+
+ENGINE_KERNELS = [
+    # (kernel, runner, steps before the crash, steps asked on resume)
+    ("pagerank", _run_pagerank, 4, 10),
+    ("label_propagation", _run_lpa, 2, 5),
+    ("bfs_sssp", _run_bfs, 2, 100),
+]
+
+
+@pytest.mark.parametrize(
+    "kernel,run,crash_at,steps", ENGINE_KERNELS, ids=[k[0] for k in ENGINE_KERNELS]
+)
+def test_pagerank_resume_equals_uninterrupted(
+    spark, tmp_path, kernel, run, crash_at, steps
+):
+    """Kill after ``crash_at`` supersteps, resume -> identical final state."""
     edges = edges_powerlaw(300, m=3, seed=11)
     g = graph_from_numpy(spark, edges, 300)
     cfg = EngineConfig(
         num_partitions=8, tolerance=0.0, checkpoint_dir=str(tmp_path)
     )
     # partial run ("the crash")
-    eng_a = SuperstepEngine(spark, cfg, "pagerank", run_id="runA")
-    pagerank(g, cfg, num_iterations=4, engine=eng_a)
+    partial = run(g, cfg, crash_at, SuperstepEngine(spark, cfg, kernel, "runA"))
+    assert not partial.converged
     # resume with a FRESH engine object pointing at the same run_id
-    eng_a2 = SuperstepEngine(spark, cfg, "pagerank", run_id="runA")
-    resumed = pagerank(g, cfg, num_iterations=10, engine=eng_a2, resume=True)
-    assert resumed.steps_run == 10
+    resumed = run(
+        g, cfg, steps, SuperstepEngine(spark, cfg, kernel, "runA"), resume=True
+    )
     # uninterrupted reference run
-    eng_b = SuperstepEngine(spark, cfg, "pagerank", run_id="runB")
-    full = pagerank(g, cfg, num_iterations=10, engine=eng_b)
-    assert _pr_rows(resumed) == _pr_rows(full)
+    full = run(g, cfg, steps, SuperstepEngine(spark, cfg, kernel, "runB"))
+    assert full.steps_run > crash_at
+    assert full.converged or full.steps_run == steps
+    assert resumed.steps_run == full.steps_run
+    assert resumed.converged == full.converged
+    assert _state_rows(resumed) == _state_rows(full)
+
+
+def test_resume_never_returns_a_checkpoint_past_the_target(spark, tmp_path):
+    """A run_id that already went to step 6 resumed with a 3-step target
+    must stop at step 3, not hand back step 6's state."""
+    edges = edges_powerlaw(300, m=3, seed=11)
+    g = graph_from_numpy(spark, edges, 300)
+    cfg = EngineConfig(
+        num_partitions=8, tolerance=0.0, checkpoint_dir=str(tmp_path)
+    )
+    pagerank(g, cfg, num_iterations=6,
+             engine=SuperstepEngine(spark, cfg, "pagerank", run_id="R"))
+    resumed = pagerank(
+        g, cfg, num_iterations=3, resume=True,
+        engine=SuperstepEngine(spark, cfg, "pagerank", run_id="R"),
+    )
+    plain = pagerank(g, cfg, num_iterations=3)
+    assert resumed.steps_run == 3
+    assert _pr_rows(resumed) == _pr_rows(plain)
 
 
 def test_resume_ignores_incomplete_superstep(spark, tmp_path):
@@ -51,12 +115,12 @@ def test_resume_ignores_incomplete_superstep(spark, tmp_path):
     eng = SuperstepEngine(spark, cfg, "pagerank", run_id="runC")
     pagerank(g, cfg, num_iterations=3, engine=eng)
     # simulate a crash mid-write of step 4: state written, no meta
-    src = os.path.join(str(tmp_path), "pagerank", "runC", "step=00003")
-    dst = os.path.join(str(tmp_path), "pagerank", "runC", "step=00004")
+    src = os.path.join(str(tmp_path), "pagerank", "runC", "round=00003")
+    dst = os.path.join(str(tmp_path), "pagerank", "runC", "round=00004")
     shutil.copytree(src, dst)
     os.remove(os.path.join(dst, "_META.json"))
     eng2 = SuperstepEngine(spark, cfg, "pagerank", run_id="runC")
-    found = eng2.latest_checkpoint()
+    found = eng2.store.latest()
     assert found is not None and found[0] == 3
 
 

@@ -101,13 +101,13 @@ def test_partition_lineage_matches_written_table(spark, tmp_path):
 
 def test_loop_checkpoint_meta_carries_partition_lineage(spark, tmp_path):
     from planar_spark.config import EngineConfig
-    from planar_spark.graph.loopckpt import LoopCheckpointer
+    from planar_spark.graph.superstep import RoundStore
 
     cfg = EngineConfig(checkpoint_dir=str(tmp_path), checkpoint_every=1)
-    ck = LoopCheckpointer(spark, cfg, "lintest", run_id="r1")
+    ck = RoundStore(spark, cfg, "lintest", run_id="r1")
     state = spark.range(64).selectExpr("id AS vid", "id % 7 AS lbl")
     ck.save(2, {"labels": state}, metrics={"rounds": 2})
-    meta = ck._store.read_meta(ck._round_name(2))
+    meta = TableStore(spark, str(tmp_path)).read_meta(ck.round_name(2))
     lin = meta["partition_lineage"]["labels"]
     assert lin["available"] and lin["total_rows"] == 64
     assert meta["metrics"]["rounds"] == 2
@@ -126,5 +126,5 @@ def test_superstep_checkpoint_meta_carries_partition_lineage(spark, tmp_path):
     names = sorted(store.list_meta_names("pagerank/linpr"))
     assert names, "expected at least one checkpointed superstep"
     meta = store.read_meta(names[-1])
-    lin = meta["partition_lineage"]
+    lin = meta["partition_lineage"]["state"]
     assert lin["available"] and lin["total_rows"] == 80

@@ -132,7 +132,7 @@ def test_streaming_wcc_maintenance_exactly_once_and_chain_delta(
     spark, tmp_path, config
 ):
     """Continuous component maintenance: three edge deltas streamed via
-    foreachBatch + incremental_wcc over LoopCheckpointer state. Delta 3
+    foreachBatch + incremental_wcc over RoundStore state. Delta 3
     daisy-chains every surviving component end-to-end (the shape that
     stalls hash-min — must be exact through the Boruvka path). Final
     labels must equal the batch kernel over the full edge set, and
