@@ -120,7 +120,7 @@ def main() -> None:
                                  run_id=args.run_id)
         out, meta = r.state, r
     elif args.kernel == "lpa":
-        r = label_propagation(g, cfg, num_iterations=args.iterations,
+        r = label_propagation(g, cfg, num_iterations=args.iterations or 10,
                               engine=engine("lpa"), resume=args.resume)
         out, meta = r.state, r
     elif args.kernel == "louvain":

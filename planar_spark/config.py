@@ -39,13 +39,6 @@ class EngineConfig:
     # strided ParallelVertexDoStep skew path, core/apis/planar_app_base.h:208-231).
     hub_degree_threshold: int = 100_000
     salt_buckets: int = 16
-    # Broadcast the frontier/state side of a join when its row count is
-    # below this (reference analogue: whole vertex-state array shared in
-    # memory, core/update_stores/bsp_update_store.h:35-36).
-    broadcast_max_rows: int = 2_000_000
-
-    # --- LPA ---
-    lpa_max_iterations: int = 10
 
     # --- locality layout consumption ---
     # Minimum edge count at which layout-aware kernels consume a

@@ -181,31 +181,41 @@ def effective_block_size(graph, config) -> int | None:
     return bs
 
 
+def _pinned(edges: DataFrame, block_size: int, parts: int, dedup: bool):
+    """The block-pinned layout of an (src, dst) table: sblk = src div
+    block_size, hash-partitioned by sblk and sorted by (sblk, src), so a
+    merge join on [sblk, src] needs neither exchange nor sort on this
+    side. ``dedup`` drops duplicate (src, dst) rows inside each
+    partition (sblk is a function of src), so it adds no exchange."""
+    out = edges.withColumn(
+        "sblk", F.expr(f"src div {int(block_size)}")
+    ).repartition(parts, "sblk")
+    if dedup:
+        out = out.dropDuplicates(["sblk", "src", "dst"])
+    return out.sortWithinPartitions("sblk", "src")
+
+
 def block_pinned_sym(graph, parts: int) -> DataFrame:
-    """The symmetric edge table in the block-pinned layout: (sblk, src,
-    dst), hash-partitioned by sblk and sorted by (sblk, src) so a merge
-    join on [sblk, src] needs neither exchange nor sort on this side.
-    Caller persists."""
-    bs = graph.block_size
-    return (
-        graph.symmetric_edges()
-        .withColumn("sblk", F.expr(f"src div {int(bs)}"))
-        .repartition(parts, "sblk")
-        .sortWithinPartitions("sblk", "src")
+    """The symmetric edge table, set-identical to
+    GraphTables.symmetric_edges, in the block-pinned layout: (src, dst,
+    sblk), one exchange. Caller persists."""
+    e = graph.edges
+    both = e.select("src", "dst").unionAll(
+        e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     )
+    return _pinned(both, graph.block_size, parts, dedup=True)
 
 
-def block_pinned_edges(graph, parts: int) -> DataFrame:
-    """The DIRECTED edge table in the block-pinned layout: (sblk, src,
-    dst), hash-partitioned by sblk and sorted by (sblk, src) — the
-    out-edge analogue of block_pinned_sym, consumed by pagerank-family
-    gathers (salted_gather_join's block mode). Caller persists."""
-    bs = graph.block_size
-    return (
-        graph.edges.withColumn("sblk", F.expr(f"src div {int(bs)}"))
-        .repartition(parts, "sblk")
-        .sortWithinPartitions("sblk", "src")
-    )
+def block_pinned_edges(graph, parts: int, reverse: bool = False) -> DataFrame:
+    """The DIRECTED edge multiset in the block-pinned layout (src, dst,
+    sblk) — consumed by pagerank-family gathers (salted_gather_join's
+    block mode). ``reverse`` swaps the endpoints first: the in-neighbor
+    table of hits' hub phase, whose src is still a vid and so names its
+    block the same way. Caller persists."""
+    e = graph.edges
+    if reverse:
+        e = e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+    return _pinned(e, graph.block_size, parts, dedup=False)
 
 
 def gather_fanin_rows(sym: DataFrame) -> int:

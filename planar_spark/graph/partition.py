@@ -1,37 +1,43 @@
 """Partitioning strategies — the reference's partitioner family in Spark.
 
 Reference: tools/graph_partitioner/partitioner/* and planar/
-partitioner.cpp. Spark's hash shuffle covers the hash family natively;
-the interesting one is the reference's equal-edge block split
-(planar/partitioner.cpp:62-101, nvme/partition/
+partitioner.cpp. The hash family needs no code here: the reference's
+hash vertex-cut (hash_based_vertexcut.cpp:43-167), hash edge-cut
+(hash_based_edgecut.cpp) and 2D grid cut (two_dimensional_vertexcut.cpp)
+are plain ``repartition(n, "src")`` / ``("dst")`` / ``("src", "dst")``
+calls, and every cached edge layout a kernel gathers over is built by
+the GraphTables builders (graph/tables.py) or graph/locality.py. What
+lives here are the strategies that compute a vertex assignment, each
+consumed through ``locality.vertex_parts`` / ``with_partitioning``:
+
+| here                  | strategy   | reference                          |
+|-----------------------|------------|------------------------------------|
+| balanced_range_bounds | T6 range   | planar/partitioner.cpp:62-101      |
+| bfs_grow_labels       | T3 BFS     | bfs_based_edgecut.cpp              |
+|                       | edge-cut   |                                    |
+| bfs_vertex_cut_labels | T4 BFS     | csr_based_planar_vertexcut.cpp:    |
+|                       | vertex-cut | 52-250,457-505                     |
+
+T6 is the reference's equal-edge block split (also nvme/partition/
 edge_equal_block_partition.h:29-120): contiguous vertex-id ranges whose
 EDGE counts are balanced — the explicit skew handling for power-law
-degree distributions, re-expressed here with a degree prefix-sum.
-
-| here                        | reference                         |
-|-----------------------------|-----------------------------------|
-| hash_vertex_cut             | hash_based_vertexcut.cpp:43-167   |
-| hash_edge_cut               | hash_based_edgecut.cpp            |
-| two_d_cut                   | two_dimensional_vertexcut.cpp     |
-| balanced_range_partition    | planar/partitioner.cpp:62-101     |
-| bfs_edge_cut (T3)           | bfs_based_edgecut.cpp             |
-| bfs_vertex_cut (T4)         | csr_based_planar_vertexcut.cpp:52-250,457-505 |
+degree distributions, re-expressed with a degree prefix-sum.
 
 The BFS pair re-expresses the reference's locality-first growth as
 frontier DataFrame supersteps (the same join shape as kernels/sssp):
 
-- T3 ``bfs_edge_cut``: one BFS region per target partition, grown
+- T3 (``bfs_grow_labels``): one BFS region per target partition, grown
   simultaneously from the k highest-degree seeds; a vertex joins the
   lowest-numbered region that reaches it first, regions stop expanding
   at a soft capacity cap (|V|/k * cap_factor), and stranded vertices
   balance-fill deterministically. Edges follow part(src) = edge-cut.
-- T4 ``bfs_vertex_cut``: grow MORE branches than partitions
+- T4 (``bfs_vertex_cut_labels``): grow MORE branches than partitions
   (branch_factor*k, the reference grows one branch per root-neighbor
   until branch >= E/128), then greedily merge branch sizes into k
   partitions driver-side (the reference's ``Redistributing`` — a
-  k*branch_factor-scalar bin-pack, no data movement), and assign each
-  EDGE to least(part(src), part(dst)) — a vertex-cut: a vertex with
-  edges in several partitions is implicitly replicated, exactly the
+  k*branch_factor-scalar bin-pack, no data movement). An edge belongs
+  to least(part(src), part(dst)) — a vertex-cut: a vertex with edges
+  in several partitions is implicitly replicated, exactly the
   reference's border-vertex notion (SURVEY P17).
 
 Per BFS round the driver sees only ≤ num_branches scalars (per-branch
@@ -43,47 +49,6 @@ the rounds scale like any BFS kernel at 100 TB.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
-
-
-def hash_vertex_cut(edges: DataFrame, num_partitions: int) -> DataFrame:
-    """Bucket edges by hash(src) — the reference's fnv64(src) % n."""
-    return edges.repartition(num_partitions, "src")
-
-
-def hash_edge_cut(edges: DataFrame, num_partitions: int) -> DataFrame:
-    """Bucket edges by hash(dst) (incoming-edge locality)."""
-    return edges.repartition(num_partitions, "dst")
-
-
-def two_d_cut(edges: DataFrame, num_partitions: int) -> DataFrame:
-    """Grid bucket by (src, dst)."""
-    return edges.repartition(num_partitions, "src", "dst")
-
-
-def balanced_range_partition(
-    edges: DataFrame, degrees: DataFrame, num_partitions: int
-) -> DataFrame:
-    """Contiguous vid ranges with ~equal EDGE counts (T6).
-
-    1. distributed degree prefix-sum over vid order (two-pass, never a
-       single-partition window — see balanced_range_bounds);
-    2. boundary vids at multiples of |E|/num_partitions;
-    3. edges bucketed by src range via a broadcast range join.
-
-    Returns edges with a ``part`` column, repartitioned by it.
-    """
-    bounds = balanced_range_bounds(edges, degrees, num_partitions)
-    if bounds is None:
-        return edges.withColumn("part", F.lit(0))
-    b = F.broadcast(bounds.select("part", "lo", "hi"))
-    out = edges.join(
-        b, (edges["src"] >= b["lo"]) & (edges["src"] <= b["hi"]), "left"
-    ).select(
-        "src", "dst", F.coalesce("part", F.lit(0)).alias("part")
-    )
-    # rangeByRange, not hash: hash(part) % n collides distinct bucket ids
-    # into the same physical partition and leaves others empty
-    return out.repartitionByRange(num_partitions, "part")
 
 
 def balanced_range_bounds(
@@ -197,7 +162,10 @@ def bfs_grow_labels(
         [(int(r["vid"]), i) for i, r in enumerate(seed_rows)],
         schema="vid long, branch int",
     )
-    sym = graph.symmetric_edges().select("src", "dst")
+    # the symmetric table is read every round: cache it for the loop
+    sym = graph.symmetric_edges_by_src(
+        int(spark.conf.get("spark.sql.shuffle.partitions"))
+    ).persist()
     labels = materialize(seeds)
     frontier = labels
     sizes = {i: 1 for i in range(b)}
@@ -236,6 +204,7 @@ def bfs_grow_labels(
             sizes[i] = sizes.get(i, 0) + int(n)
         labels = materialize(labels.unionAll(new))
         frontier = new
+    sym.unpersist()
     labeled = sum(sizes.values())
     if metrics_out is not None:
         metrics_out["rounds"] = rounds
@@ -250,21 +219,6 @@ def bfs_grow_labels(
     )
 
 
-def bfs_edge_cut(
-    graph, num_partitions: int, cap_factor: float = 1.5
-) -> DataFrame:
-    """T3: BFS-grown edge-cut — edges bucketed by the BFS region of
-    their src (reference bfs_based_edgecut.cpp). Returns edges with a
-    ``part`` column, range-repartitioned by it (hash(part) % n would
-    collide distinct region ids into one physical partition)."""
-    labels = bfs_grow_labels(graph, num_partitions, cap_factor)
-    lab = labels.select(F.col("vid").alias("src"), F.col("branch").alias("part"))
-    out = graph.edges.select("src", "dst").join(lab, "src", "left").select(
-        "src", "dst", F.coalesce("part", F.lit(0)).alias("part")
-    )
-    return out.repartitionByRange(num_partitions, "part")
-
-
 def bfs_vertex_cut_labels(
     graph,
     num_partitions: int,
@@ -273,9 +227,9 @@ def bfs_vertex_cut_labels(
 ) -> DataFrame:
     """(vid, part) for every vertex: the T4 grow-then-merge assignment
     (grow branch_factor*k BFS branches, greedily bin-pack them into k
-    partitions driver-side). Exposed separately so layout-aware callers
-    (GraphTables.with_partitioning) can relabel vertices region-major
-    from the same assignment that bfs_vertex_cut buckets edges by."""
+    partitions driver-side). Layout-aware callers
+    (GraphTables.with_partitioning) relabel vertices region-major from
+    it; an edge belongs to least(part(src), part(dst))."""
     nb = max(num_partitions, int(num_partitions) * int(branch_factor))
     labels = bfs_grow_labels(graph, nb, cap_factor)
     branch_sizes = {
@@ -299,45 +253,3 @@ def bfs_vertex_cut_labels(
         )
     )
     return labels.join(m, "branch").select("vid", "part")
-
-
-def bfs_vertex_cut(
-    graph,
-    num_partitions: int,
-    branch_factor: int = 4,
-    cap_factor: float = 1.5,
-) -> DataFrame:
-    """T4: planar BFS-branch vertex-cut — grow branch_factor*k branches,
-    greedily merge them into k partitions by size (the reference's
-    Redistributing, csr_based_planar_vertexcut.cpp:457-505, done here
-    as a driver-side bin-pack over ≤ branch_factor*k scalars), then
-    assign each EDGE to least(part(src), part(dst)). Vertices incident
-    to several partitions are implicitly replicated — the vertex-cut /
-    border-vertex model. Returns edges with a ``part`` column."""
-    vp = bfs_vertex_cut_labels(
-        graph, num_partitions, branch_factor, cap_factor
-    )
-    ps = vp.select(F.col("vid").alias("src"), F.col("part").alias("p_src"))
-    pd = vp.select(F.col("vid").alias("dst"), F.col("part").alias("p_dst"))
-    out = (
-        graph.edges.select("src", "dst")
-        .join(ps, "src", "left")
-        .join(pd, "dst", "left")
-        .select(
-            "src", "dst",
-            F.least(
-                F.coalesce("p_src", F.lit(0)), F.coalesce("p_dst", F.lit(0))
-            ).alias("part"),
-        )
-    )
-    return out.repartitionByRange(num_partitions, "part")
-
-
-def partition_edge_histogram(parted: DataFrame) -> list[int]:
-    """Edge count per Spark partition (for balance tests/diagnostics)."""
-    rows = (
-        parted.groupBy(F.spark_partition_id().alias("pid"))
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-    )
-    return [r["n"] for r in sorted(rows, key=lambda r: r["pid"])]

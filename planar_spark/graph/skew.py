@@ -31,6 +31,11 @@ from pyspark.sql import DataFrame, functions as F
 
 from planar_spark.config import EngineConfig
 
+# Broadcast the frontier/state side of a join when its row count is at
+# most this (reference analogue: whole vertex-state array shared in
+# memory, core/update_stores/bsp_update_store.h:35-36).
+BROADCAST_MAX_ROWS = 2_000_000
+
 
 def hub_vertices(degrees: DataFrame, threshold: int) -> DataFrame:
     """(vid) of vertices whose out-degree exceeds the hub threshold.
@@ -115,8 +120,9 @@ def salted_gather_join(
     return joined.drop("vid", "_salt")
 
 
-def maybe_broadcast(df: DataFrame, config: EngineConfig, row_count: int | None):
-    """Broadcast-hint df when its known row count is small enough."""
-    if row_count is not None and row_count <= config.broadcast_max_rows:
+def maybe_broadcast(df: DataFrame, row_count: int | None):
+    """Broadcast-hint df when its known row count is at most
+    BROADCAST_MAX_ROWS."""
+    if row_count is not None and row_count <= BROADCAST_MAX_ROWS:
         return F.broadcast(df)
     return df

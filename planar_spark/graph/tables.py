@@ -20,6 +20,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 
@@ -35,6 +36,10 @@ class GraphTables:
     # layout-aware kernels switch to block-pinned gathers (graph/
     # locality.py). None = plain hash layout.
     block_size: int | None = None
+    # False when ``vertices`` is a table the caller had already cached
+    # (from_edges(vertices=other.vertices)): unpersist() then leaves it
+    # to its owner.
+    owns_vertices: bool = True
 
     @property
     def spark(self) -> SparkSession:
@@ -64,8 +69,18 @@ class GraphTables:
     def unpersist(self) -> None:
         self.edges.unpersist()
         self.degrees.unpersist()
+        if self.owns_vertices:
+            self.vertices.unpersist()
 
-    # ---- undirected closure (used by CC / LPA / triangles) ----
+    # ---- derived edge tables ----
+    # The one-shot forms (undirected_edges, symmetric_edges) compose
+    # into a caller's plan. The ``*_by_*`` builders are the cached
+    # layouts: each is hash-partitioned by its gather key and sorted
+    # within partitions, with exactly ONE exchange above the edges
+    # cache; the caller persists and releases it. Each dedup runs after
+    # the repartition, inside the partition (hash(key) satisfies the
+    # clustering on any superset of the key), so it costs no second
+    # exchange. graph/locality.py owns the block-pinned layout.
     def undirected_edges(self) -> DataFrame:
         """Distinct undirected edge set as canonical (a < b) pairs."""
         e = self.edges
@@ -88,13 +103,9 @@ class GraphTables:
     def symmetric_edges_by_src(self, num_partitions: int) -> DataFrame:
         """Both directions of the distinct undirected edge set, hash-
         partitioned by src, src-sorted within partitions — the layout
-        every gather cache wants. The union is repartitioned by src
-        FIRST, so the (src, dst) dedup runs partition-locally
-        (hash(src) satisfies the subset-key clustering) — ONE exchange
-        total where ``symmetric_edges().repartition(...)`` pays two
-        (the distinct's plus the repartition's). Set-identical
-        (noop-isolated A/B at sf0.1: 0.49 -> 0.27s; r8). Caller
-        persists."""
+        every gather cache wants. Set-identical to ``symmetric_edges()``
+        at one exchange where ``symmetric_edges().repartition(...)``
+        pays two (noop-isolated A/B at sf0.1: 0.49 -> 0.27s; r8)."""
         e = self.edges
         u = e.select("src", "dst").unionAll(
             e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
@@ -102,6 +113,35 @@ class GraphTables:
         return (
             u.repartition(num_partitions, "src")
             .dropDuplicates(["src", "dst"])
+            .sortWithinPartitions("src")
+        )
+
+    def undirected_edges_by_a(self, num_partitions: int) -> DataFrame:
+        """The distinct canonical (a < b) pairs of ``undirected_edges()``,
+        hash-partitioned by a and a-sorted within partitions, so a
+        per-round ``join on a`` rides the merge fast path with no
+        exchange or sort on the edge side."""
+        e = self.edges
+        return (
+            e.select(
+                F.least("src", "dst").alias("a"),
+                F.greatest("src", "dst").alias("b"),
+            )
+            .repartition(num_partitions, "a")
+            .dropDuplicates(["a", "b"])
+            .sortWithinPartitions("a")
+        )
+
+    def reversed_edges_by_src(self, num_partitions: int) -> DataFrame:
+        """Every edge reversed (src = original dst), hash-partitioned
+        and sorted by the new src: the in-neighbor gather cache. Keeps
+        the edge MULTISET — a multi-edge stays a multi-edge, as hits
+        and its oracle count it."""
+        return (
+            self.edges.select(
+                F.col("dst").alias("src"), F.col("src").alias("dst")
+            )
+            .repartition(num_partitions, "src")
             .sortWithinPartitions("src")
         )
 
@@ -142,17 +182,15 @@ class GraphTables:
         edges: DataFrame,
         num_partitions: int = 32,
         vertices: DataFrame | None = None,
-        drop_self_loops: bool = True,
     ) -> "GraphTables":
         """Build a GraphTables from an (src, dst) DataFrame.
 
         Vertices default to distinct(src ∪ dst). Self-loops are dropped
-        (parity with graph_converter.cpp:113). Edges are hash-partitioned
-        by src so every kernel's gather join on src is co-partitioned.
+        (parity with graph_converter.cpp:113), so every derived edge
+        table is self-loop-free too. Edges are hash-partitioned by src
+        so every kernel's gather join on src is co-partitioned.
         """
-        spark = edges.sparkSession
-        if drop_self_loops:
-            edges = edges.where(F.col("src") != F.col("dst"))
+        edges = edges.where(F.col("src") != F.col("dst"))
         # Partition AND sort by src once, then cache: the cached plan
         # keeps both outputPartitioning and outputOrdering, so every
         # superstep's gather merge-join neither re-shuffles nor re-sorts
@@ -163,6 +201,9 @@ class GraphTables:
             edges.repartition(num_partitions, "src")
             .sortWithinPartitions("src")
             .persist()
+        )
+        shared = (
+            vertices is not None and vertices.storageLevel != StorageLevel.NONE
         )
         if vertices is None:
             vids = (
@@ -188,4 +229,5 @@ class GraphTables:
             degrees=degrees,
             num_vertices=vertices.count(),
             num_edges=edges.count(),
+            owns_vertices=not shared,
         )

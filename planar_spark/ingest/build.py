@@ -106,6 +106,10 @@ def build_graph_tables(
     )
     vertices = dictionary_encode(urls, num_partitions).persist()
     edges = encode_edges(edges_raw, vertices, num_partitions)
-    return GraphTables.from_edges(
+    g = GraphTables.from_edges(
         edges, num_partitions=num_partitions, vertices=vertices
     )
+    # cached above only so the edge encoding reads the dictionary once:
+    # the graph owns it, and g.unpersist() releases it
+    g.owns_vertices = True
+    return g

@@ -207,7 +207,6 @@ def betweenness(
         cand = (
             maybe_broadcast(
                 frontier.select("s", F.col("vid").alias("src"), "sigma"),
-                config,
                 n_frontier,
             )
             .join(edges, "src")

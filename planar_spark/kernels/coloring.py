@@ -168,11 +168,7 @@ def greedy_coloring(
     spark = graph.spark
     parts = config.partitions_for(spark)
 
-    sym = (
-        graph.symmetric_edges()
-        .repartition(parts, "src")
-        .persist()
-    )
+    sym = graph.symmetric_edges_by_src(parts).persist()
     colored = materialize(
         graph.vertices.select(
             "vid", F.lit(None).cast("long").alias("color")

@@ -405,7 +405,7 @@ def incremental_wcc(
     # broadcast only when it actually is delta-sized
     from planar_spark.graph.skew import maybe_broadcast
 
-    mapping = maybe_broadcast(mapping, config, lg.num_vertices)
+    mapping = maybe_broadcast(mapping, lg.num_vertices)
     out = old_labels.join(mapping, "label", "left").select(
         "vid", F.coalesce("_root", F.col("label")).alias("label")
     )

@@ -51,8 +51,7 @@ def densest_subgraph(
 
     obs0 = Observation()
     und = materialize(
-        graph.undirected_edges()
-        .repartition(parts, "a")
+        graph.undirected_edges_by_a(parts)
         .observe(obs0, F.count(F.lit(1)).alias("m"))
     )
     m = int(obs0.get["m"] or 0)

@@ -70,10 +70,7 @@ def degree_assortativity(graph: GraphTables) -> DataFrame:
     scale. One degree aggregation + one edge join + one global
     aggregate; partial aggregation everywhere. Degenerate (zero
     variance) graphs return NULL rather than an engine-specific 0/0."""
-    und = graph.undirected_edges()
-    sym = und.select(F.col("a").alias("src"), F.col("b").alias("dst")).unionAll(
-        und.select(F.col("b").alias("src"), F.col("a").alias("dst"))
-    )
+    sym = graph.symmetric_edges()
     udeg = sym.groupBy(F.col("src").alias("vid")).agg(
         F.count(F.lit(1)).alias("ud")
     )

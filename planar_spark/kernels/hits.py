@@ -80,27 +80,12 @@ def hits(
         from planar_spark.graph.locality import block_pinned_edges
 
         fwd = block_pinned_edges(graph, parts).persist()
-        rev = (
-            graph.edges.select(
-                F.col("dst").alias("src"), F.col("src").alias("dst")
-            )
-            .withColumn("sblk", F.expr(f"src div {int(bs)}"))
-            .repartition(parts, "sblk")
-            .sortWithinPartitions("sblk", "src")
-            .persist()
-        )
+        rev = block_pinned_edges(graph, parts, reverse=True).persist()
     else:
         fwd = graph.edges  # (src, dst), partitioned+sorted by src, cached
-        # Reversed edges, partitioned and sorted by their own src (= the
-        # forward dst) so the hub-phase gather is a merge join too.
-        rev = (
-            graph.edges.select(
-                F.col("dst").alias("src"), F.col("src").alias("dst")
-            )
-            .repartition(parts, "src")
-            .sortWithinPartitions("src")
-            .persist()
-        )
+        # partitioned and sorted by the reversed src (= the forward dst)
+        # so the hub-phase gather is a merge join too
+        rev = graph.reversed_edges_by_src(parts).persist()
     # Both hub sets (out-degree for the auth gather, in-degree for the
     # hub gather) ride ONE driver action: union the two tiny filtered
     # sets, observe the per-side counts on the materialization job, and

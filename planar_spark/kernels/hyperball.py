@@ -36,50 +36,17 @@ from planar_spark.graph.superstep import RoundStore, materialize
 from planar_spark.graph.tables import GraphTables
 
 
-def neighborhood_function_exact(
-    graph: GraphTables, radius: int, config: EngineConfig | None = None
-) -> DataFrame:
-    """(vid, nf) with nf = |{t : dist(vid → t) <= radius}|, exact."""
-    config = config or EngineConfig()
-    base = graph.vertices.select(
-        F.col("vid"), F.col("vid").alias("t")
+def _exact_levels(graph: GraphTables, radius: int):
+    """Yield (k, new_pairs, n) for k = 1..radius: ``new_pairs`` is the
+    materialized (vid, t) set at exact directed distance k and ``n`` its
+    row count (observed on the materialization, no extra job). Only the
+    level-k frontier joins the edge table, never the full closure; the
+    walk stops early once a level adds no pair."""
+    reach = materialize(
+        graph.vertices.select(F.col("vid"), F.col("vid").alias("t"))
     )
-    reach = materialize(base)
     frontier = reach
     edges = graph.edges.select("src", "dst").distinct()
-    for _ in range(radius):
-        nxt = (
-            frontier.join(edges, frontier["t"] == edges["src"])
-            .select(frontier["vid"], edges["dst"].alias("t"))
-            .distinct()
-            .join(reach, ["vid", "t"], "left_anti")
-        )
-        obs = Observation()
-        nxt = materialize(nxt.observe(obs, F.count(F.lit(1)).alias("n")))
-        if int(obs.get["n"] or 0) == 0:
-            break
-        reach = materialize(reach.unionAll(nxt))
-        frontier = nxt
-    return reach.groupBy("vid").agg(F.count(F.lit(1)).alias("nf"))
-
-
-def distance_histogram(
-    graph: GraphTables, radius: int, config: EngineConfig | None = None
-) -> DataFrame:
-    """(dist, n_pairs): number of ordered (v, t) pairs at exact directed
-    distance dist, for dist in 0..radius (dist 0 = the V self-pairs).
-
-    Same frontier machinery as neighborhood_function_exact — the level-k
-    frontier IS the set of pairs at distance exactly k, so the
-    histogram is one count per level, observed on the level checkpoint.
-    The summed prefix gives the neighborhood function; the median gives
-    the effective-diameter estimate web-graph papers report."""
-    config = config or EngineConfig()
-    base = graph.vertices.select(F.col("vid"), F.col("vid").alias("t"))
-    reach = materialize(base)
-    frontier = reach
-    edges = graph.edges.select("src", "dst").distinct()
-    counts = [(0, graph.num_vertices)]
     for k in range(1, radius + 1):
         nxt = (
             frontier.join(edges, frontier["t"] == edges["src"])
@@ -91,10 +58,45 @@ def distance_histogram(
         nxt = materialize(nxt.observe(obs, F.count(F.lit(1)).alias("n")))
         n = int(obs.get["n"] or 0)
         if n == 0:
-            break
-        counts.append((k, n))
-        reach = materialize(reach.unionAll(nxt))
-        frontier = nxt
+            return
+        yield k, nxt, n
+        if k < radius:
+            reach = materialize(reach.unionAll(nxt))
+            frontier = nxt
+
+
+def _level_counts(graph: GraphTables, radius: int) -> list[DataFrame]:
+    """Per level k, (vid, c<k>): how many targets vid reaches at exact
+    distance k."""
+    return [
+        nxt.groupBy("vid").agg(F.count(F.lit(1)).alias(f"c{k}"))
+        for k, nxt, _n in _exact_levels(graph, radius)
+    ]
+
+
+def neighborhood_function_exact(
+    graph: GraphTables, radius: int, config: EngineConfig | None = None
+) -> DataFrame:
+    """(vid, nf) with nf = |{t : dist(vid → t) <= radius}|, exact."""
+    pairs = graph.vertices.select(F.col("vid"), F.col("vid").alias("t"))
+    for _k, nxt, _n in _exact_levels(graph, radius):
+        pairs = pairs.unionAll(nxt)
+    return pairs.groupBy("vid").agg(F.count(F.lit(1)).alias("nf"))
+
+
+def distance_histogram(
+    graph: GraphTables, radius: int, config: EngineConfig | None = None
+) -> DataFrame:
+    """(dist, n_pairs): number of ordered (v, t) pairs at exact directed
+    distance dist, for dist in 0..radius (dist 0 = the V self-pairs).
+
+    The level-k frontier of the exact walk IS the set of pairs at
+    distance exactly k, so the histogram is one count per level,
+    observed on the level checkpoint. The summed prefix gives the
+    neighborhood function; the median gives the effective-diameter
+    estimate web-graph papers report."""
+    counts = [(0, graph.num_vertices)]
+    counts += [(k, n) for k, _nxt, n in _exact_levels(graph, radius)]
     return graph.spark.createDataFrame(
         counts, schema="dist long, n_pairs long"
     )
@@ -122,31 +124,9 @@ def harmonic_centrality(
     web scale use ``hyperball_centralities``: same recurrence over
     O(V·sketch_bytes) HLL state, error-bounded against this mode in
     pytest (mirrors neighborhood_function_exact vs hyperball)."""
-    config = config or EngineConfig()
-    base = graph.vertices.select(F.col("vid"), F.col("vid").alias("t"))
-    reach = materialize(base)
-    frontier = reach
-    edges = graph.edges.select("src", "dst").distinct()
-    level_counts: list[DataFrame] = []
-    for k in range(1, radius + 1):
-        nxt = (
-            frontier.join(edges, frontier["t"] == edges["src"])
-            .select(frontier["vid"], edges["dst"].alias("t"))
-            .distinct()
-            .join(reach, ["vid", "t"], "left_anti")
-        )
-        obs = Observation()
-        nxt = materialize(nxt.observe(obs, F.count(F.lit(1)).alias("n")))
-        if int(obs.get["n"] or 0) == 0:
-            break
-        level_counts.append(
-            nxt.groupBy("vid").agg(F.count(F.lit(1)).alias(f"c{k}"))
-        )
-        reach = materialize(reach.unionAll(nxt))
-        frontier = nxt
     out = graph.vertices.select("vid")
     terms = []
-    for k, lvl in enumerate(level_counts, 1):
+    for k, lvl in enumerate(_level_counts(graph, radius), 1):
         out = out.join(lvl, "vid", "left")
         terms.append(F.coalesce(f"c{k}", F.lit(0)) / F.lit(float(k)))
     if not terms:
@@ -170,32 +150,10 @@ def closeness_centrality(
 
     SCALE NOTE: exact-closure oracle mode — see harmonic_centrality's
     scale note; ``hyperball_centralities`` is the 100 TB path."""
-    config = config or EngineConfig()
-    base = graph.vertices.select(F.col("vid"), F.col("vid").alias("t"))
-    reach = materialize(base)
-    frontier = reach
-    edges = graph.edges.select("src", "dst").distinct()
-    level_counts: list[DataFrame] = []
-    for k in range(1, radius + 1):
-        nxt = (
-            frontier.join(edges, frontier["t"] == edges["src"])
-            .select(frontier["vid"], edges["dst"].alias("t"))
-            .distinct()
-            .join(reach, ["vid", "t"], "left_anti")
-        )
-        obs = Observation()
-        nxt = materialize(nxt.observe(obs, F.count(F.lit(1)).alias("n")))
-        if int(obs.get["n"] or 0) == 0:
-            break
-        level_counts.append(
-            nxt.groupBy("vid").agg(F.count(F.lit(1)).alias(f"c{k}"))
-        )
-        reach = materialize(reach.unionAll(nxt))
-        frontier = nxt
     out = graph.vertices.select("vid")
     reached = F.lit(1)
     total = F.lit(0)
-    for k, lvl in enumerate(level_counts, 1):
+    for k, lvl in enumerate(_level_counts(graph, radius), 1):
         out = out.join(lvl, "vid", "left")
         c = F.coalesce(f"c{k}", F.lit(0))
         reached = reached + c
@@ -281,13 +239,8 @@ def hyperball(
     parts = config.partitions_for(graph.spark)
     ckpt = RoundStore(graph.spark, config, "hyperball", run_id=run_id)
 
-    rev = (
-        graph.edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        .repartition(parts, "src")
-        .dropDuplicates(["src", "dst"])
-        .sortWithinPartitions("src")
-        .persist()
-    )
+    # the edge multiset: a duplicate row cannot change an HLL union
+    rev = graph.reversed_edges_by_src(parts).persist()
     state = None
     start_r = 0
     if resume:
@@ -378,13 +331,8 @@ def hyperball_nf_profile(
     parts = config.partitions_for(graph.spark)
     ckpt = RoundStore(graph.spark, config, "hyperball_nf", run_id=run_id)
 
-    rev = (
-        graph.edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        .repartition(parts, "src")
-        .dropDuplicates(["src", "dst"])
-        .sortWithinPartitions("src")
-        .persist()
-    )
+    # the edge multiset: a duplicate row cannot change an HLL union
+    rev = graph.reversed_edges_by_src(parts).persist()
     est = F.hll_sketch_estimate("sk")
     state = None
     start_r = 0
@@ -554,13 +502,8 @@ def hyperball_centralities(
         graph.spark, config, "hyperball_centralities", run_id=run_id
     )
 
-    rev = (
-        graph.edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        .repartition(parts, "src")
-        .dropDuplicates(["src", "dst"])
-        .sortWithinPartitions("src")
-        .persist()
-    )
+    # the edge multiset: a duplicate row cannot change an HLL union
+    rev = graph.reversed_edges_by_src(parts).persist()
     est = F.hll_sketch_estimate("sk")
     state = None
     start_r = 0

@@ -102,7 +102,7 @@ def k_core(
         rm_src = removed.select(F.col("vid").alias("src"))
         obs_l = Observation()
         loss = (
-            sym.join(maybe_broadcast(rm_src, config, n_removed), "src")
+            sym.join(maybe_broadcast(rm_src, n_removed), "src")
             .groupBy(F.col("dst").alias("vid"))
             .agg(F.count(F.lit(1)).alias("lost"))
             .observe(obs_l, F.count(F.lit(1)).alias("touched"))
@@ -256,7 +256,7 @@ def core_decomposition(
             F.col("vid").alias("src")
         )
         loss = (
-            sym.join(maybe_broadcast(rm_src, config, est), "src")
+            sym.join(maybe_broadcast(rm_src, est), "src")
             .groupBy(F.col("dst").alias("vid"))
             .agg(F.count(F.lit(1)).alias("lost"))
         )

@@ -148,7 +148,6 @@ def louvain(
             grounds = int(mm["global_round"])
             move_rounds_per_level = list(mm.get("move_rounds_per_level", []))
     if cur is None:
-        und = graph.undirected_edges()  # (a, b) distinct, a<b, no selfs
         if weights is not None:
             wn = (
                 weights.select(
@@ -163,17 +162,20 @@ def louvain(
             # contract as boruvka_msf, mst.py:109-118): an inner join
             # would silently DROP edges missing from `weights` and
             # quietly cluster a different graph (r6 ADVICE).
-            cur = und.join(wn, ["a", "b"], "left")
+            cur = graph.undirected_edges().join(wn, ["a", "b"], "left")
             if cur.where(F.col("w").isNull()).limit(1).count() > 0:
                 raise ValueError(
                     "louvain: `weights` must cover every undirected "
                     "edge of the graph (found an edge with NULL weight)"
                 )
+            cur = cur.repartition(parts, "a")
         else:
-            cur = und.withColumn("w", F.lit(1.0))
+            cur = graph.undirected_edges_by_a(parts).withColumn(
+                "w", F.lit(1.0)
+            )
         # cur: one row per undirected edge (a <= b after contraction;
         # a == b rows are self-loops carrying intra-community weight)
-        cur = materialize(cur.repartition(parts, "a"))
+        cur = materialize(cur)
         # assign: original vid -> current-level vertex (community rep)
         assign = materialize(
             graph.vertices.select("vid", F.col("vid").alias("comm"))

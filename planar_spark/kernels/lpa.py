@@ -31,7 +31,7 @@ from planar_spark.graph.tables import GraphTables
 def label_propagation(
     graph: GraphTables,
     config: EngineConfig | None = None,
-    num_iterations: int | None = None,
+    num_iterations: int = 10,
     engine: SuperstepEngine | None = None,
     resume: bool = False,
     track_changes: bool = False,
@@ -40,7 +40,6 @@ def label_propagation(
     config = config or EngineConfig()
     spark = graph.spark
     parts = config.partitions_for(spark)
-    iters = num_iterations or config.lpa_max_iterations
 
     # Layout-aware gather (r7): on a with_partitioning graph the sym
     # table is pinned by locality block and the label join runs on the
@@ -111,8 +110,10 @@ def label_propagation(
     engine = engine or SuperstepEngine(
         spark, config, "lpa",
         lineage={"num_vertices": graph.num_vertices,
-                 "num_edges": graph.num_edges, "rounds": iters},
+                 "num_edges": graph.num_edges, "rounds": num_iterations},
     )
-    result = engine.run(init_state, step, iters, None, post_fn=post, resume=resume)
+    result = engine.run(
+        init_state, step, num_iterations, None, post_fn=post, resume=resume
+    )
     sym.unpersist()
     return result

@@ -94,8 +94,9 @@ def boruvka_msf(
     spark = graph.spark
     parts = config.partitions_for(spark)
 
-    und = graph.undirected_edges()
-    if weights is not None:
+    if weights is None:
+        und = graph.undirected_edges_by_a(parts)
+    else:
         wn = (
             weights.select(
                 F.least("src", "dst").alias("a"),
@@ -105,15 +106,18 @@ def boruvka_msf(
             .groupBy("a", "b")
             .agg(F.min("w").alias("w"))
         )
-        und = und.join(wn, ["a", "b"], "left")
+        und = (
+            graph.undirected_edges()
+            .join(wn, ["a", "b"], "left")
+            .repartition(parts, "a")
+            .sortWithinPartitions("a")
+        )
     # sorted within the cache (r8): the per-round ``und ⋈ labels(a)``
     # join rides the merge fast path with zero exchange/sort on the
     # edge side (same discipline as WCC/LPA's sym cache); without it
     # the planner either broadcasts the O(E) side every round (small
     # graphs; label leaves report default stats) or re-sorts it (big).
-    und = (
-        und.repartition(parts, "a").sortWithinPartitions("a").persist()
-    )
+    und = und.persist()
     if weights is not None:
         # coverage check rides one tiny bounded job (once per run, not
         # per round): an uncovered edge would silently sort as NULL

@@ -188,12 +188,11 @@ def node2vec_walk(
     # The final walks are cut to a leaf so the cache can be released
     # before returning.
     sym = (
-        graph.symmetric_edges()
+        graph.symmetric_edges_by_src(config.partitions_for(graph.spark))
         .select(
             F.col("src").alias("prev"), F.col("dst").alias("dst"),
             F.lit(1).alias("_adj"),
         )
-        .repartition(config.partitions_for(graph.spark), "prev")
         .persist()
     )
     walks = graph.vertices.where(F.col("vid") % start_mod == 0).select(

@@ -103,7 +103,6 @@ def bfs_sssp(
 
         frontier = maybe_broadcast(
             state.where(F.col("dist") == k - 1).select("vid"),
-            config,
             carry["size"],
         )
         m = (
@@ -231,7 +230,6 @@ def weighted_sssp(
                     frontier.select(
                         F.col("vid").alias("src"), F.col("dist").alias("ds")
                     ),
-                    config,
                     carry["size"],
                 ),
                 "src",

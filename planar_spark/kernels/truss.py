@@ -154,7 +154,7 @@ def _delta_ktruss(
     bounded at any graph size."""
     spark = graph.spark
     parts = config.partitions_for(spark)
-    und = graph.undirected_edges().repartition(parts, "a")
+    und = graph.undirected_edges_by_a(parts)
     tri = materialize(_triangles_of(und))
     obs0 = Observation()
     es0 = materialize(  # initial per-edge supports, immutable across rounds
@@ -311,7 +311,7 @@ def truss_decomposition(
             rounds = int(m.get("rounds", _rnd))
             n_alive = int(m.get("n_alive", 0))
     if es is None:
-        und = graph.undirected_edges().repartition(parts, "a")
+        und = graph.undirected_edges_by_a(parts)
         tri = materialize(_triangles_of(und))
         obs_n = Observation()
         es = materialize(
@@ -434,8 +434,7 @@ def k_truss(
     if und is None:
         obs0 = Observation()
         und = materialize(
-            graph.undirected_edges()
-            .repartition(parts, "a")
+            graph.undirected_edges_by_a(parts)
             .observe(obs0, F.count(F.lit(1)).alias("n"))
         )
         prev_n = int(obs0.get["n"] or 0)

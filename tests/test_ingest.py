@@ -90,6 +90,30 @@ def test_self_loops_dropped(spark):
     assert g.edges.where(F.col("src") == F.col("dst")).count() == 0
 
 
+def test_graph_unpersist_releases_every_table_it_cached(spark):
+    """GraphTables.unpersist() releases edges, degrees AND vertices —
+    from_edges and build_graph_tables persist all three — but leaves a
+    vertex table the caller had already cached to its owner."""
+    from pyspark import StorageLevel
+
+    from planar_spark.graph.tables import GraphTables
+
+    pages = make_pages_df(spark, edges_simple4(), 4)
+    built = build_graph_tables(pages, num_partitions=8)
+    e = spark.createDataFrame([(0, 1), (1, 2)], "src long, dst long")
+    g = GraphTables.from_edges(e, 8)
+    e2 = spark.createDataFrame([(0, 2)], "src long, dst long")
+    shared = GraphTables.from_edges(e2, 8, vertices=g.vertices)
+    shared.unpersist()
+    assert g.vertices.storageLevel != StorageLevel.NONE
+    for graph in (built, g):
+        assert graph.vertices.is_cached
+        graph.unpersist()
+        for df in (graph.edges, graph.degrees, graph.vertices):
+            assert not df.is_cached
+            assert df.storageLevel == StorageLevel.NONE
+
+
 def test_synth_edges_locality_deterministic_and_intra_host(spark):
     """r7 generator for the scaling bench's locality section: byte-
     deterministic at any parallelism, and the realized intra-host edge

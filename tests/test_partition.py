@@ -4,13 +4,9 @@ from __future__ import annotations
 
 import numpy as np
 
-from planar_spark.graph.partition import (
-    balanced_range_partition,
-    hash_edge_cut,
-    hash_vertex_cut,
-    partition_edge_histogram,
-    two_d_cut,
-)
+from pyspark.sql import functions as F
+
+from planar_spark.graph.locality import vertex_parts
 from planar_spark.ingest.pages import edges_powerlaw, edges_star_hub
 
 from tests.conftest import graph_from_numpy
@@ -31,14 +27,25 @@ def _ring_of_cliques(n_cliques: int, clique_size: int) -> np.ndarray:
     return np.array(edges)
 
 
+def _range_buckets(g, P: int):
+    """(src, dst, part): every edge in the T6 range bucket of its src."""
+    vp = vertex_parts(g, "range", P)
+    return g.edges.join(vp.select(F.col("vid").alias("src"), "part"), "src")
+
+
+def _bucket_sizes(parted) -> list[int]:
+    return [
+        r["n"]
+        for r in parted.groupBy("part").agg(F.count(F.lit(1)).alias("n")).collect()
+    ]
+
+
 def test_bfs_edge_cut_locality_balance_determinism(spark):
-    """T3: BFS-grown regions on a ring of 8 cliques must (1) keep every
-    edge, (2) be deterministic run-to-run, (3) beat hash vertex-cut on
+    """T3: BFS-grown regions on a ring of 8 cliques must (1) label every
+    vertex, (2) be deterministic run-to-run, (3) beat hash vertex-cut on
     cross-partition edge fraction by a wide margin, and (4) stay
     balanced within the soft cap."""
-    from pyspark.sql import functions as F
-
-    from planar_spark.graph.partition import bfs_edge_cut, bfs_grow_labels
+    from planar_spark.graph.partition import bfs_grow_labels
 
     P, csize = 8, 20
     edges = _ring_of_cliques(P, csize)
@@ -49,9 +56,6 @@ def test_bfs_edge_cut_locality_balance_determinism(spark):
     lab2 = {r["vid"]: r["branch"] for r in bfs_grow_labels(g, P).collect()}
     assert lab1 == lab2  # deterministic
     assert len(lab1) == n  # every vertex labeled
-
-    parted = bfs_edge_cut(g, P)
-    assert parted.count() == g.num_edges
 
     def cross(assign):
         e = g.edges
@@ -89,46 +93,38 @@ def test_bfs_edge_cut_locality_balance_determinism(spark):
 
 
 def test_bfs_vertex_cut_merges_and_preserves_edges(spark):
-    """T4: branch-grow + greedy merge must keep every edge exactly once,
-    produce ≤ P parts, balance the merged partitions, and beat hash on
-    locality on the community fixture."""
-    from pyspark.sql import functions as F
-
-    from planar_spark.graph.partition import bfs_vertex_cut
-
+    """T4: branch-grow + greedy merge must label every vertex, produce
+    ≤ P parts, balance the merged partitions, and beat hash on locality
+    on the community fixture. Each edge goes to least(part(src),
+    part(dst)) — the vertex-cut assignment."""
     P, csize = 4, 25
     edges = _ring_of_cliques(8, csize)  # 8 branches-worth of structure
     n = 8 * csize
     g = graph_from_numpy(spark, edges, n)
-    parted = bfs_vertex_cut(g, P, branch_factor=2)
+    vp = vertex_parts(g, "bfs_vertex_cut", P, branch_factor=2)
+    ps = vp.select(F.col("vid").alias("src"), F.col("part").alias("p_src"))
+    pd = vp.select(F.col("vid").alias("dst"), F.col("part").alias("p_dst"))
+    parted = (
+        g.edges.join(ps, "src")
+        .join(pd, "dst")
+        .select("src", "dst", F.least("p_src", "p_dst").alias("part"))
+    )
     assert parted.count() == g.num_edges
-    hist = [
-        r["n"] for r in parted.groupBy("part")
-        .agg(F.count(F.lit(1)).alias("n")).collect()
-    ]
+    hist = _bucket_sizes(parted)
     assert len(hist) <= P
     mean = g.num_edges / P
     assert max(hist) <= 2.0 * mean, hist
-    # locality: edges landing where src-part == dst-part dominate. The
-    # vertex-cut assigns an edge to least(p_src, p_dst); measure the
-    # fraction of edges whose endpoints' parts DIFFER (replicated
-    # border vertices) and require it far below hash's ~(1 - 1/P).
-    lab = parted.select("src", "dst", "part")
-    ps = lab.groupBy("src").agg(F.min("part").alias("p1"))
+    # locality: edges landing where src-part == dst-part dominate.
+    # Measure the fraction of edges not in their src's home partition
+    # (replicated border vertices) and require it far below hash's
+    # ~(1 - 1/P).
+    home = parted.groupBy("src").agg(F.min("part").alias("p1"))
     diff = (
-        parted.join(ps, "src")
+        parted.join(home, "src")
         .select((F.col("part") != F.col("p1")).cast("int").alias("x"))
         .agg(F.avg("x")).collect()[0][0]
     )
     assert diff < 0.5  # most edges sit in their src's home partition
-
-
-def test_hash_cuts_preserve_edges(spark):
-    edges = edges_powerlaw(200, m=3, seed=2)
-    g = graph_from_numpy(spark, edges, 200)
-    for fn in (hash_vertex_cut, hash_edge_cut, two_d_cut):
-        out = fn(g.edges, 4)
-        assert out.count() == g.num_edges
 
 
 def test_balanced_range_partition_beats_naive_ranges(spark):
@@ -137,9 +133,7 @@ def test_balanced_range_partition_beats_naive_ranges(spark):
     n = 400
     edges = edges_star_hub(n)  # vertex 0 carries half of all edges
     g = graph_from_numpy(spark, edges, n)
-    parted = balanced_range_partition(g.edges, g.degrees, 4)
-    assert parted.count() == g.num_edges
-    hist = partition_edge_histogram(parted)
+    hist = _bucket_sizes(_range_buckets(g, 4))
     # hub vertex 0 has (n-1) edges = half the total; a naive equal-vid
     # 4-way split puts ALL of them in partition 0 together with ~1/4 of
     # the spokes. The balanced split must cap the largest partition near
@@ -152,15 +146,8 @@ def test_balanced_range_partition_beats_naive_ranges(spark):
 def test_balanced_range_partition_uniform_graph(spark):
     edges = edges_powerlaw(500, m=3, seed=8)
     g = graph_from_numpy(spark, edges, 500)
-    parted = balanced_range_partition(g.edges, g.degrees, 8)
-    # assert the algorithmic property: per-BUCKET edge counts are even
-    # (physical placement may merge adjacent buckets via range sampling)
-    from pyspark.sql import functions as F
-
-    hist = [
-        r["n"]
-        for r in parted.groupBy("part").agg(F.count(F.lit(1)).alias("n")).collect()
-    ]
+    # the algorithmic property: per-BUCKET edge counts are even
+    hist = _bucket_sizes(_range_buckets(g, 8))
     assert sum(hist) == g.num_edges
     ideal = g.num_edges / 8
     assert len(hist) == 8
@@ -176,8 +163,6 @@ def test_balanced_range_beats_hash_on_balance_and_locality(spark):
     url-sorted vids have far stronger range locality (same-host links
     are id-adjacent); preferential attachment gives the fixture only a
     weak version, so a win here is conservative."""
-    from pyspark.sql import functions as F
-
     from planar_spark.graph.partition import balanced_range_bounds
 
     n, P = 2000, 8
@@ -208,15 +193,8 @@ def test_balanced_range_beats_hash_on_balance_and_locality(spark):
     )
     assert range_cross < hash_cross, (range_cross, hash_cross)
 
-    # balance: logical bucket histograms (physical placement can merge
-    # adjacent range buckets via repartitionByRange sampling)
-    parted = balanced_range_partition(g.edges, g.degrees, P)
-    range_hist = [
-        r["n"]
-        for r in parted.groupBy("part")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-    ]
+    # balance: per-bucket edge counts
+    range_hist = _bucket_sizes(_range_buckets(g, P))
     hash_hist = [
         r["n"]
         for r in e.groupBy(F.pmod(F.xxhash64("src"), F.lit(P)).alias("part"))
@@ -261,8 +239,6 @@ def test_with_partitioning_preserves_graph_and_wcc(spark, config):
     and connected_components on the locality layout (block-pinned
     gather path) must induce the IDENTICAL component partition of the
     original vertex set."""
-    from pyspark.sql import functions as F
-
     from planar_spark.kernels.components import connected_components
 
     ed, n = _scrambled_ring(4, 8)
@@ -297,8 +273,6 @@ def test_locality_layout_shrinks_gather_fanin(spark, config):
     block-pinned sym table's gather fan-in (rows entering the
     groupBy(dst) shuffle = sum over partitions of distinct dst) must be
     a small multiple of V, while the hash layout's is ~parts*V."""
-    from pyspark.sql import functions as F
-
     from planar_spark.graph.locality import (
         block_pinned_sym,
         gather_fanin_rows,
@@ -332,8 +306,6 @@ def test_pagerank_on_locality_layout_matches_plain(spark, config):
     """pagerank(with_partitioning(g)) mapped back through the relabel
     mapping must equal pagerank(g) — the r7 consumption contract for
     the BASELINE metric kernel (pagerank_locality driver gate)."""
-    from pyspark.sql import functions as F
-
     from planar_spark.kernels.pagerank import pagerank
 
     edges = edges_powerlaw(300, m=3, seed=5)
@@ -359,8 +331,6 @@ def test_ppr_and_hits_on_locality_layout_match_plain(spark, config):
     """r7: PPR and HITS consume with_partitioning layouts through the
     same block-pinned gather as pagerank — results mapped back through
     the relabel mapping must equal the plain runs."""
-    from pyspark.sql import functions as F
-
     from planar_spark.kernels.hits import hits
     from planar_spark.kernels.ppr import personalized_pagerank
 
@@ -412,8 +382,6 @@ def test_lpa_on_locality_layout_matches_plain(spark, config):
     is NOT guaranteed (argmax ties break on label VALUE, which the
     relabel permutes) — so the check uses a tie-free fixture: disjoint
     cliques, where every vertex's argmax label is unique per round."""
-    from pyspark.sql import functions as F
-
     from planar_spark.kernels.lpa import label_propagation
 
     # 8 disjoint 6-cliques: LPA converges to min-vid per clique and no
@@ -465,8 +433,6 @@ def test_locality_consumption_is_cost_aware(spark, config):
     import dataclasses
     import os
     import tempfile
-
-    from pyspark.sql import functions as F
 
     from planar_spark.graph.locality import effective_block_size
     from planar_spark.kernels.pagerank import pagerank

@@ -223,13 +223,7 @@ def test_reversed_edge_gather_is_merge_join(spark, config):
     branch — the reversed cache exists precisely to buy that."""
     edges = edges_powerlaw(500, m=3, seed=2)
     g = graph_from_numpy(spark, edges, 500)
-    parts = config.partitions_for(spark)
-    rev = (
-        g.edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        .repartition(parts, "src")
-        .sortWithinPartitions("src")
-        .persist()
-    )
+    rev = g.reversed_edges_by_src(config.partitions_for(spark)).persist()
     live = g.degrees.select("vid", F.lit(1.0).alias("w"))
     gathered = salted_gather_join(rev, live, config, hubs=None)
     out = gathered.groupBy(F.col("dst").alias("vid")).agg(
@@ -244,6 +238,88 @@ def test_reversed_edge_gather_is_merge_join(spark, config):
     assert "Exchange" not in branch, plan
     assert "Sort [src" not in branch, plan
     rev.unpersist()
+
+
+def _exchanges_above_cache(df) -> int:
+    """Exchange nodes in df's physical plan (the initial adaptive plan,
+    before execution). An InMemoryTableScan is a leaf of that tree, so
+    the exchanges that built a cache it reads are not counted."""
+    node = df._jdf.queryExecution().executedPlan()
+    if node.nodeName() == "AdaptiveSparkPlan":
+        node = node.executedPlan()
+    count, todo = 0, [node]
+    while todo:
+        n = todo.pop()
+        count += "Exchange" in n.nodeName()
+        kids = n.children()
+        todo += [kids.apply(i) for i in range(kids.size())]
+    return count
+
+
+def _builders(g, parts):
+    """Every cached derived edge layout, by name."""
+    from dataclasses import replace
+
+    from planar_spark.graph.locality import (
+        block_pinned_edges,
+        block_pinned_sym,
+    )
+
+    pinned = replace(g, block_size=16)
+    return {
+        "symmetric_edges_by_src": g.symmetric_edges_by_src(parts),
+        "undirected_edges_by_a": g.undirected_edges_by_a(parts),
+        "reversed_edges_by_src": g.reversed_edges_by_src(parts),
+        "block_pinned_sym": block_pinned_sym(pinned, parts),
+        "block_pinned_edges": block_pinned_edges(pinned, parts),
+        "block_pinned_edges_reversed": block_pinned_edges(
+            pinned, parts, reverse=True
+        ),
+    }
+
+
+def test_edge_table_builders_take_one_exchange(spark, config):
+    """Each derived edge layout reads the cached edges and shuffles
+    once: its dedup runs inside the partitions of its one repartition.
+    The composed forms they replace pay at least two (the union in
+    symmetric_edges() plans its distinct once per branch)."""
+    g = graph_from_numpy(spark, edges_powerlaw(300, m=3, seed=5), 300)
+    parts = config.partitions_for(spark)
+    for name, df in _builders(g, parts).items():
+        plan = _plan(df)
+        assert "InMemoryTableScan" in plan, (name, plan)
+        assert _exchanges_above_cache(df) == 1, (name, plan)
+    old_sym = g.symmetric_edges().repartition(parts, "src")
+    old_und = g.undirected_edges().repartition(parts, "a")
+    assert _exchanges_above_cache(old_sym) >= 2
+    assert _exchanges_above_cache(old_und) == 2
+
+
+def test_edge_table_builders_match_the_composed_forms(spark, config):
+    """On a graph with duplicate edges, reversed duplicates and a
+    self-loop: the undirected and symmetric builders equal
+    undirected_edges() / symmetric_edges() as sets (no duplicate row),
+    and the reversed builders keep the edge multiset."""
+    edges = np.array(
+        [(0, 1), (0, 1), (1, 0), (1, 2), (2, 2), (3, 1), (3, 1), (2, 0)]
+    )
+    g = graph_from_numpy(spark, edges, 5)
+    built = _builders(g, config.partitions_for(spark))
+
+    def rows(df, a="src", b="dst"):
+        return sorted((r[a], r[b]) for r in df.select(a, b).collect())
+
+    und = rows(g.undirected_edges(), "a", "b")
+    sym = rows(g.symmetric_edges())
+    assert und == [(0, 1), (0, 2), (1, 2), (1, 3)]
+    assert rows(built["undirected_edges_by_a"], "a", "b") == und
+    assert rows(built["symmetric_edges_by_src"]) == sym
+    assert rows(built["block_pinned_sym"]) == sym
+    fwd = sorted((int(s), int(d)) for s, d in edges if s != d)
+    rev = sorted((d, s) for s, d in fwd)
+    assert rows(built["reversed_edges_by_src"]) == rev
+    assert rows(built["block_pinned_edges_reversed"]) == rev
+    assert rows(built["block_pinned_edges"]) == fwd
 
 
 def test_scc_and_bowtie_plans_have_no_window(spark, config):
