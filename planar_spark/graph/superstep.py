@@ -204,12 +204,13 @@ class RoundStore:
 
     def save(
         self, rnd: int, tables: dict[str, DataFrame], metrics: dict | None = None
-    ) -> dict[str, DataFrame] | None:
+    ) -> dict[str, DataFrame]:
         """``write`` + ``commit`` for loops whose metrics are known
-        before the write. Returns the re-read tables, or None when the
-        round was not due."""
+        before the write. Returns the re-read tables, or ``tables``
+        itself when the round was not due, so a loop continues from the
+        result either way."""
         if not self.due(rnd):
-            return None
+            return tables
         out = self.write(rnd, tables)
         self.commit(rnd, metrics)
         return out

@@ -197,9 +197,7 @@ def greedy_coloring(
         )
         colored.unpersist()
         colored = new_colored
-        saved = ckpt.save(r, {"colored": colored}, {"rounds": r})
-        if saved is not None:
-            colored = saved["colored"]
+        colored = ckpt.save(r, {"colored": colored}, {"rounds": r})["colored"]
         if int(obs.get["n_uncolored"] or 0) == 0:
             break
     sym.unpersist()

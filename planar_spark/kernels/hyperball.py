@@ -277,9 +277,7 @@ def hyperball(
                 ).otherwise(F.hll_union("sk", "nsk")).alias("sk"),
             )
         )
-        saved = ckpt.save(r, {"state": state}, {"radius": r})
-        if saved is not None:
-            state = saved["state"]
+        state = ckpt.save(r, {"state": state}, {"radius": r})["state"]
     out = state.select(
         "vid", F.hll_sketch_estimate("sk").alias("nf_est")
     )
@@ -380,13 +378,11 @@ def hyperball_nf_profile(
         )
         profile.append((r, float(obs.get["nf"] or 0.0)))
         round_secs.append(round(time.time() - t0, 3))
-        saved = ckpt.save(
+        state = ckpt.save(
             r,
             {"state": state},
             {"radius": r, "profile": profile, "round_secs": round_secs},
-        )
-        if saved is not None:
-            state = saved["state"]
+        )["state"]
     rev.unpersist()
     if metrics_out is not None:
         metrics_out["round_secs"] = round_secs
@@ -568,9 +564,7 @@ def hyperball_centralities(
                 ),
             )
         )
-        saved = ckpt.save(r, {"state": state}, {"radius": r})
-        if saved is not None:
-            state = saved["state"]
+        state = ckpt.save(r, {"state": state}, {"radius": r})["state"]
     out = state.select(
         "vid",
         F.col("prev_est").alias("nf_est"),

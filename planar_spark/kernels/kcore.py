@@ -1,22 +1,27 @@
-"""k-core: frontier-based (delta) degree peeling over the undirected graph.
+"""k-core and core numbers: one tombstone peel over the undirected graph.
 
 Not in the reference's app set, but a standard web-graph hygiene /
 community kernel (drop low-connectivity crawl fringe before expensive
 analytics). Semantics: the k-core is the maximal induced subgraph in
 which every vertex has undirected degree >= k; computed by repeatedly
-deleting vertices of degree < k until a fixpoint.
+deleting vertices of degree < k until a fixpoint. A vertex's core
+number is the largest k whose k-core contains it.
 
-Scale shape (delta peeling): only a vertex that LOST a neighbor can
-newly fall below k, so after the single full O(E) degree count of
-round 0, round r>0 touches only the edges incident to round-(r-1)'s
-deletions — the same frontier discipline as SSSP. Each round is two
-jobs: (1) cut the removed-vertex frontier as a leaf (its size observed
-on the same job), (2) decrement surviving degrees by the edges lost to
-the frontier (frontier broadcast when small; per-round shuffle volume
-is O(edges incident to the frontier), never O(E)) and re-materialize
-the state. The state stays hash-partitioned by vid across rounds
-(persist preserves partitioning), so the survivor⋈loss merge is
-exchange-free; lineage is truncated every ``truncate_every`` rounds.
+Both kernels run the same peel (``_peel``) over a range of levels:
+``core_decomposition`` over levels 1.., ``k_core(k)`` over the single
+level k. The state is one (vid, deg, core) leaf, hash-partitioned by
+vid, with core NULL while the vertex is alive. After the single full
+O(E) degree count, a removal round at level k tombstones every alive
+vertex with deg < k (core = k-1) and decrements the degrees of its
+neighbours by the edges lost to it. Only a vertex that lost a
+neighbour can newly fall below k, so a round's shuffle volume is
+O(edges incident to the frontier), never O(E); the frontier is
+broadcast when small. The frontier cut, tombstone, decrement and the
+next round's driver decisions (frontier size, alive count, min alive
+degree, touched vertices — Observations) ride ONE materialization per
+removal round. A level fixpoint is seen in the observed frontier size
+and advances k with no job, jumping past the provably-empty levels to
+min_deg+1.
 """
 
 from __future__ import annotations
@@ -29,119 +34,162 @@ from planar_spark.graph.superstep import RoundStore, materialize
 from planar_spark.graph.tables import GraphTables
 
 
+def _decisions(k: int) -> list:
+    """Next-round driver decisions over a (vid, deg, core) state peeled
+    at level ``k``: the deg<k frontier size, min alive degree and alive
+    count."""
+    alive = F.col("core").isNull()
+    return [
+        F.sum((alive & (F.col("deg") < F.lit(k))).cast("long")).alias(
+            "next_lt"
+        ),
+        F.min(F.when(alive, F.col("deg"))).alias("min_deg"),
+        F.sum(alive.cast("long")).alias("n_alive"),
+    ]
+
+
+def _peel(
+    graph: GraphTables,
+    config: EngineConfig,
+    kernel: str,
+    k_first: int,
+    k_last: int | None,
+    max_rounds: int,
+    run_id: str | None,
+    resume: bool,
+) -> tuple[DataFrame, dict]:
+    """Peel levels ``k_first..k_last`` (None: until no vertex is alive).
+
+    Returns the final (vid, deg, core) state leaf — vertices with no
+    undirected edge are absent, alive vertices have core NULL — and the
+    driver counters: ``rounds`` (removal rounds), ``k`` (the last
+    level), ``levels`` (completed levels), ``frontier_sizes`` and
+    ``touched`` (per removal round: vertices removed, and distinct
+    neighbours of the removed vertices, i.e. rows of the degree-
+    decrement aggregate) plus the observed decisions. Raises
+    RuntimeError when ``max_rounds`` removal rounds do not finish.
+
+    The counters are the RoundStore meta: with ``config.checkpoint_dir``
+    set, the state leaf and counters are saved every
+    ``config.checkpoint_every``-th removal round under ``kernel``, and
+    ``resume=True`` with the same ``run_id`` re-enters the peel at the
+    newest completed round."""
+    spark = graph.spark
+    parts = config.partitions_for(spark)
+    sym = graph.symmetric_edges_by_src(parts).persist()
+    try:
+        ckpt = RoundStore(spark, config, kernel, run_id=run_id)
+        c = {"rounds": 0, "k": k_first, "levels": [], "frontier_sizes": [],
+             "touched": []}
+        latest = ckpt.latest() if resume else None
+        if latest is not None:
+            _, tables, m = latest
+            state = materialize(tables["state"].repartition(parts, "vid"))
+            c.update(m)
+        else:
+            obs0 = Observation()
+            state = materialize(
+                sym.groupBy(F.col("src").alias("vid"))
+                .agg(F.count(F.lit(1)).alias("deg"))
+                .select("vid", "deg", F.lit(None).cast("long").alias("core"))
+                .observe(obs0, *_decisions(k_first))
+            )
+            c.update(obs0.get)
+        alive = F.col("core").isNull()
+        while c["n_alive"]:
+            k = c["k"]
+            if c["next_lt"] == 0:
+                # observed level fixpoint: advance without any job. No
+                # alive degree is below k, so every level up to min_deg
+                # is empty too, and level min_deg+1 is not.
+                if k == k_last:
+                    break
+                c["levels"].extend(range(k, c["min_deg"] + 1))
+                c["k"] = c["min_deg"] + 1
+                c["next_lt"] = None
+                continue
+            if c["rounds"] >= max_rounds:
+                raise RuntimeError(
+                    f"{kernel}: not finished in {max_rounds} rounds; "
+                    "raise max_rounds"
+                )
+            # the frontier size is exact when observed; right after a
+            # level advance n_alive is the safe upper bound
+            est = c["next_lt"] if c["next_lt"] is not None else c["n_alive"]
+            rm_src = state.where(alive & (F.col("deg") < k)).select(
+                F.col("vid").alias("src")
+            )
+            loss = (
+                sym.join(maybe_broadcast(rm_src, est), "src")
+                .groupBy(F.col("dst").alias("vid"))
+                .agg(F.count(F.lit(1)).alias("lost"))
+            )
+            new_core = (
+                F.when(~alive, F.col("core"))
+                .when(F.col("deg") < k, F.lit(k - 1).cast("long"))
+            )  # otherwise NULL: still alive
+            new_deg = F.when(
+                alive & (F.col("deg") >= k),
+                F.col("deg") - F.coalesce("lost", F.lit(0)),
+            ).otherwise(F.col("deg"))
+            # every loss vid has a state row (sym is symmetric), so the
+            # non-null `lost` count on the left join is exactly the
+            # loss aggregate's row count, whatever the join reads
+            obs = Observation()
+            state = materialize(
+                state.join(loss, "vid", "left")
+                .select("vid", new_deg.alias("deg"),
+                        new_core.alias("core"), "lost")
+                .observe(obs, *_decisions(k),
+                         F.count("lost").alias("touched"))
+                .drop("lost")
+            )
+            got = dict(obs.get)
+            c["rounds"] += 1
+            # exact: tombstoning is the only exit
+            c["frontier_sizes"].append(c["n_alive"] - got["n_alive"])
+            c["touched"].append(got.pop("touched"))
+            c.update(got)
+            state = ckpt.save(c["rounds"], {"state": state}, c)["state"]
+    finally:
+        sym.unpersist()
+    return state, c
+
+
 def k_core(
     graph: GraphTables,
     k: int,
     config: EngineConfig | None = None,
     max_rounds: int = 200,
-    truncate_every: int = 8,
     metrics_out: dict | None = None,
     run_id: str | None = None,
     resume: bool = False,
 ) -> DataFrame:
     """(vid, in_core) over ALL vertices; in_core = 1 iff vid is in the
-    k-core. Deterministic (the k-core is unique).
+    k-core. Deterministic (the k-core is unique). The single-level run
+    of the ``core_decomposition`` peel; raises RuntimeError when
+    ``max_rounds`` removal rounds do not reach the fixpoint.
 
     ``metrics_out`` (optional dict) receives ``rounds``,
     ``frontier_sizes`` (vertices removed per round) and ``touched``
-    (rows in the per-round degree-decrement aggregate — the actual
-    post-round-0 work volume, asserted O(frontier) in the tests).
+    (distinct neighbours of each round's removed vertices — the rows of
+    the degree-decrement aggregate, the post-round-0 work volume,
+    asserted O(frontier) in the tests).
 
-    Durable resume: with ``config.checkpoint_dir`` set, the peeling
-    state (vid, deg) plus the driver counters are written every
-    ``config.checkpoint_every`` rounds; ``resume=True`` with the same
-    ``run_id`` continues peeling from the newest completed round.
+    Durable resume: with ``config.checkpoint_dir`` set, the (vid, deg,
+    core) state plus the driver counters are written under kernel
+    ``kcore`` every ``config.checkpoint_every`` rounds; ``resume=True``
+    with the same ``run_id`` continues peeling from the newest completed
+    round. (Checkpoints of the earlier two-column (vid, deg) state are
+    not readable by this code.)
     """
-    config = config or EngineConfig()
-    parts = config.partitions_for(graph.spark)
-    sym = graph.symmetric_edges_by_src(parts).persist()
-
-    rounds = 0
-    frontier_sizes: list[int] = []
-    touched: list[int] = []
-    ckpt = RoundStore(graph.spark, config, "kcore", run_id=run_id)
-    state = None
-    if resume:
-        latest = ckpt.latest()
-        if latest is not None:
-            _rnd, tables, m = latest
-            state = (
-                tables["state"].repartition(parts, "vid").persist()
-            )
-            state.count()
-            rounds = int(m.get("rounds", _rnd))
-            frontier_sizes = list(m.get("frontier_sizes", []))
-            touched = list(m.get("touched", []))
-    if state is None:
-        # Round 0: the one full O(E) degree aggregation. The state is
-        # (vid, deg) for vertices with deg >= 1, hash-partitioned by vid
-        # (groupBy output partitioning), kept cached across rounds.
-        state = sym.groupBy(F.col("src").alias("vid")).agg(
-            F.count(F.lit(1)).alias("deg")
-        ).persist()
-        state.count()
-
-    for r in range(rounds, max_rounds):
-        obs_f = Observation()
-        removed = materialize(
-            state.where(F.col("deg") < k)
-            .select("vid")
-            .observe(obs_f, F.count(F.lit(1)).alias("n"))
-        )
-        n_removed = int(obs_f.get["n"])
-        if n_removed == 0:
-            break
-        rounds += 1
-        frontier_sizes.append(n_removed)
-        # Every edge of a removed vertex decrements its neighbor's
-        # degree. sym is SYMMETRIC, so joining the frontier on src (the
-        # edge table's partitioning key — zero edge-side exchange
-        # regardless of frontier size) and counting per dst is identical
-        # to the dst-side formulation; the frontier is additionally
-        # broadcast when small so even its shuffle disappears.
-        rm_src = removed.select(F.col("vid").alias("src"))
-        obs_l = Observation()
-        loss = (
-            sym.join(maybe_broadcast(rm_src, n_removed), "src")
-            .groupBy(F.col("dst").alias("vid"))
-            .agg(F.count(F.lit(1)).alias("lost"))
-            .observe(obs_l, F.count(F.lit(1)).alias("touched"))
-        )
-        new_state = (
-            state.where(F.col("deg") >= k)
-            .join(loss, "vid", "left")
-            .select(
-                "vid",
-                (F.col("deg") - F.coalesce("lost", F.lit(0))).alias("deg"),
-            )
-        )
-        if rounds % max(1, truncate_every) == 0:
-            new_state = materialize(new_state).repartition(parts, "vid")
-        new_state = new_state.persist()
-        new_state.count()
-        touched.append(int(obs_l.get["touched"] or 0))
-        state.unpersist()
-        state = new_state
-        if ckpt.due(rounds):
-            ckpt.save(
-                rounds,
-                {"state": state},
-                {
-                    "rounds": rounds,
-                    "frontier_sizes": frontier_sizes,
-                    "touched": touched,
-                },
-            )
-    sym.unpersist()
+    state, c = _peel(graph, config or EngineConfig(), "kcore", k, k,
+                     max_rounds, run_id, resume)
     if metrics_out is not None:
-        metrics_out["rounds"] = rounds
-        metrics_out["frontier_sizes"] = frontier_sizes
-        metrics_out["touched"] = touched
-    core = materialize(
-        state.where(F.col("deg") >= k)
-        .select("vid")
-    )
-    state.unpersist()
+        metrics_out["rounds"] = c["rounds"]
+        metrics_out["frontier_sizes"] = c["frontier_sizes"]
+        metrics_out["touched"] = c["touched"]
+    core = state.where(F.col("core").isNull()).select("vid")
     return (
         graph.vertices.select("vid")
         .join(core.withColumn("_in", F.lit(1)), "vid", "left")
@@ -163,164 +211,25 @@ def core_decomposition(
     numbers drive fringe filtering, spam-farm scoring, and degeneracy
     orderings.
 
-    Ascending-k peeling with the SAME delta discipline as k_core: one
-    full O(E) degree count, then every round removes the current
-    deg<k frontier and decrements only the edges incident to it. A
-    vertex removed while peeling at level k has core number k-1; when
-    a level reaches its fixpoint, k advances (a free driver-side
-    branch — no extra job). Total work = Σ frontier edges over ALL
-    levels ≈ O(E) decrements overall, plus one tiny driver scalar per
-    round. Deterministic (core numbers are unique).
-
-    r8 tombstone restructure — ONE job per removal round (was two plus
-    one probe job per level): the state is a single (vid, deg, core)
-    leaf where core is NULL while alive; a removal round folds the
-    frontier cut, the core assignment (tombstone), the degree
-    decrement AND next round's driver decisions (frontier size, alive
-    count, min alive degree — Observations) into the one
-    materialization. Level fixpoints are detected from the observed
-    frontier size and advance k (jumping past provably-empty levels to
-    min_deg+1) with zero jobs. There is no separate running-assignment
-    table to truncate — cores live in the state leaf and the per-round
-    plan is constant-size.
+    Ascending-k run of the module's peel over every level: a vertex
+    tombstoned while peeling at level k has core number k-1. Total work
+    = Σ frontier edges over ALL levels ≈ O(E) decrements overall, one
+    job per removal round. Deterministic (core numbers are unique).
+    ``metrics_out`` receives ``rounds``, ``max_core`` and ``levels``;
+    RuntimeError when ``max_rounds`` removal rounds do not finish.
 
     Durable resume: with ``config.checkpoint_dir`` set, the state leaf
-    and the driver counters (rounds, current level k, levels, n_alive,
-    and the observed frontier size/min degree) are written through
-    RoundStore every ``config.checkpoint_every``-th removal
-    round; ``resume=True`` with the same ``run_id`` re-enters the
-    ascending peel at the newest completed round. (Checkpoints written
-    by the pre-r8 two-table format are not readable by this code.)
+    and the driver counters are written under kernel ``core_decomp``
+    every ``config.checkpoint_every``-th removal round; ``resume=True``
+    with the same ``run_id`` re-enters the ascending peel at the newest
+    completed round.
     """
-    config = config or EngineConfig()
-    parts = config.partitions_for(graph.spark)
-    spark = graph.spark
-    sym = graph.symmetric_edges_by_src(parts).persist()
-    ckpt = RoundStore(spark, config, "core_decomp", run_id=run_id)
-
-    state = None  # (vid, deg, core) — core NULL while alive
-    k = 1
-    rounds = 0
-    levels: list[int] = []
-    n_alive = 0
-    # next_lt = size of the CURRENT deg<k frontier among alive rows
-    # (None = unknown: fresh or resumed state — the first round self-
-    # corrects, see below); min_deg = min alive degree, for level jumps.
-    next_lt: int | None = None
-    min_deg: int | None = None
-    if resume:
-        latest = ckpt.latest()
-        if latest is not None:
-            _rnd, tables, m = latest
-            state = materialize(tables["state"].repartition(parts, "vid"))
-            k = int(m.get("k", 1))
-            rounds = int(m.get("rounds", _rnd))
-            levels = list(m.get("levels", []))
-            n_alive = int(m.get("n_alive", 0))
-            if m.get("next_lt") is not None:
-                next_lt = int(m["next_lt"])
-            if m.get("min_deg") is not None:
-                min_deg = int(m["min_deg"])
-    if state is None:
-        obs0 = Observation()
-        state = materialize(
-            sym.groupBy(F.col("src").alias("vid"))
-            .agg(F.count(F.lit(1)).alias("deg"))
-            .select("vid", "deg", F.lit(None).cast("long").alias("core"))
-            .observe(obs0, F.count(F.lit(1)).alias("n"))
-        )
-        n_alive = int(obs0.get["n"] or 0)
-
-    alive = F.col("core").isNull()
-    for _ in range(max_rounds):
-        if n_alive == 0:
-            break
-        if next_lt == 0:
-            # observed level fixpoint: advance without any job
-            levels.append(k)
-            k += 1
-            if min_deg is not None and min_deg >= k:
-                # every level up to min_deg is empty too — jump; the
-                # min-degree witness guarantees level min_deg+1 is not
-                levels.extend(range(k, min_deg + 1))
-                k = min_deg + 1
-            next_lt = None
-            continue
-        # removal round: frontier cut, tombstone, decrement and next
-        # round's decisions all ride ONE materialization. The frontier
-        # size for the broadcast decision is exact when observed
-        # (next_lt); on an unknown (fresh/resumed) state n_alive is the
-        # safe upper bound.
-        est = next_lt if next_lt is not None else n_alive
-        rm_src = state.where(alive & (F.col("deg") < k)).select(
-            F.col("vid").alias("src")
-        )
-        loss = (
-            sym.join(maybe_broadcast(rm_src, est), "src")
-            .groupBy(F.col("dst").alias("vid"))
-            .agg(F.count(F.lit(1)).alias("lost"))
-        )
-        new_core = (
-            F.when(~alive, F.col("core"))
-            .when(F.col("deg") < k, F.lit(k - 1).cast("long"))
-        )  # otherwise NULL: still alive
-        new_deg = F.when(
-            alive & (F.col("deg") >= k),
-            F.col("deg") - F.coalesce("lost", F.lit(0)),
-        ).otherwise(F.col("deg"))
-        obs = Observation()
-        new_state = materialize(
-            state.join(loss, "vid", "left")
-            .select(
-                "vid", new_deg.alias("deg"), new_core.alias("core")
-            )
-            .observe(
-                obs,
-                F.sum(
-                    (alive & (F.col("deg") < F.lit(k))).cast("long")
-                ).alias("lt"),
-                F.min(F.when(alive, F.col("deg"))).alias("mn"),
-                F.sum(alive.cast("long")).alias("n_alive"),
-            )
-        )
-        got = obs.get
-        prev_alive = n_alive
-        n_alive = int(got["n_alive"] or 0)
-        n_rm = prev_alive - n_alive  # exact: tombstoning is the only exit
-        next_lt = int(got["lt"] or 0)
-        min_deg = None if got["mn"] is None else int(got["mn"])
-        state = new_state
-        if n_rm == 0:
-            # only reachable from an UNKNOWN frontier (fresh state at
-            # k=1, or a resume without counters): the state is
-            # unchanged and the observations now say exactly where the
-            # frontier stands — the next iteration advances for free.
-            continue
-        rounds += 1
-        if ckpt.due(rounds):
-            saved = ckpt.save(
-                rounds,
-                {"state": state},
-                {
-                    "rounds": rounds,
-                    "k": k,
-                    "levels": levels,
-                    "n_alive": n_alive,
-                    "next_lt": next_lt,
-                    "min_deg": min_deg,
-                },
-            )
-            state = saved["state"]
-    else:
-        raise RuntimeError(
-            f"core_decomposition: not finished in {max_rounds} rounds; "
-            "raise max_rounds"
-        )
-    sym.unpersist()
+    state, c = _peel(graph, config or EngineConfig(), "core_decomp", 1,
+                     None, max_rounds, run_id, resume)
     if metrics_out is not None:
-        metrics_out["rounds"] = rounds
-        metrics_out["max_core"] = k - 1
-        metrics_out["levels"] = levels
+        metrics_out["rounds"] = c["rounds"]
+        metrics_out["max_core"] = c["k"] - 1
+        metrics_out["levels"] = c["levels"]
     assigned = state.where(F.col("core").isNotNull()).select("vid", "core")
     # vertices with no undirected edges never entered the state: core 0
     return (

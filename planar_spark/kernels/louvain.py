@@ -340,22 +340,18 @@ def louvain(
             )
             moved = int(obs.get["moved"] or 0)
             zero_streak = zero_streak + 1 if moved == 0 else 0
-            if ckpt.due(grounds):
-                saved = ckpt.save(
-                    grounds,
-                    {"cur": cur, "assign": assign, "comm": comm},
-                    {
-                        "level": _level,
-                        "rounds": rounds,
-                        "zero_streak": zero_streak,
-                        "global_round": grounds,
-                        "move_rounds_per_level": move_rounds_per_level,
-                    },
-                )
-                if saved is not None:
-                    cur, assign, comm = (
-                        saved["cur"], saved["assign"], saved["comm"]
-                    )
+            saved = ckpt.save(
+                grounds,
+                {"cur": cur, "assign": assign, "comm": comm},
+                {
+                    "level": _level,
+                    "rounds": rounds,
+                    "zero_streak": zero_streak,
+                    "global_round": grounds,
+                    "move_rounds_per_level": move_rounds_per_level,
+                },
+            )
+            cur, assign, comm = saved["cur"], saved["assign"], saved["comm"]
         if capped:
             sym.unpersist()
             break
@@ -433,20 +429,18 @@ def louvain(
         # level entry). grounds bumps so the boundary save never
         # overwrites the last in-phase round's sealed state.
         grounds += 1
-        if ckpt.due(grounds):
-            saved = ckpt.save(
-                grounds,
-                {"cur": cur, "assign": assign},
-                {
-                    "level": _level + 1,
-                    "rounds": 0,
-                    "zero_streak": 0,
-                    "global_round": grounds,
-                    "move_rounds_per_level": move_rounds_per_level,
-                },
-            )
-            if saved is not None:
-                cur, assign = saved["cur"], saved["assign"]
+        saved = ckpt.save(
+            grounds,
+            {"cur": cur, "assign": assign},
+            {
+                "level": _level + 1,
+                "rounds": 0,
+                "zero_streak": 0,
+                "global_round": grounds,
+                "move_rounds_per_level": move_rounds_per_level,
+            },
+        )
+        cur, assign = saved["cur"], saved["assign"]
 
     if metrics_out is not None:
         metrics_out["levels"] = len(move_rounds_per_level)

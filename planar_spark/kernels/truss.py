@@ -7,7 +7,7 @@ edge participates in at least k-2 triangles WITHIN the subgraph, so it
 keeps only tightly clustered link neighborhoods (a k-truss is always a
 subgraph of the (k-1)-core, but strictly stronger).
 
-Algorithm — synchronous support peeling to a fixpoint:
+``k_truss`` — synchronous support peeling to a fixpoint, one form:
 
   round r: 1. enumerate triangles of the CURRENT edge set with the
               degree-oriented two-join from kernels/triangles.py
@@ -32,29 +32,18 @@ number of rounds (peeling cascades are shallow on web graphs; the
 round count is reported via metrics_out and sized into the oracle
 unroll).
 
-``delta=True`` switches to the DELTA-PEELING variant: triangles and
-initial supports are materialized ONCE, then each round only (1) finds
-the triangles whose FIRST doomed edge is in this round's frontier
-(broadcast semi-probes of the cached list against the frontier, anti-
-probes against the cumulative doomed set), and (2) folds their edge
-decrements into a broadcast cumulative-decrement table — rounds write
-only frontier-sized tables, never the O(#tri)/O(E) bases (compacted
-back into the bases past ``compact_rows`` so broadcasts stay bounded).
-
-Measured crossover (bench ``ktruss_cascade*`` rows + a dedicated
-3x-interleaved probe-tagged A/B on the 20-round geometric-gradient
-fixture): the delta form won every interleaved pair on the DEEP
-cascade but only by ~4% at the medians (52.9s vs 55.1s; single
-mode-lucky runs have shown up to 1.4x, single mode-unlucky runs
-parity-to-worse — the host's bimodal memory mode swamps the gap), and
-it LOSES shallow web-shaped peels ~2.5-3x (sf0.1, 1-2 rounds: ≈15s vs
-≈5s) where its one-time O(#triangles) localCheckpoint dominates.
-Web/link graphs peel shallow and the deep-cascade edge is inside host
-noise, so RECOMPUTE stays the default (and the durable form); the
-flag exists for known-deep cascades where the frontier-sized rounds
-also bound executor memory, not for a reliable single-box wall-clock
-win. Both forms return the identical unique k-truss (pytest-asserted
-equal).
+Why recompute is the one k-truss form: a delta form (triangles and
+supports materialized once, rounds writing only frontier-sized
+decrement tables) was measured against it (bench ``ktruss_cascade*``
+rows + a 3x-interleaved probe-tagged A/B on the 20-round
+geometric-gradient fixture). It won the DEEP cascade by only ~4% at
+the medians (52.9s vs 55.1s — inside the host's bimodal memory-mode
+noise) and LOST shallow web-shaped peels ~2.5-3x (sf0.1, 1-2 rounds:
+≈15s vs ≈5s), where its one-time O(#triangles) materialization
+dominates. Web/link graphs peel shallow, and recompute is also the
+durable form, so it is the only one. ``truss_decomposition`` is a
+different question — every level, not one — and keeps its one
+materialized triangle list across all levels (see its docstring).
 """
 
 from __future__ import annotations
@@ -64,6 +53,10 @@ from pyspark.sql import DataFrame, Observation, functions as F
 from planar_spark.config import EngineConfig
 from planar_spark.graph.superstep import RoundStore, materialize
 from planar_spark.graph.tables import GraphTables
+
+# truss_decomposition cuts its running assignment table's lineage
+# every this many removal rounds
+ASSIGN_TRUNCATE_EVERY = 8
 
 
 def _edge_support(und: DataFrame) -> DataFrame:
@@ -122,144 +115,11 @@ def _tri_edge_contribs(tri: DataFrame) -> DataFrame:
     )
 
 
-def _delta_ktruss(
-    graph: GraphTables,
-    k: int,
-    config: EngineConfig,
-    max_rounds: int,
-    metrics_out: dict | None,
-    compact_rows: int = 1_000_000,
-) -> DataFrame:
-    """Delta-peeling k-truss (see module doc): one triangle
-    enumeration, then per-round support decrements only around deleted
-    edges. Returns the identical unique k-truss as the recompute form.
-
-    The triangle list AND the initial support table are materialized
-    ONCE and never rewritten. A triangle is "killed in round r" iff it
-    touches a round-r doomed edge and touches NO earlier-doomed edge,
-    so each round probes the CACHED triangle list with broadcast-sized
-    doomed sets (3 semi probes against the frontier + 3 anti probes
-    against the cumulative doomed edges) — and current supports are
-    s0 minus a broadcast cumulative-decrement table, so a round's only
-    writes are frontier-sized: no O(#triangles) anti-join rewrite and
-    no O(E) support-table re-checkpoint per round (both measured to
-    dominate the earlier delta form's cost).
-
-    The broadcast accumulators cannot grow unboundedly: once the
-    cumulative doomed + decrement row count exceeds ``compact_rows``
-    (driver-tracked via the Observations that already ride each
-    materialization), they are folded back into freshly materialized
-    es0/tri tables and reset — one amortized O(#triangles) rewrite per
-    ``compact_rows`` peeled edges, keeping every per-round broadcast
-    bounded at any graph size."""
-    spark = graph.spark
-    parts = config.partitions_for(spark)
-    und = graph.undirected_edges_by_a(parts)
-    tri = materialize(_triangles_of(und))
-    obs0 = Observation()
-    es0 = materialize(  # initial per-edge supports, immutable across rounds
-        und.join(_tri_edge_contribs(tri), ["a", "b"], "left")
-        .select("a", "b", F.coalesce("c_n", F.lit(0)).alias("s"))
-        .observe(obs0, F.count(F.lit(1)).alias("n"))
-    )
-    n_alive = int(obs0.get["n"] or 0)
-    doomed_acc = None  # cumulative doomed edges; bounded by |E| - kept
-    cumdec = None  # (a, b, d): cumulative support decrements
-    cum_doomed = 0  # rows in doomed_acc (exact, summed driver-side)
-    rounds = 0
-    compactions = 0
-    survivors: list[int] = []
-
-    def current():
-        cur = es0
-        if doomed_acc is not None:
-            cur = cur.join(F.broadcast(doomed_acc), ["a", "b"], "left_anti")
-        if cumdec is not None:
-            cur = cur.join(F.broadcast(cumdec), ["a", "b"], "left").select(
-                "a", "b",
-                (F.col("s") - F.coalesce("d", F.lit(0))).alias("s"),
-            )
-        return cur
-
-    for _ in range(max_rounds):
-        obs_d = Observation()
-        doomed = materialize(
-            current().where(F.col("s") < k - 2)
-            .select("a", "b")
-            .observe(obs_d, F.count(F.lit(1)).alias("n"))
-        )
-        n_doomed = int(obs_d.get["n"] or 0)
-        if n_doomed == 0:
-            if metrics_out is not None:
-                metrics_out["rounds"] = rounds
-                metrics_out["survivors_per_round"] = survivors
-                metrics_out["compactions"] = compactions
-            return current().select("a", "b")
-        rounds += 1
-        n_alive -= n_doomed
-        survivors.append(n_alive)
-
-        # triangles touching any doomed edge (a triangle with 2+ doomed
-        # edges appears once — distinct corners). Corners are DEGREE-
-        # oriented, so canonicalize each triangle edge with
-        # least/greatest before probing the canonical doomed sets.
-        def probe(t, d, x, y, how):
-            dd = d.select(F.col("a").alias("_da"), F.col("b").alias("_db"))
-            cond = (F.least(t[x], t[y]) == dd["_da"]) & (
-                F.greatest(t[x], t[y]) == dd["_db"]
-            )
-            return t.join(F.broadcast(dd), cond, how)
-
-        killed = (
-            probe(tri, doomed, "x", "y", "left_semi")
-            .unionAll(probe(tri, doomed, "y", "z", "left_semi"))
-            .unionAll(probe(tri, doomed, "x", "z", "left_semi"))
-            .distinct()
-        )
-        if doomed_acc is not None:
-            # drop triangles already killed by an earlier round's edge
-            for x, y in (("x", "y"), ("y", "z"), ("x", "z")):
-                killed = probe(killed, doomed_acc, x, y, "left_anti")
-        dec = _tri_edge_contribs(killed).select(
-            "a", "b", F.col("c_n").alias("d")
-        )
-        obs_c = Observation()
-        cumdec = materialize(
-            (dec if cumdec is None else cumdec.unionAll(dec))
-            .groupBy("a", "b")
-            .agg(F.sum("d").alias("d"))
-            .observe(obs_c, F.count(F.lit(1)).alias("n"))
-        )
-        doomed_acc = materialize(
-            doomed if doomed_acc is None else doomed_acc.unionAll(doomed)
-        )
-        cum_doomed += n_doomed  # doomed_acc rows (exact, driver-side)
-        acc_rows = cum_doomed + int(obs_c.get["n"] or 0)  # + cumdec rows
-        if acc_rows >= compact_rows:
-            # fold the accumulators into fresh base tables so the
-            # per-round broadcasts stay bounded (amortized: one
-            # O(#triangles) rewrite per compact_rows peeled edges)
-            es0 = materialize(current())
-            live_tri = tri
-            for x, y in (("x", "y"), ("y", "z"), ("x", "z")):
-                live_tri = probe(live_tri, doomed_acc, x, y, "left_anti")
-            tri = materialize(live_tri)
-            doomed_acc = None
-            cumdec = None
-            cum_doomed = 0
-            compactions += 1
-    raise RuntimeError(
-        f"k_truss(delta): peeling did not reach a fixpoint in {max_rounds} "
-        "rounds; raise max_rounds"
-    )
-
-
 def truss_decomposition(
     graph: GraphTables,
     config: EngineConfig | None = None,
     max_rounds: int = 2000,
     metrics_out: dict | None = None,
-    truncate_every: int = 8,
     run_id: str | None = None,
     resume: bool = False,
 ) -> DataFrame:
@@ -270,18 +130,19 @@ def truss_decomposition(
     neighborhoods by community strength for spam-farm and template
     filtering.
 
-    Ascending-k DELTA peeling over ONE materialized triangle list (the
-    ``delta=True`` machinery): at level k, edges with support < k-2
-    are removed (their truss number is k-1), the triangles they close
-    are killed, and only the surviving edges of killed triangles get
-    support decrements. When a level reaches its fixpoint, k advances —
-    a free driver branch. Total decrement work across ALL levels is
-    O(#triangles); the O(#triangles) list held across rounds is the
-    documented memory trade of the delta form. Deterministic.
+    Ascending-k DELTA peeling over ONE materialized triangle list: at
+    level k, edges with support < k-2 are removed (their truss number
+    is k-1), the triangles they close are killed, and only the
+    surviving edges of killed triangles get support decrements. When a
+    level reaches its fixpoint, k advances — a free driver branch.
+    Total decrement work across ALL levels is O(#triangles); the
+    O(#triangles) list held across rounds is the memory trade of
+    peeling every level from one enumeration. Deterministic.
 
     Assignments accumulate on ONE running (a, b, truss) table whose
     lineage (and the per-round doomed-edge leaves it references) is
-    cut every ``truncate_every`` rounds — no leaf pinned per round.
+    cut every ``ASSIGN_TRUNCATE_EVERY`` rounds — no leaf pinned per
+    round.
 
     Durable resume: with ``config.checkpoint_dir`` set, the full loop
     state — surviving edges with supports (es), the remaining triangle
@@ -369,7 +230,7 @@ def truss_decomposition(
         )
         n_alive = int(obs_s.get["n"] or 0)
         tri = materialize(tri.join(killed, ["x", "y", "z"], "left_anti"))
-        if rounds % max(1, truncate_every) == 0:
+        if rounds % ASSIGN_TRUNCATE_EVERY == 0:
             # cut the assignment lineage: releases the union chain AND
             # the per-round doomed-edge leaves it references
             assigned = materialize(assigned)
@@ -407,14 +268,10 @@ def k_truss(
     """Returns the k-truss edge set (a, b) with a < b, exact and
     deterministic. ``metrics_out`` receives ``rounds`` and
     ``survivors_per_round`` (used to size the oracle unroll).
-    ``delta=True`` uses the materialized-triangle delta-peeling variant
-    (module doc; no RoundStore durability — the recompute form
-    remains the durable default)."""
+    ``delta`` is accepted and ignored: recompute is the one form (see
+    the module doc for the measured reason)."""
     if k < 3:
         raise ValueError("k-truss requires k >= 3 (k-2 >= 1 triangles)")
-    if delta:
-        config = config or EngineConfig()
-        return _delta_ktruss(graph, k, config, max_rounds, metrics_out)
     config = config or EngineConfig()
     spark = graph.spark
     parts = config.partitions_for(spark)

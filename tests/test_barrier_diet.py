@@ -72,18 +72,23 @@ def test_msf_forest_append_only_no_duplicates(spark, config):
     assert len(rows) == len(set(rows))
 
 
-def test_kcore_delta_peeling_touches_only_frontier(spark, config):
-    """Clique (stays in core) + long chain (peels two vertices per
-    round): every post-round work volume must be O(frontier edges),
-    never O(E)."""
-    chain_len = 20
+def _clique_chain(chain_len: int = 20):
+    """An 8-clique (stays in the 2-core) tied to a chain that peels one
+    vertex per round from its free end: (edges, n)."""
     clique = [
         (a, b) for a in range(8) for b in range(a + 1, 8)
     ]
     chain = [(8 + i, 8 + i + 1) for i in range(chain_len - 1)]
     # tie the chain to the clique so the graph is connected
-    edges = np.array(clique + [(0, 8)] + chain)
-    n = 8 + chain_len
+    return np.array(clique + [(0, 8)] + chain), 8 + chain_len
+
+
+def test_kcore_delta_peeling_touches_only_frontier(spark, config):
+    """Clique (stays in core) + long chain (peels two vertices per
+    round): every post-round work volume must be O(frontier edges),
+    never O(E)."""
+    chain_len = 20
+    edges, n = _clique_chain(chain_len)
     g = graph_from_numpy(spark, edges, n)
     metrics: dict = {}
     got = {
@@ -100,6 +105,30 @@ def test_kcore_delta_peeling_touches_only_frontier(spark, config):
     assert max(metrics["frontier_sizes"][1:]) <= 3, metrics
     assert max(metrics["touched"][1:]) <= 6, metrics
     assert sum(metrics["touched"]) < len(edges), metrics
+
+
+def test_kcore_one_job_per_removal_round(spark, config):
+    """k-core's frontier cut, tombstone, degree decrement and next-round
+    decisions ride ONE materialization per removal round."""
+    edges, n = _clique_chain()
+    g = graph_from_numpy(spark, edges, n)
+    g.edges.count()
+    sc = spark.sparkContext
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        sc.setJobGroup("kcore-diet", "kcore job diet")
+        metrics: dict = {}
+        core = k_core(g, k=2, config=config, metrics_out=metrics)
+        sc.setJobGroup("kcore-diet-after", "after")
+        jobs = sc.statusTracker().getJobIdsForGroup("kcore-diet")
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", "true")
+    rounds = metrics["rounds"]
+    assert rounds >= 10
+    # one materialization per removal round plus the initial degree
+    # count; each may add one broadcast-build job, hence the factor 2
+    assert len(jobs) <= 2 * rounds + 4, (len(jobs), rounds)
+    assert core.where(F.col("in_core") == 1).count() == 8
 
 
 def test_wcc_one_action_per_superstep(spark, config):

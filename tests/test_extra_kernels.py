@@ -109,6 +109,26 @@ def test_gnn_forward_matches_oracle(spark, config):
     assert np.allclose(got, want, atol=1e-9)
 
 
+def _py_kcore(edges: np.ndarray, k: int):
+    """Pure-Python synchronous k-core peeling over the undirected
+    closure: (surviving vertices, per-round frontier sizes, per-round
+    distinct neighbours of the removed vertices)."""
+    und = {(min(a, b), max(a, b)) for a, b in map(tuple, edges) if a != b}
+    adj: dict[int, set[int]] = {}
+    for a, b in und:
+        adj.setdefault(a, set()).add(b)
+        adj.setdefault(b, set()).add(a)
+    alive = set(adj)
+    frontier_sizes, touched = [], []
+    while True:
+        drop = {v for v in alive if len(adj[v] & alive) < k}
+        if not drop:
+            return alive, frontier_sizes, touched
+        frontier_sizes.append(len(drop))
+        touched.append(len(set().union(*(adj[v] for v in drop))))
+        alive -= drop
+
+
 def test_k_core_matches_python_peeling(spark, config):
     """k-core vs a pure-Python reference on the power-law fixture."""
     from planar_spark.ingest.pages import edges_powerlaw
@@ -129,22 +149,47 @@ def test_k_core_matches_python_peeling(spark, config):
     got = {
         r["vid"]: r["in_core"] for r in k_core(g, k=k, config=config).collect()
     }
-    # python peeling over the undirected closure
-    und = {(min(a, b), max(a, b)) for a, b in map(tuple, edges) if a != b}
-    alive = set(range(n))
-    while True:
-        deg = {v: 0 for v in alive}
-        for a, b in und:
-            if a in alive and b in alive:
-                deg[a] += 1
-                deg[b] += 1
-        drop = {v for v in alive if deg.get(v, 0) < k}
-        if not drop:
-            break
-        alive -= drop
+    alive, _, _ = _py_kcore(edges, k)
     assert 0 < len(alive) < n  # the fixture must exercise real peeling
     for v in range(n):
         assert got[v] == (1 if v in alive else 0), v
+
+
+@pytest.mark.parametrize("aqe", ["false", "true"])
+def test_k_core_round_metrics_match_python(spark, config, aqe):
+    """Per-round ``frontier_sizes`` and ``touched`` (distinct neighbours
+    of each round's removed vertices) equal a Python count, whichever
+    join strategy the planner picks (a merge join with AQE off stops
+    reading its buffered side early)."""
+    from planar_spark.ingest.pages import edges_powerlaw
+    from planar_spark.kernels.kcore import k_core
+
+    edges = edges_powerlaw(200, m=3, seed=9)
+    g = graph_from_numpy(spark, edges, 200)
+    m: dict = {}
+    spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    try:
+        got = {
+            r["vid"]: r["in_core"]
+            for r in k_core(g, k=4, config=config, metrics_out=m).collect()
+        }
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", "true")
+    alive, frontier_sizes, touched = _py_kcore(edges, 4)
+    assert {v for v, c in got.items() if c} == alive
+    assert m["rounds"] == len(frontier_sizes) >= 3
+    assert m["frontier_sizes"] == frontier_sizes
+    assert m["touched"] == touched
+
+
+def test_k_core_raises_when_rounds_run_out(spark, config):
+    """A 20-path needs 10 removal rounds at k=2; two rounds must fail
+    loudly instead of returning an under-peeled core."""
+    from planar_spark.kernels.kcore import k_core
+
+    g = graph_from_numpy(spark, np.array([(i, i + 1) for i in range(19)]), 20)
+    with pytest.raises(RuntimeError, match="max_rounds"):
+        k_core(g, k=2, config=config, max_rounds=2)
 
 
 def test_coloring_prio_overflow_safe_matches_bigint(spark):
@@ -204,6 +249,8 @@ def _py_ktruss(edges, k):
 
 
 def test_ktruss_matches_python_peeling(spark, config):
+    from itertools import combinations
+
     from planar_spark.kernels.truss import k_truss
     from planar_spark.ingest.pages import edges_powerlaw
     from tests.conftest import graph_from_numpy
@@ -213,6 +260,19 @@ def test_ktruss_matches_python_peeling(spark, config):
     for k in (3, 4, 5):
         got = {(r["a"], r["b"]) for r in k_truss(g, k, config).collect()}
         assert got == _py_ktruss(edges, k), k
+    # cascade fixture: a 5-clique with a pendant triangle chain — the
+    # chain peels over MULTIPLE rounds
+    cl = [(a, b) for a, b in combinations(range(5), 2)]
+    chain = [(4, 5), (4, 6), (5, 6), (5, 7), (6, 7), (6, 8), (7, 8)]
+    ed = np.array(cl + chain)
+    g2 = graph_from_numpy(spark, ed, 9)
+    m: dict = {}
+    got2 = {
+        (r["a"], r["b"])
+        for r in k_truss(g2, 4, config, metrics_out=m).collect()
+    }
+    assert got2 == _py_ktruss(ed, 4)
+    assert m["rounds"] >= 2  # the chain actually cascaded
 
 
 def _py_core_numbers(edges: np.ndarray) -> dict[int, int]:
@@ -273,56 +333,6 @@ def test_core_decomposition_matches_python(spark, config, name, edges, n):
             if r["in_core"] == 1
         }
         assert {v for v, c in got.items() if c >= kmax} == in_k
-
-
-def test_ktruss_delta_equals_recompute(spark, config):
-    """The delta-peeling variant (materialized triangle list + support
-    decrements around deleted edges) must return the identical unique
-    k-truss as the per-round-recompute form, on a triangle-rich graph
-    and on a multi-round cascade fixture."""
-    from itertools import combinations
-
-    from planar_spark.kernels.truss import k_truss
-    from planar_spark.ingest.pages import edges_powerlaw
-    from tests.conftest import graph_from_numpy
-
-    edges = edges_powerlaw(120, m=4, seed=23)
-    g = graph_from_numpy(spark, edges, 120)
-    for k in (3, 4, 5):
-        got = {
-            (r["a"], r["b"])
-            for r in k_truss(g, k, config, delta=True).collect()
-        }
-        assert got == _py_ktruss(edges, k), k
-    # cascade fixture: a 5-clique with a pendant triangle chain — the
-    # chain peels over MULTIPLE rounds, exercising the decrement path
-    cl = [(a, b) for a, b in combinations(range(5), 2)]
-    chain = [(4, 5), (4, 6), (5, 6), (5, 7), (6, 7), (6, 8), (7, 8)]
-    ed = np.array(cl + chain)
-    g2 = graph_from_numpy(spark, ed, 9)
-    m_delta: dict = {}
-    got2 = {
-        (r["a"], r["b"])
-        for r in k_truss(g2, 4, config, delta=True,
-                         metrics_out=m_delta).collect()
-    }
-    assert got2 == _py_ktruss(ed, 4)
-    assert m_delta["rounds"] >= 2  # the chain actually cascaded
-    # broadcast-compaction path: compact_rows=1 folds the doomed/
-    # decrement accumulators back into the base tables EVERY round —
-    # result must be identical and compaction must actually fire
-    from planar_spark.kernels.truss import _delta_ktruss
-
-    m_c: dict = {}
-    got_c = {
-        (r["a"], r["b"])
-        for r in _delta_ktruss(
-            g2, 4, config, max_rounds=100, metrics_out=m_c,
-            compact_rows=1,
-        ).collect()
-    }
-    assert got_c == _py_ktruss(ed, 4)
-    assert m_c["compactions"] >= 2
 
 
 def _py_truss_numbers(edges: np.ndarray) -> dict[tuple[int, int], int]:

@@ -109,7 +109,8 @@ def test_kcore_resume_equals_uninterrupted(spark, tmp_path):
     edges = np.array([(i, i + 1) for i in range(19)])
     g = graph_from_numpy(spark, edges, 20)
     cfg = _cfg(tmp_path)
-    k_core(g, k=2, config=cfg, max_rounds=2, run_id="kc1")
+    with pytest.raises(RuntimeError):
+        k_core(g, k=2, config=cfg, max_rounds=2, run_id="kc1")
     m: dict = {}
     resumed = k_core(
         g, k=2, config=cfg, run_id="kc1", resume=True, metrics_out=m
