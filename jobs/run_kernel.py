@@ -39,6 +39,11 @@ KERNELS = (
     "wsssp", "wmsf", "centralities", "node2vec", "triads",
     "coredecomp", "trussdecomp", "densest", "betweenness", "louvain",
 )
+# kernels with no RoundStore checkpoints, so nothing for --resume to read
+NO_RESUME = (
+    "triangles", "khop", "randomwalk", "lcc", "bowtie", "stats",
+    "diameter", "node2vec", "triads", "densest",
+)
 
 
 def main() -> None:
@@ -82,6 +87,10 @@ def main() -> None:
         # a generated run-id can never match a prior run's checkpoints,
         # so --resume without --run-id would silently restart round 0
         ap.error("--resume requires --run-id (the id of the run to resume)")
+    if args.resume and args.kernel in NO_RESUME:
+        # these kernels keep no round checkpoints: a resume would
+        # silently recompute from scratch
+        ap.error(f"--resume is not supported by --kernel {args.kernel}")
 
     spark = SparkSession.builder.appName(f"planar_spark_{args.kernel}").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
@@ -126,7 +135,9 @@ def main() -> None:
     elif args.kernel == "louvain":
         from planar_spark.kernels.louvain import louvain
 
-        out, meta = louvain(g, cfg), None
+        out, meta = louvain(
+            g, cfg, run_id=args.run_id, resume=args.resume
+        ), None
     elif args.kernel == "triangles":
         out, meta = triangle_count_per_vertex(g, cfg), None
     # the self-managed loop kernels take --run-id/--resume too, via
@@ -166,7 +177,7 @@ def main() -> None:
         from planar_spark.kernels.hits import hits
 
         r = hits(g, cfg, num_iterations=args.iterations or 4,
-                 engine=engine("hits"))
+                 engine=engine("hits"), resume=args.resume)
         out, meta = r.state, r
     elif args.kernel == "ppr":
         from planar_spark.kernels.ppr import personalized_pagerank
@@ -176,7 +187,7 @@ def main() -> None:
         )
         r = personalized_pagerank(g, seeds, cfg,
                                   num_iterations=args.iterations,
-                                  engine=engine("ppr"))
+                                  engine=engine("ppr"), resume=args.resume)
         out, meta = r.state.select("vid", "ppr"), r
     elif args.kernel == "lcc":
         from planar_spark.kernels.triangles import local_clustering

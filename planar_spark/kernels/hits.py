@@ -39,11 +39,12 @@ set by dst every iteration — is strictly worse after 1 iteration).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, Observation, functions as F
 
 from planar_spark.config import EngineConfig
+from planar_spark.graph.locality import block_pinned_edges, effective_block_size
 from planar_spark.graph.skew import hub_vertices, salted_gather_join
-from planar_spark.graph.superstep import SuperstepEngine, SuperstepResult
+from planar_spark.graph.superstep import SuperstepEngine, SuperstepResult, materialize
 from planar_spark.graph.tables import GraphTables
 
 
@@ -71,14 +72,10 @@ def hits(
     # Layout-aware gathers (r7): on a with_partitioning graph both edge
     # tables pin by locality block — the reversed table's src is still a
     # vid, so the same sblk = src div block_size names its block.
-    from planar_spark.graph.locality import effective_block_size
-
-    # cost-aware consumption (r8): fall back to the hash gather below
+    # Cost-aware consumption (r8): fall back to the hash gather below
     # config.locality_min_edges — identical results, see config doc
     bs = effective_block_size(graph, config)
     if bs:
-        from planar_spark.graph.locality import block_pinned_edges
-
         fwd = block_pinned_edges(graph, parts).persist()
         rev = block_pinned_edges(graph, parts, reverse=True).persist()
     else:
@@ -91,13 +88,6 @@ def hits(
     # sets, observe the per-side counts on the materialization job, and
     # keep the result as a leaf so later per-superstep broadcasts of a
     # non-empty hub set never re-run the O(E) in-degree aggregation.
-    # (Previously two standalone limit(1).count() probes, the second
-    # forcing a full in-degree agg on its own — counter to the
-    # barrier-diet discipline even though it ran only once per call.)
-    from pyspark.sql import Observation
-
-    from planar_spark.graph.superstep import materialize
-
     in_deg = rev.groupBy(F.col("src").alias("vid")).agg(
         F.count(F.lit(1)).alias("out_deg")
     )
@@ -135,21 +125,19 @@ def hits(
     # literal — same r8 restructure as pagerank's dangling mass (the
     # old in-plan 1-row aggregate cost a state scan + 2 agg stages + a
     # broadcast per phase; values identical modulo FP partial-sum
-    # order, already nondeterministic before).
-    carry: dict = {"obs": None}
+    # order, already nondeterministic before). A resumed run's
+    # checkpointed state carries no Observation: its sums cost one
+    # driver action instead, so every phase plan has one shape.
+    sums = (F.sum("hub").alias("_hs"), F.sum("auth").alias("_as"))
+    carry: dict = {}
 
     def _observed(df: DataFrame) -> DataFrame:
-        obs = Observation()
-        carry["obs"] = obs
-        return df.observe(
-            obs, F.sum("hub").alias("_hs"), F.sum("auth").alias("_as")
-        )
+        carry["obs"] = obs = Observation()
+        return df.observe(obs, *sums)
 
-    def _sums() -> tuple[float, float] | None:
+    def _sums(state: DataFrame) -> tuple[float, float]:
         obs = carry.get("obs")
-        if obs is None:
-            return None  # resumed from a pre-observation checkpoint
-        got = obs.get
+        got = obs.get if obs is not None else state.agg(*sums).first()
         return float(got["_hs"] or 0.0), float(got["_as"] or 0.0)
 
     def init_state() -> DataFrame:
@@ -162,17 +150,8 @@ def hits(
     def _gather(state, src_col, dst_col, edges, hubs, keep):
         """Normalize state[src_col] by the carried sum, gather, return
         the full state."""
-        sums = _sums()
-        if sums is not None:
-            s_col = F.lit(sums[0] if src_col == "hub" else sums[1])
-            live = state.select(
-                "vid", (F.col(src_col) / s_col).alias("w")
-            )
-        else:
-            norm = state.agg(F.sum(src_col).alias("_s"))
-            live = state.crossJoin(F.broadcast(norm)).select(
-                "vid", (F.col(src_col) / F.col("_s")).alias("w")
-            )
+        s = _sums(state)[0 if src_col == "hub" else 1]
+        live = state.select("vid", (F.col(src_col) / F.lit(s)).alias("w"))
         gathered = salted_gather_join(
             edges, live, config, hubs=None if bs else hubs, block_size=bs
         )
@@ -206,22 +185,12 @@ def hits(
     result = engine.run(init_state, step, 2 * num_iterations, resume=resume)
     # Final one-shot L1 normalization; the final state's sums were
     # observed on its own materialization, so they fold in as literals.
-    fsums = _sums()
-    if fsums is not None:
-        normalized = result.state.select(
-            "vid",
-            (F.col("hub") / F.lit(fsums[0])).alias("hub"),
-            (F.col("auth") / F.lit(fsums[1])).alias("auth"),
-        )
-    else:
-        sums = result.state.agg(
-            F.sum("hub").alias("_hs"), F.sum("auth").alias("_as")
-        )
-        normalized = result.state.crossJoin(F.broadcast(sums)).select(
-            "vid",
-            (F.col("hub") / F.col("_hs")).alias("hub"),
-            (F.col("auth") / F.col("_as")).alias("auth"),
-        )
+    hs, as_ = _sums(result.state)
+    normalized = result.state.select(
+        "vid",
+        (F.col("hub") / F.lit(hs)).alias("hub"),
+        (F.col("auth") / F.lit(as_)).alias("auth"),
+    )
     rev.unpersist()
     if bs:
         fwd.unpersist()

@@ -1,44 +1,155 @@
-"""PageRank: textbook power iteration with dangling-mass redistribution.
+"""PageRank, and the one power iteration of the pagerank family.
 
 Reference kernel: core/apps/pagerank_app.h:38-99 and
 nvme/apps/pagerank_vc_nvme_app.h:29-71 — per superstep a "pull" over each
-vertex's adjacency, ``pr_new[v] = d * Σ pr[w]/outdeg(w) + λ`` with fixed
-iteration count. The reference freezes deg-0 vertices at 1/N and never
-redistributes dangling mass (a known quirk; see SURVEY.md §7.3); the
-north rule requires the standard formulation, which we implement:
+vertex's adjacency with a fixed iteration count. The reference freezes
+deg-0 vertices at 1/N and never redistributes dangling mass (a known
+quirk; see SURVEY.md §7.3); the north rule requires the standard
+formulation, which every kernel of the family implements:
 
-    pr_{k+1}(v) = (1-d)/N + d * ( Σ_{u->v} pr_k(u)/outdeg(u)
-                                  + dangling_mass_k / N )
+    x_{k+1}(v) = (1-d) * r(v) + d * ( Σ_{u->v} w_uv * x_k(u)/deg(u)
+                                       + dangling_mass_k * r(v) )
 
-so Σ pr == 1 at every superstep (validated in tests).
+so Σ x == 1 at every superstep (validated in tests). ``pagerank`` has
+r = 1/N, w_uv = 1, deg = out_deg; ``personalized_pagerank`` (ppr.py)
+restarts to a seed ``reset`` column; ``weighted_pagerank``
+(wpagerank.py) has edge weights and deg = W_out(u) = Σ_v w_uv.
 
-One superstep = one gather join + one keyed sum — the DataFrame analogue
-of the reference's ParallelVertexDoWithEdges + WriteAdd + Sync
-(core/apis/planar_app_base_op.h:205-346, core/util/atomic.h:52-59):
+One superstep (``power_iteration``) = one gather join + one keyed sum —
+the DataFrame analogue of the reference's one ``BlockModel`` superstep
+of Map + WriteAdd + Sync (core/apis/planar_app_base_op.h:205-346,
+core/util/atomic.h:52-59) that serves every variant there too:
 
-    contribs = edges ⋈_{src==vid} state  → groupBy(dst).sum(pr/out_deg)
-    state'   = base ⋈_{vid} contribs     → (1-d)/N + d*(contrib + dm/N)
+    contribs = edges ⋈_{src==vid} live  → groupBy(dst).sum(w_uv * x/deg)
+    state'   = base ⋈_{vid} contribs    → (1-d)*r + d*(contrib + dm*r)
 
-Scale notes:
-- state carries (vid, out_deg, pr) so the per-edge contribution needs no
-  extra join against degrees;
-- the dangling mass rides each state materialization as an Observation
-  and folds into the next step's plan as a literal (r8) — no extra job,
-  no per-step aggregate subtree;
-- hub skew on the gather join is handled by salted_gather_join;
-- partial aggregation makes the groupBy(dst) shuffle one row per
-  (task, dst) — no agg-side salting needed;
-- per-superstep checkpoint truncates lineage (SuperstepEngine).
+The dangling mass rides each state materialization as an Observation
+and folds into the next step's plan as a literal (r8). A resumed run's
+checkpointed state has no Observation, so its first step reads the mass
+with one driver action: every step plan has one shape, fresh or resumed.
+Hub skew on the gather is handled by salted_gather_join; partial
+aggregation makes the groupBy(dst) shuffle one row per (task, dst); the
+engine's per-superstep checkpoint truncates lineage.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, Observation, functions as F
 
 from planar_spark.config import EngineConfig
+from planar_spark.graph.locality import block_pinned_edges, effective_block_size
 from planar_spark.graph.skew import hub_vertices, salted_gather_join
 from planar_spark.graph.superstep import SuperstepEngine, SuperstepResult
 from planar_spark.graph.tables import GraphTables
+
+
+def gather_edges(graph: GraphTables, config: EngineConfig):
+    """``(edges, hubs, block_size, release)`` for a gather over the
+    graph's out-edges: the cached block-pinned layout on a
+    with_partitioning graph (r7, cost-aware since r8 — see
+    ``effective_block_size``; hub salting is a no-op there), else the
+    graph's src-sorted edges salted on a non-empty hub set.
+    ``release()`` frees what this call cached."""
+    bs = effective_block_size(graph, config)
+    if bs:
+        pinned = block_pinned_edges(graph, config.partitions_for(graph.spark))
+        pinned = pinned.persist()
+        return pinned, None, bs, pinned.unpersist
+    hubs = hub_vertices(graph.degrees, config.hub_degree_threshold)
+    if hubs.limit(1).count() == 0:
+        hubs = None
+    return graph.edges, hubs, None, lambda: None
+
+
+def power_iteration(
+    base: DataFrame,
+    edges: DataFrame,
+    start: DataFrame,
+    config: EngineConfig,
+    num_iterations: int,
+    kernel: str,
+    num_vertices: int,
+    *,
+    value: str = "pr",
+    degree: str = "out_deg",
+    weight: str | None = None,
+    reset: str | None = None,
+    hubs: DataFrame | None = None,
+    block_size: int | None = None,
+    engine: SuperstepEngine | None = None,
+    resume: bool = False,
+    lineage: dict | None = None,
+) -> SuperstepResult:
+    """Run the family's power iteration on ``SuperstepEngine``.
+
+    ``base`` is (vid, ``degree``[, ``reset``]), partitioned by vid;
+    ``start`` is base plus the ``value`` column. ``edges`` (src, dst
+    [, ``weight``]) is gathered with ``hubs``/``block_size`` as
+    ``salted_gather_join`` takes them. The restart vector r is the
+    ``reset`` column, or the uniform 1/``num_vertices`` when None.
+    Returns the engine result; its state has base's columns + value."""
+    d = config.damping
+    n = num_vertices
+    cols = base.columns
+    share = F.col("x") if weight is None else F.col(weight) * F.col("x")
+    dm_expr = F.sum(F.when(F.col(degree) == 0, F.col(value))).alias("_dm")
+    l1_expr = F.sum(F.abs(F.col(value) - F.col("_old"))).alias("l1_delta")
+    carry: dict = {}
+
+    def observed(df: DataFrame) -> DataFrame:
+        carry["dm"] = obs = Observation()
+        return df.observe(obs, dm_expr)
+
+    def dangling_mass(state: DataFrame) -> float:
+        obs = carry.get("dm")
+        # a resumed run's checkpointed state carries no Observation
+        got = obs.get if obs is not None else state.agg(dm_expr).first()
+        return float(got["_dm"] or 0.0)
+
+    def step(state: DataFrame, _k: int) -> tuple[DataFrame, dict]:
+        live = state.where(F.col(degree) > 0).select(
+            "vid", (F.col(value) / F.col(degree)).alias("x")
+        )
+        contribs = salted_gather_join(
+            edges, live, config, hubs=hubs, block_size=block_size
+        ).groupBy(F.col("dst").alias("vid")).agg(F.sum(share).alias("contrib"))
+        dm = dangling_mass(state)
+        if reset is None:
+            teleport, dangling = F.lit((1.0 - d) / n), F.lit(dm / n)
+        else:
+            teleport = F.lit(1.0 - d) * F.col(reset)
+            dangling = F.lit(dm) * F.col(reset)
+        gain = F.coalesce(F.col("contrib"), F.lit(0.0)) + dangling
+        x_new = (teleport + F.lit(d) * gain).alias(value)
+        if config.tolerance <= 0:
+            # no trailing repartition: the base⋈contribs join already
+            # leaves the state hash-partitioned by vid
+            return observed(
+                base.join(contribs, "vid", "left").select(*cols, x_new)
+            ), {}
+        # Early-stop mode: build the new state FROM the old one so the
+        # L1 delta is observed on the materialization job instead of a
+        # standalone old⋈new aggregate job per superstep.
+        obs = Observation()
+        new_state = (
+            state.select(*cols, F.col(value).alias("_old"))
+            .join(contribs, "vid", "left")
+            .select(*cols, x_new, "_old")
+            .observe(obs, l1_expr)
+            .drop("_old")
+        )
+        return observed(new_state), {"_obs": obs}
+
+    def converged(metrics: dict) -> bool:
+        # l1_delta is observed only when tolerance > 0
+        return metrics.get("l1_delta", float("inf")) < config.tolerance
+
+    engine = engine or SuperstepEngine(
+        base.sparkSession, config, kernel, lineage=lineage
+    )
+    return engine.run(
+        lambda: observed(start), step, num_iterations, converged, resume=resume
+    )
 
 
 def pagerank(
@@ -51,156 +162,26 @@ def pagerank(
 ) -> SuperstepResult:
     """Returns state (vid, out_deg, pr); final pr sums to 1.
 
-    ``init_ranks`` (vid, pr) warm-starts the power iteration from a
-    previous run's state instead of the uniform 1/N vector — the batch
-    companion to incremental WCC for nightly link-graph maintenance:
-    yesterday's converged ranks are an excellent initial guess for
-    today's slightly-changed graph, so the fixpoint is re-reached in a
-    fraction of the supersteps (power iteration converges from ANY
-    L1-bounded start; with tolerance-based early stop the saving is
-    automatic). Vertices absent from ``init_ranks`` (new pages) start
-    at 1/N. Warm-starting the SAME graph for k more steps is exactly
-    step-continuation (asserted against a cold run in tests and the
-    pagerank_warmstart driver gate)."""
+    ``init_ranks`` (vid, pr) warm-starts the iteration from a previous
+    run's state instead of 1/N (new vertices start at 1/N): yesterday's
+    converged ranks re-reach today's fixpoint of a slightly changed
+    graph in a fraction of the supersteps, and warm-starting the SAME
+    graph for k more steps is exactly step-continuation (asserted in
+    tests and the pagerank_warmstart driver gate)."""
     config = config or EngineConfig()
-    spark = graph.spark
     n = graph.num_vertices
-    d = config.damping
-    iters = num_iterations or config.max_iterations
-    parts = config.partitions_for(spark)
-
-    # Layout-aware gather (r7): on a with_partitioning graph
-    # (region-major ids, graph.block_size set) the edge table is pinned
-    # by locality BLOCK and the gather joins on the compound
-    # (sblk, src) key — zero edge-side exchange, and the groupBy(dst)
-    # partial agg emits ~V + cut rows instead of ~parts*V
-    # (graph/locality.py; same consumption pattern as WCC,
-    # components.py). Hub salting is a no-op under pinning (skew.py).
-    from planar_spark.graph.locality import effective_block_size
-
-    # cost-aware consumption (r8): fall back to the hash gather below
-    # config.locality_min_edges — identical results, see config doc
-    bs = effective_block_size(graph, config)
-    pinned = None
-    if bs:
-        from planar_spark.graph.locality import block_pinned_edges
-
-        pinned = block_pinned_edges(graph, parts).persist()
-        edges, hubs = pinned, None
-    else:
-        edges = graph.edges
-        hubs_df = hub_vertices(graph.degrees, config.hub_degree_threshold)
-        hubs = hubs_df if hubs_df.limit(1).count() > 0 else None
     base = graph.degrees  # (vid, out_deg), partitioned by vid
-
-    from pyspark.sql import Observation
-
-    # Dangling mass rides every state MATERIALIZATION as an Observation
-    # (r8): the old design folded a 1-row aggregate over the previous
-    # state into each superstep plan (scan + 2 agg stages + a broadcast
-    # exchange per step). The sum over the SAME materialized rows is
-    # available driver-side for free on the job that produced them —
-    # the [[observation-metrics-trick]] discipline — so the next step
-    # inlines it as a literal. Value-identical modulo FP partial-sum
-    # order, which was already nondeterministic in the in-plan form.
-    carry: dict = {"dm_obs": None, "dm": None}
-    _DM = F.sum(F.when(F.col("out_deg") == 0, F.col("pr"))).alias("_dm")
-
-    def _observed(df: DataFrame) -> DataFrame:
-        obs = Observation()
-        carry["dm_obs"] = obs
-        return df.observe(obs, _DM)
-
-    def _dm_value() -> float | None:
-        obs = carry.pop("dm_obs", None)
-        if obs is not None:
-            carry["dm"] = float(obs.get["_dm"] or 0.0)
-        return carry["dm"]
-
-    def init_state() -> DataFrame:
-        if init_ranks is not None:
-            return _observed(
-                base.join(
-                    init_ranks.select("vid", F.col("pr").alias("_pr0")),
-                    "vid",
-                    "left",
-                ).select(
-                    "vid",
-                    "out_deg",
-                    F.coalesce("_pr0", F.lit(1.0 / n)).alias("pr"),
-                )
-            )
-        return _observed(base.withColumn("pr", F.lit(1.0 / n)))
-
-    def step(state: DataFrame, _step: int) -> tuple[DataFrame, dict]:
-        live = state.where(F.col("out_deg") > 0).select(
-            "vid", (F.col("pr") / F.col("out_deg")).alias("w")
-        )
-        gathered = salted_gather_join(
-            edges, live, config, hubs=hubs, block_size=bs
-        )
-        contribs = gathered.groupBy(F.col("dst").alias("vid")).agg(
-            F.sum("w").alias("contrib")
-        )
-        dm = _dm_value()
-        if dm is not None:
-            dm_col = F.lit(dm)
-            attach = lambda df: df  # noqa: E731
-        else:
-            # resumed run whose checkpoint predates the dm observation:
-            # fall back to the in-plan 1-row aggregate for THIS step
-            dm_df = state.where(F.col("out_deg") == 0).agg(
-                F.coalesce(F.sum("pr"), F.lit(0.0)).alias("_dm")
-            )
-            dm_col = F.col("_dm")
-            attach = lambda df: df.crossJoin(F.broadcast(dm_df))  # noqa: E731
-        pr_expr = (
-            F.lit((1.0 - d) / n)
-            + F.lit(d)
-            * (
-                F.coalesce(F.col("contrib"), F.lit(0.0))
-                + dm_col / F.lit(float(n))
-            )
-        ).alias("pr")
-        if config.tolerance <= 0:
-            new_state = _observed(
-                attach(base.join(contribs, "vid", "left")).select(
-                    "vid", "out_deg", pr_expr
-                )
-            )
-            # no trailing repartition: the base⋈contribs join already
-            # leaves the state hash-partitioned by vid
-            return new_state, {}
-        # Early-stop mode: build the new state FROM the old one (which
-        # carries pr) so the L1 delta is OBSERVED on the state plan —
-        # the convergence metric rides the materialization job instead
-        # of a standalone old⋈new aggregate job per superstep.
-        obs = Observation()
-        new_state = _observed(
-            attach(
-                state.select("vid", "out_deg", F.col("pr").alias("_pr_old"))
-                .join(contribs, "vid", "left")
-            )
-            .select("vid", "out_deg", pr_expr, "_pr_old")
-            .observe(
-                obs,
-                F.sum(F.abs(F.col("pr") - F.col("_pr_old"))).alias("l1_delta"),
-            )
-            .drop("_pr_old")
-        )
-        return new_state, {"_obs": obs}
-
-    def converged(metrics: dict) -> bool:
-        return (
-            config.tolerance > 0
-            and metrics.get("l1_delta", float("inf")) < config.tolerance
-        )
-
-    engine = engine or SuperstepEngine(
-        spark, config, "pagerank",
+    start = base.withColumn("pr", F.lit(1.0 / n))
+    if init_ranks is not None:
+        start = base.join(
+            init_ranks.select("vid", F.col("pr").alias("_pr0")), "vid", "left"
+        ).select("vid", "out_deg", F.coalesce("_pr0", F.lit(1.0 / n)).alias("pr"))
+    edges, hubs, bs, release = gather_edges(graph, config)
+    result = power_iteration(
+        base, edges, start, config,
+        num_iterations or config.max_iterations, "pagerank", n,
+        hubs=hubs, block_size=bs, engine=engine, resume=resume,
         lineage={"num_vertices": n, "num_edges": graph.num_edges},
     )
-    result = engine.run(init_state, step, iters, converged, resume=resume)
-    if pinned is not None:
-        pinned.unpersist()
+    release()
     return result

@@ -1,23 +1,17 @@
 """Personalized PageRank — random walk with restart to a seed set.
 
-Same power iteration as kernels/pagerank.py (reference:
-core/apps/pagerank_app.h:38-99) with the uniform teleport vector
-replaced by a seed-restart distribution — the standard topic-sensitive
-/ personalized formulation used for related-page and recommendation
-queries over web link graphs:
+The pagerank family's power iteration (kernels/pagerank.py
+``power_iteration``) with the uniform teleport vector replaced by a
+seed-restart distribution — the topic-sensitive / personalized
+formulation used for related-page and recommendation queries:
 
     ppr_{k+1}(v) = (1-d) * reset(v)
                    + d * ( Σ_{u→v} ppr_k(u)/outdeg(u)
                            + dangling_mass_k * reset(v) )
 
-with reset(v) = 1/|S| for v ∈ S else 0. Dangling mass teleports to the
-seeds (same rule as the restart), so Σ ppr == 1 at every superstep.
-
-Plan shape is identical to pagerank: cached sorted edges + pinned merge
-gather (hub-salted), partial-agg groupBy(dst), the dangling mass and
-the seed set folded in-plan (1-row aggregate broadcast / broadcast
-semi-join) — no extra barriers versus the uniform kernel. State carries
-the reset column so no per-step re-join against the seed set.
+with reset(v) = 1/|S| for v ∈ S else 0, so Σ ppr == 1 at every
+superstep. The state carries ``reset`` (joined once from the broadcast
+seed set), so no step re-joins the seeds.
 """
 
 from __future__ import annotations
@@ -25,9 +19,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from planar_spark.config import EngineConfig
-from planar_spark.graph.skew import hub_vertices, salted_gather_join
 from planar_spark.graph.superstep import SuperstepEngine, SuperstepResult
 from planar_spark.graph.tables import GraphTables
+from planar_spark.kernels.pagerank import gather_edges, power_iteration
 
 
 def personalized_pagerank(
@@ -36,39 +30,18 @@ def personalized_pagerank(
     config: EngineConfig | None = None,
     num_iterations: int | None = None,
     engine: SuperstepEngine | None = None,
+    resume: bool = False,
 ) -> SuperstepResult:
     """seeds: DataFrame with a ``vid`` column (must be non-empty and a
     subset of the vertex set). Returns state (vid, out_deg, reset, ppr);
     final ppr sums to 1."""
     config = config or EngineConfig()
-    spark = graph.spark
-    d = config.damping
-    iters = num_iterations or config.max_iterations
-
     n_seeds = seeds.select("vid").distinct().count()
     if n_seeds == 0:
         raise ValueError("personalized_pagerank requires a non-empty seed set")
     r = 1.0 / n_seeds
 
-    # Layout-aware gather (r7): same block-pinned consumption as
-    # pagerank (kernels/pagerank.py) — the gather is identical in shape
-    parts = config.partitions_for(spark)
-    from planar_spark.graph.locality import effective_block_size
-
-    # cost-aware consumption (r8): fall back to the hash gather below
-    # config.locality_min_edges — identical results, see config doc
-    bs = effective_block_size(graph, config)
-    pinned = None
-    if bs:
-        from planar_spark.graph.locality import block_pinned_edges
-
-        pinned = block_pinned_edges(graph, parts).persist()
-        edges, hubs = pinned, None
-    else:
-        edges = graph.edges
-        hubs_df = hub_vertices(graph.degrees, config.hub_degree_threshold)
-        hubs = hubs_df if hubs_df.limit(1).count() > 0 else None
-
+    edges, hubs, bs, release = gather_edges(graph, config)
     seed_flag = seeds.select("vid").distinct().withColumn("_seed", F.lit(True))
     base = (
         graph.degrees.join(F.broadcast(seed_flag), "vid", "left")
@@ -81,58 +54,13 @@ def personalized_pagerank(
         )
         .persist()
     )
-
-    from pyspark.sql import Observation
-
-    # Dangling mass rides each state materialization as an Observation
-    # and is inlined as a literal in the next step's plan — same r8
-    # restructure as kernels/pagerank.py (value-identical modulo FP
-    # partial-sum order, already nondeterministic in the in-plan form).
-    carry: dict = {"dm_obs": None}
-    _DM = F.sum(F.when(F.col("out_deg") == 0, F.col("ppr"))).alias("_dm")
-
-    def _observed(df: DataFrame) -> DataFrame:
-        obs = Observation()
-        carry["dm_obs"] = obs
-        return df.observe(obs, _DM)
-
-    def init_state() -> DataFrame:
-        return _observed(base.withColumn("ppr", F.col("reset")))
-
-    def step(state: DataFrame, _k: int) -> tuple[DataFrame, dict]:
-        live = state.where(F.col("out_deg") > 0).select(
-            "vid", (F.col("ppr") / F.col("out_deg")).alias("w")
-        )
-        gathered = salted_gather_join(
-            edges, live, config, hubs=hubs, block_size=bs
-        )
-        contribs = gathered.groupBy(F.col("dst").alias("vid")).agg(
-            F.sum("w").alias("contrib")
-        )
-        dm = float(carry["dm_obs"].get["_dm"] or 0.0)
-        new_state = _observed(
-            base.join(contribs, "vid", "left").select(
-                "vid",
-                "out_deg",
-                "reset",
-                (
-                    F.lit(1.0 - d) * F.col("reset")
-                    + F.lit(d)
-                    * (
-                        F.coalesce(F.col("contrib"), F.lit(0.0))
-                        + F.lit(dm) * F.col("reset")
-                    )
-                ).alias("ppr"),
-            )
-        )
-        return new_state, {}
-
-    engine = engine or SuperstepEngine(
-        spark, config, "ppr",
+    result = power_iteration(
+        base, edges, base.withColumn("ppr", F.col("reset")), config,
+        num_iterations or config.max_iterations, "ppr", graph.num_vertices,
+        value="ppr", reset="reset", hubs=hubs, block_size=bs,
+        engine=engine, resume=resume,
         lineage={"num_vertices": graph.num_vertices, "num_edges": graph.num_edges},
     )
-    result = engine.run(init_state, step, iters)
     base.unpersist()
-    if pinned is not None:
-        pinned.unpersist()
+    release()
     return result

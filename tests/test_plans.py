@@ -442,3 +442,78 @@ def test_lpa_block_pinned_gather_edge_side_unshuffled(spark, config):
     assert "Exchange" not in edge_branch, plan
     assert "Sort [sblk" not in edge_branch, plan
     sym.unpersist()
+
+
+def test_pagerank_family_step_plans_have_no_cross_join(spark, tmp_path):
+    """Every power-iteration step plan has one shape, fresh or resumed:
+    the dangling mass (hits: the column sums) is a literal, observed on
+    the previous materialization or — for a resumed checkpoint — read by
+    one driver action, never a 1-row aggregate crossJoined into the
+    step."""
+    import os
+
+    from planar_spark.graph.superstep import SuperstepEngine
+    from planar_spark.kernels import (
+        hits,
+        pagerank,
+        personalized_pagerank,
+        weighted_pagerank,
+    )
+
+    edges = edges_powerlaw(200, m=3, seed=8)
+    g = graph_from_numpy(spark, edges, 200)
+    cfg = EngineConfig(
+        num_partitions=8, tolerance=0.0, checkpoint_dir=str(tmp_path / "ck")
+    )
+    seeds = spark.createDataFrame([(0,), (7,)], "vid long")
+    wdf = spark.createDataFrame(
+        [(int(s), int(d), 1.0 + (int(s) + int(d)) % 3) for s, d in edges],
+        "src long, dst long, weight double",
+    )
+
+    def eng(kernel):
+        return SuperstepEngine(spark, cfg, kernel, run_id="R")
+
+    # (kernel, resumed) -> run; each fresh run checkpoints the round its
+    # resumed run continues from
+    cases = {
+        ("pagerank", False): lambda: pagerank(
+            g, cfg, num_iterations=1, engine=eng("pagerank")
+        ),
+        ("pagerank", True): lambda: pagerank(
+            g, cfg, num_iterations=2, engine=eng("pagerank"), resume=True
+        ),
+        ("ppr", False): lambda: personalized_pagerank(
+            g, seeds, cfg, num_iterations=1, engine=eng("ppr")
+        ),
+        ("ppr", True): lambda: personalized_pagerank(
+            g, seeds, cfg, num_iterations=2, engine=eng("ppr"), resume=True
+        ),
+        ("hits", False): lambda: hits(
+            g, cfg, num_iterations=1, engine=eng("hits")
+        ),
+        ("hits", True): lambda: hits(
+            g, cfg, num_iterations=2, engine=eng("hits"), resume=True
+        ),
+        ("wpagerank", False): lambda: weighted_pagerank(
+            wdf, cfg, num_iterations=2
+        ),
+    }
+    for (kernel, resumed), run in cases.items():
+        d = str(tmp_path / f"{kernel}_{resumed}")
+        os.environ["SPARK_GRAFT_EXPLAIN_DIR"] = d
+        try:
+            run()
+        finally:
+            os.environ.pop("SPARK_GRAFT_EXPLAIN_DIR", None)
+        steps = sorted(os.listdir(d)) if os.path.isdir(d) else []
+        # a fresh run dumps its init step 0; a resumed one only the
+        # steps past its checkpoint
+        assert steps and (steps[0] == f"{kernel}_step000.txt") != resumed, (
+            kernel, resumed, steps,
+        )
+        for name in steps:
+            with open(os.path.join(d, name)) as f:
+                plan = f.read()
+            assert "BroadcastNestedLoopJoin" not in plan, (kernel, name)
+            assert "CartesianProduct" not in plan, (kernel, name)

@@ -12,10 +12,13 @@ from planar_spark.ingest.pages import edges_powerlaw, edges_star_hub
 from planar_spark.kernels import (
     bfs_sssp,
     connected_components,
+    hits,
     label_propagation,
     pagerank,
+    personalized_pagerank,
 )
 from planar_spark.oracle import oracle_pagerank
+from planar_spark.oracle.numpy_oracle import oracle_ppr
 
 from tests.conftest import graph_from_numpy
 
@@ -47,11 +50,25 @@ def _run_bfs(g, cfg, steps, engine, resume=False):
     )
 
 
+def _run_ppr(g, cfg, steps, engine, resume=False):
+    seeds = g.spark.createDataFrame([(0,), (7,), (50,)], "vid long")
+    return personalized_pagerank(
+        g, seeds, cfg, num_iterations=steps, engine=engine, resume=resume
+    )
+
+
+def _run_hits(g, cfg, steps, engine, resume=False):
+    # one HITS iteration is two supersteps (auth phase, hub phase)
+    return hits(g, cfg, num_iterations=steps // 2, engine=engine, resume=resume)
+
+
 ENGINE_KERNELS = [
     # (kernel, runner, steps before the crash, steps asked on resume)
     ("pagerank", _run_pagerank, 4, 10),
     ("label_propagation", _run_lpa, 2, 5),
     ("bfs_sssp", _run_bfs, 2, 100),
+    ("ppr", _run_ppr, 4, 10),
+    ("hits", _run_hits, 2, 4),
 ]
 
 
@@ -167,15 +184,72 @@ def test_salted_gather_equals_plain(spark):
 
 
 def test_pagerank_with_salting_matches_oracle(spark):
-    """Force the salted path end-to-end on the star graph."""
+    """Force the salted path end-to-end on the star graph, for pagerank
+    and for personalized pagerank (the same power-iteration step)."""
     n = 400
     edges = edges_star_hub(n)
     g = graph_from_numpy(spark, edges, n)
     cfg = EngineConfig(
         num_partitions=8, tolerance=0.0, hub_degree_threshold=50, salt_buckets=4
     )
-    result = pagerank(g, cfg, num_iterations=10)
-    rows = {r["vid"]: r["pr"] for r in result.state.collect()}
-    got = np.array([rows[v] for v in range(n)])
-    want = oracle_pagerank(edges, n, num_iterations=10)
-    assert np.allclose(got, want, atol=1e-6)
+    seeds = [0, 3, 250]
+    sdf = spark.createDataFrame([(v,) for v in seeds], "vid long")
+    for value, run, want in [
+        ("pr", lambda: pagerank(g, cfg, num_iterations=10),
+         oracle_pagerank(edges, n, num_iterations=10)),
+        ("ppr", lambda: personalized_pagerank(g, sdf, cfg, num_iterations=10),
+         oracle_ppr(edges, n, seeds, num_iterations=10)),
+    ]:
+        rows = {r["vid"]: r[value] for r in run().state.collect()}
+        got = np.array([rows[v] for v in range(n)])
+        assert np.allclose(got, want, atol=1e-6), value
+
+
+def test_run_kernel_resume_is_forwarded_or_rejected(spark, tmp_path):
+    """`run_kernel --resume` continues a ppr run from its last round
+    instead of rerunning it, and is a usage error for a kernel that
+    keeps no round checkpoints."""
+    import json
+    import sys
+    from contextlib import redirect_stdout
+    from io import StringIO
+
+    from jobs.run_kernel import main as run_kernel_main
+
+    n = 300
+    edges = edges_powerlaw(n, m=3, seed=11)
+    gdir = str(tmp_path / "graph")
+    graph_from_numpy(spark, edges, n).write(gdir)
+    common = [
+        "run_kernel.py", "--graph", gdir, "--partitions", "8",
+        "--checkpoint-dir", str(tmp_path / "ckpt"), "--run-id", "R",
+    ]
+
+    def run(*extra):
+        argv_save, buf = sys.argv, StringIO()
+        try:
+            sys.argv = common + list(extra)
+            with redirect_stdout(buf):
+                run_kernel_main()
+        finally:
+            sys.argv = argv_save
+        return json.loads(buf.getvalue().strip().splitlines()[-1])
+
+    out = str(tmp_path / "out")
+    run("--kernel", "ppr", "--iterations", "2", "--output", out)
+    summary = run(
+        "--kernel", "ppr", "--iterations", "4", "--resume", "--output", out
+    )
+    assert summary["steps_run"] == 4
+    # the restored round 2 plus steps 3-4 — not a rerun of steps 1-4
+    assert len(summary["superstep_seconds"]) == 3
+    got = np.zeros(n)
+    for r in spark.read.parquet(out).collect():
+        got[r["vid"]] = r["ppr"]
+    seeds = [v for v in range(n) if v % 97 == 0]
+    assert np.allclose(got, oracle_ppr(edges, n, seeds, num_iterations=4),
+                       atol=1e-12)
+
+    with pytest.raises(SystemExit) as exc:
+        run("--kernel", "triangles", "--resume", "--output", out, "--run-id", "X")
+    assert exc.value.code == 2  # argparse usage error
