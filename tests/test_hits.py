@@ -40,7 +40,8 @@ def test_hits_matches_numpy(spark, config, name, edges, n):
 
 def test_ppr_matches_numpy_and_sums_to_one(spark, config):
     """A fixed 5-step run, and a ``tolerance=1e-3`` run that must stop
-    early: each matches the oracle at its ``steps_run``."""
+    early: each matches the oracle at its ``steps_run``. The early-stop
+    run uses damping 0.5, so it converges in a few supersteps."""
     from planar_spark.config import EngineConfig
     from planar_spark.kernels.ppr import personalized_pagerank
     from planar_spark.oracle.numpy_oracle import oracle_ppr
@@ -50,7 +51,7 @@ def test_ppr_matches_numpy_and_sums_to_one(spark, config):
     g = graph_from_numpy(spark, edges, n)
     seeds = [0, 7, 50]
     sdf = g.spark.createDataFrame([(v,) for v in seeds], "vid long")
-    early = EngineConfig(num_partitions=8, tolerance=1e-3)
+    early = EngineConfig(num_partitions=8, tolerance=1e-3, damping=0.5)
     for cfg, iters in [(config, 5), (early, 50)]:
         r = personalized_pagerank(g, sdf, cfg, num_iterations=iters)
         if cfg is early:
@@ -58,7 +59,9 @@ def test_ppr_matches_numpy_and_sums_to_one(spark, config):
         got = np.zeros(n)
         for row in r.state.collect():
             got[row["vid"]] = row["ppr"]
-        want = oracle_ppr(edges, n, seeds, num_iterations=r.steps_run)
+        want = oracle_ppr(
+            edges, n, seeds, damping=cfg.damping, num_iterations=r.steps_run
+        )
         assert np.allclose(got, want, atol=1e-12)
         assert abs(got.sum() - 1.0) < 1e-9
         # non-seed vertex with no in-path from seeds stays at 0 only if

@@ -67,7 +67,7 @@ ENGINE_KERNELS = [
     ("pagerank", _run_pagerank, 4, 10),
     ("label_propagation", _run_lpa, 2, 5),
     ("bfs_sssp", _run_bfs, 2, 100),
-    ("ppr", _run_ppr, 4, 10),
+    ("ppr", _run_ppr, 2, 5),
     ("hits", _run_hits, 2, 4),
 ]
 
@@ -197,8 +197,8 @@ def test_pagerank_with_salting_matches_oracle(spark):
     for value, run, want in [
         ("pr", lambda: pagerank(g, cfg, num_iterations=10),
          oracle_pagerank(edges, n, num_iterations=10)),
-        ("ppr", lambda: personalized_pagerank(g, sdf, cfg, num_iterations=10),
-         oracle_ppr(edges, n, seeds, num_iterations=10)),
+        ("ppr", lambda: personalized_pagerank(g, sdf, cfg, num_iterations=5),
+         oracle_ppr(edges, n, seeds, num_iterations=5)),
     ]:
         rows = {r["vid"]: r[value] for r in run().state.collect()}
         got = np.array([rows[v] for v in range(n)])
