@@ -33,12 +33,13 @@ class EngineConfig:
     num_partitions: int = field(
         default_factory=lambda: int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     )
-    # Degree threshold above which a vertex counts as a "hub": its
-    # messages are pre-aggregated per salt bucket before the final
-    # per-vertex aggregation (two-stage agg; reference analogue is the
-    # strided ParallelVertexDoStep skew path, core/apis/planar_app_base.h:208-231).
+    # Degree threshold above which a vertex counts as a "hub": the
+    # pagerank family and hits split its edges off once per call into
+    # a table spread over every partition, and gather its value from
+    # that table through a literal (graph/skew.py split_hubs; reference
+    # analogue is the strided ParallelVertexDoStep skew path,
+    # core/apis/planar_app_base.h:208-231).
     hub_degree_threshold: int = 100_000
-    salt_buckets: int = 16
 
     # --- locality layout consumption ---
     # Minimum edge count at which layout-aware kernels consume a

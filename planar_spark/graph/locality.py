@@ -208,8 +208,8 @@ def block_pinned_sym(graph, parts: int) -> DataFrame:
 
 def block_pinned_edges(graph, parts: int, reverse: bool = False) -> DataFrame:
     """The DIRECTED edge multiset in the block-pinned layout (src, dst,
-    sblk) — consumed by pagerank-family gathers (salted_gather_join's
-    block mode). ``reverse`` swaps the endpoints first: the in-neighbor
+    sblk) — consumed by pagerank-family gathers (gather_join's block
+    mode). ``reverse`` swaps the endpoints first: the in-neighbor
     table of hits' hub phase, whose src is still a vid and so names its
     block the same way. Caller persists."""
     e = graph.edges

@@ -35,7 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from planar_spark.config import EngineConfig
-from planar_spark.graph.skew import salted_gather_join
+from planar_spark.graph.skew import gather_join
 from planar_spark.graph.superstep import (
     SuperstepEngine,
     SuperstepResult,
@@ -223,12 +223,8 @@ def connected_components(
         # and aggregating by dst is the same set of (v, m1(u)) pairs as
         # the old join on dst, without re-shuffling the O(E) table.
         m2 = (
-            salted_gather_join(
-                sym,
-                m1.select("vid", F.col("n1").alias("mid_min")),
-                config,
-                hubs=None,
-                block_size=bs,
+            gather_join(
+                sym, m1.select("vid", F.col("n1").alias("mid_min")), bs
             )
             .groupBy(F.col("dst").alias("vid"))
             .agg(F.min("mid_min").alias("n2"))
@@ -260,9 +256,9 @@ def connected_components(
             )
             sym.unpersist()
             edge_state["sym"] = sym = shrunk
-        msgs = salted_gather_join(
-            sym, labels, config, hubs=None, block_size=bs
-        ).select(F.col("dst").alias("vid"), "label")
+        msgs = gather_join(sym, labels, bs).select(
+            F.col("dst").alias("vid"), "label"
+        )
         min_nbr = msgs.groupBy("vid").agg(F.min("label").alias("nbr_min"))
         new = (
             labels.join(min_nbr, "vid", "left")

@@ -16,11 +16,16 @@ recomputed as the input subtree of the next gather:
 - auth phase: normalize hub by the column sum observed on the previous
   state's materialization (inlined literal — the r8 dangling-mass trick
   from pagerank.py), gather over the src-partitioned forward edges
-  (merge-join, hub-salted), groupBy(dst).sum.
+  (merge-join), groupBy(dst).sum.
 - hub phase: same shape over a reversed edge table built once, hash-
   partitioned and sorted by the reversed src (= original dst) and
-  cached, so this gather is ALSO a zero-exchange merge join; its skew
-  set is the high IN-degree vertices.
+  cached, so this gather is ALSO a zero-exchange merge join.
+- hubs: both hub id sets (high out-degree for the auth phase, high
+  in-degree for the hub phase) reach the driver in one action, and each
+  side's hub edges are split off once per call (graph/skew.py
+  ``split_hubs``). The raw hub/auth value of each hub rides the state's
+  Observation next to the column sums, so a hub's edges are gathered as
+  a projection of the cached split table, never re-keyed per phase.
 
 Normalizing only the input column each phase keeps every stored value
 bounded by max-degree (no growth across iterations, no per-step output
@@ -43,8 +48,8 @@ from pyspark.sql import DataFrame, Observation, functions as F
 
 from planar_spark.config import EngineConfig
 from planar_spark.graph.locality import block_pinned_edges, effective_block_size
-from planar_spark.graph.skew import hub_vertices, salted_gather_join
-from planar_spark.graph.superstep import SuperstepEngine, SuperstepResult, materialize
+from planar_spark.graph.skew import gather_join, split_hubs, top_hubs
+from planar_spark.graph.superstep import SuperstepEngine, SuperstepResult
 from planar_spark.graph.tables import GraphTables
 
 
@@ -75,6 +80,7 @@ def hits(
     # Cost-aware consumption (r8): fall back to the hash gather below
     # config.locality_min_edges — identical results, see config doc
     bs = effective_block_size(graph, config)
+    out_hubs = in_hubs = None
     if bs:
         fwd = block_pinned_edges(graph, parts).persist()
         rev = block_pinned_edges(graph, parts, reverse=True).persist()
@@ -83,40 +89,27 @@ def hits(
         # partitioned and sorted by the reversed src (= the forward dst)
         # so the hub-phase gather is a merge join too
         rev = graph.reversed_edges_by_src(parts).persist()
-    # Both hub sets (out-degree for the auth gather, in-degree for the
-    # hub gather) ride ONE driver action: union the two tiny filtered
-    # sets, observe the per-side counts on the materialization job, and
-    # keep the result as a leaf so later per-superstep broadcasts of a
-    # non-empty hub set never re-run the O(E) in-degree aggregation.
-    in_deg = rev.groupBy(F.col("src").alias("vid")).agg(
-        F.count(F.lit(1)).alias("out_deg")
-    )
-    both = hub_vertices(graph.degrees, config.hub_degree_threshold).select(
-        F.lit(0).alias("side"), "vid"
-    ).unionAll(
-        hub_vertices(in_deg, config.hub_degree_threshold).select(
-            F.lit(1).alias("side"), "vid"
+        # Both hub id sets (out-degree for the auth gather, in-degree
+        # for the hub gather) come to the driver in ONE action; each
+        # side's hub edges are then split off once for the whole call.
+        t = config.hub_degree_threshold
+        in_deg = rev.groupBy(F.col("src").alias("vid")).agg(
+            F.count(F.lit(1)).alias("in_deg")
         )
-    )
-    obs = Observation()
-    hubs_leaf = materialize(
-        both.observe(
-            obs,
-            F.sum((F.col("side") == 0).cast("long")).alias("n_out"),
-            F.sum((F.col("side") == 1).cast("long")).alias("n_in"),
+        both = (
+            top_hubs(graph.degrees, t).select(F.lit(0).alias("side"), "vid")
+            .unionAll(top_hubs(in_deg, t, "in_deg").select(F.lit(1), "vid"))
+            .collect()
         )
-    )
-    probe = obs.get
-    out_hubs = (
-        hubs_leaf.where(F.col("side") == 0).select("vid")
-        if int(probe["n_out"] or 0)
-        else None
-    )
-    in_hubs = (
-        hubs_leaf.where(F.col("side") == 1).select("vid")
-        if int(probe["n_in"] or 0)
-        else None
-    )
+        out_hubs = split_hubs(
+            fwd, [r.vid for r in both if r.side == 0], parts, "_hub_out"
+        )
+        in_hubs = split_hubs(
+            rev, [r.vid for r in both if r.side == 1], parts, "_hub_in"
+        )
+    splits = [h for h in (out_hubs, in_hubs) if h is not None]
+    for h in splits:
+        h.table.persist()
 
     base = graph.degrees.select("vid")  # one row per vertex, vid-partitioned
 
@@ -127,17 +120,24 @@ def hits(
     # broadcast per phase; values identical modulo FP partial-sum
     # order, already nondeterministic before). A resumed run's
     # checkpointed state carries no Observation: its sums cost one
-    # driver action instead, so every phase plan has one shape.
-    sums = (F.sum("hub").alias("_hs"), F.sum("auth").alias("_as"))
+    # driver action instead, so every phase plan has one shape. Each
+    # split's raw hub values ride the same Observation and action.
+    carried_exprs = [F.sum("hub").alias("_hs"), F.sum("auth").alias("_as")]
+    if out_hubs is not None:
+        carried_exprs.append(out_hubs.observed(F.col("hub")))
+    if in_hubs is not None:
+        carried_exprs.append(in_hubs.observed(F.col("auth")))
     carry: dict = {}
 
     def _observed(df: DataFrame) -> DataFrame:
         carry["obs"] = obs = Observation()
-        return df.observe(obs, *sums)
+        return df.observe(obs, *carried_exprs)
 
-    def _sums(state: DataFrame) -> tuple[float, float]:
+    def _carried(state: DataFrame):
         obs = carry.get("obs")
-        got = obs.get if obs is not None else state.agg(*sums).first()
+        return obs.get if obs is not None else state.agg(*carried_exprs).first()
+
+    def _sums(got) -> tuple[float, float]:
         return float(got["_hs"] or 0.0), float(got["_as"] or 0.0)
 
     def init_state() -> DataFrame:
@@ -150,13 +150,14 @@ def hits(
     def _gather(state, src_col, dst_col, edges, hubs, keep):
         """Normalize state[src_col] by the carried sum, gather, return
         the full state."""
-        s = _sums(state)[0 if src_col == "hub" else 1]
-        live = state.select("vid", (F.col(src_col) / F.lit(s)).alias("w"))
-        gathered = salted_gather_join(
-            edges, live, config, hubs=None if bs else hubs, block_size=bs
-        )
-        contribs = gathered.groupBy(F.col("dst").alias("vid")).agg(
-            F.sum("w").alias("_c")
+        got = _carried(state)
+        s = _sums(got)[0 if src_col == "hub" else 1]
+        live = state.select("vid", (F.col(src_col) / F.lit(s)).alias("x"))
+        msgs = gather_join(edges, live, bs).select("dst", "x")
+        if hubs is not None:
+            msgs = msgs.unionByName(hubs.contribs(got, div=s))
+        contribs = msgs.groupBy(F.col("dst").alias("vid")).agg(
+            F.sum("x").alias("_c")
         )
         return _observed(
             state.select("vid", keep)
@@ -172,11 +173,14 @@ def hits(
             .select("vid", "hub", "auth")
         )
 
+    fwd_rest = out_hubs.rest if out_hubs else fwd
+    rev_rest = in_hubs.rest if in_hubs else rev
+
     def step(state: DataFrame, k: int) -> tuple[DataFrame, dict]:
         if k % 2 == 1:  # auth phase: gather hub over forward edges
-            return _gather(state, "hub", "auth", fwd, out_hubs, "hub"), {}
+            return _gather(state, "hub", "auth", fwd_rest, out_hubs, "hub"), {}
         # hub phase: gather auth over reversed edges
-        return _gather(state, "auth", "hub", rev, in_hubs, "auth"), {}
+        return _gather(state, "auth", "hub", rev_rest, in_hubs, "auth"), {}
 
     engine = engine or SuperstepEngine(
         spark, config, "hits",
@@ -185,7 +189,7 @@ def hits(
     result = engine.run(init_state, step, 2 * num_iterations, resume=resume)
     # Final one-shot L1 normalization; the final state's sums were
     # observed on its own materialization, so they fold in as literals.
-    hs, as_ = _sums(result.state)
+    hs, as_ = _sums(_carried(result.state))
     normalized = result.state.select(
         "vid",
         (F.col("hub") / F.lit(hs)).alias("hub"),
@@ -194,6 +198,8 @@ def hits(
     rev.unpersist()
     if bs:
         fwd.unpersist()
+    for h in splits:
+        h.table.unpersist()
     return SuperstepResult(
         normalized, result.steps_run, result.converged, result.metrics
     )

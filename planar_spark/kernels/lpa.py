@@ -66,11 +66,11 @@ def label_propagation(
         return graph.vertices.select("vid", F.col("vid").alias("label"))
 
     def step(labels: DataFrame, _step: int) -> tuple[DataFrame, dict]:
-        from planar_spark.graph.skew import salted_gather_join
+        from planar_spark.graph.skew import gather_join
 
-        msgs = salted_gather_join(
-            sym, labels, config, hubs=None, block_size=bs
-        ).select(F.col("dst").alias("vid"), "label")
+        msgs = gather_join(sym, labels, bs).select(
+            F.col("dst").alias("vid"), "label"
+        )
         counts = msgs.groupBy("vid", "label").agg(F.count(F.lit(1)).alias("n"))
         # argmax by (count desc, label asc) as a max_by aggregate (r8):
         # still partial-agg-able (map-side combine), so a hub with

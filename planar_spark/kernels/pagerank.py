@@ -27,9 +27,13 @@ The dangling mass rides each state materialization as an Observation
 and folds into the next step's plan as a literal (r8). A resumed run's
 checkpointed state has no Observation, so its first step reads the mass
 with one driver action: every step plan has one shape, fresh or resumed.
-Hub skew on the gather is handled by salted_gather_join; partial
-aggregation makes the groupBy(dst) shuffle one row per (task, dst); the
-engine's per-superstep checkpoint truncates lineage.
+Hub skew: ``gather_edges`` splits the hub sources' edges off once per
+call (graph/skew.py ``split_hubs``); each hub's x = value/degree rides
+the same Observation (and the same resume action) as the dangling mass,
+and the hub gather is a projection of the cached hub table unioned into
+the merge-join gather of the other edges before the groupBy(dst).
+Partial aggregation makes the groupBy(dst) shuffle one row per
+(task, dst); the engine's per-superstep checkpoint truncates lineage.
 """
 
 from __future__ import annotations
@@ -38,7 +42,7 @@ from pyspark.sql import DataFrame, Observation, functions as F
 
 from planar_spark.config import EngineConfig
 from planar_spark.graph.locality import block_pinned_edges, effective_block_size
-from planar_spark.graph.skew import hub_vertices, salted_gather_join
+from planar_spark.graph.skew import HubSplit, gather_join, split_hubs, top_hubs
 from planar_spark.graph.superstep import SuperstepEngine, SuperstepResult
 from planar_spark.graph.tables import GraphTables
 
@@ -47,18 +51,23 @@ def gather_edges(graph: GraphTables, config: EngineConfig):
     """``(edges, hubs, block_size, release)`` for a gather over the
     graph's out-edges: the cached block-pinned layout on a
     with_partitioning graph (r7, cost-aware since r8 — see
-    ``effective_block_size``; hub salting is a no-op there), else the
-    graph's src-sorted edges salted on a non-empty hub set.
-    ``release()`` frees what this call cached."""
+    ``effective_block_size``; no hub split there), else the graph's
+    src-sorted edges, split at the hubs above
+    ``config.hub_degree_threshold`` when there are any (``hubs`` is then
+    the ``HubSplit`` and ``edges`` its non-hub rest). One driver job
+    collects the hub ids. ``release()`` frees what this call cached."""
     bs = effective_block_size(graph, config)
+    parts = config.partitions_for(graph.spark)
     if bs:
-        pinned = block_pinned_edges(graph, config.partitions_for(graph.spark))
-        pinned = pinned.persist()
+        pinned = block_pinned_edges(graph, parts).persist()
         return pinned, None, bs, pinned.unpersist
-    hubs = hub_vertices(graph.degrees, config.hub_degree_threshold)
-    if hubs.limit(1).count() == 0:
-        hubs = None
-    return graph.edges, hubs, None, lambda: None
+    hub_ids = top_hubs(graph.degrees, config.hub_degree_threshold)
+    ids = [r.vid for r in hub_ids.collect()]
+    hubs = split_hubs(graph.edges, ids, parts)
+    if hubs is None:
+        return graph.edges, None, None, lambda: None
+    hubs.table.persist()
+    return hubs.rest, hubs, None, hubs.table.unpersist
 
 
 def power_iteration(
@@ -74,7 +83,7 @@ def power_iteration(
     degree: str = "out_deg",
     weight: str | None = None,
     reset: str | None = None,
-    hubs: DataFrame | None = None,
+    hubs: HubSplit | None = None,
     block_size: int | None = None,
     engine: SuperstepEngine | None = None,
     resume: bool = False,
@@ -84,8 +93,9 @@ def power_iteration(
 
     ``base`` is (vid, ``degree``[, ``reset``]), partitioned by vid;
     ``start`` is base plus the ``value`` column. ``edges`` (src, dst
-    [, ``weight``]) is gathered with ``hubs``/``block_size`` as
-    ``salted_gather_join`` takes them. The restart vector r is the
+    [, ``weight``]) is gathered by ``gather_join`` (``block_size`` as it
+    takes it); ``hubs`` (unweighted only) adds the split-off hub edges,
+    whose ``edges`` are then the split's rest. The restart vector r is the
     ``reset`` column, or the uniform 1/``num_vertices`` when None.
     Returns the engine result; its state has base's columns + value."""
     d = config.damping
@@ -94,26 +104,35 @@ def power_iteration(
     share = F.col("x") if weight is None else F.col(weight) * F.col("x")
     dm_expr = F.sum(F.when(F.col(degree) == 0, F.col(value))).alias("_dm")
     l1_expr = F.sum(F.abs(F.col(value) - F.col("_old"))).alias("l1_delta")
+    # each hub's x rides the same Observation as the dangling mass
+    carried_exprs = [dm_expr] + (
+        [hubs.observed(F.col(value) / F.col(degree))] if hubs else []
+    )
     carry: dict = {}
 
     def observed(df: DataFrame) -> DataFrame:
         carry["dm"] = obs = Observation()
-        return df.observe(obs, dm_expr)
+        return df.observe(obs, *carried_exprs)
 
-    def dangling_mass(state: DataFrame) -> float:
+    def carried(state: DataFrame):
         obs = carry.get("dm")
         # a resumed run's checkpointed state carries no Observation
-        got = obs.get if obs is not None else state.agg(dm_expr).first()
-        return float(got["_dm"] or 0.0)
+        return obs.get if obs is not None else state.agg(*carried_exprs).first()
 
     def step(state: DataFrame, _k: int) -> tuple[DataFrame, dict]:
+        got = carried(state)
         live = state.where(F.col(degree) > 0).select(
             "vid", (F.col(value) / F.col(degree)).alias("x")
         )
-        contribs = salted_gather_join(
-            edges, live, config, hubs=hubs, block_size=block_size
-        ).groupBy(F.col("dst").alias("vid")).agg(F.sum(share).alias("contrib"))
-        dm = dangling_mass(state)
+        msgs = gather_join(edges, live, block_size).select(
+            "dst", share.alias("x")
+        )
+        if hubs is not None:
+            msgs = msgs.unionByName(hubs.contribs(got))
+        contribs = msgs.groupBy(F.col("dst").alias("vid")).agg(
+            F.sum("x").alias("contrib")
+        )
+        dm = float(got["_dm"] or 0.0)
         if reset is None:
             teleport, dangling = F.lit((1.0 - d) / n), F.lit(dm / n)
         else:

@@ -11,7 +11,10 @@ formulation used for related-page and recommendation queries:
 
 with reset(v) = 1/|S| for v ∈ S else 0, so Σ ppr == 1 at every
 superstep. The state carries ``reset`` (joined once from the broadcast
-seed set), so no step re-joins the seeds.
+seed set, whose distinct is computed and cached once per call), so no
+step re-joins the seeds. A hub's edges are split off once per call
+(pagerank.py ``gather_edges``), and its ppr/out_deg rides each state's
+Observation with the dangling mass.
 """
 
 from __future__ import annotations
@@ -36,13 +39,15 @@ def personalized_pagerank(
     subset of the vertex set). Returns state (vid, out_deg, reset, ppr);
     final ppr sums to 1."""
     config = config or EngineConfig()
-    n_seeds = seeds.select("vid").distinct().count()
+    seed_ids = seeds.select("vid").distinct().persist()
+    n_seeds = seed_ids.count()
     if n_seeds == 0:
+        seed_ids.unpersist()
         raise ValueError("personalized_pagerank requires a non-empty seed set")
     r = 1.0 / n_seeds
 
     edges, hubs, bs, release = gather_edges(graph, config)
-    seed_flag = seeds.select("vid").distinct().withColumn("_seed", F.lit(True))
+    seed_flag = seed_ids.withColumn("_seed", F.lit(True))
     base = (
         graph.degrees.join(F.broadcast(seed_flag), "vid", "left")
         .select(
@@ -62,5 +67,6 @@ def personalized_pagerank(
         lineage={"num_vertices": graph.num_vertices, "num_edges": graph.num_edges},
     )
     base.unpersist()
+    seed_ids.unpersist()
     release()
     return result

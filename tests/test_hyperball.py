@@ -87,29 +87,6 @@ def test_edge_sample_deterministic_and_monotone(spark):
     assert got20 <= got50
 
 
-def test_hits_resume_equals_uninterrupted(spark, config, tmp_path):
-    from planar_spark.config import EngineConfig
-    from planar_spark.graph.superstep import SuperstepEngine
-    from planar_spark.kernels.hits import hits
-
-    edges = edges_powerlaw(100, m=2, seed=23)
-    g = graph_from_numpy(spark, edges, 100)
-    cfg = EngineConfig(
-        num_partitions=8, tolerance=0.0, checkpoint_dir=str(tmp_path)
-    )
-    eng_a = SuperstepEngine(spark, cfg, "hits", run_id="hA")
-    hits(g, cfg, num_iterations=1, engine=eng_a)  # 2 supersteps, "crash"
-    eng_a2 = SuperstepEngine(spark, cfg, "hits", run_id="hA")
-    resumed = hits(g, cfg, num_iterations=3, engine=eng_a2, resume=True)
-    eng_b = SuperstepEngine(spark, cfg, "hits", run_id="hB")
-    full = hits(g, cfg, num_iterations=3, engine=eng_b)
-    rows = lambda r: sorted(  # noqa: E731
-        (x["vid"], round(x["hub"], 12), round(x["auth"], 12))
-        for x in r.state.collect()
-    )
-    assert rows(resumed) == rows(full)
-
-
 def test_hyperball_within_hll_error(spark, config):
     n, r = 150, 4
     edges = edges_powerlaw(n, m=3, seed=17)

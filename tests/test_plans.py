@@ -11,7 +11,7 @@ import numpy as np
 from pyspark.sql import functions as F
 
 from planar_spark.config import EngineConfig
-from planar_spark.graph.skew import salted_gather_join
+from planar_spark.graph.skew import gather_join
 from planar_spark.ingest.pages import edges_powerlaw
 
 from tests.conftest import graph_from_numpy
@@ -28,7 +28,7 @@ def test_gather_join_is_merge_and_edge_side_unshuffled(spark, config):
     live = state.where(F.col("out_deg") > 0).select(
         "vid", (F.col("pr") / F.col("out_deg")).alias("w")
     )
-    gathered = salted_gather_join(g.edges, live, config, hubs=None)
+    gathered = gather_join(g.edges, live)
     contribs = gathered.groupBy(F.col("dst").alias("vid")).agg(
         F.sum("w").alias("contrib")
     )
@@ -225,7 +225,7 @@ def test_reversed_edge_gather_is_merge_join(spark, config):
     g = graph_from_numpy(spark, edges, 500)
     rev = g.reversed_edges_by_src(config.partitions_for(spark)).persist()
     live = g.degrees.select("vid", F.lit(1.0).alias("w"))
-    gathered = salted_gather_join(rev, live, config, hubs=None)
+    gathered = gather_join(rev, live)
     out = gathered.groupBy(F.col("dst").alias("vid")).agg(
         F.sum("w").alias("s")
     )
@@ -254,6 +254,39 @@ def _exchanges_above_cache(df) -> int:
         kids = n.children()
         todo += [kids.apply(i) for i in range(kids.size())]
     return count
+
+
+def test_hub_split_gather_adds_no_exchange(spark):
+    """A hub's edges are split off once per call into a cached table,
+    so the star's gather + groupBy(dst) plan at a threshold below the
+    hub has as many exchanges as with no hub at all, and no Generate
+    (no per-step re-keying or explode of the hub's state)."""
+    from planar_spark.ingest.pages import edges_star_hub
+    from planar_spark.kernels.pagerank import gather_edges
+
+    n = 500
+    g = graph_from_numpy(spark, edges_star_hub(n), n)
+    live = g.degrees.where(F.col("out_deg") > 0).select(
+        "vid", (F.lit(1.0 / n) / F.col("out_deg")).alias("x")
+    )
+
+    def gather(threshold):
+        cfg = EngineConfig(num_partitions=8, hub_degree_threshold=threshold)
+        edges, hubs, _, release = gather_edges(g, cfg)
+        msgs = gather_join(edges, live).select("dst", "x")
+        if hubs is not None:
+            got = live.agg(hubs.observed(F.col("x"))).first()
+            msgs = msgs.unionByName(hubs.contribs(got))
+        out = msgs.groupBy(F.col("dst").alias("vid")).agg(F.sum("x").alias("c"))
+        found = (hubs and hubs.ids, _exchanges_above_cache(out), _plan(out))
+        release()
+        return found
+
+    hub_ids, with_hub, hub_plan = gather(50)
+    no_hub, plain, _ = gather(10**6)
+    assert hub_ids == [0] and no_hub is None
+    assert with_hub == plain, hub_plan
+    assert "Generate" not in hub_plan, hub_plan
 
 
 def _builders(g, parts):
@@ -375,7 +408,7 @@ def test_block_pinned_gather_edge_side_unshuffled(spark, config):
 
 def test_pagerank_block_pinned_gather_edge_side_unshuffled(spark, config):
     """PageRank's gather on a with_partitioning graph must consume the
-    block-pinned layout (r7): salted_gather_join's block mode joins the
+    block-pinned layout (r7): gather_join's block mode joins the
     cached HashPartitioning(sblk)/(sblk, src)-sorted edge table on the
     compound key with zero exchange and zero sort on the edge branch."""
     edges = edges_powerlaw(400, m=3, seed=2)
@@ -383,16 +416,14 @@ def test_pagerank_block_pinned_gather_edge_side_unshuffled(spark, config):
     g2, _ = g.with_partitioning("bfs_edge_cut", num_partitions=8)
 
     from planar_spark.graph.locality import block_pinned_edges
-    from planar_spark.graph.skew import salted_gather_join
+    from planar_spark.graph.skew import gather_join
 
     pinned = block_pinned_edges(g2, 8).persist()
     pinned.count()
     live = g2.degrees.where(F.col("out_deg") > 0).select(
         "vid", (F.lit(1.0) / F.col("out_deg")).alias("w")
     )
-    gathered = salted_gather_join(
-        pinned, live, config, hubs=None, block_size=g2.block_size
-    )
+    gathered = gather_join(pinned, live, g2.block_size)
     agg = gathered.groupBy(F.col("dst").alias("vid")).agg(
         F.sum("w").alias("contrib")
     )

@@ -2,11 +2,13 @@
 
 from __future__ import annotations
 
+from dataclasses import replace
+
 import numpy as np
 import pytest
 
 from planar_spark.config import EngineConfig
-from planar_spark.graph.skew import hub_vertices, salted_gather_join
+from planar_spark.graph.skew import gather_join, split_hubs, top_hubs
 from planar_spark.graph.superstep import SuperstepEngine
 from planar_spark.ingest.pages import edges_powerlaw, edges_star_hub
 from planar_spark.kernels import (
@@ -18,7 +20,7 @@ from planar_spark.kernels import (
     personalized_pagerank,
 )
 from planar_spark.oracle import oracle_pagerank
-from planar_spark.oracle.numpy_oracle import oracle_ppr
+from planar_spark.oracle.numpy_oracle import oracle_hits, oracle_ppr
 
 from tests.conftest import graph_from_numpy
 
@@ -62,6 +64,14 @@ def _run_hits(g, cfg, steps, engine, resume=False):
     return hits(g, cfg, num_iterations=steps // 2, engine=engine, resume=resume)
 
 
+def _run_hits_hubs(g, cfg, steps, engine, resume=False):
+    # threshold 30 on edges_powerlaw(300, m=3, seed=11): six in-degree
+    # hubs split off the reversed table; no out-degree exceeds 3
+    return _run_hits(
+        g, replace(cfg, hub_degree_threshold=30), steps, engine, resume
+    )
+
+
 ENGINE_KERNELS = [
     # (kernel, runner, steps before the crash, steps asked on resume)
     ("pagerank", _run_pagerank, 4, 10),
@@ -69,6 +79,7 @@ ENGINE_KERNELS = [
     ("bfs_sssp", _run_bfs, 2, 100),
     ("ppr", _run_ppr, 2, 5),
     ("hits", _run_hits, 2, 4),
+    ("hits_hubs", _run_hits_hubs, 2, 4),
 ]
 
 
@@ -159,50 +170,94 @@ def test_cc_resume(spark, tmp_path):
 
 
 def test_salted_gather_equals_plain(spark):
-    """The hub-salted gather join must produce identical aggregates."""
+    """The hub-split gather (non-hub edges merge-joined, the hub's edges
+    projected from the split table through its observed value) must
+    produce the plain gather's aggregates."""
     from pyspark.sql import functions as F
 
     n = 500
     edges = edges_star_hub(n)  # vertex 0 has out-degree n-1: a hub
     g = graph_from_numpy(spark, edges, n)
-    cfg = EngineConfig(num_partitions=8, salt_buckets=4, hub_degree_threshold=50)
+    cfg = EngineConfig(num_partitions=8, hub_degree_threshold=50)
     state = g.degrees.withColumn("pr", F.lit(1.0 / n))
-    live = state.select("vid", (F.col("pr") / F.col("out_deg")).alias("w"))
-    hubs = hub_vertices(g.degrees, cfg.hub_degree_threshold)
-    assert hubs.count() == 1  # the star hub
-    plain = (
-        salted_gather_join(g.edges, live, cfg, hubs=None)
-        .groupBy("dst").agg(F.sum("w").alias("c"))
-    )
-    salted = (
-        salted_gather_join(g.edges, live, cfg, hubs=hubs)
-        .groupBy("dst").agg(F.sum("w").alias("c"))
+    live = state.select("vid", (F.col("pr") / F.col("out_deg")).alias("x"))
+    ids = [r.vid for r in top_hubs(g.degrees, cfg.hub_degree_threshold).collect()]
+    assert ids == [0]  # the star hub
+    split = split_hubs(g.edges, ids, cfg.num_partitions)
+    plain = gather_join(g.edges, live).groupBy("dst").agg(F.sum("x").alias("c"))
+    got = live.agg(split.observed(F.col("x"))).first()
+    hub_split = (
+        gather_join(split.rest, live).select("dst", "x")
+        .unionByName(split.contribs(got))
+        .groupBy("dst").agg(F.sum("x").alias("c"))
     )
     a = sorted((r["dst"], round(r["c"], 12)) for r in plain.collect())
-    b = sorted((r["dst"], round(r["c"], 12)) for r in salted.collect())
+    b = sorted((r["dst"], round(r["c"], 12)) for r in hub_split.collect())
     assert a == b
 
 
-def test_pagerank_with_salting_matches_oracle(spark):
-    """Force the salted path end-to-end on the star graph, for pagerank
-    and for personalized pagerank (the same power-iteration step)."""
-    n = 400
-    edges = edges_star_hub(n)
-    g = graph_from_numpy(spark, edges, n)
-    cfg = EngineConfig(
-        num_partitions=8, tolerance=0.0, hub_degree_threshold=50, salt_buckets=4
-    )
-    seeds = [0, 3, 250]
+def _two_hubs_with_repeated_links() -> tuple[np.ndarray, int]:
+    """A power-law graph plus two out-hubs above 50 whose links repeat:
+    vertex 5 links every third vertex twice, vertex 7 every fourth
+    vertex three times."""
+    n = 200
+    base = edges_powerlaw(n, m=2, seed=3)
+    extra = [(5, v) for v in range(0, n, 3) if v != 5] * 2
+    extra += [(7, v) for v in range(1, n, 4) if v != 7] * 3
+    return np.concatenate([base, np.array(extra, dtype=np.int64)]), n
+
+
+def test_pagerank_with_salting_matches_oracle(spark, tmp_path):
+    """Force the hub path end-to-end against the oracles: pagerank,
+    personalized pagerank and hits on the star (vertex 0 is an out-hub
+    and an in-hub) and on two hubs with repeated links (the split's
+    ``mult`` and its hub-value map), plus a pagerank stopped at step 2
+    and resumed to 5 (the hub values of a resumed checkpoint)."""
+    cfg = EngineConfig(num_partitions=8, tolerance=0.0, hub_degree_threshold=50)
+    ckpt = replace(cfg, checkpoint_dir=str(tmp_path))
+
+    def resumed_pagerank(g):
+        pagerank(g, ckpt, num_iterations=2,
+                 engine=SuperstepEngine(spark, ckpt, "pagerank", "R"))
+        return pagerank(g, ckpt, num_iterations=5, resume=True,
+                        engine=SuperstepEngine(spark, ckpt, "pagerank", "R"))
+
+    def hits_oracle(edges, n):
+        hub, auth = oracle_hits(edges, n, num_iterations=2)
+        return {"hub": hub, "auth": auth}
+
+    star = edges_star_hub(400)
+    hubs2, n2 = _two_hubs_with_repeated_links()
+    seeds = [0, 3, 150]
     sdf = spark.createDataFrame([(v,) for v in seeds], "vid long")
-    for value, run, want in [
-        ("pr", lambda: pagerank(g, cfg, num_iterations=10),
-         oracle_pagerank(edges, n, num_iterations=10)),
-        ("ppr", lambda: personalized_pagerank(g, sdf, cfg, num_iterations=5),
-         oracle_ppr(edges, n, seeds, num_iterations=5)),
+    # (edges, n, out-hubs by degree, [(run, oracle columns)])
+    for edges, n, hub_ids, cases in [
+        (star, 400, [0], [
+            (lambda g: pagerank(g, cfg, num_iterations=10),
+             lambda: {"pr": oracle_pagerank(star, 400, num_iterations=10)}),
+            (lambda g: personalized_pagerank(g, sdf, cfg, num_iterations=5),
+             lambda: {"ppr": oracle_ppr(star, 400, seeds, num_iterations=5)}),
+            (lambda g: hits(g, cfg, num_iterations=2),
+             lambda: hits_oracle(star, 400)),
+            (resumed_pagerank,
+             lambda: {"pr": oracle_pagerank(star, 400, num_iterations=5)}),
+        ]),
+        (hubs2, n2, [7, 5], [
+            (lambda g: pagerank(g, cfg, num_iterations=3),
+             lambda: {"pr": oracle_pagerank(hubs2, n2, num_iterations=3)}),
+            (lambda g: personalized_pagerank(g, sdf, cfg, num_iterations=3),
+             lambda: {"ppr": oracle_ppr(hubs2, n2, seeds, num_iterations=3)}),
+            (lambda g: hits(g, cfg, num_iterations=2),
+             lambda: hits_oracle(hubs2, n2)),
+        ]),
     ]:
-        rows = {r["vid"]: r[value] for r in run().state.collect()}
-        got = np.array([rows[v] for v in range(n)])
-        assert np.allclose(got, want, atol=1e-6), value
+        g = graph_from_numpy(spark, edges, n)
+        assert [r.vid for r in top_hubs(g.degrees, 50).collect()] == hub_ids
+        for run, oracle in cases:
+            rows = {r["vid"]: r for r in run(g).state.collect()}
+            for value, want in oracle().items():
+                got = np.array([rows[v][value] for v in range(n)])
+                assert np.allclose(got, want, atol=1e-6), (n, value)
 
 
 def test_run_kernel_resume_is_forwarded_or_rejected(spark, tmp_path):
