@@ -17,16 +17,24 @@ nvme_update_store.h:138-145). Here:
   and convergence metrics (``RoundStore``) — which doubles as lineage
   truncation (without it, step k's plan is O(k) deep and the job dies
   by step ~30) and as the resume point demanded by the north rule.
-  Kernels that drive their own loops (Boruvka, SCC, coloring, k-core,
-  ...) checkpoint through the same ``RoundStore``, so every iterative
-  kernel shares one layout, ``<kernel>/<run_id>/round=NNNNN/<table>``;
+  Every single-table loop runs here: the pagerank family, hits, lpa,
+  hash-min wcc, both sssp forms, coloring, the k-core peel, k_truss
+  and the HyperBall sweep. The loops that carry several tables
+  (Boruvka msf, SCC, louvain, betweenness, truss_decomposition,
+  streaming WCC) drive themselves but checkpoint through the same
+  ``RoundStore``, so every iterative kernel shares one layout,
+  ``<kernel>/<run_id>/round=NNNNN/<table>``;
 - rounds between checkpoints cut lineage with ``materialize`` — the
   one state-materialization policy of the package;
 - ``IsActive()`` termination (bsp_update_store.h:174-176) =
   ``converged_fn(metrics)`` on driver-side aggregated counts, where the
-  metrics come from ``post_fn(old_state, new_state, step)`` evaluated on
-  the already-materialized new state (so convergence checks never
-  re-execute the superstep plan).
+  metrics are Observations resolved by the state's own materialization
+  job (plus ``post_fn(old_state, new_state, step)`` evaluated on the
+  already-materialized new state), so convergence checks never
+  re-execute the superstep plan. The stop test also keeps a loop's
+  driver counters (peel level, survivor counts, the profile so far):
+  it adds them to the round's metrics before the commit and reads them
+  back from the restored round on resume.
 """
 
 from __future__ import annotations
@@ -44,6 +52,7 @@ from planar_spark.config import EngineConfig
 from planar_spark.storage import TableStore
 
 StepFn = Callable[[DataFrame, int], tuple[DataFrame, dict]]
+InitFn = Callable[[], DataFrame | tuple[DataFrame, dict]]
 PostFn = Callable[[DataFrame, DataFrame, int], dict]
 
 
@@ -330,33 +339,45 @@ class SuperstepEngine:
     # ------------------------------------------------------------- runner
     def run(
         self,
-        init_state: DataFrame | Callable[[], DataFrame],
+        init_state: DataFrame | InitFn,
         step_fn: StepFn,
         max_steps: int,
         converged_fn: Callable[[dict], bool] | None = None,
         post_fn: PostFn | None = None,
         resume: bool = False,
     ) -> SuperstepResult:
-        start_step = 1
-        all_metrics: list[dict] = []
-        state: DataFrame | None = None
-        if resume:
-            latest = self.store.latest(max_round=max_steps)
-            if latest is not None:
-                found_step, tables, last_metrics = latest
-                state = tables["state"]
-                all_metrics.append(last_metrics)
-                if converged_fn and last_metrics and converged_fn(last_metrics):
-                    return SuperstepResult(state, found_step, True, all_metrics)
-                start_step = found_step + 1
-        if state is None:
-            state = init_state() if callable(init_state) else init_state
-            state = self._persist_state(state, 0)
-            self.store.commit(0, {"init": True})
+        """Run supersteps 1..``max_steps`` from round 0 (``init_state``)
+        or, with ``resume``, from the newest completed round <=
+        ``max_steps``, whose checkpointed state leaf is read as is.
 
-        converged = False
-        step = start_step - 1
-        for step in range(start_step, max_steps + 1):
+        ``init_state`` gives round 0's state, or ``(state, metrics)``
+        when round 0 reports metrics the way a step does (Observations
+        on its plan included). ``converged_fn(metrics)`` is the stop
+        test. It sees every round's metrics in order, each before it is
+        committed: round 0's when it reports any, the restored round's
+        on resume, then each new step's. So a loop keeps its driver
+        counters there, adding them to ``metrics`` to have them
+        checkpointed and reading them back from a restored meta. A round
+        0 that reports nothing is never tested, and a round that passes
+        the test ends the run before another step starts."""
+        latest = self.store.latest(max_round=max_steps) if resume else None
+        if latest is not None:
+            step, tables, metrics = latest
+            state = tables["state"]
+        else:
+            step = 0
+            init = init_state() if callable(init_state) else init_state
+            state, metrics = init if isinstance(init, tuple) else (init, {})
+            state = self._persist_state(state, 0)
+            metrics = {"init": True, **resolve_observations(metrics)}
+        reported = any(key != "init" for key in metrics)
+        converged = bool(converged_fn and reported and converged_fn(metrics))
+        all_metrics = [metrics] if latest is not None else []
+        if latest is None:
+            self.store.commit(0, metrics)
+
+        while not converged and step < max_steps:
+            step += 1
             t0 = time.time()
             new_state, metrics = step_fn(state, step)
             new_state = self._persist_state(new_state, step)
@@ -368,10 +389,8 @@ class SuperstepEngine:
                 metrics.update(post_fn(state, new_state, step))
             metrics["superstep"] = step
             metrics["seconds"] = time.time() - t0
+            converged = bool(converged_fn and converged_fn(metrics))
             self.store.commit(step, metrics)
             all_metrics.append(metrics)
             state = new_state
-            if converged_fn and converged_fn(metrics):
-                converged = True
-                break
         return SuperstepResult(state, step, converged, all_metrics)

@@ -45,7 +45,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Observation, functions as F
 
 from planar_spark.config import EngineConfig
-from planar_spark.graph.superstep import RoundStore, materialize
+from planar_spark.graph.superstep import SuperstepEngine
 from planar_spark.graph.tables import GraphTables
 
 PRIO_MULT = 2654435761  # Knuth's 2^32 golden-ratio multiplier
@@ -154,53 +154,56 @@ def greedy_coloring(
     run_id: str | None = None,
     resume: bool = False,
 ) -> DataFrame:
-    """Returns (vid, color) — a proper coloring, deterministic.
+    """Returns (vid, color) — a proper coloring, deterministic. Runs on
+    ``SuperstepEngine``, one superstep per round; raises RuntimeError
+    when ``max_rounds`` rounds leave a vertex uncolored.
 
     Durable resume: with ``config.checkpoint_dir`` set, the partial
-    coloring plus the round counter are written every
-    ``config.checkpoint_every`` rounds; ``resume=True`` with the same
-    ``run_id`` continues at the next round. The round NUMBER is part of
-    the checkpoint because it seeds ``_round_hash`` — a resumed run
-    replays the exact same proposal sequence and lands on the identical
-    coloring (asserted in tests/test_loop_resume.py).
+    coloring is checkpointed at round 0 (all uncolored) and every
+    ``config.checkpoint_every``-th round; ``resume=True`` with the same
+    ``run_id`` continues at the next round, and runs none when the
+    restored round colored the last vertex. The round NUMBER is the
+    engine's superstep number, restored with the state, because it
+    seeds ``_round_hash`` — a resumed run replays the exact same
+    proposal sequence and lands on the identical coloring (asserted in
+    tests/test_loop_resume.py).
     """
     config = config or EngineConfig()
     spark = graph.spark
-    parts = config.partitions_for(spark)
+    sym = graph.symmetric_edges_by_src(config.partitions_for(spark)).persist()
 
-    sym = graph.symmetric_edges_by_src(parts).persist()
-    colored = materialize(
-        graph.vertices.select(
-            "vid", F.lit(None).cast("long").alias("color")
-        )
-    )
-    rounds = 0
-    ckpt = RoundStore(spark, config, "coloring", run_id=run_id)
-    if resume:
-        latest = ckpt.latest()
-        if latest is not None:
-            _rnd, tables, m = latest
-            colored = tables["colored"]
-            rounds = int(m.get("rounds", _rnd))
-    for r in range(rounds + 1, max_rounds + 1):
-        rounds = r
+    def step(colored: DataFrame, r: int) -> tuple[DataFrame, dict]:
         todo = colored.where(F.col("color").isNull()).select("vid")
         commit = _round_commits(todo, sym, colored, r)
         obs = Observation()
-        new_colored = materialize(
+        return (
             colored.join(commit, "vid", "left")
             .select("vid", F.coalesce("color", "pc").alias("color"))
             .observe(
                 obs,
                 F.sum(F.col("color").isNull().cast("long")).alias("n_uncolored"),
-            )
+            ),
+            {"_obs": obs},
         )
-        colored.unpersist()
-        colored = new_colored
-        colored = ckpt.save(r, {"colored": colored}, {"rounds": r})["colored"]
-        if int(obs.get["n_uncolored"] or 0) == 0:
-            break
-    sym.unpersist()
+
+    engine = SuperstepEngine(spark, config, "coloring", run_id=run_id)
+    try:
+        result = engine.run(
+            lambda: graph.vertices.select(
+                "vid", F.lit(None).cast("long").alias("color")
+            ),
+            step,
+            max_rounds,
+            lambda m: not m.get("n_uncolored"),
+            resume=resume,
+        )
+    finally:
+        sym.unpersist()
+    if not result.converged:
+        raise RuntimeError(
+            f"greedy_coloring: vertices left uncolored after {max_rounds} "
+            "rounds; raise max_rounds"
+        )
     if metrics_out is not None:
-        metrics_out["rounds"] = rounds
-    return colored
+        metrics_out["rounds"] = result.steps_run
+    return result.state

@@ -27,12 +27,12 @@ by the error-bound pytest (same pattern as embedding ANN vs exact).
 
 from __future__ import annotations
 
-import time
+from typing import Callable
 
-from pyspark.sql import DataFrame, Observation, functions as F
+from pyspark.sql import Column, DataFrame, Observation, functions as F
 
 from planar_spark.config import EngineConfig
-from planar_spark.graph.superstep import RoundStore, materialize
+from planar_spark.graph.superstep import SuperstepEngine, materialize
 from planar_spark.graph.tables import GraphTables
 
 
@@ -211,6 +211,81 @@ def effective_diameter(
     ).select("q", F.round("eff_diameter", 6).alias("eff_diameter"))
 
 
+def _sweep(
+    graph: GraphTables,
+    radius: int,
+    config: EngineConfig | None,
+    lg_config_k: int,
+    kernel: str,
+    run_id: str | None,
+    resume: bool,
+    carried: tuple = (),
+    advance: Callable[[DataFrame, int], DataFrame] | None = None,
+    observed: Column | None = None,
+    converged_fn: Callable[[dict], bool] | None = None,
+) -> DataFrame:
+    """The one HyperBall radius loop, on ``SuperstepEngine``: returns the
+    (vid, sk, *carried) state after ``radius`` supersteps.
+
+    Superstep r sets ball(v) ∪= ball(w) for each out-edge v→w: the
+    reversed edge table keys the join by w (its src column), then ships
+    the merged neighbor sketch to v with one partial-agg'd shuffle (the
+    same reversed-edge merge join as kernels/hits.py's hub phase).
+    ``carried`` are extra state columns over the round-0 (vid, sk) rows;
+    ``advance(state, r)`` updates them after the union. ``observed``
+    (an aggregate) rides round 0's and every superstep's
+    materialization as an Observation, and ``converged_fn`` sees those
+    metrics as the engine's stop test.
+
+    Durable resume: with ``config.checkpoint_dir`` set, the state table
+    — the sketches are opaque binary, which TableStore round-trips — is
+    checkpointed under ``kernel`` at round 0 and every
+    ``config.checkpoint_every``-th radius; ``resume=True`` with the same
+    ``run_id`` re-enters at the next radius. A run to a smaller radius
+    under the same ``run_id`` stops at its own radius, and a later
+    resume to a larger one continues from there."""
+    config = config or EngineConfig()
+    parts = config.partitions_for(graph.spark)
+    # the edge multiset: a duplicate row cannot change an HLL union
+    rev = graph.reversed_edges_by_src(parts).persist()
+
+    def watched(state: DataFrame) -> tuple[DataFrame, dict]:
+        if observed is None:
+            return state, {}
+        obs = Observation()
+        return state.observe(obs, observed), {"_obs": obs}
+
+    def init() -> tuple[DataFrame, dict]:
+        return watched(
+            graph.vertices.groupBy("vid")
+            .agg(F.hll_sketch_agg("vid", F.lit(lg_config_k)).alias("sk"))
+            .select("vid", "sk", *carried)
+            .repartition(parts, "vid")
+        )
+
+    def step(state: DataFrame, r: int) -> tuple[DataFrame, dict]:
+        msgs = (
+            rev.join(state.select(F.col("vid").alias("src"), "sk"), "src")
+            .groupBy(F.col("dst").alias("vid"))
+            .agg(F.hll_union_agg("sk").alias("nsk"))
+        )
+        merged = F.when(F.col("nsk").isNull(), F.col("sk")).otherwise(
+            F.hll_union("sk", "nsk")
+        )
+        rest = [col for col in state.columns if col not in ("vid", "sk")]
+        new = state.join(msgs, "vid", "left").select(
+            "vid", merged.alias("sk"), *rest
+        )
+        return watched(advance(new, r) if advance else new)
+
+    engine = SuperstepEngine(graph.spark, config, kernel, run_id=run_id)
+    try:
+        result = engine.run(init, step, radius, converged_fn, resume=resume)
+        return result.state
+    finally:
+        rev.unpersist()
+
+
 def hyperball(
     graph: GraphTables,
     radius: int,
@@ -218,71 +293,17 @@ def hyperball(
     lg_config_k: int = 12,
     run_id: str | None = None,
     resume: bool = False,
-    max_rounds: int | None = None,
 ) -> DataFrame:
     """(vid, nf_est) — HLL-sketch estimate of the radius-ball size.
 
-    State per superstep is one sketch per vertex; the gather is the
-    same reversed-edge merge join as kernels/hits.py's hub phase.
-
-    Durable resume (r7): with ``config.checkpoint_dir`` set, the (vid,
-    sk) state table — the sketches are opaque binary, which TableStore
-    round-trips — is saved through RoundStore every
-    ``config.checkpoint_every`` radii; ``resume=True`` with the same
-    ``run_id`` re-enters at the next radius. This is the self-declared
+    State per superstep is one sketch per vertex. Durable resume (kernel
+    name ``hyperball``) is ``_sweep``'s: this is the self-declared
     100 TB diameter path, so a driver loss at radius N of a long sweep
-    must not restart from zero. ``max_rounds`` caps the radii processed
-    THIS CALL (crash simulation for the resume tests); a capped run
-    returns the partial-radius estimates — resume to finish.
+    must not restart from zero.
     """
-    config = config or EngineConfig()
-    parts = config.partitions_for(graph.spark)
-    ckpt = RoundStore(graph.spark, config, "hyperball", run_id=run_id)
-
-    # the edge multiset: a duplicate row cannot change an HLL union
-    rev = graph.reversed_edges_by_src(parts).persist()
-    state = None
-    start_r = 0
-    if resume:
-        latest = ckpt.latest(max_round=radius)
-        if latest is not None:
-            start_r, tables, _mm = latest
-            state = materialize(tables["state"].repartition(parts, "vid"))
-    if state is None:
-        start_r = 0
-        state = materialize(
-            graph.vertices.groupBy("vid")
-            .agg(F.hll_sketch_agg("vid", F.lit(lg_config_k)).alias("sk"))
-            .repartition(parts, "vid")
-        )
-    budget = max_rounds if max_rounds is not None else (1 << 30)
-    for r in range(start_r + 1, radius + 1):
-        if budget <= 0:
-            break
-        budget -= 1
-        # ball(v) ∪= ball(w) for each out-edge v→w: the reversed table
-        # keys the join by w (its src column), then ships the merged
-        # neighbor sketch to v with one partial-agg'd shuffle.
-        msgs = (
-            rev.join(state.withColumnRenamed("vid", "src"), "src")
-            .groupBy(F.col("dst").alias("vid"))
-            .agg(F.hll_union_agg("sk").alias("nsk"))
-        )
-        state = materialize(
-            state.join(msgs, "vid", "left")
-            .select(
-                "vid",
-                F.when(
-                    F.col("nsk").isNull(), F.col("sk")
-                ).otherwise(F.hll_union("sk", "nsk")).alias("sk"),
-            )
-        )
-        state = ckpt.save(r, {"state": state}, {"radius": r})["state"]
-    out = state.select(
-        "vid", F.hll_sketch_estimate("sk").alias("nf_est")
-    )
-    rev.unpersist()
-    return out
+    state = _sweep(graph, radius, config, lg_config_k, "hyperball",
+                   run_id, resume)
+    return state.select("vid", F.hll_sketch_estimate("sk").alias("nf_est"))
 
 
 def hyperball_nf_profile(
@@ -293,7 +314,6 @@ def hyperball_nf_profile(
     metrics_out: dict | None = None,
     run_id: str | None = None,
     resume: bool = False,
-    max_rounds: int | None = None,
 ) -> DataFrame:
     """(r, total_nf_est): the GLOBAL neighborhood function per radius
     0..radius from HyperBall sketches — Σ_v |B(v, r)| estimated, the
@@ -321,74 +341,32 @@ def hyperball_nf_profile(
     ``metrics_out['round_secs']`` reports per-round wall time so
     benches keep attributing cost to the radius.
 
-    Durable resume (r7): same RoundStore contract as
-    ``hyperball`` (kernel name ``hyperball_nf``); the accumulated
-    global profile and per-round secs ride the round metadata, so a
-    resumed sweep reports the full curve."""
-    config = config or EngineConfig()
-    parts = config.partitions_for(graph.spark)
-    ckpt = RoundStore(graph.spark, config, "hyperball_nf", run_id=run_id)
+    Durable resume: ``_sweep``'s (kernel name ``hyperball_nf``); the
+    accumulated global profile and per-round secs ride each round's
+    metrics, so a resumed sweep reports the full curve."""
+    c: dict = {"profile": [], "round_secs": []}
 
-    # the edge multiset: a duplicate row cannot change an HLL union
-    rev = graph.reversed_edges_by_src(parts).persist()
-    est = F.hll_sketch_estimate("sk")
-    state = None
-    start_r = 0
-    profile: list[tuple[int, float]] = []
-    round_secs: list[float] = []
-    if resume:
-        latest = ckpt.latest(max_round=radius)
-        if latest is not None:
-            start_r, tables, mm = latest
-            state = materialize(tables["state"].repartition(parts, "vid"))
-            profile = [(int(r), float(v)) for r, v in mm["profile"]]
-            round_secs = [float(s) for s in mm.get("round_secs", [])]
-    if state is None:
-        start_r = 0
-        obs0 = Observation()
-        state = materialize(
-            graph.vertices.groupBy("vid")
-            .agg(F.hll_sketch_agg("vid", F.lit(lg_config_k)).alias("sk"))
-            .repartition(parts, "vid")
-            .observe(obs0, F.sum(est).alias("nf"))
-        )
-        profile = [(0, float(obs0.get["nf"] or 0.0))]
-        round_secs = []
-    budget = max_rounds if max_rounds is not None else (1 << 30)
-    for r in range(start_r + 1, radius + 1):
-        if budget <= 0:
-            break
-        budget -= 1
-        t0 = time.time()
-        msgs = (
-            rev.join(state.withColumnRenamed("vid", "src"), "src")
-            .groupBy(F.col("dst").alias("vid"))
-            .agg(F.hll_union_agg("sk").alias("nsk"))
-        )
-        obs = Observation()
-        state = materialize(
-            state.join(msgs, "vid", "left")
-            .select(
-                "vid",
-                F.when(
-                    F.col("nsk").isNull(), F.col("sk")
-                ).otherwise(F.hll_union("sk", "nsk")).alias("sk"),
-            )
-            .observe(obs, F.sum(est).alias("nf"))
-        )
-        profile.append((r, float(obs.get["nf"] or 0.0)))
-        round_secs.append(round(time.time() - t0, 3))
-        state = ckpt.save(
-            r,
-            {"state": state},
-            {"radius": r, "profile": profile, "round_secs": round_secs},
-        )["state"]
-    rev.unpersist()
+    def record(m: dict) -> bool:
+        if "profile" in m:  # the restored round
+            c["profile"] = [(int(r), float(v)) for r, v in m["profile"]]
+            c["round_secs"] = [float(x) for x in m["round_secs"]]
+        else:
+            c["profile"].append((m.get("superstep", 0), float(m["nf"] or 0.0)))
+            if "seconds" in m:
+                c["round_secs"].append(round(m["seconds"], 3))
+            m.update(c)
+        return False
+
+    _sweep(
+        graph, radius, config, lg_config_k, "hyperball_nf", run_id, resume,
+        observed=F.sum(F.hll_sketch_estimate("sk")).alias("nf"),
+        converged_fn=record,
+    )
     if metrics_out is not None:
-        metrics_out["round_secs"] = round_secs
-        metrics_out["profile"] = [(r, round(v, 1)) for r, v in profile]
+        metrics_out["round_secs"] = c["round_secs"]
+        metrics_out["profile"] = [(r, round(v, 1)) for r, v in c["profile"]]
     return graph.spark.createDataFrame(
-        profile, schema="r long, total_nf_est double"
+        c["profile"], schema="r long, total_nf_est double"
     )
 
 
@@ -448,7 +426,6 @@ def hyperball_centralities(
     lg_config_k: int = 12,
     run_id: str | None = None,
     resume: bool = False,
-    max_rounds: int | None = None,
 ) -> DataFrame:
     """(vid, nf_est, harmonic_est, closeness_est): truncated harmonic
     and closeness centrality estimated from HyperBall's HLL counters —
@@ -486,86 +463,38 @@ def hyperball_centralities(
     bench scale the error bound is asserted like hyperball's
     (bench.py big_graph: harmonic r=1 vs exact out-degree).
 
-    Durable resume (r7): same RoundStore contract as
-    ``hyperball`` (kernel name ``hyperball_centralities``) — the full
-    accumulator state (vid, sk, prev_est, h, dist_total, ecc) is one
-    table per saved radius; ``max_rounds`` caps radii processed this
-    call for the crash-simulation tests.
+    Durable resume: ``_sweep``'s (kernel name
+    ``hyperball_centralities``) — the full accumulator state (vid, sk,
+    prev_est, h, dist_total, ecc) is the one checkpointed table.
     """
-    config = config or EngineConfig()
-    parts = config.partitions_for(graph.spark)
-    ckpt = RoundStore(
-        graph.spark, config, "hyperball_centralities", run_id=run_id
-    )
-
-    # the edge multiset: a duplicate row cannot change an HLL union
-    rev = graph.reversed_edges_by_src(parts).persist()
     est = F.hll_sketch_estimate("sk")
-    state = None
-    start_r = 0
-    if resume:
-        latest = ckpt.latest(max_round=radius)
-        if latest is not None:
-            start_r, tables, _mm = latest
-            state = materialize(tables["state"].repartition(parts, "vid"))
-    if state is None:
-        start_r = 0
-        state = materialize(
-            graph.vertices.groupBy("vid")
-            .agg(F.hll_sketch_agg("vid", F.lit(lg_config_k)).alias("sk"))
-            .select(
-                "vid", "sk",
-                est.alias("prev_est"),
-                F.lit(0.0).alias("h"),
-                F.lit(0.0).alias("dist_total"),
-                F.lit(0).alias("ecc"),
-            )
-            .repartition(parts, "vid")
-        )
-    budget = max_rounds if max_rounds is not None else (1 << 30)
-    for r in range(start_r + 1, radius + 1):
-        if budget <= 0:
-            break
-        budget -= 1
-        msgs = (
-            rev.join(
-                state.select("vid", "sk").withColumnRenamed("vid", "src"),
-                "src",
-            )
-            .groupBy(F.col("dst").alias("vid"))
-            .agg(F.hll_union_agg("sk").alias("nsk"))
-        )
-        merged = F.when(F.col("nsk").isNull(), F.col("sk")).otherwise(
-            F.hll_union("sk", "nsk")
-        )
+
+    def advance(state: DataFrame, r: int) -> DataFrame:
         delta = F.greatest(F.col("_est") - F.col("prev_est"), F.lit(0.0))
-        state = materialize(
-            state.join(msgs, "vid", "left")
-            .select(
-                "vid",
-                merged.alias("sk"),
-                "prev_est", "h", "dist_total", "ecc",
-            )
-            .select(
-                "vid", "sk", est.alias("_est"),
-                "prev_est", "h", "dist_total", "ecc",
-            )
-            .select(
-                "vid", "sk",
-                # running max: a downward estimator wobble must not
-                # lower the baseline future deltas are measured from
-                F.greatest("_est", "prev_est").alias("prev_est"),
-                (F.col("h") + delta / F.lit(float(r))).alias("h"),
-                (F.col("dist_total") + F.lit(float(r)) * delta).alias(
-                    "dist_total"
-                ),
-                F.when(delta > 0.5, F.lit(r)).otherwise(F.col("ecc")).alias(
-                    "ecc"
-                ),
-            )
+        return state.withColumn("_est", est).select(
+            "vid", "sk",
+            # running max: a downward estimator wobble must not lower
+            # the baseline future deltas are measured from
+            F.greatest("_est", "prev_est").alias("prev_est"),
+            (F.col("h") + delta / F.lit(float(r))).alias("h"),
+            (F.col("dist_total") + F.lit(float(r)) * delta).alias(
+                "dist_total"
+            ),
+            F.when(delta > 0.5, F.lit(r)).otherwise(F.col("ecc")).alias("ecc"),
         )
-        state = ckpt.save(r, {"state": state}, {"radius": r})["state"]
-    out = state.select(
+
+    state = _sweep(
+        graph, radius, config, lg_config_k, "hyperball_centralities",
+        run_id, resume,
+        carried=(
+            est.alias("prev_est"),
+            F.lit(0.0).alias("h"),
+            F.lit(0.0).alias("dist_total"),
+            F.lit(0).alias("ecc"),
+        ),
+        advance=advance,
+    )
+    return state.select(
         "vid",
         F.col("prev_est").alias("nf_est"),
         F.round("h", 6).alias("harmonic_est"),
@@ -578,5 +507,3 @@ def hyperball_centralities(
         ).alias("closeness_est"),
         F.col("ecc").cast("long").alias("ecc_est"),
     )
-    rev.unpersist()
-    return out

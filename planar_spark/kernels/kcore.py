@@ -7,7 +7,8 @@ which every vertex has undirected degree >= k; computed by repeatedly
 deleting vertices of degree < k until a fixpoint. A vertex's core
 number is the largest k whose k-core contains it.
 
-Both kernels run the same peel (``_peel``) over a range of levels:
+Both kernels run the same peel (``_peel``, on ``SuperstepEngine``)
+over a range of levels:
 ``core_decomposition`` over levels 1.., ``k_core(k)`` over the single
 level k. The state is one (vid, deg, core) leaf, hash-partitioned by
 vid, with core NULL while the vertex is alive. After the single full
@@ -30,7 +31,7 @@ from pyspark.sql import DataFrame, Observation, functions as F
 
 from planar_spark.config import EngineConfig
 from planar_spark.graph.skew import maybe_broadcast
-from planar_spark.graph.superstep import RoundStore, materialize
+from planar_spark.graph.superstep import SuperstepEngine
 from planar_spark.graph.tables import GraphTables
 
 
@@ -57,103 +58,106 @@ def _peel(
     max_rounds: int,
     run_id: str | None,
     resume: bool,
-) -> tuple[DataFrame, dict]:
-    """Peel levels ``k_first..k_last`` (None: until no vertex is alive).
+) -> tuple[DataFrame, int, dict]:
+    """Peel levels ``k_first..k_last`` (None: until no vertex is alive)
+    on ``SuperstepEngine``, one superstep per removal round.
 
     Returns the final (vid, deg, core) state leaf — vertices with no
-    undirected edge are absent, alive vertices have core NULL — and the
-    driver counters: ``rounds`` (removal rounds), ``k`` (the last
+    undirected edge are absent, alive vertices have core NULL — the
+    number of removal rounds, and the driver counters: ``k`` (the last
     level), ``levels`` (completed levels), ``frontier_sizes`` and
     ``touched`` (per removal round: vertices removed, and distinct
     neighbours of the removed vertices, i.e. rows of the degree-
     decrement aggregate) plus the observed decisions. Raises
     RuntimeError when ``max_rounds`` removal rounds do not finish.
 
-    The counters are the RoundStore meta: with ``config.checkpoint_dir``
-    set, the state leaf and counters are saved every
-    ``config.checkpoint_every``-th removal round under ``kernel``, and
-    ``resume=True`` with the same ``run_id`` re-enters the peel at the
-    newest completed round."""
+    The counters ride each round's metrics, so the engine checkpoints
+    them with the state under ``kernel`` (round 0 is the degree count)
+    and a ``resume=True`` run with the same ``run_id`` reads them back
+    from the newest completed round."""
     spark = graph.spark
     parts = config.partitions_for(spark)
     sym = graph.symmetric_edges_by_src(parts).persist()
-    try:
-        ckpt = RoundStore(spark, config, kernel, run_id=run_id)
-        c = {"rounds": 0, "k": k_first, "levels": [], "frontier_sizes": [],
-             "touched": []}
-        latest = ckpt.latest() if resume else None
-        if latest is not None:
-            _, tables, m = latest
-            state = materialize(tables["state"].repartition(parts, "vid"))
-            c.update(m)
+    alive = F.col("core").isNull()
+    c = {"k": k_first, "levels": [], "frontier_sizes": [], "touched": [],
+         "next_lt": None, "min_deg": None, "n_alive": None}
+
+    def init() -> tuple[DataFrame, dict]:
+        obs = Observation()
+        return (
+            sym.groupBy(F.col("src").alias("vid"))
+            .agg(F.count(F.lit(1)).alias("deg"))
+            .select("vid", "deg", F.lit(None).cast("long").alias("core"))
+            .observe(obs, *_decisions(k_first)),
+            {"_obs": obs},
+        )
+
+    def step(state: DataFrame, _rnd: int) -> tuple[DataFrame, dict]:
+        k = c["k"]
+        # the frontier size is exact when observed; right after a level
+        # advance n_alive is the safe upper bound
+        est = c["next_lt"] if c["next_lt"] is not None else c["n_alive"]
+        rm_src = state.where(alive & (F.col("deg") < k)).select(
+            F.col("vid").alias("src")
+        )
+        loss = (
+            sym.join(maybe_broadcast(rm_src, est), "src")
+            .groupBy(F.col("dst").alias("vid"))
+            .agg(F.count(F.lit(1)).alias("lost"))
+        )
+        new_core = (
+            F.when(~alive, F.col("core"))
+            .when(F.col("deg") < k, F.lit(k - 1).cast("long"))
+        )  # otherwise NULL: still alive
+        new_deg = F.when(
+            alive & (F.col("deg") >= k),
+            F.col("deg") - F.coalesce("lost", F.lit(0)),
+        ).otherwise(F.col("deg"))
+        # every loss vid has a state row (sym is symmetric), so the
+        # non-null `lost` count on the left join is exactly the loss
+        # aggregate's row count, whatever the join reads
+        obs = Observation()
+        return (
+            state.join(loss, "vid", "left")
+            .select("vid", new_deg.alias("deg"),
+                    new_core.alias("core"), "lost")
+            .observe(obs, *_decisions(k), F.count("lost").alias("lost_rows"))
+            .drop("lost"),
+            {"_obs": obs},
+        )
+
+    def settle(m: dict) -> bool:
+        """Fold a round's observed decisions into the counters and record
+        them in its metrics (a restored round's metrics hold them
+        already); True once the peel is done."""
+        if "levels" in m:
+            c.update((key, m[key]) for key in c)
         else:
-            obs0 = Observation()
-            state = materialize(
-                sym.groupBy(F.col("src").alias("vid"))
-                .agg(F.count(F.lit(1)).alias("deg"))
-                .select("vid", "deg", F.lit(None).cast("long").alias("core"))
-                .observe(obs0, *_decisions(k_first))
-            )
-            c.update(obs0.get)
-        alive = F.col("core").isNull()
-        while c["n_alive"]:
-            k = c["k"]
-            if c["next_lt"] == 0:
+            if "lost_rows" in m:  # a removal round ran
+                # exact: tombstoning is the only exit
+                c["frontier_sizes"].append(c["n_alive"] - m["n_alive"])
+                c["touched"].append(m.pop("lost_rows"))
+            c.update((key, m[key])
+                     for key in ("next_lt", "min_deg", "n_alive"))
+            if c["n_alive"] and c["next_lt"] == 0 and c["k"] != k_last:
                 # observed level fixpoint: advance without any job. No
                 # alive degree is below k, so every level up to min_deg
                 # is empty too, and level min_deg+1 is not.
-                if k == k_last:
-                    break
-                c["levels"].extend(range(k, c["min_deg"] + 1))
-                c["k"] = c["min_deg"] + 1
-                c["next_lt"] = None
-                continue
-            if c["rounds"] >= max_rounds:
-                raise RuntimeError(
-                    f"{kernel}: not finished in {max_rounds} rounds; "
-                    "raise max_rounds"
-                )
-            # the frontier size is exact when observed; right after a
-            # level advance n_alive is the safe upper bound
-            est = c["next_lt"] if c["next_lt"] is not None else c["n_alive"]
-            rm_src = state.where(alive & (F.col("deg") < k)).select(
-                F.col("vid").alias("src")
-            )
-            loss = (
-                sym.join(maybe_broadcast(rm_src, est), "src")
-                .groupBy(F.col("dst").alias("vid"))
-                .agg(F.count(F.lit(1)).alias("lost"))
-            )
-            new_core = (
-                F.when(~alive, F.col("core"))
-                .when(F.col("deg") < k, F.lit(k - 1).cast("long"))
-            )  # otherwise NULL: still alive
-            new_deg = F.when(
-                alive & (F.col("deg") >= k),
-                F.col("deg") - F.coalesce("lost", F.lit(0)),
-            ).otherwise(F.col("deg"))
-            # every loss vid has a state row (sym is symmetric), so the
-            # non-null `lost` count on the left join is exactly the
-            # loss aggregate's row count, whatever the join reads
-            obs = Observation()
-            state = materialize(
-                state.join(loss, "vid", "left")
-                .select("vid", new_deg.alias("deg"),
-                        new_core.alias("core"), "lost")
-                .observe(obs, *_decisions(k),
-                         F.count("lost").alias("touched"))
-                .drop("lost")
-            )
-            got = dict(obs.get)
-            c["rounds"] += 1
-            # exact: tombstoning is the only exit
-            c["frontier_sizes"].append(c["n_alive"] - got["n_alive"])
-            c["touched"].append(got.pop("touched"))
-            c.update(got)
-            state = ckpt.save(c["rounds"], {"state": state}, c)["state"]
+                c["levels"].extend(range(c["k"], c["min_deg"] + 1))
+                c.update(k=c["min_deg"] + 1, next_lt=None)
+            m.update(c)
+        return not c["n_alive"] or c["next_lt"] == 0
+
+    engine = SuperstepEngine(spark, config, kernel, run_id=run_id)
+    try:
+        result = engine.run(init, step, max_rounds, settle, resume=resume)
     finally:
         sym.unpersist()
-    return state, c
+    if not result.converged:
+        raise RuntimeError(
+            f"{kernel}: not finished in {max_rounds} rounds; raise max_rounds"
+        )
+    return result.state, result.steps_run, c
 
 
 def k_core(
@@ -177,16 +181,19 @@ def k_core(
     asserted O(frontier) in the tests).
 
     Durable resume: with ``config.checkpoint_dir`` set, the (vid, deg,
-    core) state plus the driver counters are written under kernel
-    ``kcore`` every ``config.checkpoint_every`` rounds; ``resume=True``
-    with the same ``run_id`` continues peeling from the newest completed
-    round. (Checkpoints of the earlier two-column (vid, deg) state are
-    not readable by this code.)
+    core) state plus the driver counters are checkpointed under kernel
+    ``kcore`` at round 0 (the degree count) and every
+    ``config.checkpoint_every``-th removal round; ``resume=True`` with
+    the same ``run_id`` continues peeling from the newest completed
+    round, and runs no round when that round ended the peel. A k whose
+    level has no alive degree below it runs no removal round at all.
+    (Checkpoints of the earlier two-column (vid, deg) state are not
+    readable by this code.)
     """
-    state, c = _peel(graph, config or EngineConfig(), "kcore", k, k,
-                     max_rounds, run_id, resume)
+    state, rounds, c = _peel(graph, config or EngineConfig(), "kcore", k, k,
+                             max_rounds, run_id, resume)
     if metrics_out is not None:
-        metrics_out["rounds"] = c["rounds"]
+        metrics_out["rounds"] = rounds
         metrics_out["frontier_sizes"] = c["frontier_sizes"]
         metrics_out["touched"] = c["touched"]
     core = state.where(F.col("core").isNull()).select("vid")
@@ -219,15 +226,16 @@ def core_decomposition(
     RuntimeError when ``max_rounds`` removal rounds do not finish.
 
     Durable resume: with ``config.checkpoint_dir`` set, the state leaf
-    and the driver counters are written under kernel ``core_decomp``
-    every ``config.checkpoint_every``-th removal round; ``resume=True``
-    with the same ``run_id`` re-enters the ascending peel at the newest
+    and the driver counters are checkpointed under kernel
+    ``core_decomp`` at round 0 (the degree count) and every
+    ``config.checkpoint_every``-th removal round; ``resume=True`` with
+    the same ``run_id`` re-enters the ascending peel at the newest
     completed round.
     """
-    state, c = _peel(graph, config or EngineConfig(), "core_decomp", 1,
-                     None, max_rounds, run_id, resume)
+    state, rounds, c = _peel(graph, config or EngineConfig(), "core_decomp",
+                             1, None, max_rounds, run_id, resume)
     if metrics_out is not None:
-        metrics_out["rounds"] = c["rounds"]
+        metrics_out["rounds"] = rounds
         metrics_out["max_core"] = c["k"] - 1
         metrics_out["levels"] = c["levels"]
     assigned = state.where(F.col("core").isNotNull()).select("vid", "core")

@@ -83,20 +83,15 @@ def bfs_sssp(
     # would double the tree per round: exponential analyzer cost, the
     # reason the old design paid a second materialization job for a
     # standalone frontier leaf). Its row count rides the state
-    # materialization job as an Observation.
+    # materialization job as an Observation; ``converged`` keeps it, from
+    # the restored round's metrics too, so a resumed mid-expansion BFS
+    # never force-broadcasts a large frontier.
     carry: dict = {"size": 1}
 
     engine = engine or SuperstepEngine(
         spark, config, "sssp",
         lineage={"source": int(source), "num_edges": graph.num_edges},
     )
-    if resume:
-        # Seed the broadcast-size estimate from the checkpoint's metrics:
-        # without this, a resumed mid-expansion BFS would force-broadcast
-        # an arbitrarily large frontier.
-        latest = engine.store.latest(max_round=max_iterations)
-        if latest is not None:
-            carry["size"] = latest[2].get("frontier_size")
 
     def step(state: DataFrame, k: int) -> tuple[DataFrame, dict]:
         from pyspark.sql import Observation
@@ -211,10 +206,6 @@ def weighted_sssp(
         spark, config, "weighted_sssp",
         lineage={"source": int(source), "num_edges": graph.num_edges},
     )
-    if resume:
-        latest = engine.store.latest(max_round=max_rounds)
-        if latest is not None:
-            carry["size"] = latest[2].get("improved")
 
     def step(state: DataFrame, k: int) -> tuple[DataFrame, dict]:
         from pyspark.sql import Observation

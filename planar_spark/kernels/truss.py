@@ -19,11 +19,12 @@ subgraph of the (k-1)-core, but strictly stronger).
            3. delete every edge with support < k-2; repeat until no
               edge is deleted. Deterministic (the k-truss is unique).
 
-The per-round survivor count rides the state checkpoint as an
-Observation (no standalone count actions); the loop fails loudly if
-max_rounds is exhausted before the fixpoint, and checkpoints its edge
-set durably through RoundStore every config.checkpoint_every
-rounds (resume re-enters at the newest completed round).
+``k_truss`` runs on SuperstepEngine: the per-round survivor count
+rides the state materialization as an Observation (no standalone count
+actions), the loop fails loudly if max_rounds is exhausted before the
+fixpoint, and the engine checkpoints the edge set every
+config.checkpoint_every rounds (resume re-enters at the newest
+completed round).
 
 Scale notes: each round's work is one oriented triangle join over the
 SHRINKING edge set plus one partial-aggregated support count — the
@@ -51,7 +52,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Observation, functions as F
 
 from planar_spark.config import EngineConfig
-from planar_spark.graph.superstep import RoundStore, materialize
+from planar_spark.graph.superstep import (
+    RoundStore,
+    SuperstepEngine,
+    materialize,
+)
 from planar_spark.graph.tables import GraphTables
 
 # truss_decomposition cuts its running assignment table's lineage
@@ -269,65 +274,60 @@ def k_truss(
     deterministic. ``metrics_out`` receives ``rounds`` and
     ``survivors_per_round`` (used to size the oracle unroll).
     ``delta`` is accepted and ignored: recompute is the one form (see
-    the module doc for the measured reason)."""
+    the module doc for the measured reason).
+
+    Runs on ``SuperstepEngine``, one superstep per peeling round. With
+    ``config.checkpoint_dir`` set, the edge set is checkpointed under
+    kernel ``ktruss`` at round 0 (all edges) and every
+    ``config.checkpoint_every``-th round, the survivor counts riding the
+    round's metrics; ``resume=True`` with the same ``run_id`` re-enters
+    at the newest completed round."""
     if k < 3:
         raise ValueError("k-truss requires k >= 3 (k-2 >= 1 triangles)")
     config = config or EngineConfig()
     spark = graph.spark
-    parts = config.partitions_for(spark)
+    c = {"n": None, "survivors_per_round": []}
 
-    rounds = 0
-    survivors: list[int] = []
-    ckpt = RoundStore(spark, config, "ktruss", run_id=run_id)
-    und = None
-    if resume:
-        latest = ckpt.latest()
-        if latest is not None:
-            _rnd, tables, m = latest
-            und = materialize(tables["edges"].repartition(parts, "a"))
-            rounds = int(m.get("rounds", _rnd))
-            survivors = list(m.get("survivors_per_round", []))
-            prev_n = survivors[-1] if survivors else None
-    if und is None:
-        obs0 = Observation()
-        und = materialize(
-            graph.undirected_edges_by_a(parts)
-            .observe(obs0, F.count(F.lit(1)).alias("n"))
-        )
-        prev_n = int(obs0.get["n"] or 0)
-
-    converged = prev_n == 0
-    for _ in range(rounds, max_rounds):
-        if converged:
-            break
-        supp = _edge_support(und)
+    def counted(und: DataFrame, **extra) -> tuple[DataFrame, dict]:
         obs = Observation()
-        kept = materialize(
-            und.join(supp, ["a", "b"], "left")
+        und = und.observe(obs, F.count(F.lit(1)).alias("n"))
+        return und, {"_obs": obs, **extra}
+
+    def step(und: DataFrame, _rnd: int) -> tuple[DataFrame, dict]:
+        kept = (
+            und.join(_edge_support(und), ["a", "b"], "left")
             .where(F.coalesce("s", F.lit(0)) >= k - 2)
             .select("a", "b")
-            .observe(obs, F.count(F.lit(1)).alias("n"))
         )
-        n_kept = int(obs.get["n"] or 0)
-        rounds += 1
-        survivors.append(n_kept)
-        und = kept
-        if n_kept == prev_n or n_kept == 0:
-            converged = True
-        prev_n = n_kept
-        if ckpt.due(rounds):
-            saved = ckpt.save(
-                rounds,
-                {"edges": und},
-                {"rounds": rounds, "survivors_per_round": survivors},
-            )
-            und = saved["edges"]
-    if not converged:
+        # the round's input size makes its own stop test restorable
+        return counted(kept, n_in=c["n"])
+
+    def settle(m: dict) -> bool:
+        if "survivors_per_round" in m:  # the restored round
+            c["survivors_per_round"] = list(m["survivors_per_round"])
+        elif "n_in" in m:  # a new peeling round
+            c["survivors_per_round"].append(m["n"])
+        c["n"] = m["n"]
+        m["survivors_per_round"] = c["survivors_per_round"]
+        # fixpoint: nothing left, or the round deleted no edge
+        return not m["n"] or m["n"] == m.get("n_in")
+
+    engine = SuperstepEngine(spark, config, "ktruss", run_id=run_id)
+    result = engine.run(
+        lambda: counted(
+            graph.undirected_edges_by_a(config.partitions_for(spark))
+        ),
+        step,
+        max_rounds,
+        settle,
+        resume=resume,
+    )
+    if not result.converged:
         raise RuntimeError(
             f"k_truss: peeling did not reach a fixpoint in {max_rounds} "
             "rounds; raise max_rounds"
         )
     if metrics_out is not None:
-        metrics_out["rounds"] = rounds
-        metrics_out["survivors_per_round"] = survivors
-    return und
+        metrics_out["rounds"] = result.steps_run
+        metrics_out["survivors_per_round"] = c["survivors_per_round"]
+    return result.state

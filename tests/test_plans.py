@@ -216,6 +216,29 @@ def test_materialize_policy_lives_in_superstep_only():
     assert not hits, "\n".join(hits)
 
 
+def test_round_store_is_built_only_by_the_engine_and_multi_table_loops():
+    """Single-table loops run on SuperstepEngine, which owns their
+    RoundStore. Only the engine and the loops that checkpoint several
+    tables build one, each at most as often as now, so the set of
+    hand-rolled loops can only shrink."""
+    import pathlib
+
+    import planar_spark
+
+    root = pathlib.Path(planar_spark.__file__).parent
+    allowed = {
+        "superstep.py": 1, "mst.py": 1, "scc.py": 1, "louvain.py": 1,
+        "betweenness.py": 1, "wcc_maintain.py": 1, "truss.py": 1,
+    }
+    over = {
+        str(path.relative_to(root)): n
+        for path in sorted(root.rglob("*.py"))
+        if (n := path.read_text().count("RoundStore("))
+        > allowed.get(path.name, 0)
+    }
+    assert not over, over
+
+
 def test_reversed_edge_gather_is_merge_join(spark, config):
     """The hits/hyperball hub-phase gather joins on the REVERSED edge
     cache (partitioned+sorted by the reversed src): like the forward

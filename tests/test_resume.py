@@ -130,6 +130,28 @@ def test_resume_never_returns_a_checkpoint_past_the_target(spark, tmp_path):
     assert _pr_rows(resumed) == _pr_rows(plain)
 
 
+def test_resume_from_the_init_round_runs_the_steps(spark, tmp_path):
+    """A crash before the first due round leaves only round 0, whose
+    meta reports no metrics; resuming from it must run the supersteps,
+    not read the missing frontier size as a finished BFS."""
+    edges = edges_powerlaw(300, m=3, seed=11)
+    g = graph_from_numpy(spark, edges, 300)
+    cfg = EngineConfig(
+        num_partitions=8, tolerance=0.0, checkpoint_dir=str(tmp_path),
+        checkpoint_every=5,
+    )
+    partial = _run_bfs(g, cfg, 3, SuperstepEngine(spark, cfg, "sssp", "runI"))
+    assert not partial.converged
+    resumed = _run_bfs(
+        g, cfg, 100, SuperstepEngine(spark, cfg, "sssp", "runI"), resume=True
+    )
+    full = _run_bfs(g, cfg, 100, SuperstepEngine(spark, cfg, "sssp", "runJ"))
+    assert full.converged and full.steps_run > 3
+    assert resumed.converged
+    assert resumed.steps_run == full.steps_run
+    assert _state_rows(resumed) == _state_rows(full)
+
+
 def test_resume_ignores_incomplete_superstep(spark, tmp_path):
     """A step dir without _META.json (killed mid-write) must be ignored."""
     import os
