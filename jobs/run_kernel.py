@@ -140,9 +140,8 @@ def main() -> None:
         ), None
     elif args.kernel == "triangles":
         out, meta = triangle_count_per_vertex(g, cfg), None
-    # the self-managed loop kernels take --run-id/--resume too, via
-    # RoundStore (graph/superstep.py): the same round=NNNNN/<table>
-    # checkpoint layout the engine kernels use
+    # the kernels that build their own engine take --run-id/--resume
+    # directly: the same round=NNNNN/<table> checkpoint layout
     elif args.kernel == "msf":
         from planar_spark.kernels.mst import boruvka_msf
 

@@ -17,15 +17,19 @@ nvme_update_store.h:138-145). Here:
   and convergence metrics (``RoundStore``) — which doubles as lineage
   truncation (without it, step k's plan is O(k) deep and the job dies
   by step ~30) and as the resume point demanded by the north rule.
-  Every single-table loop runs here: the pagerank family, hits, lpa,
-  hash-min wcc, both sssp forms, coloring, the k-core peel, k_truss
-  and the HyperBall sweep. The loops that carry several tables
-  (Boruvka msf, SCC, louvain, betweenness, truss_decomposition,
-  streaming WCC) drive themselves but checkpoint through the same
-  ``RoundStore``, so every iterative kernel shares one layout,
-  ``<kernel>/<run_id>/round=NNNNN/<table>``;
-- rounds between checkpoints cut lineage with ``materialize`` — the
-  one state-materialization policy of the package;
+  Every iterative loop runs here: the pagerank family, hits, lpa,
+  both wcc forms, both sssp forms, coloring, the k-core peel, k_truss,
+  the HyperBall sweep, Boruvka msf, SCC, truss_decomposition,
+  betweenness and louvain. A loop that carries several tables returns
+  them by name next to ``state``; they are written with it on a due
+  round and restored with it on resume, so every iterative kernel
+  shares one layout, ``<kernel>/<run_id>/round=NNNNN/<table>``. Only
+  streaming WCC, a per-batch store rather than a loop, builds its own
+  ``RoundStore``;
+- rounds between checkpoints cut the state's lineage with
+  ``materialize`` — the one state-materialization policy of the
+  package; a carried table is cut by its own step when its plan needs
+  it;
 - ``IsActive()`` termination (bsp_update_store.h:174-176) =
   ``converged_fn(metrics)`` on driver-side aggregated counts, where the
   metrics are Observations resolved by the state's own materialization
@@ -34,7 +38,9 @@ nvme_update_store.h:138-145). Here:
   re-execute the superstep plan. The stop test also keeps a loop's
   driver counters (peel level, survivor counts, the profile so far):
   it adds them to the round's metrics before the commit and reads them
-  back from the restored round on resume.
+  back from the restored round on resume. A step that returns its
+  input state object unchanged is a fixpoint: the run ends without
+  cutting, writing or committing that round.
 """
 
 from __future__ import annotations
@@ -51,8 +57,9 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from planar_spark.config import EngineConfig
 from planar_spark.storage import TableStore
 
-StepFn = Callable[[DataFrame, int], tuple[DataFrame, dict]]
-InitFn = Callable[[], DataFrame | tuple[DataFrame, dict]]
+Tables = dict[str, DataFrame]
+StepFn = Callable[[DataFrame | Tables, int], tuple[DataFrame | Tables, dict]]
+InitFn = Callable[[], DataFrame | Tables | tuple[DataFrame | Tables, dict]]
 PostFn = Callable[[DataFrame, DataFrame, int], dict]
 
 
@@ -282,6 +289,18 @@ class SuperstepResult:
     steps_run: int
     converged: bool
     metrics: list[dict] = field(default_factory=list)
+    # every table of the last round by name, ``state`` included
+    tables: Tables = field(default_factory=dict)
+
+
+def _view(tables: Tables) -> DataFrame | Tables:
+    """What a step sees: the state alone for a single-table loop, the
+    named tables for a loop that carries more."""
+    return tables["state"] if list(tables) == ["state"] else tables
+
+
+def _tables(out: DataFrame | Tables) -> Tables:
+    return out if isinstance(out, dict) else {"state": out}
 
 
 class SuperstepEngine:
@@ -327,14 +346,17 @@ class SuperstepEngine:
         except Exception:  # noqa: BLE001 — debug-only, never break a run
             pass
 
-    def _persist_state(self, state: DataFrame, step: int) -> DataFrame:
-        """Materialize the superstep's state and cut lineage: the
-        durable write on a checkpoint round (committed by the caller
-        once the step's metrics are known), ``materialize`` otherwise."""
-        self._dump_plan(state, step)
+    def _cut(self, tables: Tables, step: int) -> Tables:
+        """Materialize round ``step``'s state and cut its lineage: the
+        durable write of every table on a checkpoint round (committed
+        by the caller once the step's metrics are known), ``materialize``
+        of the state otherwise. Carried tables pass on as given."""
+        self._dump_plan(tables["state"], step)
         if self.store.due(step):
-            return self.store.write(step, {"state": state})["state"]
-        return materialize(state)
+            state = self.store.write(step, tables)["state"]
+        else:
+            state = materialize(tables["state"])
+        return {**tables, "state": state}
 
     # ------------------------------------------------------------- runner
     def run(
@@ -348,27 +370,46 @@ class SuperstepEngine:
     ) -> SuperstepResult:
         """Run supersteps 1..``max_steps`` from round 0 (``init_state``)
         or, with ``resume``, from the newest completed round <=
-        ``max_steps``, whose checkpointed state leaf is read as is.
+        ``max_steps``, whose checkpointed tables are read as they are.
 
         ``init_state`` gives round 0's state, or ``(state, metrics)``
         when round 0 reports metrics the way a step does (Observations
-        on its plan included). ``converged_fn(metrics)`` is the stop
-        test. It sees every round's metrics in order, each before it is
-        committed: round 0's when it reports any, the restored round's
-        on resume, then each new step's. So a loop keeps its driver
-        counters there, adding them to ``metrics`` to have them
-        checkpointed and reading them back from a restored meta. A round
-        0 that reports nothing is never tested, and a round that passes
-        the test ends the run before another step starts."""
+        on its plan included). A state is one DataFrame, or a dict of
+        named tables holding ``state`` plus the tables the loop carries;
+        a step then receives and returns that dict. The engine cuts
+        ``state`` every round and writes every table on a due round;
+        the carried ones pass on as the step returned them, so a step
+        cuts them itself when its plan needs it, and puts Observations
+        only on ``state`` or on tables it has already cut.
+
+        ``converged_fn(metrics)`` is the stop test. It sees every
+        round's metrics in order, each before it is committed: round
+        0's when it reports any, the restored round's on resume, then
+        each new step's. So a loop keeps its driver counters there,
+        adding them to ``metrics`` to have them checkpointed and reading
+        them back from a restored meta. A round 0 that reports nothing
+        is never tested, and a round that passes the test ends the run
+        before another step starts. A step that returns its input state
+        object unchanged ends the run as converged; that round is not
+        cut, written or committed, and the result holds the tables it
+        returned.
+
+        Raises ValueError when the round to resume from has no
+        ``state`` table (a round written in another layout)."""
         latest = self.store.latest(max_round=max_steps) if resume else None
         if latest is not None:
             step, tables, metrics = latest
-            state = tables["state"]
+            if "state" not in tables:
+                raise ValueError(
+                    f"{self.kernel}: run {self.run_id!r} round {step} has "
+                    f"no 'state' table (it holds {sorted(tables)}), so it "
+                    "cannot be resumed"
+                )
         else:
             step = 0
             init = init_state() if callable(init_state) else init_state
-            state, metrics = init if isinstance(init, tuple) else (init, {})
-            state = self._persist_state(state, 0)
+            out, metrics = init if isinstance(init, tuple) else (init, {})
+            tables = self._cut(_tables(out), 0)
             metrics = {"init": True, **resolve_observations(metrics)}
         reported = any(key != "init" for key in metrics)
         converged = bool(converged_fn and reported and converged_fn(metrics))
@@ -377,20 +418,27 @@ class SuperstepEngine:
             self.store.commit(0, metrics)
 
         while not converged and step < max_steps:
-            step += 1
             t0 = time.time()
-            new_state, metrics = step_fn(state, step)
-            new_state = self._persist_state(new_state, step)
+            out, metrics = step_fn(_view(tables), step + 1)
+            out = _tables(out)
+            if out["state"] is tables["state"]:
+                tables, converged = out, True
+                break
+            step += 1
+            new = self._cut(out, step)
             # Observations attached to the state plan were populated by
             # the materialization job just above — fold them in now (so
             # converged_fn and the checkpoint meta see plain values).
             metrics = resolve_observations(metrics)
             if post_fn is not None:
-                metrics.update(post_fn(state, new_state, step))
+                metrics.update(post_fn(tables["state"], new["state"], step))
             metrics["superstep"] = step
             metrics["seconds"] = time.time() - t0
             converged = bool(converged_fn and converged_fn(metrics))
             self.store.commit(step, metrics)
             all_metrics.append(metrics)
-            state = new_state
-        return SuperstepResult(state, step, converged, all_metrics)
+            tables = new
+        return SuperstepResult(
+            tables["state"], step, converged, all_metrics, tables
+        )
+

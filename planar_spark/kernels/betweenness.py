@@ -28,10 +28,14 @@ Counts ride Observations on the frontier checkpoints (zero standalone
 count jobs). Determinism: source sampling is top-out-degree with vid
 tie-break, so results are exactly reproducible and oracle-checkable.
 
-Durable resume: with ``config.checkpoint_dir`` set, the loop state is
-written through RoundStore every ``config.checkpoint_every``
-combined rounds (forward depth r = round r; backward level d = round
-depth + (depth - d)), including which phase the run was in;
+Durable resume: both phases run on ``SuperstepEngine`` under kernel
+``betweenness``, one superstep per BFS depth or dependency level. The
+state is the frontier during the forward phase and the current level
+``cur`` during the backward phase; it carries the reached set and the
+finished levels' dependencies (``acc``), and the round metrics hold
+the phase, depth, next backward level and the sources. With
+``config.checkpoint_dir`` set, round 0 and every
+``config.checkpoint_every``-th round write all three tables;
 ``resume=True`` with the same ``run_id`` re-enters the interrupted
 phase at the next round — the same contract as msf/scc/kcore.
 """
@@ -42,10 +46,11 @@ from pyspark.sql import DataFrame, Observation, functions as F
 
 from planar_spark.config import EngineConfig
 from planar_spark.graph.skew import maybe_broadcast
-from planar_spark.graph.superstep import RoundStore, materialize
+from planar_spark.graph.superstep import SuperstepEngine, materialize
 from planar_spark.graph.tables import GraphTables
 
 _ACC_SCHEMA = "s long, vid long, delta double"
+_REACHED_SCHEMA = "s long, vid long, sigma double, depth int"
 
 
 def top_degree_sources(graph: GraphTables, k: int) -> list[int]:
@@ -96,7 +101,6 @@ def betweenness(
     metrics_out: dict | None = None,
     run_id: str | None = None,
     resume: bool = False,
-    max_rounds: int | None = None,
     source_sample: str = "top_degree",
 ) -> DataFrame:
     """(vid, bc) over ALL vertices.
@@ -111,148 +115,88 @@ def betweenness(
     top-100 overlap and Spearman rank correlation vs the exact run).
     ``estimate=True`` applies the |V|/k scale; with ``estimate=False``
     and sources = all vertices the result is exact betweenness.
-    ``max_rounds`` caps the COMBINED forward+backward round count
-    (crash simulation for the resume tests); a capped run returns the
-    partial accumulation — resume to finish it.
+    ``metrics_out`` receives ``depth``, ``frontier_sizes`` and
+    ``num_sources``.
     """
     config = config or EngineConfig()
     spark = graph.spark
     parts = config.partitions_for(spark)
-    ckpt = RoundStore(spark, config, "betweenness", run_id=run_id)
-
-    # ---- restore -----------------------------------------------------
-    phase = "fwd"
-    depth = 0
-    d_next: int | None = None  # next backward level to process
-    frontier_sizes: list[int] = []
-    reached: DataFrame | None = None
-    frontier: DataFrame | None = None
-    cur: DataFrame | None = None
-    acc: DataFrame | None = None
-    n_frontier = 0
-    if resume:
-        latest = ckpt.latest()
-        if latest is not None:
-            _rnd, tables, m = latest
-            phase = m["phase"]
-            depth = int(m["depth"])
-            sources = [int(s) for s in m["sources"]]
-            frontier_sizes = list(m.get("frontier_sizes", []))
-            reached = tables["reached"].repartition(parts, "vid").persist()
-            reached.count()
-            if phase == "fwd":
-                frontier = tables["frontier"]
-                n_frontier = int(m["n_frontier"])
-            else:
-                cur = tables["cur"]
-                acc = tables["acc"]
-                d_next = int(m["d_next"])
-    if sources is None:
-        if source_sample == "uniform":
-            sources = uniform_sources(graph, num_sources)
-        elif source_sample == "top_degree":
-            sources = top_degree_sources(graph, num_sources)
-        else:
-            raise ValueError(f"unknown source_sample: {source_sample!r}")
-    if not sources:
+    if sources is not None and not sources:
         return graph.vertices.select("vid", F.lit(0.0).alias("bc"))
+    c = {"phase": "fwd", "depth": 0, "n": 0, "d_next": -1,
+         "sources": [], "frontier_sizes": []}
+    held: dict = {}  # the persisted reached set, released on exit
 
-    # parallel edges don't create additional shortest paths — dedup once
-    # (one shuffle at kernel entry, reused by every forward AND backward
-    # round from the cache)
-    edges = (
-        graph.edges.select("src", "dst")
-        .distinct()
-        .repartition(parts, "src")
-        .persist()
-    )
-    edges.count()
-
-    rounds_left = max_rounds if max_rounds is not None else (1 << 30)
-
-    def save(rnd: int, tables: dict, extra: dict) -> None:
-        ckpt.save(
-            rnd,
-            tables,
-            {
-                "phase": phase,
-                "depth": depth,
-                "sources": [int(s) for s in sources],
-                "frontier_sizes": frontier_sizes,
-                **extra,
-            },
-        )
-
-    # ---- forward: multi-source BFS with path counts ------------------
-    if reached is None:
-        src_df = spark.createDataFrame([(int(s),) for s in sources], "s long")
-        frontier = materialize(
-            src_df.select(
-                "s", F.col("s").alias("vid"), F.lit(1.0).alias("sigma")
-            )
-        )
-        n_frontier = len(sources)
-        reached = frontier.withColumn("depth", F.lit(0)).persist()
+    def keep(reached: DataFrame) -> DataFrame:
+        reached = reached.persist()
         reached.count()
-        frontier_sizes = [n_frontier]
-    while phase == "fwd":
-        if n_frontier == 0 or depth >= max_depth:
-            phase = "bwd"
-            d_next = depth - 1
-            break
-        if rounds_left <= 0:
-            break
-        rounds_left -= 1
-        depth += 1
-        cand = (
-            maybe_broadcast(
-                frontier.select("s", F.col("vid").alias("src"), "sigma"),
-                n_frontier,
-            )
-            .join(edges, "src")
-            .groupBy("s", F.col("dst").alias("vid"))
-            .agg(F.sum("sigma").alias("sigma"))
-        )
-        obs = Observation()
-        new_frontier = materialize(
-            cand.join(reached.select("s", "vid"), ["s", "vid"], "left_anti")
-            .observe(obs, F.count(F.lit(1)).alias("n"))
-        )
-        n_frontier = int(obs.get["n"])
-        if n_frontier == 0:
-            depth -= 1
-            phase = "bwd"
-            d_next = depth - 1
-            break
-        frontier_sizes.append(n_frontier)
-        nxt = reached.unionByName(
-            new_frontier.withColumn("depth", F.lit(depth))
-        ).persist()
-        nxt.count()
-        reached.unpersist()
-        reached = nxt
-        frontier = new_frontier
-        save(
-            depth,
-            {"reached": reached, "frontier": frontier},
-            {"n_frontier": n_frontier},
-        )
+        if "reached" in held:
+            held["reached"].unpersist()
+        held["reached"] = reached
+        return reached
 
-    # ---- backward: level-by-level dependency accumulation ------------
-    if phase == "bwd" and cur is None:
-        # cur = rows at the deepest level with delta = 0; acc collects
-        # finished levels' (s, vid, delta)
-        cur = (
-            reached.where(F.col("depth") == depth)
-            .select("s", "vid", "sigma")
-            .withColumn("delta", F.lit(0.0))
-        )
-        acc = spark.createDataFrame([], _ACC_SCHEMA)
-    while phase == "bwd" and d_next is not None and d_next >= 0:
-        if rounds_left <= 0:
-            break
-        rounds_left -= 1
-        d = d_next
+    def init() -> tuple[dict, dict]:
+        srcs = sources
+        if srcs is None:
+            if source_sample == "uniform":
+                srcs = uniform_sources(graph, num_sources)
+            elif source_sample == "top_degree":
+                srcs = top_degree_sources(graph, num_sources)
+            else:
+                raise ValueError(f"unknown source_sample: {source_sample!r}")
+        c.update(sources=[int(s) for s in srcs], n=len(srcs),
+                 frontier_sizes=[len(srcs)])
+        src_df = spark.createDataFrame([(s,) for s in c["sources"]], "s long")
+        return {
+            "state": src_df.select(
+                "s", F.col("s").alias("vid"), F.lit(1.0).alias("sigma")
+            ),
+            "reached": spark.createDataFrame([], _REACHED_SCHEMA),
+            "acc": spark.createDataFrame([], _ACC_SCHEMA),
+        }, dict(c)
+
+    def step(t: dict, _rnd: int) -> tuple[dict, dict]:
+        reached, acc = t["reached"], t["acc"]
+        if c["phase"] == "fwd":
+            # ---- forward: multi-source BFS with path counts ----------
+            # the reached set lags the frontier by one level: fold the
+            # input frontier (depth c["depth"]) in before expanding it
+            if c["n"]:
+                reached = keep(reached.unionByName(
+                    t["state"].withColumn("depth", F.lit(c["depth"]))
+                ))
+            if c["n"] and c["depth"] < max_depth:
+                cand = (
+                    maybe_broadcast(
+                        t["state"].select("s", F.col("vid").alias("src"), "sigma"),
+                        c["n"],
+                    )
+                    .join(edges, "src")
+                    .groupBy("s", F.col("dst").alias("vid"))
+                    .agg(F.sum("sigma").alias("sigma"))
+                )
+                obs = Observation()
+                frontier = cand.join(
+                    reached.select("s", "vid"), ["s", "vid"], "left_anti"
+                ).observe(obs, F.count(F.lit(1)).alias("n"))
+                return (
+                    {"state": frontier, "reached": reached, "acc": acc},
+                    {"_obs": obs},
+                )
+            # the frontier is empty or at max_depth: its deepest level
+            # (delta = 0) starts the backward phase
+            c.update(phase="bwd", d_next=c["depth"] - 1)
+            cur = (
+                reached.where(F.col("depth") == c["depth"])
+                .select("s", "vid", "sigma")
+                .withColumn("delta", F.lit(0.0))
+            )
+            if c["d_next"] < 0:
+                return {"state": cur, "reached": reached, "acc": acc}, {}
+        else:
+            cur = t["state"]
+        # ---- backward: level-by-level dependency accumulation --------
+        d = c["d_next"]
         lvl = reached.where(F.col("depth") == d).select("s", "vid", "sigma")
         contrib = (
             lvl.join(edges.select(F.col("src").alias("vid"), "dst"), "vid")
@@ -274,48 +218,66 @@ def betweenness(
                 ).alias("delta")
             )
         )
-        nxt_cur = materialize(
-            lvl.join(contrib, ["s", "vid"], "left")
-            .select(
-                "s",
-                "vid",
-                "sigma",
+        c["d_next"] = d - 1
+        return {
+            "state": lvl.join(contrib, ["s", "vid"], "left").select(
+                "s", "vid", "sigma",
                 F.coalesce("delta", F.lit(0.0)).alias("delta"),
-            )
-        )
-        acc = acc.unionByName(cur.select("s", "vid", "delta"))
-        cur = nxt_cur
-        d_next = d - 1
-        save(
-            depth + (depth - d),
-            {"reached": reached, "cur": cur, "acc": acc},
-            {"d_next": d_next},
-        )
-    finished = phase == "bwd" and (d_next is None or d_next < 0)
-    if finished and cur is not None:
+            ),
+            "reached": reached,
+            "acc": acc.unionByName(cur.select("s", "vid", "delta")),
+        }, {}
+
+    def settle(m: dict) -> bool:
+        if "phase" in m:  # round 0 or the restored round
+            c.update((key, m[key]) for key in c)
+        else:
+            if "n" in m:  # a forward level
+                c["n"] = m["n"]
+                if m["n"]:
+                    c["depth"] += 1
+                    c["frontier_sizes"].append(m["n"])
+            m.update(c)
+        return c["phase"] == "bwd" and c["d_next"] < 0
+
+    # parallel edges don't create additional shortest paths — dedup once
+    # (one shuffle at kernel entry, reused by every forward AND backward
+    # round from the cache)
+    edges = (
+        graph.edges.select("src", "dst")
+        .distinct()
+        .repartition(parts, "src")
+        .persist()
+    )
+    try:
+        edges.count()
+        engine = SuperstepEngine(spark, config, "betweenness", run_id=run_id)
+        # each phase takes at most max_depth + 1 rounds
+        result = engine.run(init, step, 2 * max_depth + 2, settle, resume=resume)
         # source rows (depth 0) contribute nothing to their own score:
         # Brandes sums delta_s(v) over v != s.
-        acc = acc.unionByName(cur.select("s", "vid", "delta"))
-
-    scale = (graph.num_vertices / len(sources)) if estimate else 1.0
-    bc = (
-        acc.where(F.col("vid") != F.col("s"))
-        .groupBy("vid")
-        .agg((F.sum("delta") * F.lit(float(scale))).alias("bc"))
-        if acc is not None
-        else spark.createDataFrame([], "vid long, bc double")
-    )
-    out = materialize(
-        graph.vertices.select("vid")
-        .join(bc, "vid", "left")
-        .select("vid", F.coalesce("bc", F.lit(0.0)).alias("bc"))
-        .repartition(parts, "vid")
-    )
+        acc = result.tables["acc"].unionByName(
+            result.state.select("s", "vid", "delta")
+        )
+        k = len(c["sources"])
+        scale = (graph.num_vertices / k) if estimate and k else 1.0
+        bc = (
+            acc.where(F.col("vid") != F.col("s"))
+            .groupBy("vid")
+            .agg((F.sum("delta") * F.lit(float(scale))).alias("bc"))
+        )
+        out = materialize(
+            graph.vertices.select("vid")
+            .join(bc, "vid", "left")
+            .select("vid", F.coalesce("bc", F.lit(0.0)).alias("bc"))
+            .repartition(parts, "vid")
+        )
+    finally:
+        if "reached" in held:
+            held["reached"].unpersist()
+        edges.unpersist()
     if metrics_out is not None:
-        metrics_out["depth"] = depth
-        metrics_out["frontier_sizes"] = frontier_sizes
-        metrics_out["num_sources"] = len(sources)
-        metrics_out["finished"] = finished
-    reached.unpersist()
-    edges.unpersist()
+        metrics_out["depth"] = c["depth"]
+        metrics_out["frontier_sizes"] = c["frontier_sizes"]
+        metrics_out["num_sources"] = len(c["sources"])
     return out

@@ -84,7 +84,7 @@ def connected_components(
       pytest-checked against union-find on an adversarial cycle
       fixture). Always returns ``converged=True`` (empty-pick is a
       fixpoint proof); ``resume``/checkpointing ride the msf kernel's
-      RoundStore (kernel name ``msf``) — pass the same ``run_id``
+      engine run (kernel name ``msf``) — pass the same ``run_id``
       on the original call AND the retry, otherwise a fresh uuid is
       minted per call and the "resume" silently restarts from scratch.
 
@@ -128,39 +128,25 @@ def connected_components(
             graph, config, algorithm="boruvka", run_id=run_id, resume=resume
         )
     if algorithm == "boruvka":
-        from planar_spark.kernels.mst import boruvka_msf
+        from planar_spark.kernels.mst import _boruvka
 
-        lab_out: dict = {}
         # 64 rounds >> log2 of any representable vertex count; hitting
         # it means the fixpoint proof (empty pick) was never reached,
         # and returning those labels as components would repeat the
-        # silent-under-merge bug this mode exists to prevent
+        # silent-under-merge bug this mode exists to prevent.
         # run_id MUST be plumbed through for resume to mean anything:
-        # RoundStore mints a fresh uuid per call, so without the
-        # caller's run_id latest() is always None and a "resume" run
-        # silently restarts from scratch (r6 ADVICE).
-        boruvka_msf(
-            graph,
-            config,
-            max_rounds=64,
-            metrics_out={},
-            labels_out=lab_out,
-            run_id=run_id,
-            resume=resume,
-        )
-        if not lab_out["fixpoint"]:
+        # the engine mints a fresh uuid per call, so without the
+        # caller's run_id a "resume" run silently restarts from scratch
+        # (r6 ADVICE).
+        result, _ = _boruvka(graph, config, 64, 40, run_id, resume)
+        if not result.converged:
             raise RuntimeError(
                 "connected_components(boruvka): round budget exhausted "
                 "before the empty-pick fixpoint — labels would be "
                 "under-merged (should be impossible at <2^64 vertices; "
                 "indicates a kernel bug or a corrupted resume state)"
             )
-        return SuperstepResult(
-            state=lab_out["labels"],
-            steps_run=int(lab_out["rounds"]),
-            converged=True,
-            metrics=[],
-        )
+        return result
     if algorithm != "hashmin":
         raise ValueError(f"unknown algorithm: {algorithm!r}")
     # NOTE: WCC stays on localCheckpoint state (the engine default), NOT

@@ -46,7 +46,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Observation, functions as F
 
 from planar_spark.config import EngineConfig
-from planar_spark.graph.superstep import RoundStore, materialize
+from planar_spark.graph.superstep import SuperstepEngine, materialize
 from planar_spark.graph.tables import GraphTables
 
 _H_A = 2654435761  # Knuth multiplicative hash, same family as coloring
@@ -100,7 +100,6 @@ def louvain(
     metrics_out: dict | None = None,
     run_id: str | None = None,
     resume: bool = False,
-    max_total_rounds: int | None = None,
 ) -> DataFrame:
     """(vid, community) — community = the level-0 vid of the final
     community representative (deterministic; NOT guaranteed to be the
@@ -111,43 +110,35 @@ def louvain(
     ``move_rounds`` (list per level), ``modularity`` (final Q) and
     ``communities`` (count).
 
-    Durable resume: with ``config.checkpoint_dir`` set, the full loop
-    state (level edge table + composed assignment + in-progress
-    community table) is saved through RoundStore every
-    ``config.checkpoint_every`` move rounds (counted ACROSS levels so
-    the round number is monotone) and at each level boundary;
-    ``resume=True`` with the same ``run_id`` re-enters mid-move-phase
-    — sym/deg/m are re-derived deterministically from the restored
-    level edges. ``max_total_rounds`` caps the combined move-round
-    count (crash simulation for the resume tests); a capped run
-    returns the partial assignment — resume to finish.
+    Durable resume: the move rounds run on ``SuperstepEngine`` under
+    kernel ``louvain``, state = the level's community table (comm)
+    carrying the level edge table (cur) and the composed assignment
+    (assign). A level boundary is one superstep that composes the
+    assignment, contracts the graph and returns the next level's
+    initial comm, so round numbers count move rounds and boundaries
+    across levels. With ``config.checkpoint_dir`` set, round 0 and every
+    ``config.checkpoint_every``-th round write the three tables plus
+    the level counters; ``resume=True`` with the same ``run_id``
+    re-enters mid-move-phase — sym/deg/m are re-derived once per level,
+    from the restored level edges on resume.
     """
     config = config or EngineConfig()
     spark = graph.spark
     parts = config.partitions_for(spark)
-    ckpt = RoundStore(spark, config, "louvain", run_id=run_id)
+    c = {"level": 0, "rounds": 0, "zero_streak": 0,
+         "move_rounds_per_level": [], "modularity": 0.0, "communities": 0}
+    lv: dict = {}  # the current level's sym (cached), deg and m
 
-    cur = None
-    comm = None
-    assign = None
-    level0 = 0
-    rounds = 0          # move rounds inside the current level
-    zero_streak = 0
-    grounds = 0         # combined move rounds across levels (monotone)
-    move_rounds_per_level: list[int] = []
-    if resume:
-        latest = ckpt.latest()
-        if latest is not None:
-            _rnd, tables, mm = latest
-            cur = materialize(tables["cur"].repartition(parts, "a"))
-            assign = tables["assign"]
-            comm = tables.get("comm")
-            level0 = int(mm["level"])
-            rounds = int(mm["rounds"])
-            zero_streak = int(mm["zero_streak"])
-            grounds = int(mm["global_round"])
-            move_rounds_per_level = list(mm.get("move_rounds_per_level", []))
-    if cur is None:
+    def fresh(cur: DataFrame) -> DataFrame:
+        """Every vertex of a level graph in its own community."""
+        return (
+            cur.select(F.col("a").alias("vid"))
+            .unionAll(cur.select(F.col("b").alias("vid")))
+            .distinct()
+            .select("vid", F.col("vid").alias("c"))
+        )
+
+    def init() -> dict:
         if weights is not None:
             wn = (
                 weights.select(
@@ -159,9 +150,9 @@ def louvain(
                 .agg(F.sum("w").alias("w"))
             )
             # left-join + loud failure on an uncovered edge (same
-            # contract as boruvka_msf, mst.py:109-118): an inner join
-            # would silently DROP edges missing from `weights` and
-            # quietly cluster a different graph (r6 ADVICE).
+            # contract as boruvka_msf): an inner join would silently
+            # DROP edges missing from `weights` and quietly cluster a
+            # different graph (r6 ADVICE).
             cur = graph.undirected_edges().join(wn, ["a", "b"], "left")
             if cur.where(F.col("w").isNull()).limit(1).count() > 0:
                 raise ValueError(
@@ -176,16 +167,18 @@ def louvain(
         # cur: one row per undirected edge (a <= b after contraction;
         # a == b rows are self-loops carrying intra-community weight)
         cur = materialize(cur)
-        # assign: original vid -> current-level vertex (community rep)
-        assign = materialize(
-            graph.vertices.select("vid", F.col("vid").alias("comm"))
-        )
+        return {
+            "state": fresh(cur),
+            "cur": cur,
+            # assign: original vid -> current-level vertex (community rep)
+            "assign": materialize(
+                graph.vertices.select("vid", F.col("vid").alias("comm"))
+            ),
+        }
 
-    budget = max_total_rounds if max_total_rounds is not None else (1 << 30)
-    q_final = 0.0
-    n_comm = 0
-    capped = False
-    for _level in range(level0, max_levels):
+    def derive(cur: DataFrame) -> None:
+        """The level graph's symmetric edges, weighted degrees and total
+        weight m, once per level."""
         sym = cur.where(F.col("a") != F.col("b")).select(
             F.col("a").alias("src"), F.col("b").alias("dst"), "w"
         ).unionAll(
@@ -218,169 +211,128 @@ def louvain(
                 ).alias("deg"),
             )
         )
-        deg = materialize(deg.repartition(parts, "vid"))
-        m = cur.agg(F.sum("w")).collect()[0][0] or 0.0
-        if m <= 0:
-            break
-        # cached SORTED by src (r8): the per-move-round community
-        # gather rides the merge fast path with zero exchange/sort on
-        # the O(E) side (same discipline as WCC's sym cache); released
-        # at level end.
-        sym = (
-            sym.repartition(parts, "src")
+        if "sym" in lv:
+            lv["sym"].unpersist()
+        lv.update(
+            level=c["level"],
+            deg=materialize(deg.repartition(parts, "vid")),
+            m=cur.agg(F.sum("w")).collect()[0][0] or 0.0,
+            # cached SORTED by src (r8): the per-move-round community
+            # gather rides the merge fast path with zero exchange/sort
+            # on the O(E) side (same discipline as WCC's sym cache)
+            sym=sym.repartition(parts, "src")
             .sortWithinPartitions("src")
-            .persist()
+            .persist(),
         )
 
-        if comm is None:  # fresh level (not a mid-phase resume)
-            comm = deg.select("vid", F.col("vid").alias("c"))
-            rounds = 0
-            zero_streak = 0
-        # stop only on a zero PAIR (streak >= 2 ending on an even
-        # round): the pair's two rounds gate complementary classes of
-        # the SAME hash split with state unchanged between them, so a
-        # quiet pair proves no vertex anywhere wants to move. A streak
-        # of 2 ending on an odd round spans two different splits and
-        # proves nothing — run one more round.
-        while rounds < max_move_rounds and not (
-            zero_streak >= 2 and rounds % 2 == 0
-        ):
-            if budget <= 0:
-                capped = True
-                break
-            budget -= 1
-            rounds += 1
-            grounds += 1
-            tot = comm.join(deg, "vid").groupBy("c").agg(
-                F.sum("deg").alias("tot")
+    def move(comm: DataFrame, rnd: int) -> tuple[DataFrame, dict]:
+        """One gated move round of the level's move phase."""
+        sym, deg, m = lv["sym"], lv["deg"], lv["m"]
+        tot = comm.join(deg, "vid").groupBy("c").agg(
+            F.sum("deg").alias("tot")
+        )
+        # gather along src (the cache's partition/sort key) and
+        # aggregate by dst — the edge set is symmetric with equal
+        # weights in both directions, so the (vertex, community,
+        # weight) multiset is identical to the old dst-side join,
+        # without re-shuffling the O(E) side every round. Sums are
+        # exact under reordering at gate scale (integer-valued w).
+        nbr_c = (
+            sym.hint("merge").join(
+                comm.select(F.col("vid").alias("src"), "c"), "src"
             )
-            # gather along src (the cache's partition/sort key) and
-            # aggregate by dst — the edge set is symmetric with equal
-            # weights in both directions, so the (vertex, community,
-            # weight) multiset is identical to the old dst-side join,
-            # without re-shuffling the O(E) side every round. Sums are
-            # exact under reordering at gate scale (integer-valued w).
-            nbr_c = (
-                sym.hint("merge").join(
-                    comm.select(F.col("vid").alias("src"), "c"), "src"
-                )
-                .groupBy(F.col("dst").alias("vid"), "c")
-                .agg(F.sum("w").alias("k_vc"))
-            )
-            own = comm.select("vid", F.col("c").alias("c_own"))
-            # candidate rows: every neighbor community (k_vc to own
-            # community rides along via a left join back)
-            cand = (
-                nbr_c.join(own, "vid")
-                .join(tot, "c")
-                .join(deg, "vid")
-                .join(
-                    tot.select(
-                        F.col("c").alias("c_own"),
-                        F.col("tot").alias("tot_own"),
-                    ),
-                    "c_own",
-                )
-                .join(
-                    nbr_c.select(
-                        "vid",
-                        F.col("c").alias("c_own"),
-                        F.col("k_vc").alias("k_own"),
-                    ),
-                    ["vid", "c_own"],
-                    "left",
-                )
-            )
-            gain = cand.select(
-                "vid",
-                "c",
+            .groupBy(F.col("dst").alias("vid"), "c")
+            .agg(F.sum("w").alias("k_vc"))
+        )
+        own = comm.select("vid", F.col("c").alias("c_own"))
+        # candidate rows: every neighbor community (k_vc to own
+        # community rides along via a left join back)
+        cand = (
+            nbr_c.join(own, "vid")
+            .join(tot, "c")
+            .join(deg, "vid")
+            .join(
+                tot.select(
+                    F.col("c").alias("c_own"),
+                    F.col("tot").alias("tot_own"),
+                ),
                 "c_own",
-                (
-                    (
-                        F.col("k_vc")
-                        - F.coalesce("k_own", F.lit(0.0))
-                    )
-                    / F.lit(m)
-                    - F.col("deg")
-                    * (
-                        F.col("tot")
-                        - (F.col("tot_own") - F.col("deg"))
-                    )
-                    / F.lit(2.0 * m * m)
-                ).alias("dq"),
-            ).where(F.col("c") != F.col("c_own"))
-            best = (
-                gain.groupBy("vid")
-                .agg(
-                    F.max(
-                        F.struct(
-                            F.col("dq"), (-F.col("c")).alias("nc")
-                        )
-                    ).alias("b"),
-                    F.first("c_own").alias("c_own"),
-                )
-                .where(F.col("b.dq") > 1e-12)
-                .select(
-                    "vid", (-F.col("b.nc")).alias("c_new"), "c_own"
-                )
             )
-            moves = best.where(_move_gate(F.col("vid"), rounds))
-            obs = Observation()
-            comm = materialize(
-                comm.join(
-                    moves.select("vid", "c_new"), "vid", "left"
-                )
-                .select(
+            .join(
+                nbr_c.select(
                     "vid",
-                    F.coalesce("c_new", F.col("c")).alias("c"),
-                    F.col("c_new").isNotNull().cast("long").alias("_mv"),
-                )
-                .observe(obs, F.sum("_mv").alias("moved"))
-                .drop("_mv")
+                    F.col("c").alias("c_own"),
+                    F.col("k_vc").alias("k_own"),
+                ),
+                ["vid", "c_own"],
+                "left",
             )
-            moved = int(obs.get["moved"] or 0)
-            zero_streak = zero_streak + 1 if moved == 0 else 0
-            saved = ckpt.save(
-                grounds,
-                {"cur": cur, "assign": assign, "comm": comm},
-                {
-                    "level": _level,
-                    "rounds": rounds,
-                    "zero_streak": zero_streak,
-                    "global_round": grounds,
-                    "move_rounds_per_level": move_rounds_per_level,
-                },
+        )
+        gain = cand.select(
+            "vid",
+            "c",
+            "c_own",
+            (
+                (F.col("k_vc") - F.coalesce("k_own", F.lit(0.0)))
+                / F.lit(m)
+                - F.col("deg")
+                * (F.col("tot") - (F.col("tot_own") - F.col("deg")))
+                / F.lit(2.0 * m * m)
+            ).alias("dq"),
+        ).where(F.col("c") != F.col("c_own"))
+        best = (
+            gain.groupBy("vid")
+            .agg(
+                F.max(
+                    F.struct(F.col("dq"), (-F.col("c")).alias("nc"))
+                ).alias("b"),
+                F.first("c_own").alias("c_own"),
             )
-            cur, assign, comm = saved["cur"], saved["assign"], saved["comm"]
-        if capped:
-            sym.unpersist()
-            break
-        move_rounds_per_level.append(rounds)
+            .where(F.col("b.dq") > 1e-12)
+            .select("vid", (-F.col("b.nc")).alias("c_new"), "c_own")
+        )
+        moves = best.where(_move_gate(F.col("vid"), rnd))
+        obs = Observation()
+        return (
+            comm.join(moves.select("vid", "c_new"), "vid", "left")
+            .select(
+                "vid",
+                F.coalesce("c_new", F.col("c")).alias("c"),
+                F.col("c_new").isNotNull().cast("long").alias("_mv"),
+            )
+            .observe(obs, F.sum("_mv").alias("moved"))
+            .drop("_mv"),
+            {"_obs": obs},
+        )
 
+    def boundary(t: dict) -> dict:
+        """End the level's move phase: compose the assignment through
+        it, then contract the level graph into the next level's — or
+        return the input state, which ends the run, when the level
+        moved nothing or was the last."""
+        cur, comm, deg, m = t["cur"], t["state"], lv["deg"], lv["m"]
+        c["move_rounds_per_level"].append(c["rounds"])
         # compose the original-vid assignment through this level (LEFT:
         # isolated vertices never enter a level graph and keep their
         # own-vid community)
         assign = materialize(
-            assign.join(
+            t["assign"].join(
                 comm.select(
                     F.col("vid").alias("comm"), F.col("c").alias("_c")
                 ),
                 "comm",
                 "left",
             )
-            .select(
-                "vid", F.coalesce("_c", F.col("comm")).alias("comm")
-            )
+            .select("vid", F.coalesce("_c", F.col("comm")).alias("comm"))
         )
-
+        ca = comm.select(F.col("vid").alias("a"), F.col("c").alias("ca"))
+        cb = comm.select(F.col("vid").alias("b"), F.col("c").alias("cb"))
         # modularity of this level's partition (on the level graph):
         # Q = Σ_c [ in_c/m − (tot_c/(2m))² ], in_c = intra weight.
         # METERED (r6 VERDICT finding #2): these are reporting-only
         # driver actions — 2 collects + a count per level — so they run
         # only when the caller asked for metrics_out; the hard-gate and
         # production paths pay 1 action per move round + m per level.
-        ca = comm.select(F.col("vid").alias("a"), F.col("c").alias("ca"))
-        cb = comm.select(F.col("vid").alias("b"), F.col("c").alias("cb"))
         if metrics_out is not None:
             intra = (
                 cur.join(ca, "a")
@@ -395,17 +347,13 @@ def louvain(
             sq = tot_rows.agg(
                 F.coalesce(F.sum(F.col("t") * F.col("t")), F.lit(0.0))
             ).collect()[0][0]
-            q_final = intra / m - sq / (4.0 * m * m)
-            n_comm = tot_rows.count()
-
-        sym.unpersist()  # the level's move phase is done with it
+            c["modularity"] = intra / m - sq / (4.0 * m * m)
+            c["communities"] = tot_rows.count()
         # no movement at all this level -> done (rounds==2 means the
         # first pair was immediately quiescent — both classes of its
         # split saw zero moves)
-        total_moved = rounds > 2
-        if not total_moved:
-            break
-
+        if c["rounds"] <= 2 or c["level"] + 1 >= max_levels:
+            return {**t, "assign": assign}
         # contract: communities become vertices, weights aggregate,
         # intra-community weight becomes the self-loop
         nxt = materialize(
@@ -420,32 +368,52 @@ def louvain(
             .agg(F.sum("w").alias("w"))
             .repartition(parts, "a")
         )
-        cur = nxt
-        comm = None  # next level re-derives its own community table
-        rounds = 0
-        zero_streak = 0
-        # level-boundary checkpoint: composed assign + contracted
-        # edges; comm intentionally absent (resume re-derives it at
-        # level entry). grounds bumps so the boundary save never
-        # overwrites the last in-phase round's sealed state.
-        grounds += 1
-        saved = ckpt.save(
-            grounds,
-            {"cur": cur, "assign": assign},
-            {
-                "level": _level + 1,
-                "rounds": 0,
-                "zero_streak": 0,
-                "global_round": grounds,
-                "move_rounds_per_level": move_rounds_per_level,
-            },
-        )
-        cur, assign = saved["cur"], saved["assign"]
+        c.update(level=c["level"] + 1, rounds=0, zero_streak=0)
+        return {"state": fresh(nxt), "cur": nxt, "assign": assign}
 
+    def step(t: dict, _rnd: int) -> tuple[dict, dict]:
+        if lv.get("level") != c["level"]:
+            derive(t["cur"])
+        if lv["m"] <= 0:
+            return t, {}  # no edge weight left: nothing can move
+        rounds = c["rounds"]
+        # stop only on a zero PAIR (streak >= 2 ending on an even
+        # round): the pair's two rounds gate complementary classes of
+        # the SAME hash split with state unchanged between them, so a
+        # quiet pair proves no vertex anywhere wants to move. A streak
+        # of 2 ending on an odd round spans two different splits and
+        # proves nothing — run one more round.
+        if rounds < max_move_rounds and not (
+            c["zero_streak"] >= 2 and rounds % 2 == 0
+        ):
+            comm, metrics = move(t["state"], rounds + 1)
+            return {**t, "state": comm}, metrics
+        return boundary(t), {}
+
+    def settle(m: dict) -> bool:
+        if "level" in m:  # the restored round
+            c.update((key, m[key]) for key in c)
+        else:
+            if "moved" in m:  # a move round
+                c["rounds"] += 1
+                c["zero_streak"] = c["zero_streak"] + 1 if not m["moved"] else 0
+            m.update(c)
+        return False  # a level that ends the run returns its input state
+
+    engine = SuperstepEngine(spark, config, "louvain", run_id=run_id)
+    try:
+        result = engine.run(
+            init, step, max_levels * (max_move_rounds + 1), settle,
+            resume=resume,
+        )
+    finally:
+        if "sym" in lv:
+            lv["sym"].unpersist()
     if metrics_out is not None:
-        metrics_out["levels"] = len(move_rounds_per_level)
-        metrics_out["move_rounds"] = move_rounds_per_level
-        metrics_out["modularity"] = float(q_final)
-        metrics_out["communities"] = int(n_comm)
-        metrics_out["capped"] = capped
-    return assign.select("vid", F.col("comm").alias("community"))
+        metrics_out["levels"] = len(c["move_rounds_per_level"])
+        metrics_out["move_rounds"] = c["move_rounds_per_level"]
+        metrics_out["modularity"] = float(c["modularity"])
+        metrics_out["communities"] = int(c["communities"])
+    return result.tables["assign"].select(
+        "vid", F.col("comm").alias("community")
+    )

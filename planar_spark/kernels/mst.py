@@ -42,7 +42,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Observation, functions as F
 
 from planar_spark.config import EngineConfig
-from planar_spark.graph.superstep import RoundStore, materialize
+from planar_spark.graph.superstep import (
+    SuperstepEngine,
+    SuperstepResult,
+    materialize,
+)
 from planar_spark.graph.tables import GraphTables
 
 
@@ -55,7 +59,6 @@ def boruvka_msf(
     run_id: str | None = None,
     resume: bool = False,
     weights: DataFrame | None = None,
-    labels_out: dict | None = None,
 ) -> DataFrame:
     """Returns the spanning-forest edges (a, b) with a < b — plus a
     ``w`` column when real ``weights`` are given.
@@ -72,30 +75,52 @@ def boruvka_msf(
 
     ``metrics_out`` (optional dict) receives ``rounds``, ``jumps`` (total
     pointer-doubling jobs across all rounds) and ``picked_per_round`` —
-    used by the job-diet regression test and the bench extras.
+    used by the job-diet regression test and the bench extras. A run
+    that spends ``max_rounds`` before the empty pick returns the
+    forest picked so far.
 
-    ``labels_out`` (optional dict) receives ``labels``: the final
-    (vid, label) table, label = min vid of the connected component —
-    Boruvka's hook-to-min + full pointer doubling converges every
-    cluster to its min-vid root, so at the empty-pick fixpoint the
-    labels ARE exact WCC labels, reached in O(log V) rounds regardless
-    of diameter (component count at least halves per round). This is
-    the high-diameter components path ``connected_components(
-    algorithm="boruvka")`` rides.
-
-    Durable resume: with ``config.checkpoint_dir`` set, every
-    ``config.checkpoint_every``-th completed Boruvka round writes the
-    full loop state (labels + forest-so-far) plus the driver counters
-    through RoundStore; ``resume=True`` with the same ``run_id``
-    re-enters the loop at the newest completed round instead of round 0
-    (tested kill/resume-identical in tests/test_loop_resume.py).
+    Durable resume: the rounds run on ``SuperstepEngine`` under kernel
+    ``msf``. With ``config.checkpoint_dir`` set, round 0 and every
+    ``config.checkpoint_every``-th Boruvka round write the labels
+    (``state``), the forest so far (``forest``) and the driver
+    counters; ``resume=True`` with the same ``run_id`` re-enters at the
+    newest completed round (tested kill/resume-identical in
+    tests/test_loop_resume.py).
     """
+    result, c = _boruvka(
+        graph, config, max_rounds, max_jumps, run_id, resume, weights
+    )
+    if metrics_out is not None:
+        metrics_out.update(c)
+    # one terminal dedup (see module doc: hook-to-min can re-pick a
+    # star edge across rounds) — O(|forest|) once, not once per round
+    return result.tables["forest"].distinct()
+
+
+def _boruvka(
+    graph: GraphTables,
+    config: EngineConfig | None,
+    max_rounds: int,
+    max_jumps: int,
+    run_id: str | None,
+    resume: bool,
+    weights: DataFrame | None = None,
+) -> tuple[SuperstepResult, dict]:
+    """The Boruvka rounds behind ``boruvka_msf`` and
+    ``connected_components(algorithm="boruvka")``: one superstep per
+    round, state (vid, label) carrying ``forest``, the union of the
+    picked edges. The run converges on the empty pick, when the labels
+    are exact WCC labels (label = min vid of the component: hook-to-min
+    plus full pointer doubling converges every cluster to its min-vid
+    root). Returns the engine's result and the driver counters
+    ``rounds``, ``jumps`` and ``picked_per_round``."""
     config = config or EngineConfig()
     spark = graph.spark
     parts = config.partitions_for(spark)
 
     if weights is None:
         und = graph.undirected_edges_by_a(parts)
+        forest_schema = "a long, b long"
     else:
         wn = (
             weights.select(
@@ -112,63 +137,39 @@ def boruvka_msf(
             .repartition(parts, "a")
             .sortWithinPartitions("a")
         )
-    # sorted within the cache (r8): the per-round ``und ⋈ labels(a)``
-    # join rides the merge fast path with zero exchange/sort on the
-    # edge side (same discipline as WCC/LPA's sym cache); without it
-    # the planner either broadcasts the O(E) side every round (small
-    # graphs; label leaves report default stats) or re-sorts it (big).
-    und = und.persist()
+        # mirror the caller's weight type: an edgeless graph must
+        # return the same w column type as the non-empty path
+        wtype = weights.schema["w"].dataType.simpleString()
+        forest_schema = f"a long, b long, w {wtype}"
+    # FindMinEdge per component: min (a, b) struct incident to it
+    # — (w, a, b) when real weights ride along — seen from both
+    # endpoints' components. ca/cb are functionally determined by
+    # (a, b) within a round, so carrying them in the struct changes
+    # neither the min nor the distinct.
     if weights is not None:
-        # coverage check rides one tiny bounded job (once per run, not
-        # per round): an uncovered edge would silently sort as NULL
-        if und.where(F.col("w").isNull()).limit(1).count() > 0:
-            und.unpersist()
-            raise ValueError(
-                "boruvka_msf: weights do not cover every undirected "
-                "edge of the graph (found an edge with NULL weight)"
-            )
-    labels = materialize(
-        graph.vertices.select(
-            "vid", F.col("vid").alias("label")
-        )
-    )
-    forest_parts: list[DataFrame] = []
-    rounds = 0
-    total_jumps = 0
-    picked_per_round: list[int] = []
-    n_picked = -1  # -1 = loop never ran (e.g. resume at the budget)
+        e_struct = F.struct("w", "a", "b", "ca", "cb").alias("e")
+        pick_cols = ["e.a", "e.b", "e.w", "e.ca", "e.cb"]
+        edge_cols = ["a", "b", "w"]
+    else:
+        e_struct = F.struct("a", "b", "ca", "cb").alias("e")
+        pick_cols = ["e.a", "e.b", "e.ca", "e.cb"]
+        edge_cols = ["a", "b"]
+    c = {"rounds": 0, "jumps": 0, "picked_per_round": []}
 
-    ckpt = RoundStore(spark, config, "msf", run_id=run_id)
-    if resume:
-        latest = ckpt.latest()
-        if latest is not None:
-            _rnd, tables, m = latest
-            labels = tables["labels"]
-            forest_parts = [tables["forest"]]
-            rounds = int(m.get("rounds", _rnd))
-            total_jumps = int(m.get("jumps", 0))
-            picked_per_round = list(m.get("picked_per_round", []))
+    def init() -> dict:
+        return {
+            "state": graph.vertices.select("vid", F.col("vid").alias("label")),
+            "forest": spark.createDataFrame([], schema=forest_schema),
+        }
 
-    for _ in range(rounds, max_rounds):
+    def step(t: dict, _rnd: int) -> tuple[dict, dict]:
+        labels = t["state"]
         la = labels.select(F.col("vid").alias("a"), F.col("label").alias("ca"))
         lb = labels.select(F.col("vid").alias("b"), F.col("label").alias("cb"))
         live = (
             und.hint("merge").join(la, "a").join(lb, "b")
             .where(F.col("ca") != F.col("cb"))
         )
-        # FindMinEdge per component: min (a, b) struct incident to it
-        # — (w, a, b) when real weights ride along — seen from both
-        # endpoints' components. ca/cb are functionally determined by
-        # (a, b) within a round, so carrying them in the struct changes
-        # neither the min nor the distinct.
-        if weights is not None:
-            e_struct = F.struct("w", "a", "b", "ca", "cb").alias("e")
-            pick_cols = ["e.a", "e.b", "e.w", "e.ca", "e.cb"]
-            edge_cols = ["a", "b", "w"]
-        else:
-            e_struct = F.struct("a", "b", "ca", "cb").alias("e")
-            pick_cols = ["e.a", "e.b", "e.ca", "e.cb"]
-            edge_cols = ["a", "b"]
         incident = live.select(F.col("ca").alias("comp"), e_struct).unionAll(
             live.select(F.col("cb").alias("comp"), e_struct)
         )
@@ -182,10 +183,7 @@ def boruvka_msf(
         )
         n_picked = int(obs_pick.get["n"])
         if n_picked == 0:
-            break
-        rounds += 1
-        picked_per_round.append(n_picked)
-        forest_parts.append(picked.select(*edge_cols))
+            return t, {}  # the empty pick: every label is final
         # Graft: across picked edges, both endpoints' components adopt
         # the min of the two labels (labels ride in the picked rows).
         hooks = picked.select(
@@ -213,12 +211,13 @@ def boruvka_msf(
                 F.least("comp", "new_label").alias("new_label"),
             )
         )
+        jumps = 0
         for _j in range(max_jumps):
             parent = mp.select(
                 F.col("comp").alias("p_comp"), F.col("new_label").alias("p_label")
             )
             obs_j = Observation()
-            jumped = materialize(
+            mp = materialize(
                 mp.join(parent, mp["new_label"] == parent["p_comp"], "left")
                 .select(
                     mp["comp"].alias("comp"),
@@ -233,58 +232,46 @@ def boruvka_msf(
                 .observe(obs_j, F.sum("_moved").alias("changed"))
                 .drop("_moved")
             )
-            total_jumps += 1
-            mp = jumped
+            jumps += 1
             if int(obs_j.get["changed"] or 0) == 0:
                 break
-        labels = materialize(
-            labels.join(mp, labels["label"] == mp["comp"], "left")
-            .select(
-                "vid",
-                F.coalesce("new_label", F.col("label")).alias("label"),
-            )
+        new_labels = labels.join(mp, labels["label"] == mp["comp"], "left").select(
+            "vid", F.coalesce("new_label", F.col("label")).alias("label")
         )
-        if ckpt.due(rounds):
-            forest_df = forest_parts[0]
-            for part in forest_parts[1:]:
-                forest_df = forest_df.unionAll(part)
-            saved = ckpt.save(
-                rounds,
-                {"labels": labels, "forest": forest_df},
-                {
-                    "rounds": rounds,
-                    "jumps": total_jumps,
-                    "picked_per_round": picked_per_round,
-                },
-            )
-            # root the rest of the loop at the durable copy (lineage
-            # truncation, same discipline as SuperstepEngine)
-            labels = saved["labels"]
-            forest_parts = [saved["forest"]]
+        forest = t["forest"].unionAll(picked.select(*edge_cols))
+        return (
+            {"state": new_labels, "forest": forest},
+            {"picked": n_picked, "round_jumps": jumps},
+        )
 
-    und.unpersist()
-    if metrics_out is not None:
-        metrics_out["rounds"] = rounds
-        metrics_out["jumps"] = total_jumps
-        metrics_out["picked_per_round"] = picked_per_round
-    if labels_out is not None:
-        labels_out["labels"] = labels
-        labels_out["rounds"] = rounds
-        # n_picked == 0 is the fixpoint proof; exiting on the round
-        # budget instead means the labels may still be under-merged
-        labels_out["fixpoint"] = n_picked == 0
-    if not forest_parts:
-        if weights is not None:
-            # mirror the caller's weight type: an edgeless graph must
-            # return the same w column type as the non-empty path
-            wtype = weights.schema["w"].dataType.simpleString()
-            schema = f"a long, b long, w {wtype}"
+    def settle(m: dict) -> bool:
+        if "rounds" in m:  # the restored round
+            c.update((key, m[key]) for key in c)
         else:
-            schema = "a long, b long"
-        return spark.createDataFrame([], schema=schema)
-    out = forest_parts[0]
-    for part in forest_parts[1:]:
-        out = out.unionAll(part)
-    # one terminal dedup (see module doc: hook-to-min can re-pick a
-    # star edge across rounds) — O(|forest|) once, not once per round
-    return out.distinct()
+            c["rounds"] += 1
+            c["jumps"] += m["round_jumps"]
+            c["picked_per_round"].append(m["picked"])
+            m.update(c)
+        return False  # only the empty pick ends the run
+
+    # sorted within the cache (r8): the per-round ``und ⋈ labels(a)``
+    # join rides the merge fast path with zero exchange/sort on the
+    # edge side (same discipline as WCC/LPA's sym cache); without it
+    # the planner either broadcasts the O(E) side every round (small
+    # graphs; label leaves report default stats) or re-sorts it (big).
+    und = und.persist()
+    try:
+        if weights is not None:
+            # coverage check rides one tiny bounded job (once per run,
+            # not per round): an uncovered edge would silently sort as
+            # NULL
+            if und.where(F.col("w").isNull()).limit(1).count() > 0:
+                raise ValueError(
+                    "boruvka_msf: weights do not cover every undirected "
+                    "edge of the graph (found an edge with NULL weight)"
+                )
+        engine = SuperstepEngine(spark, config, "msf", run_id=run_id)
+        result = engine.run(init, step, max_rounds, settle, resume=resume)
+    finally:
+        und.unpersist()
+    return result, c

@@ -37,7 +37,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Observation, functions as F
 
 from planar_spark.config import EngineConfig
-from planar_spark.graph.superstep import RoundStore, materialize
+from planar_spark.graph.superstep import SuperstepEngine, materialize
 from planar_spark.graph.tables import GraphTables
 
 
@@ -58,13 +58,19 @@ def strongly_connected_components(
 ) -> DataFrame:
     """Returns (vid, scc_id) for every vertex; scc_id = min vid of the
     strongly connected component (singletons map to themselves).
+    Raises RuntimeError when ``max_outer`` outer rounds leave a vertex
+    unassigned or an inner fixpoint needs more than ``max_inner``
+    rounds. ``metrics_out`` receives ``outer_rounds`` and
+    ``inner_jobs``.
 
-    Durable resume: with ``config.checkpoint_dir`` set, the end of every
-    ``config.checkpoint_every``-th OUTER round (trim + color + sweep)
-    writes the unassigned active set plus the assignments-so-far;
-    ``resume=True`` with the same ``run_id`` re-enters the outer loop on
-    the restored active set. Outer rounds are the unit because the inner
-    fixpoints are cheap relative to a full restart and their state
+    Durable resume: the outer rounds (trim + color + sweep) run on
+    ``SuperstepEngine`` under kernel ``scc``, state = the unassigned
+    active set carrying ``assigned``, the assignments so far. With
+    ``config.checkpoint_dir`` set, round 0 and every
+    ``config.checkpoint_every``-th outer round write both tables;
+    ``resume=True`` with the same ``run_id`` re-enters the outer loop
+    on the restored active set. Outer rounds are the unit because the
+    inner fixpoints are cheap relative to a full restart and their state
     (colors, sweep marks) is meaningless outside the round.
     """
     config = config or EngineConfig()
@@ -72,26 +78,22 @@ def strongly_connected_components(
     parts = config.partitions_for(spark)
 
     edges0 = graph.edges.select("src", "dst").distinct()
-    active = _ckpt(
-        graph.vertices.select("vid").repartition(parts, "vid")
-    )
-    assigned_parts: list[DataFrame] = []
-    outer_rounds = 0
-    inner_jobs = 0
+    c = {"outer_rounds": 0, "inner_jobs": 0}
 
-    ckpt = RoundStore(spark, config, "scc", run_id=run_id)
-    if resume:
-        latest = ckpt.latest()
-        if latest is not None:
-            _rnd, tables, m = latest
-            active = tables["active"]
-            assigned_parts = [tables["assigned"]]
-            outer_rounds = int(m.get("outer_rounds", _rnd))
-            inner_jobs = int(m.get("inner_jobs", 0))
+    def counted(active: DataFrame, assigned: DataFrame, **extra):
+        obs = Observation()
+        active = active.observe(obs, F.count(F.lit(1)).alias("n_active"))
+        return {"state": active, "assigned": assigned}, {"_obs": obs, **extra}
 
-    all_assigned = False
-    for _ in range(outer_rounds, max_outer):
-        outer_rounds += 1
+    def init():
+        return counted(
+            graph.vertices.select("vid").repartition(parts, "vid"),
+            spark.createDataFrame([], schema="vid long, scc_id long"),
+        )
+
+    def step(t: dict, _rnd: int):
+        active, assigned = t["state"], t["assigned"]
+        inner_jobs = 0
         # Active edge set: both endpoints still unassigned.
         a_src = active.select(F.col("vid").alias("src"))
         a_dst = active.select(F.col("vid").alias("dst"))
@@ -120,7 +122,7 @@ def strongly_connected_components(
             inner_jobs += 1
             if int(obs.get["n"] or 0) == 0:
                 break
-            assigned_parts.append(trimmed)
+            assigned = assigned.unionAll(trimmed)
             active = _ckpt(active.join(trimmed.select("vid"), "vid", "left_anti"))
             t_src = trimmed.select(F.col("vid").alias("src"))
             t_dst = trimmed.select(F.col("vid").alias("dst"))
@@ -137,8 +139,11 @@ def strongly_connected_components(
         active = _ckpt(active, obs_a, F.count(F.lit(1)).alias("n"))
         inner_jobs += 1
         if int(obs_a.get["n"] or 0) == 0:
-            all_assigned = True
-            break
+            # trimming assigned every vertex: the empty set ends the run
+            return (
+                {"state": active, "assigned": assigned},
+                {"n_active": 0, "inner": inner_jobs},
+            )
 
         # Cache the trimmed active edge set in BOTH join layouts (r8):
         # the color fixpoint joins it on src every round and the sweep
@@ -157,125 +162,126 @@ def strongly_connected_components(
             .sortWithinPartitions("dst")
             .persist()
         )
-
-        # ---- 2. COLOR: min reaching vid, hash-min fixpoint -------
-        color = _ckpt(active.select("vid", F.col("vid").alias("color")))
-        color_converged = False
-        for _p in range(max_inner):
-            msg = (
-                e_src.hint("merge").join(
-                    color.select(
-                        F.col("vid").alias("src"), F.col("color").alias("c")
-                    ),
-                    "src",
-                )
-                .groupBy(F.col("dst").alias("vid"))
-                .agg(F.min("c").alias("mc"))
-            )
-            obs = Observation()
-            color = _ckpt(
-                color.join(msg, "vid", "left").select(
-                    "vid",
-                    F.least(
-                        F.col("color"), F.coalesce("mc", F.col("color"))
-                    ).alias("color"),
-                    (F.coalesce("mc", F.col("color")) < F.col("color"))
-                    .cast("long")
-                    .alias("_moved"),
-                ),
-                obs,
-                F.sum("_moved").alias("changed"),
-            ).drop("_moved")
-            inner_jobs += 1
-            if int(obs.get["changed"] or 0) == 0:
-                color_converged = True
-                break
-        if not color_converged:
-            # an unconverged coloring would assign WRONG components in
-            # the sweep below — never degrade silently
-            raise RuntimeError(
-                f"scc: coloring fixpoint not reached in {max_inner} "
-                "rounds; raise max_inner (active diameter exceeds it)"
-            )
-
-        # ---- 3. SWEEP: backward reach of each root in its color --
-        # marked(vid, scc): grows from the roots; a vertex joins when
-        # one of its out-edges lands on a marked vertex of its OWN
-        # color. Sketch: color(v)==r means r reaches v and r is the min
-        # such vid; if v also reaches r then every vertex on the v→r
-        # path is reached by r and reaches r, hence colored r — so the
-        # whole path is swept and membership == SCC(r) exactly.
-        marked = _ckpt(
-            color.where(F.col("color") == F.col("vid")).select(
-                "vid", F.col("color").alias("scc")
-            )
+        try:
+            marked, jobs = _color_and_sweep(active, e_src, e_dst, max_inner)
+        finally:
+            e_src.unpersist()
+            e_dst.unpersist()
+        return counted(
+            active.join(marked.select("vid"), "vid", "left_anti"),
+            assigned.unionAll(
+                marked.select("vid", F.col("scc").alias("scc_id"))
+            ),
+            inner=inner_jobs + jobs,
         )
-        frontier = marked
-        sweep_converged = False
-        for _s in range(max_inner):
-            cand = (
-                e_dst.hint("merge").join(
-                    frontier.select(
-                        F.col("vid").alias("dst"), F.col("scc").alias("s")
-                    ),
-                    "dst",
-                )
-                .select(F.col("src").alias("vid"), F.col("s").alias("scc"))
-                .distinct()
-            )
-            valid = cand.join(
-                color,
-                (cand["vid"] == color["vid"]) & (cand["scc"] == color["color"]),
-                "left_semi",
-            )
-            new = valid.join(marked.select("vid"), "vid", "left_anti")
-            obs = Observation()
-            new = _ckpt(new, obs, F.count(F.lit(1)).alias("n"))
-            inner_jobs += 1
-            if int(obs.get["n"] or 0) == 0:
-                sweep_converged = True
-                break
-            marked = _ckpt(marked.unionAll(new))
-            frontier = new
-        if not sweep_converged:
-            raise RuntimeError(
-                f"scc: backward sweep not exhausted in {max_inner} "
-                "rounds; raise max_inner"
-            )
 
-        e_src.unpersist()
-        e_dst.unpersist()
-        assigned_parts.append(marked.select("vid", F.col("scc").alias("scc_id")))
-        active = _ckpt(active.join(marked.select("vid"), "vid", "left_anti"))
-        if ckpt.due(outer_rounds):
-            assigned_df = assigned_parts[0]
-            for part in assigned_parts[1:]:
-                assigned_df = assigned_df.unionAll(part)
-            saved = ckpt.save(
-                outer_rounds,
-                {"active": active, "assigned": assigned_df},
-                {"outer_rounds": outer_rounds, "inner_jobs": inner_jobs},
-            )
-            active = saved["active"]
-            assigned_parts = [saved["assigned"]]
+    def settle(m: dict) -> bool:
+        if "outer_rounds" in m:  # the restored round
+            c.update((key, m[key]) for key in c)
+        elif "inner" in m:  # a new outer round
+            c["outer_rounds"] += 1
+            c["inner_jobs"] += m.pop("inner")
+        m.update(c)
+        return m["n_active"] == 0
 
-    if not all_assigned:
-        # the final round may have drained active without re-entering
-        # the loop; verify rather than assume
-        if active.limit(1).count() > 0:
-            raise RuntimeError(
-                f"scc: {max_outer} outer rounds left unassigned vertices;"
-                " raise max_outer"
-            )
+    engine = SuperstepEngine(spark, config, "scc", run_id=run_id)
+    result = engine.run(init, step, max_outer, settle, resume=resume)
+    if not result.converged:
+        raise RuntimeError(
+            f"scc: {max_outer} outer rounds left unassigned vertices;"
+            " raise max_outer"
+        )
     if metrics_out is not None:
-        metrics_out["outer_rounds"] = outer_rounds
-        metrics_out["inner_jobs"] = inner_jobs
-    if not assigned_parts:
-        return spark.createDataFrame([], schema="vid long, scc_id long")
-    out = assigned_parts[0]
-    for part in assigned_parts[1:]:
-        out = out.unionAll(part)
-    return out
+        metrics_out.update(c)
+    return result.tables["assigned"]
+
+
+def _color_and_sweep(
+    active: DataFrame, e_src: DataFrame, e_dst: DataFrame, max_inner: int
+) -> tuple[DataFrame, int]:
+    """Steps 2 and 3 of an outer round over the trimmed active set and
+    its edges cached by src and by dst: the (vid, scc) rows of the
+    swept components, and the number of inner jobs spent."""
+    jobs = 0
+    # ---- 2. COLOR: min reaching vid, hash-min fixpoint -----------
+    color = _ckpt(active.select("vid", F.col("vid").alias("color")))
+    for _p in range(max_inner):
+        msg = (
+            e_src.hint("merge").join(
+                color.select(
+                    F.col("vid").alias("src"), F.col("color").alias("c")
+                ),
+                "src",
+            )
+            .groupBy(F.col("dst").alias("vid"))
+            .agg(F.min("c").alias("mc"))
+        )
+        obs = Observation()
+        color = _ckpt(
+            color.join(msg, "vid", "left").select(
+                "vid",
+                F.least(
+                    F.col("color"), F.coalesce("mc", F.col("color"))
+                ).alias("color"),
+                (F.coalesce("mc", F.col("color")) < F.col("color"))
+                .cast("long")
+                .alias("_moved"),
+            ),
+            obs,
+            F.sum("_moved").alias("changed"),
+        ).drop("_moved")
+        jobs += 1
+        if int(obs.get["changed"] or 0) == 0:
+            break
+    else:
+        # an unconverged coloring would assign WRONG components in
+        # the sweep below — never degrade silently
+        raise RuntimeError(
+            f"scc: coloring fixpoint not reached in {max_inner} "
+            "rounds; raise max_inner (active diameter exceeds it)"
+        )
+
+    # ---- 3. SWEEP: backward reach of each root in its color ------
+    # marked(vid, scc): grows from the roots; a vertex joins when one
+    # of its out-edges lands on a marked vertex of its OWN color.
+    # Sketch: color(v)==r means r reaches v and r is the min such vid;
+    # if v also reaches r then every vertex on the v→r path is reached
+    # by r and reaches r, hence colored r — so the whole path is swept
+    # and membership == SCC(r) exactly.
+    marked = _ckpt(
+        color.where(F.col("color") == F.col("vid")).select(
+            "vid", F.col("color").alias("scc")
+        )
+    )
+    frontier = marked
+    for _s in range(max_inner):
+        cand = (
+            e_dst.hint("merge").join(
+                frontier.select(
+                    F.col("vid").alias("dst"), F.col("scc").alias("s")
+                ),
+                "dst",
+            )
+            .select(F.col("src").alias("vid"), F.col("s").alias("scc"))
+            .distinct()
+        )
+        valid = cand.join(
+            color,
+            (cand["vid"] == color["vid"]) & (cand["scc"] == color["color"]),
+            "left_semi",
+        )
+        new = valid.join(marked.select("vid"), "vid", "left_anti")
+        obs = Observation()
+        new = _ckpt(new, obs, F.count(F.lit(1)).alias("n"))
+        jobs += 1
+        if int(obs.get["n"] or 0) == 0:
+            return marked, jobs
+        marked = _ckpt(marked.unionAll(new))
+        frontier = new
+    raise RuntimeError(
+        f"scc: backward sweep not exhausted in {max_inner} rounds; "
+        "raise max_inner"
+    )
 
 
 def _bfs_reach(edges: DataFrame, seeds: DataFrame, max_depth: int) -> DataFrame:

@@ -52,11 +52,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Observation, functions as F
 
 from planar_spark.config import EngineConfig
-from planar_spark.graph.superstep import (
-    RoundStore,
-    SuperstepEngine,
-    materialize,
-)
+from planar_spark.graph.superstep import SuperstepEngine, materialize
 from planar_spark.graph.tables import GraphTables
 
 # truss_decomposition cuts its running assignment table's lineage
@@ -147,65 +143,62 @@ def truss_decomposition(
     Assignments accumulate on ONE running (a, b, truss) table whose
     lineage (and the per-round doomed-edge leaves it references) is
     cut every ``ASSIGN_TRUNCATE_EVERY`` rounds — no leaf pinned per
-    round.
+    round. ``max_rounds`` bounds the removal rounds; RuntimeError when
+    they do not finish.
 
-    Durable resume: with ``config.checkpoint_dir`` set, the full loop
-    state — surviving edges with supports (es), the remaining triangle
-    list (tri), the running assignments AND the driver counters — is
-    written through RoundStore every
-    ``config.checkpoint_every``-th removal round; ``resume=True`` with
-    the same ``run_id`` re-enters the ascending peel at the newest
-    completed round (level advances between saves replay idempotently).
+    Durable resume: the removal rounds run on ``SuperstepEngine`` under
+    kernel ``truss_decomp``, state = the surviving edges with supports
+    (es) carrying the remaining triangle list (tri) and the running
+    assignments. With ``config.checkpoint_dir`` set, round 0 and every
+    ``config.checkpoint_every``-th removal round write the three tables
+    plus the level and the alive-edge count; ``resume=True`` with the
+    same ``run_id`` re-enters the ascending peel at the newest
+    completed round (level advances between saves replay
+    idempotently).
     """
     config = config or EngineConfig()
     spark = graph.spark
     parts = config.partitions_for(spark)
-    ckpt = RoundStore(spark, config, "truss_decomp", run_id=run_id)
+    c = {"k": 3}
 
-    es = tri = assigned = None
-    k = 3
-    rounds = 0
-    n_alive = 0
-    if resume:
-        latest = ckpt.latest()
-        if latest is not None:
-            _rnd, tables, m = latest
-            es = materialize(tables["es"].repartition(parts, "a"))
-            tri = materialize(tables["tri"])
-            assigned = materialize(tables["assigned"])
-            k = int(m.get("k", 3))
-            rounds = int(m.get("rounds", _rnd))
-            n_alive = int(m.get("n_alive", 0))
-    if es is None:
+    def counted(tables: dict) -> tuple[dict, dict]:
+        obs = Observation()
+        es = tables["state"].observe(obs, F.count(F.lit(1)).alias("n_alive"))
+        return {**tables, "state": es}, {"_obs": obs}
+
+    def init() -> tuple[dict, dict]:
         und = graph.undirected_edges_by_a(parts)
         tri = materialize(_triangles_of(und))
-        obs_n = Observation()
-        es = materialize(
-            und.join(_tri_edge_contribs(tri), ["a", "b"], "left")
-            .select("a", "b", F.coalesce("c_n", F.lit(0)).alias("s"))
-            .observe(obs_n, F.count(F.lit(1)).alias("n"))
+        return counted({
+            "state": und.join(_tri_edge_contribs(tri), ["a", "b"], "left")
+            .select("a", "b", F.coalesce("c_n", F.lit(0)).alias("s")),
+            "tri": tri,
+            "assigned": spark.createDataFrame(
+                [], schema="a long, b long, truss long"
+            ),
+        })
+
+    def step(t: dict, rnd: int) -> tuple[dict, dict]:
+        es, tri = t["state"], t["tri"]
+        while True:
+            obs_d = Observation()
+            doomed = materialize(
+                es.where(F.col("s") < c["k"] - 2)
+                .select("a", "b")
+                .observe(obs_d, F.count(F.lit(1)).alias("n"))
+            )
+            if int(obs_d.get["n"] or 0):
+                break
+            c["k"] += 1  # level fixpoint: every remaining edge is k-truss
+        assigned = t["assigned"].unionAll(
+            doomed.select(
+                "a", "b", F.lit(c["k"] - 1).cast("long").alias("truss")
+            )
         )
-        n_alive = int(obs_n.get["n"] or 0)
-        assigned = spark.createDataFrame(
-            [], schema="a long, b long, truss long"
-        )
-    for _ in range(max_rounds):
-        if n_alive == 0:
-            break
-        obs_d = Observation()
-        doomed = materialize(
-            es.where(F.col("s") < k - 2)
-            .select("a", "b")
-            .observe(obs_d, F.count(F.lit(1)).alias("n"))
-        )
-        n_doomed = int(obs_d.get["n"] or 0)
-        if n_doomed == 0:
-            k += 1  # level fixpoint: every remaining edge is k-truss
-            continue
-        rounds += 1
-        assigned = assigned.unionAll(
-            doomed.select("a", "b", F.lit(k - 1).cast("long").alias("truss"))
-        )
+        if rnd % ASSIGN_TRUNCATE_EVERY == 0:
+            # cut the assignment lineage: releases the union chain AND
+            # the per-round doomed-edge leaves it references
+            assigned = materialize(assigned)
 
         def probe(x, y):
             d = doomed.select(
@@ -223,41 +216,34 @@ def truss_decomposition(
             .distinct()
         )
         dec = _tri_edge_contribs(killed)
-        obs_s = Observation()
-        es = materialize(
-            es.join(doomed, ["a", "b"], "left_anti")
+        return counted({
+            "state": es.join(doomed, ["a", "b"], "left_anti")
             .join(dec, ["a", "b"], "left")
             .select(
                 "a", "b",
                 (F.col("s") - F.coalesce("c_n", F.lit(0))).alias("s"),
-            )
-            .observe(obs_s, F.count(F.lit(1)).alias("n"))
-        )
-        n_alive = int(obs_s.get["n"] or 0)
-        tri = materialize(tri.join(killed, ["x", "y", "z"], "left_anti"))
-        if rounds % ASSIGN_TRUNCATE_EVERY == 0:
-            # cut the assignment lineage: releases the union chain AND
-            # the per-round doomed-edge leaves it references
-            assigned = materialize(assigned)
-        if ckpt.due(rounds):
-            saved = ckpt.save(
-                rounds,
-                {"es": es, "tri": tri, "assigned": assigned},
-                {"rounds": rounds, "k": k, "n_alive": n_alive},
-            )
-            # root the loop at the durable copies (lineage truncation)
-            es = materialize(saved["es"])
-            tri = materialize(saved["tri"])
-            assigned = saved["assigned"]
-    else:
+            ),
+            "tri": materialize(tri.join(killed, ["x", "y", "z"], "left_anti")),
+            "assigned": assigned,
+        })
+
+    def settle(m: dict) -> bool:
+        if "k" in m:  # the restored round
+            c["k"] = m["k"]
+        m["k"] = c["k"]
+        return not m["n_alive"]
+
+    engine = SuperstepEngine(spark, config, "truss_decomp", run_id=run_id)
+    result = engine.run(init, step, max_rounds, settle, resume=resume)
+    if not result.converged:
         raise RuntimeError(
             f"truss_decomposition: not finished in {max_rounds} rounds; "
             "raise max_rounds"
         )
     if metrics_out is not None:
-        metrics_out["rounds"] = rounds
-        metrics_out["max_truss"] = k - 1
-    return assigned
+        metrics_out["rounds"] = result.steps_run
+        metrics_out["max_truss"] = c["k"] - 1
+    return result.tables["assigned"]
 
 
 def k_truss(

@@ -1,5 +1,7 @@
 from __future__ import annotations
 
+import contextlib
+
 import numpy as np
 import pytest
 
@@ -40,3 +42,29 @@ def graph_from_numpy(spark, edges: np.ndarray, num_vertices: int) -> GraphTables
         F.lit(None).cast("string").alias("url"), F.col("id").alias("vid")
     )
     return GraphTables.from_edges(edf, num_partitions=8, vertices=vdf)
+
+
+class Killed(Exception):
+    """The crash ``killed_at`` injects."""
+
+
+@contextlib.contextmanager
+def killed_at(rnd: int):
+    """Crash the kernel run inside the block at round ``rnd``: the
+    round's tables are written, but ``RoundStore.commit`` raises before
+    it seals the round, as a driver killed at that point would. The
+    block must end in that crash; the newest sealed round is the last
+    due one before ``rnd``."""
+    from planar_spark.graph.superstep import RoundStore
+
+    commit = RoundStore.commit
+
+    def dying(self, r, metrics=None):
+        if r == rnd:
+            raise Killed(f"killed at round {rnd}")
+        commit(self, r, metrics)
+
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(RoundStore, "commit", dying)
+        with pytest.raises(Killed):
+            yield

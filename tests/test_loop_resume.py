@@ -12,7 +12,7 @@ import pytest
 from planar_spark.config import EngineConfig
 from planar_spark.ingest.pages import edges_powerlaw
 
-from tests.conftest import graph_from_numpy
+from tests.conftest import graph_from_numpy, killed_at
 
 
 def _cfg(tmp_path) -> EngineConfig:
@@ -148,10 +148,9 @@ def test_core_decomposition_resume_equals_uninterrupted(spark, tmp_path):
 def test_truss_decomposition_resume_equals_uninterrupted(spark, tmp_path):
     from planar_spark.kernels.truss import truss_decomposition
 
-    # band graph (i,i+1)+(i,i+2): a 3-truss whose level-4 peel cascades
-    # from the boundary inward over several rounds; max_rounds=2 allows
-    # the level-3 fixpoint probe + exactly one removal round, crashing
-    # AFTER durable round 1 was sealed
+    # band graph (i,i+1)+(i,i+2): a 3-truss whose level-4 peel takes
+    # two removal rounds (the (i,i+2) edges, then the rest); the crash
+    # at round 2 comes AFTER durable round 1 was sealed
     n = 12
     edges = np.array(
         [(i, i + 1) for i in range(n - 1)]
@@ -159,8 +158,8 @@ def test_truss_decomposition_resume_equals_uninterrupted(spark, tmp_path):
     )
     g = graph_from_numpy(spark, edges, n)
     cfg = _cfg(tmp_path)
-    with pytest.raises(RuntimeError):
-        truss_decomposition(g, cfg, max_rounds=2, run_id="td1")
+    with killed_at(2):
+        truss_decomposition(g, cfg, run_id="td1")
     m: dict = {}
     resumed = truss_decomposition(
         g, cfg, run_id="td1", resume=True, metrics_out=m
@@ -213,17 +212,15 @@ def test_betweenness_resume_equals_uninterrupted(spark, tmp_path):
             g, sources=srcs, estimate=False, config=cfg, metrics_out=full_m
         ).collect()
     }
-    assert full_m["finished"]
     depth = full_m["depth"]
     assert depth >= 2  # the crash points below must be genuinely partial
 
-    # crash mid-FORWARD (after 1 of >=2 BFS rounds), resume to the end
-    partial_m: dict = {}
-    betweenness(
-        g, sources=srcs, estimate=False, config=cfg,
-        run_id="bw1", max_rounds=1, metrics_out=partial_m,
-    )
-    assert not partial_m["finished"]
+    # crash mid-FORWARD: round r expands BFS depth r, so a kill at
+    # round 2 resumes from depth 1
+    with killed_at(2):
+        betweenness(
+            g, sources=srcs, estimate=False, config=cfg, run_id="bw1"
+        )
     res_m: dict = {}
     resumed = {
         r["vid"]: r["bc"]
@@ -232,16 +229,19 @@ def test_betweenness_resume_equals_uninterrupted(spark, tmp_path):
             run_id="bw1", resume=True, metrics_out=res_m,
         ).collect()
     }
-    assert res_m["finished"] and res_m["depth"] == depth
+    assert res_m["depth"] == depth
     assert set(resumed) == set(full)
     for v in full:
         assert abs(resumed[v] - full[v]) < 1e-9, (v, resumed[v], full[v])
 
-    # crash mid-BACKWARD (forward done + 1 of >=2 levels), resume
-    betweenness(
-        g, sources=srcs, estimate=False, config=cfg,
-        run_id="bw2", max_rounds=depth + 2,
-    )
+    # crash mid-BACKWARD: rounds 1..depth+1 are the forward phase (the
+    # last finds the empty frontier) and round depth+2 accumulates the
+    # first of the depth >= 2 backward levels, so a kill at depth+3
+    # resumes from inside the backward phase
+    with killed_at(depth + 3):
+        betweenness(
+            g, sources=srcs, estimate=False, config=cfg, run_id="bw2"
+        )
     resumed2 = {
         r["vid"]: r["bc"]
         for r in betweenness(
@@ -254,10 +254,11 @@ def test_betweenness_resume_equals_uninterrupted(spark, tmp_path):
 
 
 def test_louvain_resume_equals_uninterrupted(spark, tmp_path):
-    """Crash mid-move-phase (3 combined rounds) and at a level boundary;
-    both resumes must finish with communities identical to an
-    uninterrupted run (the gating hash consumes the restored in-level
-    round counter, so any drift would change move parity)."""
+    """Crash mid-move-phase (at combined round 3); the resume must
+    finish with communities identical to an uninterrupted run (the
+    gating hash consumes the restored in-level round counter, so any
+    drift would change move parity). The level-boundary crash is
+    test_louvain_resume_at_level_boundary."""
     from planar_spark.kernels.louvain import louvain
 
     edges = edges_powerlaw(60, m=2, seed=13)
@@ -267,26 +268,71 @@ def test_louvain_resume_equals_uninterrupted(spark, tmp_path):
 
     # reference run: NO checkpointing (separate config) — just truth
     nockpt = EngineConfig(num_partitions=8, tolerance=0.0)
-    full_m: dict = {}
     full = {
         r["vid"]: r["community"]
-        for r in louvain(g, nockpt, metrics_out=full_m).collect()
+        for r in louvain(g, nockpt).collect()
     }
-    assert not full_m["capped"]
 
-    # crash after 3 combined move rounds (mid level-1 move phase; the
+    # crash at combined move round 3 (mid level-0 move phase; the
     # newest completed checkpoint is round 2, so the resume replays
     # round 3 — replay determinism is part of what's asserted)
-    part_m: dict = {}
-    louvain(
-        g, cfg, run_id="lv1", max_total_rounds=3, metrics_out=part_m
-    ).count()
-    assert part_m["capped"]
+    with killed_at(3):
+        louvain(g, cfg, run_id="lv1")
     resumed = {
         r["vid"]: r["community"]
         for r in louvain(g, cfg, run_id="lv1", resume=True).collect()
     }
     assert resumed == full
+
+
+def test_louvain_resume_at_level_boundary(spark, tmp_path):
+    """Two 8-cliques move for 6 rounds on level 0, so round 7 is the
+    level boundary (compose the assignment, contract the graph). A
+    crash at round 7 replays the boundary from round 6; a crash at
+    round 8 then resumes from the sealed boundary round, re-deriving
+    the level-1 tables from the restored contracted edges. The result
+    must match the pure-python replica, and the restored per-level
+    counters must continue."""
+    from planar_spark.ingest.pages import edges_two_cliques
+    from planar_spark.kernels.louvain import louvain
+
+    from tests.test_louvain import _py_louvain
+
+    edges, n = edges_two_cliques(8, n_isolated=0)
+    g = graph_from_numpy(spark, np.asarray(edges), n)
+    cfg = _cfg(tmp_path)
+    with killed_at(7):
+        louvain(g, cfg, run_id="lvb")
+    with killed_at(8):
+        louvain(g, cfg, run_id="lvb", resume=True)
+    m: dict = {}
+    got = {
+        r["vid"]: r["community"]
+        for r in louvain(
+            g, cfg, run_id="lvb", resume=True, metrics_out=m
+        ).collect()
+    }
+    assert got == _py_louvain(edges, n)
+    assert m["move_rounds"] == [6, 2]
+
+
+def test_resume_from_another_layout_names_the_missing_table(
+    spark, tmp_path
+):
+    """A round without a ``state`` table (the layout these loops wrote
+    before they ran on the engine) fails loudly, naming what is
+    missing."""
+    from pyspark.sql import functions as F
+
+    from planar_spark.graph.superstep import RoundStore
+    from planar_spark.kernels.mst import boruvka_msf
+
+    g = graph_from_numpy(spark, np.array([(0, 1), (1, 2)]), 3)
+    cfg = _cfg(tmp_path)
+    labels = g.vertices.select("vid", F.col("vid").alias("label"))
+    RoundStore(spark, cfg, "msf", run_id="old").save(1, {"labels": labels})
+    with pytest.raises(ValueError, match=r"msf: run 'old' round 1 .*'state'"):
+        boruvka_msf(g, cfg, run_id="old", resume=True)
 
 
 def test_hyperball_resume_equals_uninterrupted(spark, tmp_path):

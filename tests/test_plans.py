@@ -217,19 +217,15 @@ def test_materialize_policy_lives_in_superstep_only():
 
 
 def test_round_store_is_built_only_by_the_engine_and_multi_table_loops():
-    """Single-table loops run on SuperstepEngine, which owns their
-    RoundStore. Only the engine and the loops that checkpoint several
-    tables build one, each at most as often as now, so the set of
-    hand-rolled loops can only shrink."""
+    """Every iterative loop runs on SuperstepEngine, which owns its
+    RoundStore. Only the engine and the streaming WCC per-batch store
+    build one."""
     import pathlib
 
     import planar_spark
 
     root = pathlib.Path(planar_spark.__file__).parent
-    allowed = {
-        "superstep.py": 1, "mst.py": 1, "scc.py": 1, "louvain.py": 1,
-        "betweenness.py": 1, "wcc_maintain.py": 1, "truss.py": 1,
-    }
+    allowed = {"superstep.py": 1, "wcc_maintain.py": 1}
     over = {
         str(path.relative_to(root)): n
         for path in sorted(root.rglob("*.py"))

@@ -69,3 +69,20 @@ def test_scc_metrics_shape(spark, config):
     m: dict = {}
     strongly_connected_components(g, config, metrics_out=m).collect()
     assert m["outer_rounds"] <= 4  # trim + one color/sweep round suffices
+
+
+def test_scc_releases_edge_caches_on_raise(spark, config):
+    """A coloring that runs out of max_inner raises; the two cached
+    layouts of the active edge set must be released all the same.
+    Counted as cache-manager entries: localCheckpoint leaves also count
+    as persistent RDDs, so RDD ids would not tell."""
+    n = 20
+    edges = np.array([(i, (i + 1) % n) for i in range(n)])
+    g = graph_from_numpy(spark, edges, n)
+    g.edges.count()
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    before = cache.numCachedEntries()
+    # the min label needs n-1 rounds to travel round the cycle
+    with pytest.raises(RuntimeError, match="coloring fixpoint"):
+        strongly_connected_components(g, config, max_inner=3)
+    assert cache.numCachedEntries() == before
