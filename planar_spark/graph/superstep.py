@@ -81,6 +81,13 @@ def resolve_observations(metrics: dict) -> dict:
     return out
 
 
+def empty_table(spark: SparkSession, schema: str) -> DataFrame:
+    """No rows and no partitions: the round-0 value of a carried table
+    that grows by unions. Unlike a local relation it adds no empty
+    partition to them, so it writes no empty file per checkpoint."""
+    return spark.createDataFrame(spark.sparkContext.emptyRDD(), schema)
+
+
 def releaf(df: DataFrame) -> DataFrame:
     """Rebuild an already-materialized (checkpointed) DataFrame as a
     fresh LogicalRDD leaf with DEFAULT statistics.

@@ -46,7 +46,11 @@ from pyspark.sql import DataFrame, Observation, functions as F
 
 from planar_spark.config import EngineConfig
 from planar_spark.graph.skew import maybe_broadcast
-from planar_spark.graph.superstep import SuperstepEngine, materialize
+from planar_spark.graph.superstep import (
+    SuperstepEngine,
+    empty_table,
+    materialize,
+)
 from planar_spark.graph.tables import GraphTables
 
 _ACC_SCHEMA = "s long, vid long, delta double"
@@ -151,8 +155,8 @@ def betweenness(
             "state": src_df.select(
                 "s", F.col("s").alias("vid"), F.lit(1.0).alias("sigma")
             ),
-            "reached": spark.createDataFrame([], _REACHED_SCHEMA),
-            "acc": spark.createDataFrame([], _ACC_SCHEMA),
+            "reached": empty_table(spark, _REACHED_SCHEMA),
+            "acc": empty_table(spark, _ACC_SCHEMA),
         }, dict(c)
 
     def step(t: dict, _rnd: int) -> tuple[dict, dict]:

@@ -45,6 +45,7 @@ from planar_spark.config import EngineConfig
 from planar_spark.graph.superstep import (
     SuperstepEngine,
     SuperstepResult,
+    empty_table,
     materialize,
 )
 from planar_spark.graph.tables import GraphTables
@@ -159,7 +160,7 @@ def _boruvka(
     def init() -> dict:
         return {
             "state": graph.vertices.select("vid", F.col("vid").alias("label")),
-            "forest": spark.createDataFrame([], schema=forest_schema),
+            "forest": empty_table(spark, forest_schema),
         }
 
     def step(t: dict, _rnd: int) -> tuple[dict, dict]:

@@ -37,7 +37,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Observation, functions as F
 
 from planar_spark.config import EngineConfig
-from planar_spark.graph.superstep import SuperstepEngine, materialize
+from planar_spark.graph.superstep import (
+    SuperstepEngine,
+    empty_table,
+    materialize,
+)
 from planar_spark.graph.tables import GraphTables
 
 
@@ -88,7 +92,7 @@ def strongly_connected_components(
     def init():
         return counted(
             graph.vertices.select("vid").repartition(parts, "vid"),
-            spark.createDataFrame([], schema="vid long, scc_id long"),
+            empty_table(spark, "vid long, scc_id long"),
         )
 
     def step(t: dict, _rnd: int):

@@ -52,7 +52,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Observation, functions as F
 
 from planar_spark.config import EngineConfig
-from planar_spark.graph.superstep import SuperstepEngine, materialize
+from planar_spark.graph.superstep import (
+    SuperstepEngine,
+    empty_table,
+    materialize,
+)
 from planar_spark.graph.tables import GraphTables
 
 # truss_decomposition cuts its running assignment table's lineage
@@ -173,9 +177,7 @@ def truss_decomposition(
             "state": und.join(_tri_edge_contribs(tri), ["a", "b"], "left")
             .select("a", "b", F.coalesce("c_n", F.lit(0)).alias("s")),
             "tri": tri,
-            "assigned": spark.createDataFrame(
-                [], schema="a long, b long, truss long"
-            ),
+            "assigned": empty_table(spark, "a long, b long, truss long"),
         })
 
     def step(t: dict, rnd: int) -> tuple[dict, dict]:
