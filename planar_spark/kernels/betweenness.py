@@ -161,6 +161,8 @@ def betweenness(
 
     def step(t: dict, _rnd: int) -> tuple[dict, dict]:
         reached, acc = t["reached"], t["acc"]
+        if c["phase"] == "bwd" and "reached" not in held:
+            reached = keep(reached)  # the checkpoint copy a resume read
         if c["phase"] == "fwd":
             # ---- forward: multi-source BFS with path counts ----------
             # the reached set lags the frontier by one level: fold the

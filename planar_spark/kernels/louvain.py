@@ -129,14 +129,16 @@ def louvain(
          "move_rounds_per_level": [], "modularity": 0.0, "communities": 0}
     lv: dict = {}  # the current level's sym (cached), deg and m
 
-    def fresh(cur: DataFrame) -> DataFrame:
-        """Every vertex of a level graph in its own community."""
+    def verts(cur: DataFrame) -> DataFrame:
         return (
             cur.select(F.col("a").alias("vid"))
             .unionAll(cur.select(F.col("b").alias("vid")))
             .distinct()
-            .select("vid", F.col("vid").alias("c"))
         )
+
+    def fresh(cur: DataFrame) -> DataFrame:
+        """Every vertex of a level graph in its own community."""
+        return verts(cur).select("vid", F.col("vid").alias("c"))
 
     def init() -> dict:
         if weights is not None:
@@ -189,13 +191,8 @@ def louvain(
         selfs = cur.where(F.col("a") == F.col("b")).select(
             F.col("a").alias("vid"), F.col("w").alias("w_self")
         )
-        verts = (
-            cur.select(F.col("a").alias("vid"))
-            .unionAll(cur.select(F.col("b").alias("vid")))
-            .distinct()
-        )
         deg = (
-            verts.join(
+            verts(cur).join(
                 sym.groupBy(F.col("src").alias("vid")).agg(
                     F.sum("w").alias("_wn")
                 ),
