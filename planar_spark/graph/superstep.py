@@ -33,14 +33,13 @@ nvme_update_store.h:138-145). Here:
 - ``IsActive()`` termination (bsp_update_store.h:174-176) =
   ``converged_fn(metrics)`` on driver-side aggregated counts, where the
   metrics are Observations resolved by the state's own materialization
-  job (plus ``post_fn(old_state, new_state, step)`` evaluated on the
-  already-materialized new state), so convergence checks never
-  re-execute the superstep plan. The stop test also keeps a loop's
-  driver counters (peel level, survivor counts, the profile so far):
-  it adds them to the round's metrics before the commit and reads them
-  back from the restored round on resume. A step that returns its
-  input state object unchanged is a fixpoint: the run ends without
-  cutting, writing or committing that round.
+  job, so convergence checks never re-execute the superstep plan. The
+  stop test also keeps a loop's driver counters (peel level, survivor
+  counts, the profile so far): it adds them to the round's metrics
+  before the commit and reads them back from the restored round on
+  resume. A step that returns its input state object unchanged is a
+  fixpoint: the run ends without cutting, writing or committing that
+  round.
 """
 
 from __future__ import annotations
@@ -60,7 +59,6 @@ from planar_spark.storage import TableStore
 Tables = dict[str, DataFrame]
 StepFn = Callable[[DataFrame | Tables, int], tuple[DataFrame | Tables, dict]]
 InitFn = Callable[[], DataFrame | Tables | tuple[DataFrame | Tables, dict]]
-PostFn = Callable[[DataFrame, DataFrame, int], dict]
 
 
 def resolve_observations(metrics: dict) -> dict:
@@ -187,16 +185,20 @@ class RoundStore:
     def round_name(self, rnd: int) -> str:
         return f"{self._prefix}/round={rnd:05d}"
 
-    def write(self, rnd: int, tables: dict[str, DataFrame]) -> dict[str, DataFrame]:
-        """Write round ``rnd``'s tables and return them re-read from the
-        store: a fresh scan leaf per table, so the caller's loop
-        continues from the durable copy (the lineage cut). The round is
-        not visible to ``latest`` until ``commit``."""
+    def write(self, rnd: int, tables: dict[str, DataFrame]) -> None:
+        """Write round ``rnd``'s tables. The round is not visible to
+        ``latest`` until ``commit``."""
         base = self.round_name(rnd)
         for name, df in tables.items():
             self._store.write(df, f"{base}/{name}")
         self._written[rnd] = sorted(tables)
-        return {name: self._store.read(f"{base}/{name}") for name in tables}
+
+    def read(self, rnd: int, name: str) -> DataFrame:
+        """Round ``rnd``'s table ``name`` as a fresh scan leaf: a loop
+        that continues from it continues from the durable copy (the
+        lineage cut). Each read probes the catalog and lists the
+        table's files, so callers read only the tables they use."""
+        return self._store.read(f"{self.round_name(rnd)}/{name}")
 
     def commit(self, rnd: int, metrics: dict | None = None) -> None:
         """Seal round ``rnd`` (no-op unless due) with its completion
@@ -234,9 +236,9 @@ class RoundStore:
         result either way."""
         if not self.due(rnd):
             return tables
-        out = self.write(rnd, tables)
+        self.write(rnd, tables)
         self.commit(rnd, metrics)
-        return out
+        return {name: self.read(rnd, name) for name in tables}
 
     def _completed_rounds(self) -> list[int]:
         """Round numbers with a live completion marker, ascending."""
@@ -282,12 +284,10 @@ class RoundStore:
             rounds = [r for r in rounds if r <= max_round]
         if not rounds:
             return None
-        base = self.round_name(rounds[-1])
-        meta = self._store.read_meta(base) or {}
-        tables = {
-            t: self._store.read(f"{base}/{t}") for t in meta.get("tables", [])
-        }
-        return rounds[-1], tables, meta.get("metrics", {})
+        rnd = rounds[-1]
+        meta = self._store.read_meta(self.round_name(rnd)) or {}
+        tables = {t: self.read(rnd, t) for t in meta.get("tables", [])}
+        return rnd, tables, meta.get("metrics", {})
 
 
 @dataclass
@@ -360,7 +360,8 @@ class SuperstepEngine:
         of the state otherwise. Carried tables pass on as given."""
         self._dump_plan(tables["state"], step)
         if self.store.due(step):
-            state = self.store.write(step, tables)["state"]
+            self.store.write(step, tables)
+            state = self.store.read(step, "state")
         else:
             state = materialize(tables["state"])
         return {**tables, "state": state}
@@ -372,7 +373,6 @@ class SuperstepEngine:
         step_fn: StepFn,
         max_steps: int,
         converged_fn: Callable[[dict], bool] | None = None,
-        post_fn: PostFn | None = None,
         resume: bool = False,
     ) -> SuperstepResult:
         """Run supersteps 1..``max_steps`` from round 0 (``init_state``)
@@ -437,8 +437,6 @@ class SuperstepEngine:
             # the materialization job just above — fold them in now (so
             # converged_fn and the checkpoint meta see plain values).
             metrics = resolve_observations(metrics)
-            if post_fn is not None:
-                metrics.update(post_fn(tables["state"], new["state"], step))
             metrics["superstep"] = step
             metrics["seconds"] = time.time() - t0
             converged = bool(converged_fn and converged_fn(metrics))

@@ -73,14 +73,17 @@ class GraphTables:
             self.vertices.unpersist()
 
     # ---- derived edge tables ----
-    # The one-shot forms (undirected_edges, symmetric_edges) compose
-    # into a caller's plan. The ``*_by_*`` builders are the cached
-    # layouts: each is hash-partitioned by its gather key and sorted
+    # The ``*_by_*`` builders are the one way kernels take a derived
+    # edge table: each is hash-partitioned by its gather key and sorted
     # within partitions, with exactly ONE exchange above the edges
     # cache; the caller persists and releases it. Each dedup runs after
     # the repartition, inside the partition (hash(key) satisfies the
     # clustering on any superset of the key), so it costs no second
-    # exchange. graph/locality.py owns the block-pinned layout.
+    # exchange. The one-shot forms (undirected_edges, symmetric_edges)
+    # put an uncached ``distinct`` into the caller's plan, which runs
+    # once per reference; they exist for the frozen bench.py and
+    # __spark_entry__.py callers. graph/locality.py owns the
+    # block-pinned layout.
     def undirected_edges(self) -> DataFrame:
         """Distinct undirected edge set as canonical (a < b) pairs."""
         e = self.edges
@@ -231,3 +234,14 @@ class GraphTables:
             num_edges=edges.count(),
             owns_vertices=not shared,
         )
+
+
+def undirected_degree(und: DataFrame) -> DataFrame:
+    """(vid, udeg): how many edges of the undirected edge table ``und``
+    (a, b) touch each vertex; vertices on no edge are absent."""
+    return (
+        und.select(F.col("a").alias("vid"))
+        .unionAll(und.select(F.col("b").alias("vid")))
+        .groupBy("vid")
+        .agg(F.count(F.lit(1)).alias("udeg"))
+    )

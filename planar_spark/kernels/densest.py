@@ -31,7 +31,7 @@ from pyspark.sql import DataFrame, Observation, functions as F
 
 from planar_spark.config import EngineConfig
 from planar_spark.graph.superstep import materialize
-from planar_spark.graph.tables import GraphTables
+from planar_spark.graph.tables import GraphTables, undirected_degree
 
 
 def densest_subgraph(
@@ -74,11 +74,9 @@ def densest_subgraph(
         # so the degree work is never recomputed inside the shrink job.
         obs_n = Observation()
         deg = materialize(
-            cur.select(F.col("a").alias("v"))
-            .unionAll(cur.select(F.col("b").alias("v")))
-            .groupBy("v")
-            .agg(F.count(F.lit(1)).alias("d"))
-            .observe(obs_n, F.count(F.lit(1)).alias("n"))
+            undirected_degree(cur).observe(
+                obs_n, F.count(F.lit(1)).alias("n")
+            )
         )
         cur_n = int(obs_n.get["n"] or 0)
         density = cur_m / cur_n
@@ -86,9 +84,9 @@ def densest_subgraph(
         if best_density is None or density > best_density:
             best_density = density
             best_edges = cur
-        keep = deg.where(F.col("d") > thresh_factor * density).select("v")
-        ka = keep.select(F.col("v").alias("a"))
-        kb = keep.select(F.col("v").alias("b"))
+        keep = deg.where(F.col("udeg") > thresh_factor * density)
+        ka = keep.select(F.col("vid").alias("a"))
+        kb = keep.select(F.col("vid").alias("b"))
         obs = Observation()
         nxt = materialize(
             cur.join(ka, "a", "left_semi")

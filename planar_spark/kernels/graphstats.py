@@ -16,7 +16,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from planar_spark.config import EngineConfig
 from planar_spark.graph.tables import GraphTables
+from planar_spark.kernels.triangles import closed_wedges, oriented_edges
 
 
 def degree_histogram(graph: GraphTables) -> DataFrame:
@@ -70,7 +72,9 @@ def degree_assortativity(graph: GraphTables) -> DataFrame:
     scale. One degree aggregation + one edge join + one global
     aggregate; partial aggregation everywhere. Degenerate (zero
     variance) graphs return NULL rather than an engine-specific 0/0."""
-    sym = graph.symmetric_edges()
+    sym = graph.symmetric_edges_by_src(
+        EngineConfig().partitions_for(graph.spark)
+    )
     udeg = sym.groupBy(F.col("src").alias("vid")).agg(
         F.count(F.lit(1)).alias("ud")
     )
@@ -123,13 +127,14 @@ def triad_census(graph: GraphTables, config=None) -> DataFrame:
     closed-form integer expression then counts both pattern families
     per triangle.
     """
-    from planar_spark.config import EngineConfig
-    from planar_spark.kernels.triangles import _closed_wedges
-
-    config = config or EngineConfig()
-    # (a, b, c), a < b < c, once each; the oriented cache stays live
+    parts = (config or EngineConfig()).partitions_for(graph.spark)
+    # (a, b, c), each triangle once; the oriented cache stays live
     # under the returned lazy frame
-    tri, _oriented = _closed_wedges(graph, config)
+    tri = closed_wedges(
+        oriented_edges(graph.undirected_edges_by_a(parts))
+        .repartition(parts, "lo")
+        .persist()
+    ).toDF("a", "b", "c")
     e = graph.edges.select("src", "dst").distinct()
     # (lo, hi, f_fwd, f_bwd): f_fwd = lo->hi exists, f_bwd = hi->lo.
     # max() folds a reciprocal pair's two rows into one.

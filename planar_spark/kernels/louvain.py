@@ -94,7 +94,6 @@ def _move_gate(vid_col, rnd: int):
 def louvain(
     graph: GraphTables,
     config: EngineConfig | None = None,
-    weights: DataFrame | None = None,
     max_levels: int = 4,
     max_move_rounds: int = 64,
     metrics_out: dict | None = None,
@@ -105,10 +104,9 @@ def louvain(
     community representative (deterministic; NOT guaranteed to be the
     min vid of the member set).
 
-    ``weights``: optional (src, dst, w); defaults to w = 1 per distinct
-    undirected edge. ``metrics_out`` receives ``levels``,
-    ``move_rounds`` (list per level), ``modularity`` (final Q) and
-    ``communities`` (count).
+    Every distinct undirected edge weighs 1. ``metrics_out`` receives
+    ``levels``, ``move_rounds`` (list per level), ``modularity`` (final
+    Q) and ``communities`` (count).
 
     Durable resume: the move rounds run on ``SuperstepEngine`` under
     kernel ``louvain``, state = the level's community table (comm)
@@ -141,31 +139,7 @@ def louvain(
         return verts(cur).select("vid", F.col("vid").alias("c"))
 
     def init() -> dict:
-        if weights is not None:
-            wn = (
-                weights.select(
-                    F.least("src", "dst").alias("a"),
-                    F.greatest("src", "dst").alias("b"),
-                    F.col("w").cast("double").alias("w"),
-                )
-                .groupBy("a", "b")
-                .agg(F.sum("w").alias("w"))
-            )
-            # left-join + loud failure on an uncovered edge (same
-            # contract as boruvka_msf): an inner join would silently
-            # DROP edges missing from `weights` and quietly cluster a
-            # different graph (r6 ADVICE).
-            cur = graph.undirected_edges().join(wn, ["a", "b"], "left")
-            if cur.where(F.col("w").isNull()).limit(1).count() > 0:
-                raise ValueError(
-                    "louvain: `weights` must cover every undirected "
-                    "edge of the graph (found an edge with NULL weight)"
-                )
-            cur = cur.repartition(parts, "a")
-        else:
-            cur = graph.undirected_edges_by_a(parts).withColumn(
-                "w", F.lit(1.0)
-            )
+        cur = graph.undirected_edges_by_a(parts).withColumn("w", F.lit(1.0))
         # cur: one row per undirected edge (a <= b after contraction;
         # a == b rows are self-loops carrying intra-community weight)
         cur = materialize(cur)

@@ -34,7 +34,6 @@ def label_propagation(
     num_iterations: int = 10,
     engine: SuperstepEngine | None = None,
     resume: bool = False,
-    track_changes: bool = False,
 ) -> SuperstepResult:
     """Returns state (vid, label) after exactly ``num_iterations`` rounds."""
     config = config or EngineConfig()
@@ -93,27 +92,11 @@ def label_propagation(
         )
         return new, {}
 
-    def post(old: DataFrame, new: DataFrame, _step: int) -> dict:
-        # LPA runs a FIXED round count (synchronous LPA can 2-cycle, so
-        # convergence is not a stopping rule here) — the changed-count
-        # is reporting only. Skip its per-round join+count job unless
-        # the caller asked for it: one fewer driver barrier per round.
-        if not track_changes:
-            return {}
-        changed = (
-            new.join(old.select("vid", F.col("label").alias("old_label")), "vid")
-            .where(F.col("label") != F.col("old_label"))
-            .count()
-        )
-        return {"changed": int(changed)}
-
     engine = engine or SuperstepEngine(
         spark, config, "lpa",
         lineage={"num_vertices": graph.num_vertices,
                  "num_edges": graph.num_edges, "rounds": num_iterations},
     )
-    result = engine.run(
-        init_state, step, num_iterations, None, post_fn=post, resume=resume
-    )
+    result = engine.run(init_state, step, num_iterations, resume=resume)
     sym.unpersist()
     return result

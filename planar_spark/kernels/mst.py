@@ -132,10 +132,11 @@ def _boruvka(
             .groupBy("a", "b")
             .agg(F.min("w").alias("w"))
         )
+        # the join keeps the builder's hash(a) layout; the sort keeps
+        # its order when the planner broadcasts the weights
         und = (
-            graph.undirected_edges()
+            graph.undirected_edges_by_a(parts)
             .join(wn, ["a", "b"], "left")
-            .repartition(parts, "a")
             .sortWithinPartitions("a")
         )
         # mirror the caller's weight type: an edgeless graph must

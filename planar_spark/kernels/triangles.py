@@ -19,6 +19,10 @@ Orienting by degree bounds every vertex's oriented out-degree by
 O(sqrt(E)) even on power-law graphs — the wedge join stays tractable at
 web scale where a raw hub wedge count would explode (a 10^6-degree hub
 contributes 10^12 unoriented wedges but only ~E oriented ones).
+
+``oriented_edges`` and ``closed_wedges`` are the package's one triangle
+enumeration: kernels/truss.py and graphstats.triad_census compose them
+too.
 """
 
 from __future__ import annotations
@@ -26,18 +30,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from planar_spark.config import EngineConfig
-from planar_spark.graph.tables import GraphTables
+from planar_spark.graph.superstep import materialize
+from planar_spark.graph.tables import GraphTables, undirected_degree
 
 
-def _oriented_edges(graph: GraphTables) -> DataFrame:
-    """Undirected distinct edges oriented by (undirected degree, vid)."""
-    und = graph.undirected_edges()  # (a, b), a < b, distinct
-    udeg = (
-        und.select(F.col("a").alias("vid"))
-        .unionAll(und.select(F.col("b").alias("vid")))
-        .groupBy("vid")
-        .agg(F.count(F.lit(1)).alias("udeg"))
-    )
+def oriented_edges(und: DataFrame) -> DataFrame:
+    """(lo, hi): each undirected edge (a, b) of ``und`` directed from
+    its lower-ranked endpoint to the higher, ranked by (undirected
+    degree, vid)."""
+    udeg = undirected_degree(und)
     da = udeg.select(F.col("vid").alias("a"), F.col("udeg").alias("deg_a"))
     db = udeg.select(F.col("vid").alias("b"), F.col("udeg").alias("deg_b"))
     e = und.join(da, "a").join(db, "b")
@@ -50,25 +51,32 @@ def _oriented_edges(graph: GraphTables) -> DataFrame:
     )
 
 
-def _closed_wedges(
+def closed_wedges(oriented: DataFrame) -> DataFrame:
+    """(x, y, z): each triangle of an ``oriented_edges`` table once, as
+    its one oriented wedge x->y->z closed by x->z."""
+    e1 = oriented.select(F.col("lo").alias("x"), F.col("hi").alias("y"))
+    e2 = oriented.select(F.col("lo").alias("y"), F.col("hi").alias("z"))
+    closing = oriented.select(F.col("lo").alias("x"), F.col("hi").alias("z"))
+    return e1.join(e2, "y").join(closing, ["x", "z"]).select("x", "y", "z")
+
+
+def _cached_orientation(
     graph: GraphTables, config: EngineConfig
 ) -> tuple[DataFrame, DataFrame]:
-    """(triangles (a, b, c), the cached oriented edge table they are
-    built from) — the caller unpersists the latter once it is done."""
+    """(und, oriented): the graph's undirected edges and their
+    orientation hashed by lo, both persisted, since the orientation
+    reads ``und`` three times and the wedge join reads ``oriented``
+    three times. The caller unpersists both."""
     parts = config.partitions_for(graph.spark)
-    oriented = _oriented_edges(graph).repartition(parts, "lo").persist()
-    e1 = oriented.select(F.col("lo").alias("a"), F.col("hi").alias("b"))
-    e2 = oriented.select(F.col("lo").alias("b"), F.col("hi").alias("c"))
-    wedges = e1.join(e2, "b")
-    closing = oriented.select(F.col("lo").alias("a"), F.col("hi").alias("c"))
-    return wedges.join(closing, ["a", "c"]).select("a", "b", "c"), oriented
+    und = graph.undirected_edges_by_a(parts).persist()
+    return und, oriented_edges(und).repartition(parts, "lo").persist()
 
 
 def triangle_count(graph: GraphTables, config: EngineConfig | None = None) -> int:
-    config = config or EngineConfig()
-    tri, oriented = _closed_wedges(graph, config)
-    n = tri.count()
+    und, oriented = _cached_orientation(graph, config or EngineConfig())
+    n = closed_wedges(oriented).count()
     oriented.unpersist()
+    und.unpersist()
     return n
 
 
@@ -79,51 +87,43 @@ def local_clustering(
     undirected simple graph — lcc(v) = triangles(v) / C(udeg(v), 2),
     0 where udeg < 2.
 
-    Pure composition of the oriented triangle enumeration with the
-    undirected-degree aggregate: one extra O(V) join over
-    triangle_count_per_vertex, no new shuffle shape.
+    The O(V) result is materialized before the two edge caches are
+    released, so nothing this call cached outlives it.
     """
-    config = config or EngineConfig()
-    und = graph.undirected_edges()
-    udeg = (
-        und.select(F.col("a").alias("vid"))
-        .unionAll(und.select(F.col("b").alias("vid")))
+    und, oriented = _cached_orientation(graph, config or EngineConfig())
+    tri = closed_wedges(oriented)
+    corners = (
+        tri.select(F.col("x").alias("vid"))
+        .unionAll(tri.select(F.col("y").alias("vid")))
+        .unionAll(tri.select(F.col("z").alias("vid")))
         .groupBy("vid")
-        .agg(F.count(F.lit(1)).alias("udeg"))
+        .agg(F.count(F.lit(1)).alias("n_tri"))
     )
-    tri = triangle_count_per_vertex(graph, config)
-    return (
-        tri.join(udeg, "vid", "left")
+    out = materialize(
+        graph.vertices.select("vid")
+        .join(corners, "vid", "left")
+        .join(undirected_degree(und), "vid", "left")
         .select(
             "vid",
-            "triangles",
+            F.coalesce("n_tri", F.lit(0)).alias("triangles"),
             F.coalesce("udeg", F.lit(0)).alias("udeg"),
+        )
+        .withColumn(
+            "lcc",
             F.when(
-                F.coalesce("udeg", F.lit(0)) >= 2,
+                F.col("udeg") >= 2,
                 F.col("triangles") * 2.0
                 / (F.col("udeg") * (F.col("udeg") - F.lit(1))),
-            )
-            .otherwise(F.lit(0.0))
-            .alias("lcc"),
+            ).otherwise(F.lit(0.0)),
         )
     )
+    oriented.unpersist()
+    und.unpersist()
+    return out
 
 
 def triangle_count_per_vertex(
     graph: GraphTables, config: EngineConfig | None = None
 ) -> DataFrame:
     """(vid, triangles) for every vertex (0 for triangle-free vertices)."""
-    config = config or EngineConfig()
-    tri, _oriented = _closed_wedges(graph, config)
-    corners = (
-        tri.select(F.col("a").alias("vid"))
-        .unionAll(tri.select(F.col("b").alias("vid")))
-        .unionAll(tri.select(F.col("c").alias("vid")))
-        .groupBy("vid")
-        .agg(F.count(F.lit(1)).alias("n_tri"))
-    )
-    return (
-        graph.vertices.select("vid")
-        .join(corners, "vid", "left")
-        .select("vid", F.coalesce("n_tri", F.lit(0)).alias("triangles"))
-    )
+    return local_clustering(graph, config).select("vid", "triangles")

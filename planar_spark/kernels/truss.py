@@ -58,6 +58,7 @@ from planar_spark.graph.superstep import (
     materialize,
 )
 from planar_spark.graph.tables import GraphTables
+from planar_spark.kernels.triangles import closed_wedges, oriented_edges
 
 # truss_decomposition cuts its running assignment table's lineage
 # every this many removal rounds
@@ -71,33 +72,9 @@ def _edge_support(und: DataFrame) -> DataFrame:
     edges in no triangle are absent from the result. Catalyst fuses the
     triangle join and the contribution aggregate into one plan — the
     triangle list itself is never materialized on this path."""
-    return _tri_edge_contribs(_triangles_of(und)).select(
+    return _tri_edge_contribs(closed_wedges(oriented_edges(und))).select(
         "a", "b", F.col("c_n").alias("s")
     )
-
-
-def _triangles_of(und: DataFrame) -> DataFrame:
-    """(x, y, z): each triangle of ``und`` once, degree-oriented."""
-    udeg = (
-        und.select(F.col("a").alias("vid"))
-        .unionAll(und.select(F.col("b").alias("vid")))
-        .groupBy("vid")
-        .agg(F.count(F.lit(1)).alias("udeg"))
-    )
-    da = udeg.select(F.col("vid").alias("a"), F.col("udeg").alias("deg_a"))
-    db = udeg.select(F.col("vid").alias("b"), F.col("udeg").alias("deg_b"))
-    e = und.join(da, "a").join(db, "b")
-    a_first = (F.col("deg_a") < F.col("deg_b")) | (
-        (F.col("deg_a") == F.col("deg_b")) & (F.col("a") < F.col("b"))
-    )
-    oriented = e.select(
-        F.when(a_first, F.col("a")).otherwise(F.col("b")).alias("lo"),
-        F.when(a_first, F.col("b")).otherwise(F.col("a")).alias("hi"),
-    )
-    e1 = oriented.select(F.col("lo").alias("x"), F.col("hi").alias("y"))
-    e2 = oriented.select(F.col("lo").alias("y"), F.col("hi").alias("z"))
-    closing = oriented.select(F.col("lo").alias("x"), F.col("hi").alias("z"))
-    return e1.join(e2, "y").join(closing, ["x", "z"]).select("x", "y", "z")
 
 
 def _tri_edge_contribs(tri: DataFrame) -> DataFrame:
@@ -172,7 +149,7 @@ def truss_decomposition(
 
     def init() -> tuple[dict, dict]:
         und = graph.undirected_edges_by_a(parts)
-        tri = materialize(_triangles_of(und))
+        tri = materialize(closed_wedges(oriented_edges(und)))
         return counted({
             "state": und.join(_tri_edge_contribs(tri), ["a", "b"], "left")
             .select("a", "b", F.coalesce("c_n", F.lit(0)).alias("s")),

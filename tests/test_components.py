@@ -160,15 +160,33 @@ TRI_CASES = [
     ("two_cliques_5", edges_two_cliques(5)[0], 2 * 10),  # 2*C(5,3)
     ("two_cliques_50", edges_two_cliques(50)[0], 2 * 19600),  # 2*C(50,3)
     ("powerlaw", edges_powerlaw(300, m=3, seed=42), None),
+    ("empty", np.zeros((0, 2), dtype=np.int64), 0),
+    ("self_loops", np.array([(v, v) for v in range(5)]), 0),
+    # triangle {0,1,2} given with duplicates and both directions, plus
+    # a reciprocal pendant edge and a self-loop
+    (
+        "dup_reciprocal",
+        np.array(
+            [(0, 1), (0, 1), (1, 0), (1, 2), (2, 1), (2, 0), (0, 2),
+             (0, 2), (2, 3), (3, 2), (3, 3)]
+        ),
+        1,
+    ),
 ]
+HOSTILE_CASES = [
+    c for c in TRI_CASES if c[0] in ("empty", "self_loops", "dup_reciprocal")
+]
+
+
+def _num_vertices(edges: np.ndarray) -> int:
+    return int(edges.max()) + 1 if edges.size else 0
 
 
 @pytest.mark.parametrize(
     "name,edges,expected", TRI_CASES, ids=[c[0] for c in TRI_CASES]
 )
 def test_triangle_count_exact(spark, config, name, edges, expected):
-    n = int(edges.max()) + 1
-    g = graph_from_numpy(spark, edges, n)
+    g = graph_from_numpy(spark, edges, _num_vertices(edges))
     got = triangle_count(g, config)
     want = oracle_triangle_count(edges)
     if expected is not None:
@@ -188,6 +206,44 @@ def test_triangle_count_releases_its_cache(spark, config):
     before = persistent_ids()
     assert triangle_count(g, config) == 2
     assert persistent_ids() - before == set()
+
+
+def test_per_vertex_triangles_release_their_caches(spark, config):
+    """triangle_count_per_vertex and local_clustering return an O(V)
+    table; no edge table either call cached may outlive it."""
+    from planar_spark.kernels.triangles import local_clustering
+
+    g = graph_from_numpy(spark, edges_simple4(), 4)
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    before = cache.numCachedEntries()
+    for kernel in (triangle_count_per_vertex, local_clustering):
+        rows = {r["vid"]: r["triangles"] for r in kernel(g, config).collect()}
+        assert rows == {0: 1, 1: 2, 2: 1, 3: 2}
+        assert cache.numCachedEntries() == before, kernel.__name__
+
+
+@pytest.mark.parametrize(
+    "edges", [c[1] for c in HOSTILE_CASES], ids=[c[0] for c in HOSTILE_CASES]
+)
+def test_hostile_inputs_lcc_and_ktruss(spark, config, edges):
+    """The empty, self-loop-only and duplicate/reciprocal inputs through
+    local_clustering and k_truss, against their python references."""
+    from planar_spark.kernels.triangles import local_clustering
+    from planar_spark.kernels.truss import k_truss
+    from tests.test_extra_kernels import _py_ktruss
+    from tests.test_hits import _py_lcc
+
+    n = _num_vertices(edges)
+    g = graph_from_numpy(spark, edges, n)
+    rows = {r["vid"]: r for r in local_clustering(g, config).collect()}
+    want = _py_lcc(edges, n)
+    assert sorted(rows) == sorted(want)
+    for v, (deg, tri, lcc) in want.items():
+        assert (rows[v]["udeg"], rows[v]["triangles"]) == (deg, tri), v
+        assert rows[v]["lcc"] == pytest.approx(lcc), v
+    for k in (3, 4):
+        truss = {(r["a"], r["b"]) for r in k_truss(g, k, config).collect()}
+        assert truss == _py_ktruss(edges, k), k
 
 
 def test_triangle_per_vertex(spark, config):

@@ -69,19 +69,15 @@ def test_ppr_matches_numpy_and_sums_to_one(spark, config):
         assert all(got[v] > 0 for v in seeds)
 
 
-def test_local_clustering_matches_python(spark, config):
-    from planar_spark.kernels.triangles import local_clustering
-
-    edges = edges_powerlaw(100, m=3, seed=11)
-    n = 100
-    g = graph_from_numpy(spark, edges, n)
-    rows = {r["vid"]: r for r in local_clustering(g, config).collect()}
-    # independent python reference over the undirected simple graph
+def _py_lcc(edges, n) -> dict[int, tuple[int, int, float]]:
+    """Independent python reference over the undirected simple graph:
+    vid -> (udeg, triangles, lcc) for vids 0..n-1."""
     nbrs = {v: set() for v in range(n)}
     for s, d in edges:
         if s != d:
             nbrs[int(s)].add(int(d))
             nbrs[int(d)].add(int(s))
+    out = {}
     for v in range(n):
         deg = len(nbrs[v])
         tri = sum(
@@ -90,9 +86,20 @@ def test_local_clustering_matches_python(spark, config):
             for b in nbrs[v]
             if a < b and b in nbrs[a]
         )
+        out[v] = (deg, tri, 2.0 * tri / (deg * (deg - 1)) if deg >= 2 else 0.0)
+    return out
+
+
+def test_local_clustering_matches_python(spark, config):
+    from planar_spark.kernels.triangles import local_clustering
+
+    edges = edges_powerlaw(100, m=3, seed=11)
+    n = 100
+    g = graph_from_numpy(spark, edges, n)
+    rows = {r["vid"]: r for r in local_clustering(g, config).collect()}
+    for v, (deg, tri, want) in _py_lcc(edges, n).items():
         assert rows[v]["udeg"] == deg
         assert rows[v]["triangles"] == tri
-        want = 2.0 * tri / (deg * (deg - 1)) if deg >= 2 else 0.0
         assert rows[v]["lcc"] == pytest.approx(want)
 
 

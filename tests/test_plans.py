@@ -235,6 +235,40 @@ def test_round_store_is_built_only_by_the_engine_and_multi_table_loops():
     assert not over, over
 
 
+def test_kernels_take_undirected_edges_from_the_builders():
+    """Kernels take undirected edges from the cached ``*_by_*``
+    builders: the one-shot ``undirected_edges()`` /
+    ``symmetric_edges()`` put an uncached distinct into the plan that
+    runs once per reference. And one file, kernels/triangles.py,
+    defines the degree orientation (an endpoint choice by degree,
+    aliased ``lo``) that triangle enumeration builds on."""
+    import ast
+    import pathlib
+    import re
+
+    import planar_spark
+
+    root = pathlib.Path(planar_spark.__file__).parent
+    one_shot = [
+        f"{path.relative_to(root)}:{i}: {line.strip()}"
+        for path in sorted((root / "kernels").rglob("*.py"))
+        for i, line in enumerate(path.read_text().splitlines(), 1)
+        if "undirected_edges()" in line or "symmetric_edges()" in line
+    ]
+    assert not one_shot, "\n".join(one_shot)
+    orientation = re.compile(r"when\(.*\)\.otherwise\(.*\)\.alias\('lo'\)")
+    orienting = sorted(
+        str(path.relative_to(root))
+        for path in root.rglob("*.py")
+        if any(
+            isinstance(node, ast.FunctionDef)
+            and orientation.search(ast.unparse(node))
+            for node in ast.walk(ast.parse(path.read_text()))
+        )
+    )
+    assert orienting == ["kernels/triangles.py"], orienting
+
+
 def test_reversed_edge_gather_is_merge_join(spark, config):
     """The hits/hyperball hub-phase gather joins on the REVERSED edge
     cache (partitioned+sorted by the reversed src): like the forward
