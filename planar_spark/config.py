@@ -33,17 +33,18 @@ class EngineConfig:
     num_partitions: int = field(
         default_factory=lambda: int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     )
-    # Degree threshold above which a vertex counts as a "hub": the
-    # pagerank family and hits split its edges off once per call into
-    # a table spread over every partition, and gather its value from
-    # that table through a literal (graph/skew.py split_hubs; reference
-    # analogue is the strided ParallelVertexDoStep skew path,
-    # core/apis/planar_app_base.h:208-231).
+    # Degree threshold above which a vertex counts as a "hub": on the
+    # hash layout the pagerank family and hits split its edges off once
+    # per call into a table spread over every partition, and gather its
+    # value from that table through a literal (graph/skew.py
+    # gather_edges; reference analogue is the strided
+    # ParallelVertexDoStep skew path, core/apis/planar_app_base.h:208-231).
     hub_degree_threshold: int = 100_000
 
     # --- locality layout consumption ---
-    # Minimum edge count at which layout-aware kernels consume a
-    # with_partitioning graph via the block-pinned compound-key gather.
+    # Minimum edge count at which the gather kernels consume a
+    # with_partitioning graph via the block-pinned compound-key gather
+    # (graph/skew.py gather_edges, through effective_block_size).
     # The pinned gather only pays when the gather EXCHANGE is the
     # bottleneck: measured (BENCH/NOTES.md r7) it moves 2.2x more
     # edges/s at 100M edges but LOSES wall-clock at 1M edges

@@ -139,9 +139,9 @@ def with_partitioning(
 
     The new graph is a standard GraphTables — every kernel runs on it
     unchanged (edges re-hash-partitioned by the NEW src ids) — and
-    layout-aware kernels (connected_components) read ``block_size`` to
-    switch their gather to the block-pinned join documented in the
-    module doc. Results carry new ids; invert through the mapping.
+    the gather kernels' edge tables switch to the block-pinned join
+    documented in the module doc when ``effective_block_size`` gives a
+    size (graph/skew.py gather_edges). Results carry new ids; invert through the mapping.
     """
     from planar_spark.graph.tables import GraphTables
 
@@ -166,8 +166,8 @@ def with_partitioning(
 
 
 def effective_block_size(graph, config) -> int | None:
-    """The block size a kernel should consume, or None for the plain
-    hash gather: a with_partitioning graph below
+    """The block size a gather should consume (graph/skew.py
+    gather_edges), or None for the plain hash gather: a with_partitioning graph below
     ``config.locality_min_edges`` edges falls back — the pinned
     compound-key join loses wall-clock when the gather exchange it
     removes is not the bottleneck (config.py doc; measured in
@@ -208,8 +208,8 @@ def block_pinned_sym(graph, parts: int) -> DataFrame:
 
 def block_pinned_edges(graph, parts: int, reverse: bool = False) -> DataFrame:
     """The DIRECTED edge multiset in the block-pinned layout (src, dst,
-    sblk) — consumed by pagerank-family gathers (gather_join's block
-    mode). ``reverse`` swaps the endpoints first: the in-neighbor
+    sblk) — read by the pagerank family and hits through
+    graph/skew.py gather_edges (gather_join's block mode). ``reverse`` swaps the endpoints first: the in-neighbor
     table of hits' hub phase, whose src is still a vid and so names its
     block the same way. Caller persists."""
     e = graph.edges

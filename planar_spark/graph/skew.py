@@ -7,6 +7,14 @@ out-degrees 10^6+ while the median is ~10. Hash-partitioning edges by
 per hub (the reference hits the same wall and hands a hub's edges out in
 a fixed strided order, core/apis/planar_app_base.h:208-231).
 
+``gather_edges`` picks a gather's edge layout in one place for every
+gather kernel (the pagerank family, hits, lpa, hash-min WCC): the
+block-pinned table of graph/locality.py, else the hash layout, split at
+its hubs for the linear sum gathers. Kernels join through the returned
+``GatherEdges`` and never name a layout, as the reference's ``MapEdge``
+walks whatever block layout the scheduler loaded
+(nvme/apis/block_api.h:115-123).
+
 Two explicit mechanisms, both pure DataFrame ops (AQE skew-join is ON as
 a backstop, but the north rule wants this handled explicitly):
 
@@ -36,6 +44,12 @@ from dataclasses import dataclass
 from typing import Mapping
 
 from pyspark.sql import Column, DataFrame, functions as F
+
+from planar_spark.graph.locality import (
+    block_pinned_edges,
+    block_pinned_sym,
+    effective_block_size,
+)
 
 # Broadcast the frontier/state side of a join when its row count is at
 # most this (reference analogue: whole vertex-state array shared in
@@ -155,6 +169,76 @@ def gather_join(
     # tie (r6, big-graph pagerank: 7.08 s vs 7.55 s medians).
     e = edges.hint("merge")
     return e.join(state, e["src"] == state["vid"]).drop("vid")
+
+
+@dataclass(frozen=True)
+class GatherEdges:
+    """The edge table one gather reads, as ``gather_edges`` picked it.
+
+    ``edges`` is the table ``join`` gathers from (a split's non-hub rest
+    when ``hubs`` is set); ``block_size`` is set on the block-pinned
+    layout; ``cached`` is what the pick persisted, freed by
+    ``release``."""
+
+    edges: DataFrame
+    hubs: HubSplit | None = None
+    block_size: int | None = None
+    cached: tuple[DataFrame, ...] = ()
+
+    def join(self, state: DataFrame) -> DataFrame:
+        """``gather_join`` of ``edges`` with ``state`` in this layout."""
+        return gather_join(self.edges, state, self.block_size)
+
+    def release(self) -> None:
+        for df in self.cached:
+            df.unpersist()
+
+
+def gather_edges(graph, config, side: str) -> GatherEdges:
+    """The edge table of one gather over ``graph``: its out-edges
+    (``side="out"``), in-edges reversed (``"in"``) or the symmetric
+    distinct edge set (``"sym"``), in the one layout the call reads.
+
+    1. Pinned: when ``effective_block_size`` gives a size, the cached
+       block-pinned table (graph/locality.py), never hub-split.
+    2. Hash: else the src-sorted table — the graph's edge cache or the
+       ``*_by_src`` builder, cached here.
+    3. Hub split: for ``"out"`` and ``"in"`` (the linear sum gathers),
+       the edges of the sources above ``config.hub_degree_threshold``
+       split off once per call; one driver job collects their ids. The
+       hub values' Observation alias is ``_hub_<side>``, so both
+       sides' splits can ride one state.
+    """
+    if side not in ("out", "in", "sym"):
+        raise ValueError(f"unknown gather side: {side!r}")
+    parts = config.partitions_for(graph.spark)
+    bs = effective_block_size(graph, config)
+    if bs:
+        if side == "sym":
+            table = block_pinned_sym(graph, parts)
+        else:
+            table = block_pinned_edges(graph, parts, reverse=side == "in")
+        table = table.persist()
+        return GatherEdges(table, block_size=bs, cached=(table,))
+    if side == "sym":
+        table = graph.symmetric_edges_by_src(parts).persist()
+        return GatherEdges(table, cached=(table,))
+    if side == "out":
+        table, cached = graph.edges, ()
+        degrees, deg = graph.degrees, "out_deg"
+    else:
+        table = graph.reversed_edges_by_src(parts).persist()
+        cached = (table,)
+        # hashed by its src, so counting the in-degree adds no exchange
+        degrees = table.groupBy(F.col("src").alias("vid")).agg(
+            F.count(F.lit(1)).alias("in_deg")
+        )
+        deg = "in_deg"
+    hub_ids = top_hubs(degrees, config.hub_degree_threshold, deg).collect()
+    hubs = split_hubs(table, [r.vid for r in hub_ids], parts, f"_hub_{side}")
+    if hubs is None:
+        return GatherEdges(table, cached=cached)
+    return GatherEdges(hubs.rest, hubs, cached=cached + (hubs.table.persist(),))
 
 
 def maybe_broadcast(df: DataFrame, row_count: int | None):

@@ -52,6 +52,7 @@ from dataclasses import dataclass, field
 from typing import Callable
 
 from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql.types import StructType
 
 from planar_spark.config import EngineConfig
 from planar_spark.storage import TableStore
@@ -193,12 +194,16 @@ class RoundStore:
             self._store.write(df, f"{base}/{name}")
         self._written[rnd] = sorted(tables)
 
-    def read(self, rnd: int, name: str) -> DataFrame:
+    def read(
+        self, rnd: int, name: str, schema: StructType | None = None
+    ) -> DataFrame:
         """Round ``rnd``'s table ``name`` as a fresh scan leaf: a loop
         that continues from it continues from the durable copy (the
         lineage cut). Each read probes the catalog and lists the
-        table's files, so callers read only the tables they use."""
-        return self._store.read(f"{self.round_name(rnd)}/{name}")
+        table's files, so callers read only the tables they use; a read
+        right after the write passes the written ``schema``, which
+        spares the parquet schema-inference job."""
+        return self._store.read(f"{self.round_name(rnd)}/{name}", schema)
 
     def commit(self, rnd: int, metrics: dict | None = None) -> None:
         """Seal round ``rnd`` (no-op unless due) with its completion
@@ -238,7 +243,9 @@ class RoundStore:
             return tables
         self.write(rnd, tables)
         self.commit(rnd, metrics)
-        return {name: self.read(rnd, name) for name in tables}
+        return {
+            name: self.read(rnd, name, df.schema) for name, df in tables.items()
+        }
 
     def _completed_rounds(self) -> list[int]:
         """Round numbers with a live completion marker, ascending."""
@@ -361,7 +368,7 @@ class SuperstepEngine:
         self._dump_plan(tables["state"], step)
         if self.store.due(step):
             self.store.write(step, tables)
-            state = self.store.read(step, "state")
+            state = self.store.read(step, "state", tables["state"].schema)
         else:
             state = materialize(tables["state"])
         return {**tables, "state": state}

@@ -35,7 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from planar_spark.config import EngineConfig
-from planar_spark.graph.skew import gather_join
+from planar_spark.graph.skew import GatherEdges, gather_edges
 from planar_spark.graph.superstep import (
     SuperstepEngine,
     SuperstepResult,
@@ -156,38 +156,21 @@ def connected_components(
     # the state to a leaf every round at the cost of one label-side
     # exchange per superstep.
     spark = graph.spark
-    parts = config.partitions_for(spark)
     # Contraction is only sound with pointer jumping: same-label
     # endpoints stay connected through the parent chain (which keeps
     # receiving future relabelings), exactly as the reference contracts
     # only after PointJump (wcc_nvme_app.h:95-116).
-    assert not contract or pointer_jumping, "contract requires pointer_jumping"
+    if contract and not pointer_jumping:
+        raise ValueError("contract requires pointer_jumping")
 
-    # Layout-aware gather: on a with_partitioning graph (region-major
-    # ids, graph.block_size set) the sym table is pinned by locality
-    # BLOCK and the label join runs on the compound (blk, vid) key —
-    # still zero edge-side exchange, but the gather's partial agg now
-    # emits ~V + cut rows instead of ~parts*V (graph/locality.py).
-    from planar_spark.graph.locality import effective_block_size
-
-    # cost-aware consumption (r8): fall back to the hash gather below
-    # config.locality_min_edges — identical results, see config doc
-    bs = effective_block_size(graph, config)
-    if bs:
-        from planar_spark.graph.locality import block_pinned_sym
-
-        edge_state = {"sym": block_pinned_sym(graph, parts).persist()}
-    else:
-        # sorted WITHIN the cache (r8): the per-round gather rides the
-        # merge-join fast path — partitioning AND ordering come from the
-        # cache, so neither an exchange, nor a per-round sort, nor the
-        # pathological alternative AQE picked before (broadcasting the
-        # whole O(E) sym table as the build side every superstep,
-        # because the releaf'd label leaf reports default stats) touches
-        # the edge side. Same discipline as GraphTables.from_edges.
-        edge_state = {
-            "sym": graph.symmetric_edges_by_src(parts).persist()
-        }
+    # The symmetric edge table in the layout graph/skew.py gather_edges
+    # picks: on a with_partitioning graph it is pinned by locality block
+    # and the label join runs on the compound (sblk, vid) key, so the
+    # gather's partial agg emits ~V + cut rows instead of ~parts*V
+    # (the locality module doc); else hashed and sorted by src within
+    # the cache. Either way the per-round gather takes no exchange or sort
+    # on the edge side.
+    edge_state = {"sym": gather_edges(graph, config, "sym")}
 
     def init_state() -> DataFrame:
         labels = graph.vertices.select("vid", F.col("vid").alias("label"))
@@ -200,7 +183,7 @@ def connected_components(
         # (per-mid pre-agg, no wedge materialization); every seed is a
         # member of the same component, so exactness is unaffected.
         sym = edge_state["sym"]
-        m1 = sym.groupBy(F.col("src").alias("vid")).agg(
+        m1 = sym.edges.groupBy(F.col("src").alias("vid")).agg(
             F.min("dst").alias("n1")
         )
         # m2(v) = min over neighbors u of m1(u). The edge set is
@@ -209,9 +192,7 @@ def connected_components(
         # and aggregating by dst is the same set of (v, m1(u)) pairs as
         # the old join on dst, without re-shuffling the O(E) table.
         m2 = (
-            gather_join(
-                sym, m1.select("vid", F.col("n1").alias("mid_min")), bs
-            )
+            sym.join(m1.select("vid", F.col("n1").alias("mid_min")))
             .groupBy(F.col("dst").alias("vid"))
             .agg(F.min("mid_min").alias("n2"))
         )
@@ -235,16 +216,15 @@ def connected_components(
         if contract and _step > 1:
             la = labels.select(F.col("vid").alias("src"), F.col("label").alias("ls"))
             lb = labels.select(F.col("vid").alias("dst"), F.col("label").alias("ld"))
+            bs = sym.block_size
             shrunk = materialize(
-                sym.join(la, "src").join(lb, "dst")
+                sym.edges.join(la, "src").join(lb, "dst")
                 .where(F.col("ls") != F.col("ld"))
                 .select(*(["sblk"] if bs else []), "src", "dst")
             )
-            sym.unpersist()
-            edge_state["sym"] = sym = shrunk
-        msgs = gather_join(sym, labels, bs).select(
-            F.col("dst").alias("vid"), "label"
-        )
+            sym.release()
+            edge_state["sym"] = sym = GatherEdges(shrunk, block_size=bs)
+        msgs = sym.join(labels).select(F.col("dst").alias("vid"), "label")
         min_nbr = msgs.groupBy("vid").agg(F.min("label").alias("nbr_min"))
         new = (
             labels.join(min_nbr, "vid", "left")
@@ -302,7 +282,7 @@ def connected_components(
     result = engine.run(
         init_state, step, max_iterations, converged, resume=resume
     )
-    edge_state["sym"].unpersist()
+    edge_state["sym"].release()
     if not result.converged:
         import warnings
 

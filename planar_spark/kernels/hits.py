@@ -20,12 +20,13 @@ recomputed as the input subtree of the next gather:
 - hub phase: same shape over a reversed edge table built once, hash-
   partitioned and sorted by the reversed src (= original dst) and
   cached, so this gather is ALSO a zero-exchange merge join.
-- hubs: both hub id sets (high out-degree for the auth phase, high
-  in-degree for the hub phase) reach the driver in one action, and each
-  side's hub edges are split off once per call (graph/skew.py
-  ``split_hubs``). The raw hub/auth value of each hub rides the state's
-  Observation next to the column sums, so a hub's edges are gathered as
-  a projection of the cached split table, never re-keyed per phase.
+- layout: graph/skew.py ``gather_edges`` picks each side's edge table
+  once per call — block-pinned on a with_partitioning graph, else the
+  hash layout with its hubs (high out-degree for the auth phase, high
+  in-degree for the hub phase) split off, one driver job per side. The
+  raw hub/auth value of each hub rides the state's Observation next to
+  the column sums, so a hub's edges are gathered as a projection of the
+  cached split table, never re-keyed per phase.
 
 Normalizing only the input column each phase keeps every stored value
 bounded by max-degree (no growth across iterations, no per-step output
@@ -47,8 +48,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Observation, functions as F
 
 from planar_spark.config import EngineConfig
-from planar_spark.graph.locality import block_pinned_edges, effective_block_size
-from planar_spark.graph.skew import gather_join, split_hubs, top_hubs
+from planar_spark.graph.skew import gather_edges
 from planar_spark.graph.superstep import SuperstepEngine, SuperstepResult
 from planar_spark.graph.tables import GraphTables
 
@@ -72,44 +72,11 @@ def hits(
             "on an empty edge set)"
         )
     spark = graph.spark
-    parts = config.partitions_for(spark)
-
-    # Layout-aware gathers (r7): on a with_partitioning graph both edge
-    # tables pin by locality block — the reversed table's src is still a
-    # vid, so the same sblk = src div block_size names its block.
-    # Cost-aware consumption (r8): fall back to the hash gather below
-    # config.locality_min_edges — identical results, see config doc
-    bs = effective_block_size(graph, config)
-    out_hubs = in_hubs = None
-    if bs:
-        fwd = block_pinned_edges(graph, parts).persist()
-        rev = block_pinned_edges(graph, parts, reverse=True).persist()
-    else:
-        fwd = graph.edges  # (src, dst), partitioned+sorted by src, cached
-        # partitioned and sorted by the reversed src (= the forward dst)
-        # so the hub-phase gather is a merge join too
-        rev = graph.reversed_edges_by_src(parts).persist()
-        # Both hub id sets (out-degree for the auth gather, in-degree
-        # for the hub gather) come to the driver in ONE action; each
-        # side's hub edges are then split off once for the whole call.
-        t = config.hub_degree_threshold
-        in_deg = rev.groupBy(F.col("src").alias("vid")).agg(
-            F.count(F.lit(1)).alias("in_deg")
-        )
-        both = (
-            top_hubs(graph.degrees, t).select(F.lit(0).alias("side"), "vid")
-            .unionAll(top_hubs(in_deg, t, "in_deg").select(F.lit(1), "vid"))
-            .collect()
-        )
-        out_hubs = split_hubs(
-            fwd, [r.vid for r in both if r.side == 0], parts, "_hub_out"
-        )
-        in_hubs = split_hubs(
-            rev, [r.vid for r in both if r.side == 1], parts, "_hub_in"
-        )
-    splits = [h for h in (out_hubs, in_hubs) if h is not None]
-    for h in splits:
-        h.table.persist()
+    # the auth phase gathers hub over the out-edges, the hub phase auth
+    # over the in-edges; each side's layout and hub split are picked
+    # once per call (graph/skew.py gather_edges)
+    fwd = gather_edges(graph, config, "out")
+    rev = gather_edges(graph, config, "in")
 
     base = graph.degrees.select("vid")  # one row per vertex, vid-partitioned
 
@@ -123,10 +90,10 @@ def hits(
     # driver action instead, so every phase plan has one shape. Each
     # split's raw hub values ride the same Observation and action.
     carried_exprs = [F.sum("hub").alias("_hs"), F.sum("auth").alias("_as")]
-    if out_hubs is not None:
-        carried_exprs.append(out_hubs.observed(F.col("hub")))
-    if in_hubs is not None:
-        carried_exprs.append(in_hubs.observed(F.col("auth")))
+    if fwd.hubs is not None:
+        carried_exprs.append(fwd.hubs.observed(F.col("hub")))
+    if rev.hubs is not None:
+        carried_exprs.append(rev.hubs.observed(F.col("auth")))
     carry: dict = {}
 
     def _observed(df: DataFrame) -> DataFrame:
@@ -147,15 +114,15 @@ def hits(
             )
         )
 
-    def _gather(state, src_col, dst_col, edges, hubs, keep):
+    def _gather(state, src_col, dst_col, gather, keep):
         """Normalize state[src_col] by the carried sum, gather, return
         the full state."""
         got = _carried(state)
         s = _sums(got)[0 if src_col == "hub" else 1]
         live = state.select("vid", (F.col(src_col) / F.lit(s)).alias("x"))
-        msgs = gather_join(edges, live, bs).select("dst", "x")
-        if hubs is not None:
-            msgs = msgs.unionByName(hubs.contribs(got, div=s))
+        msgs = gather.join(live).select("dst", "x")
+        if gather.hubs is not None:
+            msgs = msgs.unionByName(gather.hubs.contribs(got, div=s))
         contribs = msgs.groupBy(F.col("dst").alias("vid")).agg(
             F.sum("x").alias("_c")
         )
@@ -173,14 +140,11 @@ def hits(
             .select("vid", "hub", "auth")
         )
 
-    fwd_rest = out_hubs.rest if out_hubs else fwd
-    rev_rest = in_hubs.rest if in_hubs else rev
-
     def step(state: DataFrame, k: int) -> tuple[DataFrame, dict]:
         if k % 2 == 1:  # auth phase: gather hub over forward edges
-            return _gather(state, "hub", "auth", fwd_rest, out_hubs, "hub"), {}
+            return _gather(state, "hub", "auth", fwd, "hub"), {}
         # hub phase: gather auth over reversed edges
-        return _gather(state, "auth", "hub", rev_rest, in_hubs, "auth"), {}
+        return _gather(state, "auth", "hub", rev, "auth"), {}
 
     engine = engine or SuperstepEngine(
         spark, config, "hits",
@@ -195,11 +159,8 @@ def hits(
         (F.col("hub") / F.lit(hs)).alias("hub"),
         (F.col("auth") / F.lit(as_)).alias("auth"),
     )
-    rev.unpersist()
-    if bs:
-        fwd.unpersist()
-    for h in splits:
-        h.table.unpersist()
+    fwd.release()
+    rev.release()
     return SuperstepResult(
         normalized, result.steps_run, result.converged, result.metrics
     )

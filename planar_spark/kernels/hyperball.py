@@ -27,6 +27,7 @@ by the error-bound pytest (same pattern as embedding ANN vs exact).
 
 from __future__ import annotations
 
+from itertools import accumulate
 from typing import Callable
 
 from pyspark.sql import Column, DataFrame, Observation, functions as F
@@ -170,6 +171,23 @@ def closeness_centrality(
     )
 
 
+def _interpolated_diameter(q: float, cumulative: list) -> float:
+    """Palmer's interpolated effective diameter over a cumulative curve
+    of ``(d, cum(d))`` pairs, d ascending: at the first d whose cum(d)
+    covers ``q`` of the last cum, (d-1) + (q·total − cum(d−1)) /
+    (cum(d) − cum(d−1)), 0.0 at d = 0; the last d when none does."""
+    target = q * cumulative[-1][1]
+    prev = 0
+    for d, cum in cumulative:
+        if cum >= target:
+            step = cum - prev
+            if d == 0:
+                return 0.0
+            return (d - 1) + ((target - prev) / step if step > 0 else 0.0)
+        prev = cum
+    return float(cumulative[-1][0])
+
+
 def effective_diameter(
     graph: GraphTables,
     radius: int,
@@ -197,15 +215,8 @@ def effective_diameter(
         return graph.spark.createDataFrame(
             [(float(q), 0.0)], schema="q double, eff_diameter double"
         )
-    target = q * total
-    cum = 0
-    eff = float(counts[-1][0])
-    for dist, n in counts:
-        prev = cum
-        cum += n
-        if cum >= target:
-            eff = 0.0 if dist == 0 else (dist - 1) + (target - prev) / n
-            break
+    dists, ns = zip(*counts)
+    eff = _interpolated_diameter(q, list(zip(dists, accumulate(ns))))
     return graph.spark.createDataFrame(
         [(float(q), float(eff))], schema="q double, eff_diameter double"
     ).select("q", F.round("eff_diameter", 6).alias("eff_diameter"))
@@ -399,21 +410,7 @@ def effective_diameter_approx(
         return graph.spark.createDataFrame(
             [(float(q), 0.0)], schema="q double, eff_diameter double"
         )
-    rs = sorted(prof)
-    total = prof[rs[-1]]
-    target = q * total
-    eff = float(rs[-1])
-    prev = 0.0
-    for r in rs:
-        cum = prof[r]
-        if cum >= target:
-            step = cum - prev
-            eff = (
-                0.0 if r == 0
-                else (r - 1) + ((target - prev) / step if step > 0 else 0.0)
-            )
-            break
-        prev = cum
+    eff = _interpolated_diameter(q, sorted(prof.items()))
     return graph.spark.createDataFrame(
         [(float(q), float(eff))], schema="q double, eff_diameter double"
     ).select("q", F.round("eff_diameter", 6).alias("eff_diameter"))

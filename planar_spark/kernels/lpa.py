@@ -24,6 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from planar_spark.config import EngineConfig
+from planar_spark.graph.skew import gather_edges
 from planar_spark.graph.superstep import SuperstepEngine, SuperstepResult
 from planar_spark.graph.tables import GraphTables
 
@@ -38,38 +39,16 @@ def label_propagation(
     """Returns state (vid, label) after exactly ``num_iterations`` rounds."""
     config = config or EngineConfig()
     spark = graph.spark
-    parts = config.partitions_for(spark)
-
-    # Layout-aware gather (r7): on a with_partitioning graph the sym
-    # table is pinned by locality block and the label join runs on the
-    # compound (sblk, vid) key — same consumption as WCC
-    # (kernels/components.py) and pagerank (graph/skew.py block mode).
-    from planar_spark.graph.locality import effective_block_size
-
-    # cost-aware consumption (r8): fall back to the hash gather below
-    # config.locality_min_edges — identical results, see config doc
-    bs = effective_block_size(graph, config)
-    if bs:
-        from planar_spark.graph.locality import block_pinned_sym
-
-        sym = block_pinned_sym(graph, parts).persist()
-    else:
-        # sorted within the cache + merge-hinted gather (r8): same
-        # zero-exchange/zero-sort edge side as WCC (components.py) —
-        # without the hint AQE broadcast the whole O(E) sym table as
-        # the build side every round (the label leaf reports default
-        # stats after releaf).
-        sym = graph.symmetric_edges_by_src(parts).persist()
+    # the symmetric edge table in the layout graph/skew.py gather_edges
+    # picks (block-pinned, else hashed and sorted by src): either way
+    # the merge-hinted gather takes no exchange or sort on the edge side
+    sym = gather_edges(graph, config, "sym")
 
     def init_state() -> DataFrame:
         return graph.vertices.select("vid", F.col("vid").alias("label"))
 
     def step(labels: DataFrame, _step: int) -> tuple[DataFrame, dict]:
-        from planar_spark.graph.skew import gather_join
-
-        msgs = gather_join(sym, labels, bs).select(
-            F.col("dst").alias("vid"), "label"
-        )
+        msgs = sym.join(labels).select(F.col("dst").alias("vid"), "label")
         counts = msgs.groupBy("vid", "label").agg(F.count(F.lit(1)).alias("n"))
         # argmax by (count desc, label asc) as a max_by aggregate (r8):
         # still partial-agg-able (map-side combine), so a hub with
@@ -98,5 +77,5 @@ def label_propagation(
                  "num_edges": graph.num_edges, "rounds": num_iterations},
     )
     result = engine.run(init_state, step, num_iterations, resume=resume)
-    sym.unpersist()
+    sym.release()
     return result

@@ -27,11 +27,13 @@ The dangling mass rides each state materialization as an Observation
 and folds into the next step's plan as a literal (r8). A resumed run's
 checkpointed state has no Observation, so its first step reads the mass
 with one driver action: every step plan has one shape, fresh or resumed.
-Hub skew: ``gather_edges`` splits the hub sources' edges off once per
-call (graph/skew.py ``split_hubs``); each hub's x = value/degree rides
-the same Observation (and the same resume action) as the dangling mass,
-and the hub gather is a projection of the cached hub table unioned into
-the merge-join gather of the other edges before the groupBy(dst).
+The gather's edge layout (block-pinned, hash, or hash with the hub
+sources' edges split off once per call) is picked by graph/skew.py
+``gather_edges``, and the step joins through it. Each hub's
+x = value/degree rides the same Observation (and the same resume
+action) as the dangling mass, and the hub gather is a projection of the
+cached hub table unioned into the merge-join gather of the other edges
+before the groupBy(dst).
 Partial aggregation makes the groupBy(dst) shuffle one row per
 (task, dst); the engine's per-superstep checkpoint truncates lineage.
 """
@@ -41,38 +43,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Observation, functions as F
 
 from planar_spark.config import EngineConfig
-from planar_spark.graph.locality import block_pinned_edges, effective_block_size
-from planar_spark.graph.skew import HubSplit, gather_join, split_hubs, top_hubs
+from planar_spark.graph.skew import GatherEdges, gather_edges
 from planar_spark.graph.superstep import SuperstepEngine, SuperstepResult
 from planar_spark.graph.tables import GraphTables
 
 
-def gather_edges(graph: GraphTables, config: EngineConfig):
-    """``(edges, hubs, block_size, release)`` for a gather over the
-    graph's out-edges: the cached block-pinned layout on a
-    with_partitioning graph (r7, cost-aware since r8 — see
-    ``effective_block_size``; no hub split there), else the graph's
-    src-sorted edges, split at the hubs above
-    ``config.hub_degree_threshold`` when there are any (``hubs`` is then
-    the ``HubSplit`` and ``edges`` its non-hub rest). One driver job
-    collects the hub ids. ``release()`` frees what this call cached."""
-    bs = effective_block_size(graph, config)
-    parts = config.partitions_for(graph.spark)
-    if bs:
-        pinned = block_pinned_edges(graph, parts).persist()
-        return pinned, None, bs, pinned.unpersist
-    hub_ids = top_hubs(graph.degrees, config.hub_degree_threshold)
-    ids = [r.vid for r in hub_ids.collect()]
-    hubs = split_hubs(graph.edges, ids, parts)
-    if hubs is None:
-        return graph.edges, None, None, lambda: None
-    hubs.table.persist()
-    return hubs.rest, hubs, None, hubs.table.unpersist
-
-
 def power_iteration(
     base: DataFrame,
-    edges: DataFrame,
+    gather: GatherEdges,
     start: DataFrame,
     config: EngineConfig,
     num_iterations: int,
@@ -83,8 +61,6 @@ def power_iteration(
     degree: str = "out_deg",
     weight: str | None = None,
     reset: str | None = None,
-    hubs: HubSplit | None = None,
-    block_size: int | None = None,
     engine: SuperstepEngine | None = None,
     resume: bool = False,
     lineage: dict | None = None,
@@ -92,14 +68,15 @@ def power_iteration(
     """Run the family's power iteration on ``SuperstepEngine``.
 
     ``base`` is (vid, ``degree``[, ``reset``]), partitioned by vid;
-    ``start`` is base plus the ``value`` column. ``edges`` (src, dst
-    [, ``weight``]) is gathered by ``gather_join`` (``block_size`` as it
-    takes it); ``hubs`` (unweighted only) adds the split-off hub edges,
-    whose ``edges`` are then the split's rest. The restart vector r is the
-    ``reset`` column, or the uniform 1/``num_vertices`` when None.
+    ``start`` is base plus the ``value`` column. ``gather`` reads the
+    edges (src, dst[, ``weight``]) in their layout; its hub split
+    (unweighted only) adds the split-off hub edges. The restart vector
+    r is the ``reset`` column, or the uniform 1/``num_vertices`` when
+    None.
     Returns the engine result; its state has base's columns + value."""
     d = config.damping
     n = num_vertices
+    hubs = gather.hubs
     cols = base.columns
     share = F.col("x") if weight is None else F.col(weight) * F.col("x")
     dm_expr = F.sum(F.when(F.col(degree) == 0, F.col(value))).alias("_dm")
@@ -124,9 +101,7 @@ def power_iteration(
         live = state.where(F.col(degree) > 0).select(
             "vid", (F.col(value) / F.col(degree)).alias("x")
         )
-        msgs = gather_join(edges, live, block_size).select(
-            "dst", share.alias("x")
-        )
+        msgs = gather.join(live).select("dst", share.alias("x"))
         if hubs is not None:
             msgs = msgs.unionByName(hubs.contribs(got))
         contribs = msgs.groupBy(F.col("dst").alias("vid")).agg(
@@ -195,12 +170,12 @@ def pagerank(
         start = base.join(
             init_ranks.select("vid", F.col("pr").alias("_pr0")), "vid", "left"
         ).select("vid", "out_deg", F.coalesce("_pr0", F.lit(1.0 / n)).alias("pr"))
-    edges, hubs, bs, release = gather_edges(graph, config)
+    gather = gather_edges(graph, config, "out")
     result = power_iteration(
-        base, edges, start, config,
+        base, gather, start, config,
         num_iterations or config.max_iterations, "pagerank", n,
-        hubs=hubs, block_size=bs, engine=engine, resume=resume,
+        engine=engine, resume=resume,
         lineage={"num_vertices": n, "num_edges": graph.num_edges},
     )
-    release()
+    gather.release()
     return result

@@ -12,9 +12,10 @@ formulation used for related-page and recommendation queries:
 with reset(v) = 1/|S| for v ∈ S else 0, so Σ ppr == 1 at every
 superstep. The state carries ``reset`` (joined once from the broadcast
 seed set, whose distinct is computed and cached once per call), so no
-step re-joins the seeds. A hub's edges are split off once per call
-(pagerank.py ``gather_edges``), and its ppr/out_deg rides each state's
-Observation with the dangling mass.
+step re-joins the seeds. The gather reads the out-edges in the layout
+graph/skew.py ``gather_edges`` picks; a hub's edges are split off once
+per call, and its ppr/out_deg rides each state's Observation with the
+dangling mass.
 """
 
 from __future__ import annotations
@@ -22,9 +23,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from planar_spark.config import EngineConfig
+from planar_spark.graph.skew import gather_edges
 from planar_spark.graph.superstep import SuperstepEngine, SuperstepResult
 from planar_spark.graph.tables import GraphTables
-from planar_spark.kernels.pagerank import gather_edges, power_iteration
+from planar_spark.kernels.pagerank import power_iteration
 
 
 def personalized_pagerank(
@@ -46,7 +48,7 @@ def personalized_pagerank(
         raise ValueError("personalized_pagerank requires a non-empty seed set")
     r = 1.0 / n_seeds
 
-    edges, hubs, bs, release = gather_edges(graph, config)
+    gather = gather_edges(graph, config, "out")
     seed_flag = seed_ids.withColumn("_seed", F.lit(True))
     base = (
         graph.degrees.join(F.broadcast(seed_flag), "vid", "left")
@@ -60,13 +62,12 @@ def personalized_pagerank(
         .persist()
     )
     result = power_iteration(
-        base, edges, base.withColumn("ppr", F.col("reset")), config,
+        base, gather, base.withColumn("ppr", F.col("reset")), config,
         num_iterations or config.max_iterations, "ppr", graph.num_vertices,
-        value="ppr", reset="reset", hubs=hubs, block_size=bs,
-        engine=engine, resume=resume,
+        value="ppr", reset="reset", engine=engine, resume=resume,
         lineage={"num_vertices": graph.num_vertices, "num_edges": graph.num_edges},
     )
     base.unpersist()
     seed_ids.unpersist()
-    release()
+    gather.release()
     return result

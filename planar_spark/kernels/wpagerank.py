@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from planar_spark.config import EngineConfig
+from planar_spark.graph.skew import GatherEdges
 from planar_spark.graph.superstep import materialize
 from planar_spark.kernels.pagerank import power_iteration
 
@@ -64,7 +65,7 @@ def weighted_pagerank(
         raise ValueError("weighted_pagerank requires a non-empty edge table")
 
     result = power_iteration(
-        base, e, base.withColumn("pr", F.lit(1.0 / n)), config,
+        base, GatherEdges(e), base.withColumn("pr", F.lit(1.0 / n)), config,
         num_iterations, "wpagerank", n, degree="w_out", weight="w",
         lineage={"num_vertices": n},
     )

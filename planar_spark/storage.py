@@ -31,6 +31,7 @@ import time
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 def detect_iceberg_catalog(spark: SparkSession) -> str | None:
@@ -143,7 +144,9 @@ class TableStore:
                 pass
             df.write.mode(mode).parquet(self._path(name))
 
-    def read(self, name: str) -> DataFrame:
+    def read(self, name: str, schema: StructType | None = None) -> DataFrame:
+        """Table ``name``. A parquet read infers the schema with one
+        Spark job unless the caller passes the ``schema`` it wrote."""
         if self.catalog:
             return self.spark.read.table(self._ident(name))
         # prefer the catalog entry (carries bucketing metadata) when the
@@ -157,7 +160,10 @@ class TableStore:
                 return self.spark.table(tbl)
         except Exception:  # pragma: no cover - catalog probe only
             pass
-        return self.spark.read.parquet(self._path(name))
+        reader = self.spark.read
+        if schema is not None:
+            reader = reader.schema(schema)
+        return reader.parquet(self._path(name))
 
     def partition_lineage(self, name: str, max_files: int = 4096) -> dict:
         """Per-partition lineage of a written table: one record per data

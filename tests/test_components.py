@@ -63,6 +63,14 @@ def test_components_with_contraction(spark, config):
     assert (got == oracle_components(edges, 300)).all()
 
 
+def test_contract_without_pointer_jumping_raises(spark, config):
+    """Contraction without pointer jumping is unsound, so it is refused
+    with a ValueError (an ``assert`` would vanish under ``python -O``)."""
+    g = graph_from_numpy(spark, edges_simple4(), 4)
+    with pytest.raises(ValueError, match="pointer_jumping"):
+        connected_components(g, config, contract=True, pointer_jumping=False)
+
+
 def test_components_without_pointer_jumping(spark, config):
     edges, n = edges_two_cliques(5, n_isolated=2)
     g = graph_from_numpy(spark, edges, n)

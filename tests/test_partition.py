@@ -424,6 +424,46 @@ def test_lpa_on_locality_layout_matches_plain(spark, config):
     assert classes(got) == classes(plain)
 
 
+def test_gather_layout_pins_before_splitting_hubs(spark, config):
+    """graph/skew.py ``gather_edges`` picks one layout per gather. On a
+    star whose hub is above the hub threshold, a with_partitioning graph
+    takes the block-pinned table with no hub split, and pagerank and
+    hits over it match their oracles; the same graph in the hash layout
+    splits the hub off on both hits sides."""
+    import dataclasses
+
+    from planar_spark.graph.skew import gather_edges
+    from planar_spark.kernels.hits import hits
+    from planar_spark.kernels.pagerank import pagerank
+    from planar_spark.oracle import oracle_pagerank
+    from planar_spark.oracle.numpy_oracle import oracle_hits
+
+    n = 400
+    cfg = dataclasses.replace(
+        config, hub_degree_threshold=50, locality_min_edges=0, tolerance=0.0
+    )
+    g = graph_from_numpy(spark, edges_star_hub(n), n)
+    g2, _ = g.with_partitioning("bfs_vertex_cut", num_partitions=8)
+
+    def layout(graph, side):
+        gather = gather_edges(graph, cfg, side)
+        found = (gather.block_size, gather.hubs and gather.hubs.ids)
+        gather.release()
+        return found
+
+    assert g2.block_size
+    assert layout(g2, "out") == layout(g2, "in") == (g2.block_size, None)
+    assert layout(g, "out") == layout(g, "in") == (None, [0])
+
+    edges2 = np.array([(r.src, r.dst) for r in g2.edges.collect()])
+    pr = {r.vid: r.pr for r in pagerank(g2, cfg, num_iterations=10).state.collect()}
+    want = oracle_pagerank(edges2, n, num_iterations=10)
+    assert np.allclose([pr[v] for v in range(n)], want, atol=1e-9)
+    rows = {r.vid: r for r in hits(g2, cfg, num_iterations=2).state.collect()}
+    for col, want in zip(("hub", "auth"), oracle_hits(edges2, n, num_iterations=2)):
+        assert np.allclose([rows[v][col] for v in range(n)], want, atol=1e-9), col
+
+
 def test_locality_consumption_is_cost_aware(spark, config):
     """r8: block-pinned consumption only pays when the gather exchange
     is the bottleneck, so kernels consult config.locality_min_edges —

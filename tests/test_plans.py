@@ -269,6 +269,26 @@ def test_kernels_take_undirected_edges_from_the_builders():
     assert orienting == ["kernels/triangles.py"], orienting
 
 
+def test_kernels_take_gather_layouts_from_gather_edges():
+    """A gather's edge layout (block-pinned, hash, or hash with the hub
+    split) is picked in one place, graph/skew.py ``gather_edges``: no
+    kernel names the cost gate, the pinned builders or the hub split."""
+    import pathlib
+    import re
+
+    import planar_spark
+
+    root = pathlib.Path(planar_spark.__file__).parent
+    layout = re.compile(r"effective_block_size|block_pinned_|split_hubs|top_hubs")
+    found = [
+        f"{path.relative_to(root)}:{i}: {line.strip()}"
+        for path in sorted((root / "kernels").rglob("*.py"))
+        for i, line in enumerate(path.read_text().splitlines(), 1)
+        if layout.search(line)
+    ]
+    assert not found, "\n".join(found)
+
+
 def test_reversed_edge_gather_is_merge_join(spark, config):
     """The hits/hyperball hub-phase gather joins on the REVERSED edge
     cache (partitioned+sorted by the reversed src): like the forward
@@ -314,8 +334,8 @@ def test_hub_split_gather_adds_no_exchange(spark):
     so the star's gather + groupBy(dst) plan at a threshold below the
     hub has as many exchanges as with no hub at all, and no Generate
     (no per-step re-keying or explode of the hub's state)."""
+    from planar_spark.graph.skew import gather_edges
     from planar_spark.ingest.pages import edges_star_hub
-    from planar_spark.kernels.pagerank import gather_edges
 
     n = 500
     g = graph_from_numpy(spark, edges_star_hub(n), n)
@@ -325,14 +345,15 @@ def test_hub_split_gather_adds_no_exchange(spark):
 
     def gather(threshold):
         cfg = EngineConfig(num_partitions=8, hub_degree_threshold=threshold)
-        edges, hubs, _, release = gather_edges(g, cfg)
+        gather = gather_edges(g, cfg, "out")
+        edges, hubs = gather.edges, gather.hubs
         msgs = gather_join(edges, live).select("dst", "x")
         if hubs is not None:
             got = live.agg(hubs.observed(F.col("x"))).first()
             msgs = msgs.unionByName(hubs.contribs(got))
         out = msgs.groupBy(F.col("dst").alias("vid")).agg(F.sum("x").alias("c"))
         found = (hubs and hubs.ids, _exchanges_above_cache(out), _plan(out))
-        release()
+        gather.release()
         return found
 
     hub_ids, with_hub, hub_plan = gather(50)
